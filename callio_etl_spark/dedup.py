@@ -26,12 +26,6 @@ def first_wins(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFr
     )
 
 
-def keep_last(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFrame:
-    """D2 — keep-last dedup (runner.py:265-266: drop_duplicates keep='last').
-    Same window mechanics with the ordering reversed by the caller."""
-    return first_wins(df, keys, order_by)
-
-
 def latest_per_key(df: DataFrame, keys: list[str], ts_col: Column, tiebreak: list[Column] | None = None) -> DataFrame:
     """D3 — latest-row-per-key (runner.py:169-172: QUALIFY ROW_NUMBER() OVER
     (PARTITION BY tenant,_id ORDER BY SAFE_CAST(updateTime AS INT64) DESC)=1).

@@ -108,19 +108,3 @@ def flatten_call(df: DataFrame, tenant: str) -> DataFrame:
             "row_hash": cf.row_hash(projected, exclude=cf.ROW_HASH_EXCLUDE | {"tenant"}),
         }
     )
-
-
-def flatten_staff(df: DataFrame, tenant: str) -> DataFrame:
-    """Staff flatten (runner.py:328-342): group._id extraction + non-blank
-    name filter (F2) + tenant + row hash; business key is (tenant, name) —
-    the reference's deliberate choice (SURVEY section 7.5)."""
-    base = df.withColumn("group_id", cf.struct_field("group", "_id").cast("string"))
-    projected = cf.project_with_null_backfill(
-        base, ["_id", "email", "name", "updateTime", "createTime", "group_id"]
-    ).withColumn("tenant", F.lit(tenant))
-    projected = projected.where(
-        F.col("name").isNotNull() & (F.trim("name") != "")
-    )
-    return projected.withColumn(
-        "row_hash", cf.row_hash(projected, exclude=cf.ROW_HASH_EXCLUDE | {"tenant"})
-    )

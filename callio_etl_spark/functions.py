@@ -137,22 +137,9 @@ def epoch_ms_to_utc_date(col: Column) -> Column:
     return F.to_date(F.timestamp_millis(col.cast("string").try_cast("long")))
 
 
-def epoch_ms_to_local_date(col: Column, tz: str = HCM_TZ) -> Column:
-    """P9 — epoch-ms -> local-TZ DATE: DATE(TIMESTAMP_MILLIS(x), tz)
-    (runner.py:610, 641, 654). Session TZ is pinned UTC, so the shift is
-    explicit per-expression."""
-    return F.to_date(F.from_utc_timestamp(F.timestamp_millis(col), tz))
-
-
 def ts_to_local_date(col: Column, tz: str = HCM_TZ) -> Column:
     """P9 over an already-typed timestamp column."""
     return F.to_date(F.from_utc_timestamp(col, tz))
-
-
-def lenient_long(col: Column) -> Column:
-    """P10 — SAFE_CAST(x AS INT64) / pd.to_numeric(errors='coerce')
-    (runner.py:135, 141, 171, 179, 454, 470)."""
-    return col.cast("string").try_cast("long")
 
 
 def norm_string(col: Column) -> Column:
@@ -177,20 +164,6 @@ def iso_week_key(col: Column) -> Column:
 def week_start_vn(col: Column) -> Column:
     """P17 — Monday week start in UTC+7 (utils.py:92-101)."""
     return F.to_date(F.date_trunc("week", F.from_utc_timestamp(col, HCM_TZ)))
-
-
-def dedup_column_names(columns: list[str]) -> list[str]:
-    """P18 — suffix duplicate column names col__1, col__2 (utils.py:29-43)."""
-    seen: dict[str, int] = {}
-    out = []
-    for c in columns:
-        if c in seen:
-            seen[c] += 1
-            out.append(f"{c}__{seen[c]}")
-        else:
-            seen[c] = 0
-            out.append(c)
-    return out
 
 
 def ranked_topk(df: DataFrame, order_cols: list, k: int, out_col: str = "rank") -> DataFrame:

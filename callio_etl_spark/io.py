@@ -18,6 +18,7 @@ gives parquet row-group min/max data skipping on those columns.
 
 from __future__ import annotations
 
+import os
 import threading
 import time
 import uuid
@@ -117,7 +118,21 @@ def _try_create_exclusive(jvm, fs, path: str, content: str = "") -> bool:
     POSIX (object stores without atomic create need a real table format's
     commit service instead; same boundary as the rename note above).
     ``content`` (the winner's ownership token) is written into the file
-    on the same exclusive stream."""
+    on the same exclusive stream.
+
+    The local filesystem's create(overwrite=false) checks for the file and
+    then opens it — two creators racing through that gap both win — so a
+    local path is created with O_EXCL, which the kernel makes atomic."""
+    if fs.getScheme() == "file":
+        local = fs.pathToFile(jvm.org.apache.hadoop.fs.Path(path)).getPath()
+        try:
+            os.makedirs(os.path.dirname(local), exist_ok=True)
+            fd = os.open(local, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+        except OSError:
+            return False
+        with os.fdopen(fd, "w") as out:
+            out.write(content)
+        return True
     try:
         out = fs.create(jvm.org.apache.hadoop.fs.Path(path), False)
     except Exception:

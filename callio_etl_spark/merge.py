@@ -11,8 +11,6 @@ container ships no Delta Lake, so the engine provides:
   io.py's atomic staging+rename commit, mirroring the reference's
   `T.<date> BETWEEN part_min AND part_max` pruning conjunct in MERGE ON
   (and BigQuery's job atomicity, which plain parquet overwrite lacks).
-- Delta path: if delta-spark is importable, ``delta_merge`` uses real
-  MERGE INTO (kept behind an import-try; same call signature).
 
 Correctness contract (as the reference enforces): the source must have ONE
 row per key — run dedup.latest_per_key first (runner.py:165-173 does exactly
@@ -33,15 +31,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from callio_etl_spark.io import atomic_overwrite, atomic_partition_overwrite
-
-
-def _delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 @dataclass
@@ -118,30 +107,6 @@ def _and_all(conds: list[Column]) -> Column:
     for c in conds[1:]:
         out = out & c
     return out
-
-
-def schema_dynamic_spec(
-    target: DataFrame, source: DataFrame, keys: list[str]
-) -> MergeSpec:
-    """J9 — schema-introspecting merge (runner.py:418-491): the reference
-    reads live BigQuery schemas and generates SET/INSERT lists over the
-    column intersection, keyed (tenant, name), matched-condition built from
-    whichever of row_hash/updateTime exist. Spark-first: same decision from
-    df.schema."""
-    common = [c for c in source.columns if c in set(target.columns) and c not in keys]
-    conds = []
-    if "row_hash" in common:
-        conds.append(~F.col("T.row_hash").eqNullSafe(F.col("S.row_hash")))
-    if "updateTime" in common:
-        conds.append(
-            F.col("S.updateTime").cast("long") > F.coalesce(F.col("T.updateTime").cast("long"), F.lit(0))
-        )
-    cond = None
-    if conds:
-        cond = conds[0]
-        for c in conds[1:]:
-            cond = cond | c
-    return MergeSpec(keys=keys, update_condition=cond, update_cols=common)
 
 
 #: Full-rewrite ceiling: the unwindowed path rewrites the ENTIRE target, so

@@ -36,6 +36,20 @@ Scale: a commit costs one rename per AFFECTED partition plus one manifest
 the table — fine for date/tenant-grained partitioning (thousands), which is
 this engine's partitioning doctrine (SCALE.md); file-grained manifests are
 where a full Iceberg binding takes over.
+
+One commit protocol: every manifest-publishing verb commits through
+``_commit``, and nothing else writes a manifest. Its steps, in order: take
+the table lock; sweep stale stagings; read the published head and the next
+version once; let the verb's ``build`` check the head, move its staged
+leaves in and return its manifest changes (or a no-op); lay the changes
+over the head's carried keys; publish the manifest, fenced
+(``_write_manifest``); vacuum; release the lock. The carry rule is the
+same for every verb: ``partition_col``, ``schema``, ``bloom``,
+``bucket_spec``, ``spec_history``, ``renames``, ``widens``,
+``properties``, ``delete_keys`` and the five leaf maps (``partitions``,
+``stats``, ``file_stats``, ``file_blooms``, ``deletes``) carry from the
+head; ``staged``, ``parent``, ``published_from``, ``segments`` and
+``seg_n`` never carry. A verb overrides only the keys it changes.
 """
 
 from __future__ import annotations
@@ -222,6 +236,16 @@ def _load_segments(jvm, fs, path: str, hashes: list[str]) -> list[dict]:
         )
 
 
+def _fold_segments(jvm, fs, path: str, m: dict, hashes: list[str]) -> dict:
+    """Load the segment files ``hashes`` into ``m``'s leaf maps."""
+    for mp in _LEAF_MAPS:
+        m.setdefault(mp, {})
+    for seg in _load_segments(jvm, fs, path, hashes):
+        for mp, entries in seg.items():
+            m[mp].update(entries)
+    return m
+
+
 def _spill_segments(
     jvm,
     fs,
@@ -394,8 +418,6 @@ def _read_manifest(
     jvm, fs, _ = _hadoop(spark, path)
     m = _read_small_json(jvm, fs, _manifest_path(path, version))
     if "segments" in m:
-        for mp in _LEAF_MAPS:
-            m.setdefault(mp, {})
         n = m.get("seg_n")
         partial = (
             leaves is not None
@@ -412,9 +434,7 @@ def _read_manifest(
             hashes = [m["segments"][gi] for gi in need]
         else:
             hashes = m["segments"]
-        for seg in _load_segments(jvm, fs, path, hashes):
-            for mp, entries in seg.items():
-                m[mp].update(entries)
+        _fold_segments(jvm, fs, path, m, hashes)
         if partial:
             # a projection must never masquerade as the full enumeration
             keep = set(leaves)
@@ -492,12 +512,7 @@ def snapshot_has_published_head(spark: SparkSession, path: str) -> bool:
     not crash every retry on snapshot_read's 'no published snapshot'.
     Probes through the Hadoop FS abstraction, so hdfs://-/s3a://-style
     warehouses answer correctly where an os.path check is always False."""
-    jvm, fs, _ = _hadoop(spark, path)
-    from callio_etl_spark.io import _exists
-
-    return _exists(
-        jvm, fs, path.rstrip("/") + "/" + SNAP_DIR
-    ) and bool(snapshot_versions(spark, path))
+    return bool(snapshot_versions(spark, path))
 
 
 def snapshot_staged(spark: SparkSession, path: str) -> list[int]:
@@ -526,6 +541,132 @@ def _published_head(
     return None
 
 
+#: The manifest keys every commit inherits from the published head unless
+#: its verb overrides them (the carry rule; see the module docstring).
+_CARRY_KEYS = (
+    "partition_col",
+    "schema",
+    "bloom",
+    "bucket_spec",
+    "spec_history",
+    "renames",
+    "widens",
+    "properties",
+    "delete_keys",
+    *_LEAF_MAPS,
+)
+
+
+@contextlib.contextmanager
+def _table_locked(spark: SparkSession, path: str):
+    """Hold the table commit lock for the enclosed block and yield the
+    table's ``(jvm, fs)`` — the one place this module takes and releases
+    the lock."""
+    jvm, fs, _ = _hadoop(spark, path)
+    acquire_table_lock(spark, path)
+    try:
+        yield jvm, fs
+    finally:
+        release_table_lock(spark, path)
+
+
+def _commit(spark: SparkSession, path: str, keep_snapshots: int, build) -> int:
+    """The commit transaction (see the module docstring). ``build(prev,
+    version)`` runs under the lock against the published head ``prev``
+    (None for a new table) and the version this commit would take. It
+    returns ``(changes, touched)`` — the manifest keys the verb sets,
+    ``op`` included (a ``None`` value removes the key), and every leaf
+    whose leaf-map entries it changed — or an int: the version to report
+    when there is nothing to commit. A ``published_from`` change marks a
+    write-audit-publish publish, whose staged source manifest is removed
+    once its live copy is published. Returns the committed version."""
+    with _table_locked(spark, path) as (jvm, fs):
+        _vacuum_stale_stagings(jvm, fs, path)
+        prev = _published_head(spark, jvm, fs, path)
+        version = _next_version(jvm, fs, path)
+        out = build(prev, version)
+        if isinstance(out, int):
+            return out
+        changes, touched = out
+        manifest = {k: prev[k] for k in _CARRY_KEYS if prev and k in prev}
+        manifest.update(changes, version=version)
+        manifest = {k: v for k, v in manifest.items() if v is not None}
+        _write_manifest(spark, path, manifest, parent=prev, touched=touched)
+        if "published_from" in manifest:
+            _delete(jvm, fs, _manifest_path(path, manifest["published_from"]))
+        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
+        return version
+
+
+def _need_head(prev: dict | None, path: str) -> dict:
+    if prev is None:
+        raise FileNotFoundError(f"no published snapshot at {path}")
+    return prev
+
+
+def _leaf_maps(prev: dict | None) -> dict[str, dict]:
+    """Copies of the head's five leaf-keyed maps, for a verb to edit."""
+    return {mp: dict((prev or {}).get(mp, {})) for mp in _LEAF_MAPS}
+
+
+def _forget_leaf(maps: dict[str, dict], leaf: str, mps=_LEAF_MAPS) -> None:
+    """Drop ``leaf`` from the named leaf maps (all five by default)."""
+    for mp in mps:
+        maps[mp].pop(leaf, None)
+
+
+def _changed_leaves(a: dict | None, b: dict) -> set[str]:
+    """Every leaf whose entry differs between two resolved manifests in
+    any leaf map — the ``touched`` set of a commit that republishes
+    ``b``'s content over head ``a``."""
+    a = a or {}
+    out = set()
+    for mp in _LEAF_MAPS:
+        old, new = a.get(mp) or {}, b.get(mp) or {}
+        out.update(
+            leaf
+            for leaf in old.keys() | new.keys()
+            if old.get(leaf) != new.get(leaf)
+        )
+    return out
+
+
+def _refuse_pending_deletes(prev: dict, path: str, action: str) -> None:
+    if any(prev.get("deletes", {}).values()):
+        raise ValueError(
+            f"table {path} has pending merge-on-read delete files; "
+            f"compact them before {action}"
+        )
+
+
+def _column_names(prev: dict, path: str, name: str) -> list[str]:
+    """The head's committed column names, after checking ``name`` is one."""
+    if "schema" not in prev:
+        raise ValueError(f"{path} manifest lacks a committed schema")
+    names = [f["name"] for f in prev["schema"]["fields"]]
+    if name not in names:
+        raise ValueError(f"no column {name!r} in {names}")
+    return names
+
+
+def _check_properties(props: dict) -> None:
+    if not all(isinstance(k, str) for k in props):
+        raise ValueError("property keys must be strings")
+    json.dumps(props)  # fail loud on non-serializable values
+
+
+def _merged_properties(prev: dict | None, props: dict | None) -> dict | None:
+    """The head's properties with ``props`` merged in (a ``None`` value
+    unsets its key); None when no property is left."""
+    merged = dict((prev or {}).get("properties", {}))
+    for k, v in (props or {}).items():
+        if v is None:
+            merged.pop(k, None)
+        else:
+            merged[k] = v
+    return merged or None
+
+
 def _tag_file(path: str, name: str) -> str:
     return f"{_snap_dir(path)}/{_TAG_PREFIX}{name}.json"
 
@@ -545,14 +686,8 @@ def snapshot_tags(spark: SparkSession, path: str) -> dict[str, int]:
         fname = st.getPath().getName()
         if fname.startswith(_TAG_PREFIX) and fname.endswith(".json"):
             name = fname[len(_TAG_PREFIX) : -len(".json")]
-            stream = fs.open(st.getPath())
-            try:
-                data = bytes(
-                    jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                ).decode("utf-8")
-            finally:
-                stream.close()
-            out[name] = int(json.loads(data)["version"])
+            tag = _read_small_json(jvm, fs, _tag_file(path, name))
+            out[name] = int(tag["version"])
     return out
 
 
@@ -573,14 +708,8 @@ def snapshot_tag(
     if not _valid_tag(name):
         raise ValueError(f"invalid tag name {name!r} (want [A-Za-z0-9._-]+)")
     path = path.rstrip("/")
-    jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
-        published = [
-            v2
-            for v2 in _manifest_versions(jvm, fs, path)
-            if not _read_manifest(spark, path, v2).get("staged")
-        ]
+    with _table_locked(spark, path) as (jvm, fs):
+        published = snapshot_versions(spark, path)
         if not published:
             raise FileNotFoundError(f"no published snapshot at {path}")
         v = published[-1] if version is None else version
@@ -605,8 +734,6 @@ def snapshot_tag(
             out.close()
         _rename(jvm, fs, tmp, final)
         return v
-    finally:
-        release_table_lock(spark, path)
 
 
 def snapshot_drop_tag(spark: SparkSession, path: str, name: str) -> None:
@@ -614,15 +741,11 @@ def snapshot_drop_tag(spark: SparkSession, path: str, name: str) -> None:
     if not _valid_tag(name):
         raise ValueError(f"invalid tag name {name!r} (want [A-Za-z0-9._-]+)")
     path = path.rstrip("/")
-    jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
+    with _table_locked(spark, path) as (jvm, fs):
         p = jvm.org.apache.hadoop.fs.Path(_tag_file(path, name))
         if not fs.exists(p):
             raise FileNotFoundError(f"no tag {name!r} at {path}")
         fs.delete(p, False)
-    finally:
-        release_table_lock(spark, path)
 
 
 def snapshot_manifest(
@@ -779,24 +902,11 @@ def snapshot_read(
             sub = {
                 **m,
                 "partition_col": pc,
-                "partitions": leaves,
-                "stats": {
-                    l: v for l, v in m.get("stats", {}).items() if l in leaves
-                },
-                "file_stats": {
-                    l: v
-                    for l, v in m.get("file_stats", {}).items()
-                    if l in leaves
-                },
-                "file_blooms": {
-                    l: v
-                    for l, v in m.get("file_blooms", {}).items()
-                    if l in leaves
-                },
-                "deletes": {
-                    l: v
-                    for l, v in m.get("deletes", {}).items()
-                    if l in leaves
+                **{
+                    mp: {
+                        l: v for l, v in m.get(mp, {}).items() if l in leaves
+                    }
+                    for mp in _LEAF_MAPS
                 },
             }
             outs.append(_read_single_spec(spark, path, sub, between, point))
@@ -1177,13 +1287,9 @@ def snapshot_evolve_spec(
     files are pending (delete files are assigned under one spec;
     compact them first). Returns the committed version."""
     path = path.rstrip("/")
-    jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
-        _vacuum_stale_stagings(jvm, fs, path)
-        prev = _published_head(spark, jvm, fs, path)
-        if prev is None:
-            raise FileNotFoundError(f"no published snapshot at {path}")
+
+    def build(prev, version):
+        prev = _need_head(prev, path)
         if prev["partition_col"] == new_partition_col:
             raise ValueError(
                 f"table already partitions by {new_partition_col!r}"
@@ -1194,29 +1300,15 @@ def snapshot_evolve_spec(
                 f"the bucketed mount declares a single partition spec — "
                 f"drop the bucket layout (full rewrite) before evolving"
             )
-        if any(prev.get("deletes", {}).values()):
-            raise ValueError(
-                f"table {path} has pending merge-on-read delete files; "
-                f"compact them before evolving the partition spec"
-            )
-        version = _next_version(jvm, fs, path)
-        manifest = {
-            **prev,
-            "version": version,
+        _refuse_pending_deletes(prev, path, "evolving the partition spec")
+        history = prev.get("spec_history", [prev["partition_col"]])
+        return {
             "op": "evolve-spec",
             "partition_col": new_partition_col,
-            "spec_history": prev.get(
-                "spec_history", [prev["partition_col"]]
-            )
-            + [new_partition_col],
-        }
-        for k in ("staged", "parent", "published_from"):
-            manifest.pop(k, None)
-        _write_manifest(spark, path, manifest, parent=prev, touched=set())
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return version
-    finally:
-        release_table_lock(spark, path)
+            "spec_history": history + [new_partition_col],
+        }, set()
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 def snapshot_set_properties(
@@ -1238,38 +1330,15 @@ def snapshot_set_properties(
     path = path.rstrip("/")
     if not props:
         raise ValueError("props must be a non-empty dict")
-    if not all(isinstance(k, str) for k in props):
-        raise ValueError("property keys must be strings")
-    json.dumps(props)  # fail loud on non-serializable values
-    jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
-        _vacuum_stale_stagings(jvm, fs, path)
-        prev = _published_head(spark, jvm, fs, path)
-        if prev is None:
-            raise FileNotFoundError(f"no published snapshot at {path}")
-        merged = dict(prev.get("properties", {}))
-        for k, v in props.items():
-            if v is None:
-                merged.pop(k, None)
-            else:
-                merged[k] = v
-        version = _next_version(jvm, fs, path)
-        manifest = {
-            **prev,
-            "version": version,
+    _check_properties(props)
+
+    def build(prev, version):
+        return {
             "op": "set-properties",
-            "properties": merged,
-        }
-        if not merged:
-            manifest.pop("properties")
-        for k in ("staged", "parent", "published_from"):
-            manifest.pop(k, None)
-        _write_manifest(spark, path, manifest, parent=prev, touched=set())
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return version
-    finally:
-        release_table_lock(spark, path)
+            "properties": _merged_properties(_need_head(prev, path), props),
+        }, set()
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 def snapshot_properties(
@@ -1318,19 +1387,10 @@ def snapshot_rename_column(
     schema and cannot alias per era — rewrite under the new name
     instead). Returns the committed version."""
     path = path.rstrip("/")
-    jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
-        _vacuum_stale_stagings(jvm, fs, path)
-        prev = _published_head(spark, jvm, fs, path)
-        if prev is None:
-            raise FileNotFoundError(f"no published snapshot at {path}")
-        if "schema" not in prev:
-            raise ValueError(f"{path} manifest lacks a committed schema")
-        names = [f["name"] for f in prev["schema"]["fields"]]
-        if old not in names:
-            raise ValueError(f"no column {old!r} in {names}")
-        if new in names:
+
+    def build(prev, version):
+        prev = _need_head(prev, path)
+        if new in _column_names(prev, path, old):
             raise ValueError(f"column {new!r} already exists")
         if old == prev["partition_col"]:
             raise ValueError(
@@ -1343,39 +1403,28 @@ def snapshot_rename_column(
                 f"the bucketed mount cannot alias names per era — rewrite "
                 f"under the new name instead"
             )
-        if any(prev.get("deletes", {}).values()):
-            raise ValueError(
-                f"table {path} has pending merge-on-read delete files "
-                f"(they store key columns under their writing names); "
-                f"compact them before renaming"
-            )
-        version = _next_version(jvm, fs, path)
+        # delete files store key columns under their writing names
+        _refuse_pending_deletes(prev, path, "renaming")
         fields = [
             {**f, "name": new} if f["name"] == old else f
             for f in prev["schema"]["fields"]
         ]
-        manifest = {
-            **prev,
-            "version": version,
+        changes = {
             "op": "rename-column",
             "schema": {**prev["schema"], "fields": fields},
             "renames": prev.get("renames", [])
             + [{"version": version, "from": old, "to": new}],
         }
-        if old in manifest.get("delete_keys", []):
+        if old in prev.get("delete_keys", []):
             # the established MoR key set follows the rename (no delete
             # FILES are pending — checked above — so nothing on disk
             # still stores the old key name)
-            manifest["delete_keys"] = [
-                new if k == old else k for k in manifest["delete_keys"]
+            changes["delete_keys"] = [
+                new if k == old else k for k in prev["delete_keys"]
             ]
-        for k in ("staged", "parent", "published_from"):
-            manifest.pop(k, None)
-        _write_manifest(spark, path, manifest, parent=prev, touched=set())
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return version
-    finally:
-        release_table_lock(spark, path)
+        return changes, set()
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 def snapshot_drop_column(
@@ -1394,18 +1443,10 @@ def snapshot_drop_column(
     partition column, not on bucketed tables, not the delete-key set,
     not while delete files are pending."""
     path = path.rstrip("/")
-    jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
-        _vacuum_stale_stagings(jvm, fs, path)
-        prev = _published_head(spark, jvm, fs, path)
-        if prev is None:
-            raise FileNotFoundError(f"no published snapshot at {path}")
-        if "schema" not in prev:
-            raise ValueError(f"{path} manifest lacks a committed schema")
-        names = [f["name"] for f in prev["schema"]["fields"]]
-        if name not in names:
-            raise ValueError(f"no column {name!r} in {names}")
+
+    def build(prev, version):
+        prev = _need_head(prev, path)
+        _column_names(prev, path, name)
         if name == prev["partition_col"]:
             raise ValueError("cannot drop the partition column")
         if prev.get("bucket_spec", {}).get("col") == name:
@@ -1417,40 +1458,19 @@ def snapshot_drop_column(
             raise ValueError(
                 f"{name!r} is part of the table's delete_keys"
             )
-        if any(prev.get("deletes", {}).values()):
-            raise ValueError(
-                f"table {path} has pending merge-on-read delete files; "
-                f"compact them before dropping columns"
-            )
-        version = _next_version(jvm, fs, path)
-        manifest = {
-            **prev,
-            "version": version,
+        _refuse_pending_deletes(prev, path, "dropping columns")
+        fields = [f for f in prev["schema"]["fields"] if f["name"] != name]
+        # tombstone: a future same-named column resolves pre-drop dirs to
+        # this never-written name -> NULL, not resurrection
+        tomb = f"__dropped_{name}_{uuid.uuid4().hex[:8]}__"
+        return {
             "op": "drop-column",
-            "schema": {
-                **prev["schema"],
-                "fields": [
-                    f for f in prev["schema"]["fields"] if f["name"] != name
-                ],
-            },
-            # tombstone: a future same-named column resolves pre-drop
-            # dirs to this never-written name -> NULL, not resurrection
+            "schema": {**prev["schema"], "fields": fields},
             "renames": prev.get("renames", [])
-            + [
-                {
-                    "version": version,
-                    "from": f"__dropped_{name}_{uuid.uuid4().hex[:8]}__",
-                    "to": name,
-                }
-            ],
-        }
-        for k in ("staged", "parent", "published_from"):
-            manifest.pop(k, None)
-        _write_manifest(spark, path, manifest, parent=prev, touched=set())
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return version
-    finally:
-        release_table_lock(spark, path)
+            + [{"version": version, "from": tomb, "to": name}],
+        }, set()
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 #: Type-widening lattice (Iceberg's evolve-type verbs): a column may move
@@ -1519,18 +1539,10 @@ def snapshot_widen_column(
     files store key values at their writing width). Returns the
     committed version."""
     path = path.rstrip("/")
-    jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
-        _vacuum_stale_stagings(jvm, fs, path)
-        prev = _published_head(spark, jvm, fs, path)
-        if prev is None:
-            raise FileNotFoundError(f"no published snapshot at {path}")
-        if "schema" not in prev:
-            raise ValueError(f"{path} manifest lacks a committed schema")
-        names = [f["name"] for f in prev["schema"]["fields"]]
-        if name not in names:
-            raise ValueError(f"no column {name!r} in {names}")
+
+    def build(prev, version):
+        prev = _need_head(prev, path)
+        _column_names(prev, path, name)
         old_type = next(
             f["type"] for f in prev["schema"]["fields"] if f["name"] == name
         )
@@ -1558,51 +1570,35 @@ def snapshot_widen_column(
                 f"and decimal precision growth at the same scale evolve "
                 f"in place — anything narrower needs a rewrite"
             )
-        version = _next_version(jvm, fs, path)
         fields = [
             {**f, "type": new_type} if f["name"] == name else f
             for f in prev["schema"]["fields"]
         ]
-        blooms = {
-            leaf: {
+        blooms = {}
+        for leaf, files in prev.get("file_blooms", {}).items():
+            kept = {
                 key: {c: bm for c, bm in per.items() if c != name}
                 for key, per in files.items()
             }
-            for leaf, files in prev.get("file_blooms", {}).items()
-        }
-        blooms = {
-            leaf: {key: per for key, per in files.items() if per}
-            for leaf, files in blooms.items()
-        }
-        blooms = {leaf: files for leaf, files in blooms.items() if files}
-        manifest = {
-            **prev,
+            kept = {key: per for key, per in kept.items() if per}
+            if kept:
+                blooms[leaf] = kept
+        widen = {
             "version": version,
+            "name": name,
+            "from": old_type,
+            "to": new_type,
+        }
+        # only leaves carrying bloom entries can differ from prev (the
+        # widened column's blooms are dropped); a superset is always safe
+        return {
             "op": "widen-column",
             "schema": {**prev["schema"], "fields": fields},
             "file_blooms": blooms,
-            "widens": prev.get("widens", [])
-            + [
-                {
-                    "version": version,
-                    "name": name,
-                    "from": old_type,
-                    "to": new_type,
-                }
-            ],
-        }
-        for k in ("staged", "parent", "published_from"):
-            manifest.pop(k, None)
-        # only leaves carrying bloom entries can differ from prev (the
-        # widened column's blooms are dropped); a superset is always safe
-        _write_manifest(
-            spark, path, manifest, parent=prev,
-            touched=set(prev.get("file_blooms", {})),
-        )
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return version
-    finally:
-        release_table_lock(spark, path)
+            "widens": prev.get("widens", []) + [widen],
+        }, set(prev.get("file_blooms", {}))
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 def _relax_batch_types(df: DataFrame, prev: dict | None) -> DataFrame:
@@ -1657,11 +1653,15 @@ def _refuse_narrow_batch(prev: dict | None, schema_json: dict) -> None:
             )
 
 
-def _union_schema_json(old: dict, new: dict) -> dict:
-    """Union two manifest schema JSONs column-wise (append/evolved-
-    overwrite rule): old columns keep their position, new ones append;
-    a type change is rejected — evolution may widen the column set,
-    never silently rewrite a column's type."""
+def _union_schema_json(prev: dict | None, new: dict) -> dict:
+    """Union the head's committed schema with a batch's, column-wise
+    (append/upsert/evolved-overwrite rule): old columns keep their
+    position, new ones append; a type change is rejected — evolution may
+    widen the column set, never silently rewrite a column's type. A head
+    without a committed schema yields the batch's."""
+    if prev is None or "schema" not in prev:
+        return new
+    old = prev["schema"]
     old_fields = {f["name"]: f for f in old["fields"]}
     fields = list(old["fields"])
     for f_ in new["fields"]:
@@ -2130,6 +2130,66 @@ def _staged_stats(
     return new_stats, new_fstats
 
 
+def _stage(
+    df: DataFrame,
+    path: str,
+    partition_col: str,
+    max_records_per_file: int | None = None,
+) -> str:
+    """Write ``df`` (already distributed) partitioned by ``partition_col``
+    to a fresh writer-unique staging dir beside the table — unlocked,
+    invisible to readers — and return the dir."""
+    wstaging = f"{path}{STAGING_SUFFIX}.{uuid.uuid4().hex[:12]}"
+    writer = df.write.mode("overwrite").partitionBy(partition_col)
+    if max_records_per_file:
+        writer = writer.option("maxRecordsPerFile", max_records_per_file)
+    writer.parquet(wstaging)
+    return wstaging
+
+
+def _token(version: int, kind: str = "") -> str:
+    """A fresh data-dir token for a commit at ``version``; ``kind="del"``
+    marks a dir of merge-on-read delete files."""
+    return f"__s{version:06d}{kind}_{uuid.uuid4().hex[:8]}__"
+
+
+def _land(
+    jvm, fs, wstaging: str, path: str, partition_col: str, token: str
+) -> list[str]:
+    """Under the lock: move every staged partition leaf into the table as
+    ``<leaf>/<token>`` and drop the emptied staging dir. Returns the
+    landed leaves."""
+    staged = _partition_leaves(jvm, fs, wstaging, partition_col)
+    _move_staged_leaves(jvm, fs, wstaging, path, staged, token)
+    _delete(jvm, fs, wstaging)
+    return staged
+
+
+def _under_token(token: str, per_file: dict) -> dict:
+    """Key a staged leaf's per-file entries by ``<token>/<file>``, so
+    coverage stays attributable per data dir."""
+    return {f"{token}/{fname}": v for fname, v in per_file.items()}
+
+
+def _put_leaf(
+    maps: dict[str, dict],
+    leaf: str,
+    token: str,
+    stats: dict,
+    fstats: dict,
+    blooms: dict,
+) -> None:
+    """Record ``leaf`` as the single data dir ``token`` with the stats,
+    file stats and file blooms its staged write collected."""
+    maps["partitions"][leaf] = token
+    if leaf in stats:
+        maps["stats"][leaf] = stats[leaf]
+    if leaf in fstats:
+        maps["file_stats"][leaf] = _under_token(token, fstats[leaf])
+    if leaf in blooms:
+        maps["file_blooms"][leaf] = _under_token(token, blooms[leaf])
+
+
 def snapshot_partition_overwrite(
     spark: SparkSession,
     df: DataFrame,
@@ -2248,9 +2308,7 @@ def snapshot_partition_overwrite(
         # argument-derived checks run BEFORE any staging I/O: failing
         # after the leaf moves would strand token dirs inside live
         # leaves, reclaimable only by the O(table) orphan walk
-        if not all(isinstance(k, str) for k in properties):
-            raise ValueError("property keys must be strings")
-        json.dumps(properties)  # fail loud on non-serializable values
+        _check_properties(properties)
     jvm, fs, _ = _hadoop(spark, path)
     df = _relax_batch_types(df, _published_head(spark, jvm, fs, path))
     if zorder_cols:
@@ -2267,12 +2325,12 @@ def snapshot_partition_overwrite(
         ).sortWithinPartitions(*cluster_cols)
     elif not bucket_by:
         df = _distribute_for_write(df, partition_col, override=distribution)
-    wstaging = f"{path}{STAGING_SUFFIX}.{uuid.uuid4().hex[:12]}"
     if bucket_by:
         # Spark's bucketed writer only runs through the catalog: stage as
         # a TEMPORARY EXTERNAL table at the staging path (bucket ids are
         # encoded in the file names), then drop the catalog entry — the
         # files stay and flow through the normal rename+manifest commit.
+        wstaging = f"{path}{STAGING_SUFFIX}.{uuid.uuid4().hex[:12]}"
         tmp_tbl = f"__snap_stage_{uuid.uuid4().hex[:10]}"
         writer = (
             df.write.format("parquet")
@@ -2287,30 +2345,21 @@ def snapshot_partition_overwrite(
         writer.saveAsTable(tmp_tbl)
         spark.sql(f"DROP TABLE IF EXISTS `{tmp_tbl}`")
     else:
-        writer = df.write.mode("overwrite").partitionBy(partition_col)
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.parquet(wstaging)
+        wstaging = _stage(df, path, partition_col, max_records_per_file)
     schema_json = json.loads(df.schema.json())
     new_stats, new_fstats = _staged_stats(
         spark, wstaging, partition_col, stats_cols, file_stats
     )
     new_blooms = _staged_blooms(spark, wstaging, partition_col, bloom_cols)
+    new_spec = {"n": bucket_by[0], "col": bucket_by[1]} if bucket_by else None
 
-    acquire_table_lock(spark, path)
-    try:
-        _vacuum_stale_stagings(jvm, fs, path)
-        versions = _manifest_versions(jvm, fs, path)
-        prev = _published_head(spark, jvm, fs, path)
+    def build(prev, version):
         if prev and prev["partition_col"] != partition_col:
             raise ValueError(
                 f"table {path} is partitioned by {prev['partition_col']!r}, "
                 f"not {partition_col!r}"
             )
         _refuse_narrow_batch(prev, schema_json)
-        new_spec = (
-            {"n": bucket_by[0], "col": bucket_by[1]} if bucket_by else None
-        )
         prev_spec = prev.get("bucket_spec") if prev else None
         if prev is not None and prev_spec != new_spec:
             raise ValueError(
@@ -2319,96 +2368,43 @@ def snapshot_partition_overwrite(
                 f"table property (carried partitions' files are hashed "
                 f"under it); every overwrite must keep it"
             )
-        version = _next_version(jvm, fs, path)
-        token = f"__s{version:06d}_{uuid.uuid4().hex[:8]}__"
-        partitions = dict(prev["partitions"]) if prev else {}
-        stats = dict(prev.get("stats", {})) if prev else {}
-        fstats = dict(prev.get("file_stats", {})) if prev else {}
-        blooms = dict(prev.get("file_blooms", {})) if prev else {}
-        bloom_params = _bloom_params_for_commit(prev, bloom_cols)
-        deletes = dict(prev.get("deletes", {})) if prev else {}
+        bloom = _bloom_params_for_commit(prev, bloom_cols)
+        maps = _leaf_maps(prev)
         for leaf in retire_leaves or []:
-            if leaf not in partitions:
+            if leaf not in maps["partitions"]:
                 raise FileNotFoundError(
                     f"retire_leaves: no partition dir {leaf!r} at {path}"
                 )
-            partitions.pop(leaf)
-            stats.pop(leaf, None)
-            fstats.pop(leaf, None)
-            blooms.pop(leaf, None)
-            deletes.pop(leaf, None)
-        staged = _partition_leaves(jvm, fs, wstaging, partition_col)
-        _move_staged_leaves(jvm, fs, wstaging, path, staged, token)
-        for leaf in staged:
-            partitions[leaf] = token
-            stats.pop(leaf, None)  # rewritten: old ranges no longer valid
-            fstats.pop(leaf, None)
-            blooms.pop(leaf, None)
-            deletes.pop(leaf, None)  # new data dir supersedes delete files
-            if leaf in new_stats:
-                stats[leaf] = new_stats[leaf]
-            if leaf in new_fstats:
-                fstats[leaf] = {
-                    f"{token}/{fname}": st
-                    for fname, st in new_fstats[leaf].items()
-                }
-            if leaf in new_blooms:
-                blooms[leaf] = {
-                    f"{token}/{fname}": bm
-                    for fname, bm in new_blooms[leaf].items()
-                }
-        _delete(jvm, fs, wstaging)
-        if prev and "schema" in prev and any(
-            leaf.split("=", 1)[0] != partition_col for leaf in partitions
+            _forget_leaf(maps, leaf)
+        schema = schema_json
+        if any(
+            leaf.split("=", 1)[0] != partition_col
+            for leaf in maps["partitions"]
         ):
             # spec-evolved table with carried old-spec dirs: the committed
             # schema is the UNION, so those dirs keep reading their
             # columns (incl. the old spec column) after this rewrite
-            schema_json = _union_schema_json(prev["schema"], schema_json)
-        manifest = {
-            "version": version,
+            schema = _union_schema_json(prev, schema_json)
+        token = _token(version)
+        staged = _land(jvm, fs, wstaging, path, partition_col, token)
+        for leaf in staged:
+            # rewritten: old ranges, blooms and delete files no longer apply
+            _forget_leaf(maps, leaf)
+            _put_leaf(maps, leaf, token, new_stats, new_fstats, new_blooms)
+        changes = {
             "op": op_name,
             "partition_col": partition_col,
-            "partitions": partitions,
-            "stats": stats,
-            "file_stats": fstats,
-            "file_blooms": blooms,
-            "deletes": deletes,
-            "schema": schema_json,
+            **maps,
+            "schema": schema,
+            "bloom": bloom,
+            "bucket_spec": new_spec,
+            "properties": _merged_properties(prev, properties),
         }
-        if bloom_params:
-            manifest["bloom"] = bloom_params
-        if new_spec:
-            manifest["bucket_spec"] = new_spec
-        if prev and "spec_history" in prev:
-            manifest["spec_history"] = prev["spec_history"]
-        if prev and "renames" in prev:
-            manifest["renames"] = prev["renames"]
-        if prev and "widens" in prev:
-            manifest["widens"] = prev["widens"]
-        merged_props = dict(prev.get("properties", {})) if prev else {}
-        if properties:
-            # validated at function entry, before any staging I/O
-            for pk, pv in properties.items():
-                if pv is None:
-                    merged_props.pop(pk, None)
-                else:
-                    merged_props[pk] = pv
-        if merged_props:
-            manifest["properties"] = merged_props
-        if prev and "delete_keys" in prev:
-            manifest["delete_keys"] = prev["delete_keys"]
         if audit:
-            manifest["staged"] = True
-            manifest["parent"] = prev["version"] if prev else 0
-        _write_manifest(
-            spark, path, manifest, parent=prev,
-            touched=set(staged) | set(retire_leaves or []),
-        )
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return version
-    finally:
-        release_table_lock(spark, path)
+            changes.update(staged=True, parent=prev["version"] if prev else 0)
+        return changes, set(staged) | set(retire_leaves or [])
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 def _merge_rng(old: dict, new: dict):
@@ -2476,25 +2472,19 @@ def snapshot_append(
     path = path.rstrip("/")
     jvm, fs, _ = _hadoop(spark, path)
     df = _relax_batch_types(df, _published_head(spark, jvm, fs, path))
-    wstaging = f"{path}{STAGING_SUFFIX}.{uuid.uuid4().hex[:12]}"
-    writer = (
-        _distribute_for_write(df, partition_col)
-        .write.mode("overwrite")
-        .partitionBy(partition_col)
+    wstaging = _stage(
+        _distribute_for_write(df, partition_col),
+        path,
+        partition_col,
+        max_records_per_file,
     )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(wstaging)
     batch_schema = json.loads(df.schema.json())
     new_stats, new_fstats = _staged_stats(
         spark, wstaging, partition_col, stats_cols, file_stats
     )
     new_blooms = _staged_blooms(spark, wstaging, partition_col, bloom_cols)
-    acquire_table_lock(spark, path)
-    try:
-        _vacuum_stale_stagings(jvm, fs, path)
-        versions = _manifest_versions(jvm, fs, path)
-        prev = _published_head(spark, jvm, fs, path)
+
+    def build(prev, version):
         if prev and prev["partition_col"] != partition_col:
             raise ValueError(
                 f"table {path} is partitioned by {prev['partition_col']!r}, "
@@ -2508,35 +2498,17 @@ def snapshot_append(
                 f"single-location bucketed reader cannot mount — rewrite "
                 f"the partition via snapshot_partition_overwrite instead"
             )
-        staged = _partition_leaves(jvm, fs, wstaging, partition_col)
-        deletes = dict(prev.get("deletes", {})) if prev else {}
-        version = _next_version(jvm, fs, path)
-        token = f"__s{version:06d}_{uuid.uuid4().hex[:8]}__"
-        partitions = dict(prev["partitions"]) if prev else {}
-        stats = dict(prev.get("stats", {})) if prev else {}
-        fstats = dict(prev.get("file_stats", {})) if prev else {}
-        blooms = dict(prev.get("file_blooms", {})) if prev else {}
-        bloom_params = _bloom_params_for_commit(prev, bloom_cols)
-        _move_staged_leaves(jvm, fs, wstaging, path, staged, token)
+        bloom = _bloom_params_for_commit(prev, bloom_cols)
+        schema = _union_schema_json(prev, batch_schema)
+        maps = _leaf_maps(prev)
+        token = _token(version)
+        staged = _land(jvm, fs, wstaging, path, partition_col, token)
         for leaf in staged:
-            fresh_f = {
-                f"{token}/{fname}": st
-                for fname, st in new_fstats.get(leaf, {}).items()
-            }
-            fresh_b = {
-                f"{token}/{fname}": bm
-                for fname, bm in new_blooms.get(leaf, {}).items()
-            }
-            if leaf not in partitions:  # brand-new partition: plain commit
-                partitions[leaf] = token
-                if leaf in new_stats:
-                    stats[leaf] = new_stats[leaf]
-                if fresh_f:
-                    fstats[leaf] = fresh_f
-                if fresh_b:
-                    blooms[leaf] = fresh_b
+            if leaf not in maps["partitions"]:  # brand-new partition
+                _put_leaf(maps, leaf, token, new_stats, new_fstats, new_blooms)
                 continue
-            partitions[leaf] = [*_leaf_toks({"partitions": partitions}, leaf), token]
+            maps["partitions"][leaf] = [*_leaf_toks(maps, leaf), token]
+            stats = maps["stats"]
             merged = (
                 _merge_rng(stats[leaf], new_stats[leaf])
                 if leaf in stats and leaf in new_stats
@@ -2546,65 +2518,67 @@ def snapshot_append(
                 stats[leaf] = merged
             else:
                 stats.pop(leaf, None)
-            if leaf in fstats and fresh_f:
-                fstats[leaf] = {**fstats[leaf], **fresh_f}
-            else:
-                fstats.pop(leaf, None)
-            # same coverage rule as file stats: an append without blooms
-            # (or onto a leaf without them) voids the leaf's file-skip
-            # entry — partial coverage must never skip
-            if leaf in blooms and fresh_b:
-                blooms[leaf] = {**blooms[leaf], **fresh_b}
-            else:
-                blooms.pop(leaf, None)
-        _delete(jvm, fs, wstaging)
-        schema_json = batch_schema
-        if prev and "schema" in prev:
-            old_fields = {f["name"]: f for f in prev["schema"]["fields"]}
-            fields = list(prev["schema"]["fields"])
-            for f_ in batch_schema["fields"]:
-                have = old_fields.get(f_["name"])
-                if have is None:
-                    fields.append(f_)
-                elif have["type"] != f_["type"]:
-                    raise ValueError(
-                        f"append changes type of {f_['name']!r}: "
-                        f"{have['type']} -> {f_['type']}"
-                    )
-            schema_json = {**prev["schema"], "fields": fields}
-        manifest = {
-            "version": version,
+            # per-file stats and blooms extend a leaf only when both sides
+            # cover it: partial coverage must never skip
+            for mp, fresh in (
+                ("file_stats", new_fstats),
+                ("file_blooms", new_blooms),
+            ):
+                if leaf in maps[mp] and leaf in fresh:
+                    maps[mp][leaf] = {
+                        **maps[mp][leaf],
+                        **_under_token(token, fresh[leaf]),
+                    }
+                else:
+                    maps[mp].pop(leaf, None)
+        changes = {
             "op": "append",
             "partition_col": partition_col,
-            "partitions": partitions,
-            "stats": stats,
-            "file_stats": fstats,
-            "file_blooms": blooms,
-            "deletes": deletes,
-            "schema": schema_json,
+            **maps,
+            "schema": schema,
+            "bloom": bloom,
         }
-        if bloom_params:
-            manifest["bloom"] = bloom_params
-        if prev and "spec_history" in prev:
-            manifest["spec_history"] = prev["spec_history"]
-        if prev and "renames" in prev:
-            manifest["renames"] = prev["renames"]
-        if prev and "widens" in prev:
-            manifest["widens"] = prev["widens"]
-        if prev and "properties" in prev:
-            manifest["properties"] = prev["properties"]
-        if prev and "delete_keys" in prev:
-            manifest["delete_keys"] = prev["delete_keys"]
         if audit:
-            manifest["staged"] = True
-            manifest["parent"] = prev["version"] if prev else 0
-        _write_manifest(
-            spark, path, manifest, parent=prev, touched=set(staged)
+            changes.update(staged=True, parent=prev["version"] if prev else 0)
+        return changes, set(staged)
+
+    return _commit(spark, path, keep_snapshots, build)
+
+
+def _check_mor_target(
+    m: dict, path: str, keys: list[str], instead: str
+) -> None:
+    """Refusals shared by the merge-on-read verbs: delete files break the
+    shuffle-free bucketed read, are assigned under ONE partition spec,
+    and must match the table's established ``delete_keys``."""
+    if m.get("bucket_spec"):
+        raise ValueError(
+            f"table {path} is bucket-colocated ({m['bucket_spec']}): "
+            f"merge-on-read delete files and stacked dirs break the "
+            f"shuffle-free bucketed read — {instead}"
         )
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return version
-    finally:
-        release_table_lock(spark, path)
+    if len({leaf.split("=", 1)[0] for leaf in m["partitions"]}) > 1:
+        raise ValueError(
+            f"table {path} spans partition specs (spec evolution): delete "
+            f"files are assigned under one spec — {instead}"
+        )
+    if "delete_keys" in m and list(m["delete_keys"]) != list(keys):
+        raise ValueError(
+            f"table {path} records delete_keys={m['delete_keys']}, got {keys}"
+        )
+
+
+def _abort_if_moved(jvm, fs, m: dict, prev: dict, stagings, what: str) -> None:
+    """Optimistic concurrency for the merge-on-read verbs: their delta was
+    resolved against ``m``; if another commit landed since, drop the
+    stagings and abort (retry-able)."""
+    if prev["version"] != m["version"]:
+        for wstaging in stagings:
+            _delete(jvm, fs, wstaging)
+        raise RuntimeError(
+            f"concurrent commit: table moved v{m['version']} -> "
+            f"v{prev['version']} while staging {what}; retry"
+        )
 
 
 def snapshot_delete_rows(
@@ -2639,69 +2613,36 @@ def snapshot_delete_rows(
     jvm, fs, _ = _hadoop(spark, path)
     m = snapshot_manifest(spark, path)
     col = m["partition_col"]
-    if m.get("bucket_spec"):
-        raise ValueError(
-            f"table {path} is bucket-colocated ({m['bucket_spec']}): "
-            f"merge-on-read delete files would break the shuffle-free "
-            f"bucketed read (the anti-join re-plans the distribution) — "
-            f"rewrite the affected partitions via "
-            f"snapshot_partition_overwrite instead"
-        )
-    if len({leaf.split("=", 1)[0] for leaf in m["partitions"]}) > 1:
-        raise ValueError(
-            f"table {path} spans partition specs (spec evolution): "
-            f"delete files are assigned under one spec — rewrite the "
-            f"affected partitions instead"
-        )
-    if "delete_keys" in m and list(m["delete_keys"]) != list(keys):
-        raise ValueError(
-            f"table {path} records delete_keys={m['delete_keys']}, got {keys}"
-        )
+    _check_mor_target(
+        m,
+        path,
+        keys,
+        "rewrite the affected partitions via snapshot_partition_overwrite "
+        "instead",
+    )
     doomed = (
         snapshot_read(spark, path, version=m["version"])
         .where(predicate)
         .select(col, *keys)
     )
-    wstaging = f"{path}{STAGING_SUFFIX}.{uuid.uuid4().hex[:12]}"
-    _distribute_for_write(doomed, col).write.mode("overwrite").partitionBy(
-        col
-    ).parquet(wstaging)
-    acquire_table_lock(spark, path)
-    try:
-        _vacuum_stale_stagings(jvm, fs, path)
-        versions = _manifest_versions(jvm, fs, path)
-        prev = _published_head(spark, jvm, fs, path)
-        if prev["version"] != m["version"]:
-            _delete(jvm, fs, wstaging)
-            raise RuntimeError(
-                f"concurrent commit: table moved v{m['version']} -> "
-                f"v{prev['version']} while staging row deletes; retry"
-            )
-        staged = _partition_leaves(jvm, fs, wstaging, col)
+    wstaging = _stage(_distribute_for_write(doomed, col), path, col)
+
+    def build(prev, version):
+        _abort_if_moved(jvm, fs, m, prev, [wstaging], "row deletes")
+        token = _token(version, "del")
+        staged = _land(jvm, fs, wstaging, path, col, token)
         if not staged:  # predicate matched nothing: no-op, no new version
-            _delete(jvm, fs, wstaging)
             return prev["version"]
-        version = _next_version(jvm, fs, path)
-        token = f"__s{version:06d}del_{uuid.uuid4().hex[:8]}__"
-        deletes = {k: list(v) for k, v in prev.get("deletes", {}).items()}
-        _move_staged_leaves(jvm, fs, wstaging, path, staged, token)
+        deletes = dict(prev.get("deletes", {}))
         for leaf in staged:
-            deletes.setdefault(leaf, []).append(token)
-        _delete(jvm, fs, wstaging)
-        manifest = dict(prev)
-        manifest.update(
-            version=version,
-            op="delete_rows",
-            deletes=deletes,
-            delete_keys=list(keys),
-        )
-        _write_manifest(
-            spark, path, manifest, parent=prev, touched=set(staged)
-        )
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return version
-    finally:
-        release_table_lock(spark, path)
+            deletes[leaf] = [*deletes.get(leaf, []), token]
+        return {
+            "op": "delete_rows",
+            "deletes": deletes,
+            "delete_keys": list(keys),
+        }, set(staged)
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 def snapshot_upsert_rows(
@@ -2738,115 +2679,48 @@ def snapshot_upsert_rows(
     jvm, fs, _ = _hadoop(spark, path)
     m = snapshot_manifest(spark, path)
     col = m["partition_col"]
-    if m.get("bucket_spec"):
-        raise ValueError(
-            f"table {path} is bucket-colocated ({m['bucket_spec']}): the "
-            f"MoR upsert stacks unbucketed dirs and delete files the "
-            f"bucketed reader cannot mount — use the copy-on-write merge "
-            f"(merge_write_snapshot / snapshot_partition_overwrite)"
-        )
-    if len({leaf.split("=", 1)[0] for leaf in m["partitions"]}) > 1:
-        raise ValueError(
-            f"table {path} spans partition specs (spec evolution): the "
-            f"MoR upsert assigns delete files under one spec — use the "
-            f"copy-on-write merge instead"
-        )
+    _check_mor_target(
+        m,
+        path,
+        keys,
+        "use the copy-on-write merge (merge_write_snapshot / "
+        "snapshot_partition_overwrite) instead",
+    )
     if col not in source.columns:
         raise ValueError(f"source must carry the partition column {col!r}")
-    if "delete_keys" in m and list(m["delete_keys"]) != list(keys):
-        raise ValueError(
-            f"table {path} records delete_keys={m['delete_keys']}, got {keys}"
-        )
     source = _relax_batch_types(source, m)
     target = snapshot_read(spark, path, version=m["version"])
     matched = target.join(
         source.select(*keys).distinct(), keys, "left_semi"
     ).select(col, *keys)
-    dstaging = f"{path}{STAGING_SUFFIX}.{uuid.uuid4().hex[:12]}"
-    astaging = f"{path}{STAGING_SUFFIX}.{uuid.uuid4().hex[:12]}"
-    _distribute_for_write(matched, col).write.mode("overwrite").partitionBy(
-        col
-    ).parquet(dstaging)
-    _distribute_for_write(source, col).write.mode("overwrite").partitionBy(
-        col
-    ).parquet(astaging)
+    dstaging = _stage(_distribute_for_write(matched, col), path, col)
+    astaging = _stage(_distribute_for_write(source, col), path, col)
     batch_schema = json.loads(source.schema.json())
-    acquire_table_lock(spark, path)
-    try:
-        _vacuum_stale_stagings(jvm, fs, path)
-        versions = _manifest_versions(jvm, fs, path)
-        prev = _published_head(spark, jvm, fs, path)
-        if prev["version"] != m["version"]:
-            _delete(jvm, fs, dstaging)
-            _delete(jvm, fs, astaging)
-            raise RuntimeError(
-                f"concurrent commit: table moved v{m['version']} -> "
-                f"v{prev['version']} while staging upsert; retry"
-            )
-        version = _next_version(jvm, fs, path)
-        dtoken = f"__s{version:06d}del_{uuid.uuid4().hex[:8]}__"
-        atoken = f"__s{version:06d}_{uuid.uuid4().hex[:8]}__"
-        partitions = dict(prev["partitions"])
-        stats = dict(prev.get("stats", {}))
-        fstats = dict(prev.get("file_stats", {}))
-        blooms = dict(prev.get("file_blooms", {}))
-        deletes = {k: list(v) for k, v in prev.get("deletes", {}).items()}
-        touched_leaves: set[str] = set()
-        dleaves = _partition_leaves(jvm, fs, dstaging, col)
-        _move_staged_leaves(jvm, fs, dstaging, path, dleaves, dtoken)
+
+    def build(prev, version):
+        _abort_if_moved(jvm, fs, m, prev, [dstaging, astaging], "upsert")
+        schema = _union_schema_json(prev, batch_schema)
+        maps = _leaf_maps(prev)
+        dtoken, atoken = _token(version, "del"), _token(version)
+        dleaves = _land(jvm, fs, dstaging, path, col, dtoken)
         for leaf in dleaves:
-            deletes.setdefault(leaf, []).append(dtoken)
-            touched_leaves.add(leaf)
-        aleaves = _partition_leaves(jvm, fs, astaging, col)
-        _move_staged_leaves(jvm, fs, astaging, path, aleaves, atoken)
+            maps["deletes"][leaf] = [*maps["deletes"].get(leaf, []), dtoken]
+        aleaves = _land(jvm, fs, astaging, path, col, atoken)
         for leaf in aleaves:
-            touched_leaves.add(leaf)
-            if leaf not in partitions:
-                partitions[leaf] = atoken
-            else:
-                partitions[leaf] = [
-                    *_leaf_toks({"partitions": partitions}, leaf),
-                    atoken,
-                ]
-                # appended rows widen unknown ranges: conservative drop
-                stats.pop(leaf, None)
-                fstats.pop(leaf, None)
-                blooms.pop(leaf, None)
-        _delete(jvm, fs, dstaging)
-        _delete(jvm, fs, astaging)
-        schema_json = batch_schema
-        if "schema" in prev:
-            old_fields = {f["name"]: f for f in prev["schema"]["fields"]}
-            fields = list(prev["schema"]["fields"])
-            for f_ in batch_schema["fields"]:
-                have = old_fields.get(f_["name"])
-                if have is None:
-                    fields.append(f_)
-                elif have["type"] != f_["type"]:
-                    raise ValueError(
-                        f"upsert changes type of {f_['name']!r}: "
-                        f"{have['type']} -> {f_['type']}"
-                    )
-            schema_json = {**prev["schema"], "fields": fields}
-        manifest = dict(prev)
-        manifest.update(
-            version=version,
-            op="upsert",
-            partitions=partitions,
-            stats=stats,
-            file_stats=fstats,
-            file_blooms=blooms,
-            deletes=deletes,
-            delete_keys=list(keys),
-            schema=schema_json,
-        )
-        _write_manifest(
-            spark, path, manifest, parent=prev, touched=touched_leaves
-        )
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return version
-    finally:
-        release_table_lock(spark, path)
+            if leaf not in maps["partitions"]:
+                maps["partitions"][leaf] = atoken
+                continue
+            maps["partitions"][leaf] = [*_leaf_toks(maps, leaf), atoken]
+            # appended rows widen unknown ranges: conservative drop
+            _forget_leaf(maps, leaf, ("stats", "file_stats", "file_blooms"))
+        return {
+            "op": "upsert",
+            **maps,
+            "delete_keys": list(keys),
+            "schema": schema,
+        }, set(dleaves) | set(aleaves)
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 def snapshot_delete_partitions(
@@ -2861,93 +2735,16 @@ def snapshot_delete_partitions(
     history drops them). This is the range-delete the reference runs as a
     BigQuery DELETE (S11), at O(1) data I/O. Returns the new version."""
     path = path.rstrip("/")
-    jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
-        versions = _manifest_versions(jvm, fs, path)
-        prev = _published_head(spark, jvm, fs, path)
-        if prev is None:
-            raise FileNotFoundError(f"no published snapshot at {path}")
-        col = prev["partition_col"]
-        doomed = {f"{col}={v}" for v in values}
-        partitions = {
-            leaf: tok
-            for leaf, tok in prev["partitions"].items()
-            if leaf not in doomed
-        }
-        stats = {
-            leaf: st
-            for leaf, st in prev.get("stats", {}).items()
-            if leaf not in doomed
-        }
-        fstats = {
-            leaf: st
-            for leaf, st in prev.get("file_stats", {}).items()
-            if leaf not in doomed
-        }
-        blooms = {
-            leaf: st
-            for leaf, st in prev.get("file_blooms", {}).items()
-            if leaf not in doomed
-        }
-        dels = {
-            leaf: toks
-            for leaf, toks in prev.get("deletes", {}).items()
-            if leaf not in doomed
-        }
-        version = _next_version(jvm, fs, path)
-        _write_manifest(
-            spark,
-            path,
-            {
-                "version": version,
-                "op": "delete_partitions",
-                "partition_col": col,
-                "partitions": partitions,
-                "stats": stats,
-                "file_stats": fstats,
-                "file_blooms": blooms,
-                "deletes": dels,
-                **({"bloom": prev["bloom"]} if "bloom" in prev else {}),
-                **(
-                    {"bucket_spec": prev["bucket_spec"]}
-                    if "bucket_spec" in prev
-                    else {}
-                ),
-                **(
-                    {"spec_history": prev["spec_history"]}
-                    if "spec_history" in prev
-                    else {}
-                ),
-                **(
-                    {"renames": prev["renames"]}
-                    if "renames" in prev
-                    else {}
-                ),
-                **(
-                    {"widens": prev["widens"]}
-                    if "widens" in prev
-                    else {}
-                ),
-                **(
-                    {"properties": prev["properties"]}
-                    if "properties" in prev
-                    else {}
-                ),
-                **(
-                    {"delete_keys": prev["delete_keys"]}
-                    if "delete_keys" in prev
-                    else {}
-                ),
-                **({"schema": prev["schema"]} if "schema" in prev else {}),
-            },
-            parent=prev,
-            touched=set(doomed),
-        )
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return version
-    finally:
-        release_table_lock(spark, path)
+
+    def build(prev, version):
+        prev = _need_head(prev, path)
+        doomed = {f"{prev['partition_col']}={v}" for v in values}
+        maps = _leaf_maps(prev)
+        for leaf in doomed:
+            _forget_leaf(maps, leaf)
+        return {"op": "delete_partitions", **maps}, doomed
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 def _partition_leaves(jvm, fs, table_dir: str, partition_col: str) -> list[str]:
@@ -3155,9 +2952,7 @@ def snapshot_remove_orphans(
     in-flight writer's freshly-renamed dirs cannot be swept because its
     manifest publishes under the same lock before this can run."""
     path = path.rstrip("/")
-    jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
+    with _table_locked(spark, path) as (jvm, fs):
         if not _manifest_versions(jvm, fs, path):
             # nothing is referenced by anything: a full sweep here would
             # delete every token-named dir under a path that is not (yet)
@@ -3167,8 +2962,6 @@ def snapshot_remove_orphans(
         _vacuum_snapshots(
             spark, jvm, fs, path, keep_snapshots, full_sweep=True
         )
-    finally:
-        release_table_lock(spark, path)
 
 
 def snapshot_compact_partition(
@@ -3291,15 +3084,8 @@ def _manifest_pair_pruned(
     gis = [gi for gi in range(n) if tf["segments"][gi] != tt["segments"][gi]]
 
     def resolve(top: dict) -> dict:
-        for mp in _LEAF_MAPS:
-            top.setdefault(mp, {})
-        segs = _load_segments(
-            jvm, fs, path, [top["segments"][gi] for gi in gis]
-        )
-        for seg in segs:
-            for mp, entries in seg.items():
-                top[mp].update(entries)
-        return top
+        hashes = [top["segments"][gi] for gi in gis]
+        return _fold_segments(jvm, fs, path, top, hashes)
 
     return resolve(tf), resolve(tt)
 
@@ -3369,9 +3155,7 @@ def snapshot_changes(
     ):
         mf = {
             **mf,
-            **({"schema": mt["schema"]} if "schema" in mt else {}),
-            **({"renames": mt["renames"]} if "renames" in mt else {}),
-            **({"widens": mt["widens"]} if "widens" in mt else {}),
+            **{k: mt[k] for k in ("schema", "renames", "widens") if k in mt},
         }
 
     old = _read_leafs(spark, path, mf, removed + changed) if removed + changed else None
@@ -3699,16 +3483,13 @@ def maintain_join_view(
             *[F.sum(c).alias(f"sum_{c}") for c in sum_cols],
         )
 
-    from callio_etl_spark.io import _exists as _fs_exists
-    from callio_etl_spark.io import _hadoop
-
     v0f = v0d = None
     view_old = None
     # FS-agnostic existence probe: os.path is always False on
     # hdfs://-/s3a://-style view paths, which would turn every refresh
     # into a silent full rebuild.
     jvm, fs, _ = _hadoop(spark, view_path)
-    if _fs_exists(jvm, fs, view_path):
+    if _exists(jvm, fs, view_path):
         view_old = spark.read.parquet(view_path)
         row = view_old.agg(
             F.max("_fact_version"), F.max("_dim_version")
@@ -3803,11 +3584,8 @@ def maintain_agg_view(
     # store, turn every incremental refresh into a full recompute. The
     # probe goes through the Hadoop FS so non-local view paths (hdfs://,
     # s3a://) get the same cold-start-vs-incremental split.
-    from callio_etl_spark.io import _exists as _fs_exists
-    from callio_etl_spark.io import _hadoop
-
     jvm, fs, _ = _hadoop(spark, view_path)
-    if _fs_exists(jvm, fs, view_path):
+    if _exists(jvm, fs, view_path):
         view_old = spark.read.parquet(view_path)
         row = view_old.agg(F.max("_src_version")).first()
         v0 = row[0] if row else None
@@ -4027,8 +3805,8 @@ def snapshot_restore(
     them, exactly Delta's rollback story. Returns the new version."""
     path = path.rstrip("/")
     jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
+
+    def build(prev, new_version):
         versions = _manifest_versions(jvm, fs, path)
         if version not in versions:
             raise FileNotFoundError(
@@ -4039,14 +3817,10 @@ def snapshot_restore(
             raise ValueError(
                 f"v{version} is a staged audit commit; use snapshot_publish"
             )
-        new_version = _next_version(jvm, fs, path)
-        manifest = dict(src)
-        manifest.update(version=new_version, op="restore")
-        _write_manifest(spark, path, manifest, parent=src, touched=set())
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return new_version
-    finally:
-        release_table_lock(spark, path)
+        changes = {k: src.get(k) for k in _CARRY_KEYS}
+        return {**changes, "op": "restore"}, _changed_leaves(prev, src)
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 def snapshot_publish(
@@ -4069,8 +3843,8 @@ def snapshot_publish(
     instead of misreporting a conflict. Returns the new live version."""
     path = path.rstrip("/")
     jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
+
+    def build(prev, new_version):
         versions = _manifest_versions(jvm, fs, path)
         # retry-after-crash: a published copy of this staged version
         # already exists (tombstoned numbering makes published_from
@@ -4090,27 +3864,18 @@ def snapshot_publish(
         m = _read_manifest(spark, path, version)
         if not m.get("staged"):
             raise ValueError(f"v{version} is not a staged audit commit")
-        head = _published_head(spark, jvm, fs, path)
-        head_v = head["version"] if head else 0
+        head_v = prev["version"] if prev else 0
         if m.get("parent", 0) != head_v:
             raise RuntimeError(
                 f"concurrent commit: staged v{version} was built on "
                 f"v{m.get('parent', 0)} but the published head is now "
                 f"v{head_v}; re-stage against the new head"
             )
-        new_version = _next_version(jvm, fs, path)
-        manifest = {
-            k: v for k, v in m.items() if k not in ("staged", "parent")
-        }
-        manifest.update(
-            version=new_version, op="publish", published_from=version
-        )
-        _write_manifest(spark, path, manifest, parent=m, touched=set())
-        _delete(jvm, fs, _manifest_path(path, version))
-        _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
-        return new_version
-    finally:
-        release_table_lock(spark, path)
+        changes = {k: m.get(k) for k in _CARRY_KEYS}
+        changes.update(op="publish", published_from=version)
+        return changes, _changed_leaves(prev, m)
+
+    return _commit(spark, path, keep_snapshots, build)
 
 
 def snapshot_discard_staged(
@@ -4123,9 +3888,7 @@ def snapshot_discard_staged(
     only it referenced become orphans the vacuum (run here, under the
     same lock) sweeps."""
     path = path.rstrip("/")
-    jvm, fs, _ = _hadoop(spark, path)
-    acquire_table_lock(spark, path)
-    try:
+    with _table_locked(spark, path) as (jvm, fs):
         versions = _manifest_versions(jvm, fs, path)
         if version not in versions:
             raise FileNotFoundError(
@@ -4150,8 +3913,6 @@ def snapshot_discard_staged(
             keep_snapshots,
             sweep_leaves=set(m["partitions"]) | set(m.get("deletes", {})),
         )
-    finally:
-        release_table_lock(spark, path)
 
 
 def snapshot_table_stats(spark: SparkSession, path: str) -> list[dict]:

@@ -1042,6 +1042,37 @@ def test_lock_heartbeat_prevents_live_reclaim(spark, tmp_path):
     assert not os.path.exists(lock)
 
 
+def test_exclusive_create_has_one_winner_under_a_race(spark, tmp_path):
+    """The lock primitive's create-if-absent must let exactly one of two
+    racing creators win. On the local filesystem Hadoop's create checks
+    and then opens, so without O_EXCL both threads could win and hold
+    the same table lock at once."""
+    import threading
+
+    from callio_etl_spark import io as cio
+
+    jvm, fs, _ = cio._hadoop(spark, str(tmp_path))
+    for i in range(200):
+        lock = str(tmp_path / f"race{i}.lock")
+        start = threading.Barrier(2)
+        wins = []
+
+        def create(tag):
+            start.wait()
+            if cio._try_create_exclusive(jvm, fs, lock, content=tag):
+                wins.append(tag)
+
+        threads = [threading.Thread(target=create, args=(t,)) for t in "ab"]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+            assert not t.is_alive()
+        assert len(wins) == 1, f"trial {i}: winners {wins}"
+        with open(lock) as fh:
+            assert fh.read() == wins[0]
+
+
 def test_lock_release_respects_a_reclaimed_lock(spark, tmp_path):
     """If a reclaim somehow races the heartbeat (holder paused past the
     stale window), the original holder must NOT delete the new holder's

@@ -14,6 +14,7 @@ import os
 import threading
 
 import pyspark.sql.functions as F
+import pytest
 
 from callio_etl_spark import snapshots as snap
 
@@ -3568,3 +3569,121 @@ def test_write_distribution_gate_sizes_and_unknown_sentinel(spark, tmp_path):
         )
     finally:
         spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+
+
+@pytest.mark.parametrize("verb", ["delete_rows", "upsert_rows", "restore"])
+def test_publish_retry_after_later_commit_returns_published_version(
+    spark, tmp_path, verb
+):
+    """``published_from`` marks only the manifest a WAP publish wrote: a
+    later commit must not inherit it, or a retried snapshot_publish
+    would report that later commit as the publish."""
+    p = str(tmp_path / verb)
+    snap.snapshot_partition_overwrite(spark, _df(spark, range(8)), p, "d")
+    sv = snap.snapshot_partition_overwrite(
+        spark, _df(spark, range(8), mult=10), p, "d", audit=True
+    )
+    live = snap.snapshot_publish(spark, p, sv)
+    assert (sv, live) == (2, 3)
+    if verb == "delete_rows":
+        later = snap.snapshot_delete_rows(spark, p, F.col("id") == 0, keys=["id"])
+    elif verb == "upsert_rows":
+        src = spark.createDataFrame([(5000, "1")], "id long, d string")
+        later = snap.snapshot_upsert_rows(spark, p, src, keys=["id"])
+    else:
+        later = snap.snapshot_restore(spark, p, live)
+    assert later == 4
+    assert "published_from" not in snap.snapshot_manifest(spark, p)
+    assert snap.snapshot_publish(spark, p, sv) == live
+
+
+def test_every_commit_verb_carries_table_metadata(spark, tmp_path):
+    """One carry rule for every manifest-publishing verb: table
+    properties, the rename and widen histories, the established
+    delete_keys and (once the spec evolved) spec_history survive each
+    commit, and no commit inherits the per-manifest WAP keys."""
+    p = str(tmp_path / "carry")
+    keep = {"keep_snapshots": 30}
+    base = spark.createDataFrame(
+        [(i, i % 5, i % 3, f"n{i}", "x", str(i % 2)) for i in range(12)],
+        "id long, v int, w int, name string, extra string, d string",
+    )
+    snap.snapshot_partition_overwrite(spark, base, p, "d", **keep)
+    snap.snapshot_set_properties(spark, p, {"owner": "etl"}, **keep)
+    snap.snapshot_rename_column(spark, p, "name", "label", **keep)
+    snap.snapshot_widen_column(spark, p, "v", "long", **keep)
+    snap.snapshot_delete_rows(spark, p, F.col("id") == 0, keys=["id"], **keep)
+    snap.snapshot_compact_partition(spark, p, "0", **keep)  # clears deletes
+
+    def check(published_from=None, spec_history=None):
+        m = snap.snapshot_manifest(spark, p)
+        assert m["properties"]["owner"] == "etl"
+        assert any(
+            r["from"] == "name" and r["to"] == "label" for r in m["renames"]
+        )
+        assert any(w["name"] == "v" and w["to"] == "long" for w in m["widens"])
+        assert m["delete_keys"] == ["id"]
+        assert "staged" not in m and "parent" not in m
+        assert m.get("published_from") == published_from
+        assert m.get("spec_history") == spec_history
+        return m["version"]
+
+    def live():
+        return snap.snapshot_read(spark, p)
+
+    check()
+    snap.snapshot_set_properties(spark, p, {"tier": "gold"}, **keep)
+    check()
+    snap.snapshot_rename_column(spark, p, "w", "w2", **keep)
+    check()
+    snap.snapshot_widen_column(spark, p, "w2", "long", **keep)
+    check()
+    snap.snapshot_drop_column(spark, p, "extra", **keep)
+    check()
+    snap.snapshot_partition_overwrite(
+        spark, live().where(F.col("d") == "1"), p, "d", **keep
+    )
+    no_pending = check()
+    snap.snapshot_append(
+        spark,
+        live().where(F.col("d") == "0").withColumn("id", F.col("id") + 100),
+        p,
+        "d",
+        **keep,
+    )
+    check()
+    snap.snapshot_delete_rows(spark, p, F.col("id") == 1, keys=["id"], **keep)
+    check()
+    snap.snapshot_upsert_rows(
+        spark,
+        p,
+        live().where(F.col("id") == 2).withColumn("v", F.col("v") + 10),
+        keys=["id"],
+        **keep,
+    )
+    check()
+    snap.snapshot_restore(spark, p, no_pending, **keep)
+    check()
+
+    # partition-spec evolution: spec_history rides every later commit too
+    evolved = ["d", "m"]
+    snap.snapshot_evolve_spec(spark, p, "m", **keep)
+    check(spec_history=evolved)
+    snap.snapshot_partition_overwrite(
+        spark, live().withColumn("m", F.lit("a")), p, "m", **keep
+    )
+    check(spec_history=evolved)
+    snap.snapshot_append(
+        spark, live().limit(2).withColumn("m", F.lit("b")), p, "m", **keep
+    )
+    check(spec_history=evolved)
+    snap.snapshot_delete_partitions(spark, p, ["b"], **keep)
+    check(spec_history=evolved)
+    sv = snap.snapshot_partition_overwrite(
+        spark, live().withColumn("m", F.lit("c")), p, "m", audit=True, **keep
+    )
+    snap.snapshot_publish(spark, p, sv, **keep)
+    check(published_from=sv, spec_history=evolved)
+    snap.snapshot_set_properties(spark, p, {"tier": None}, **keep)
+    check(spec_history=evolved)
+

@@ -1,7 +1,7 @@
 """r15 optimization-round profiler.
 
 Usage:
-    python tools/profile_r15.py plan  <query> [<query>...]   # explain to plans/r14/<q>_before.txt
+    python tools/profile_r15.py plan  <query> [<query>...]   # explain to plans/r15/<q>_before.txt
     python tools/profile_r15.py time  <query> [<query>...]   # best-of-3 noop-sink seconds + job count
     python tools/profile_r15.py commit                        # micro-profile snapshot commit sub-steps
 
