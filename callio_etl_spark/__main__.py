@@ -8,10 +8,13 @@ events = call_log, orders = customer-assignment stream).
 facts (the reference's post-run hook, runner.py:1004-1008). ``daemon`` wraps
 the same ticks in the slot scheduler (scheduler.run_daemon).
 
-Snapshot-store ops (``--table-format snapshot`` only): ``tag`` /
-``drop-tag`` name an immutable ref on the published head (vacuum-pinned
-provenance pointer), ``publish`` / ``discard-staged`` complete or abandon
-a write-audit-publish cycle staged by the library API.
+The tick tables (call_log, customer) are snapshot tables (snapshots.py).
+``versions`` / ``restore`` list and roll back their manifest history;
+``tag`` / ``drop-tag`` name an immutable ref on the published head
+(vacuum-pinned provenance pointer), ``publish`` / ``discard-staged``
+complete or abandon a write-audit-publish cycle staged by the library
+API; ``evolve-spec`` / ``rename-column`` / ``drop-column`` are
+metadata-only table evolution.
 """
 
 from __future__ import annotations
@@ -62,14 +65,12 @@ def _month_of(time_col_ms: str):
     )
 
 
-def _tick_snapshot(
-    spark: SparkSession, cfg: EngineConfig, store: CheckpointStore, job: str
-) -> None:
-    """The tick with the SNAPSHOT table format: the merged warehouse lands
-    as a month-partitioned manifest commit touching ONLY the months the
-    fresh batch hit — untouched months carry over by reference, readers
-    get snapshot isolation + pinnable history for free, and the commit
-    cost is O(touched months), not O(table).
+def _tick(spark: SparkSession, cfg: EngineConfig, store: CheckpointStore, job: str) -> None:
+    """One incremental tick: the merged warehouse lands as a
+    month-partitioned SNAPSHOT commit (snapshots.py) touching ONLY the
+    months the fresh batch hit — untouched months carry over by
+    reference, readers get snapshot isolation + pinnable history for
+    free, and the commit cost is O(touched months), not O(table).
 
     The rewrite set must cover BOTH sides of every merged key: the month
     its new row lands in (from the fresh slice) AND the month its
@@ -78,7 +79,13 @@ def _tick_snapshot(
     stale copy behind in the old partition, carried over by manifest
     reference — a duplicate key in the warehouse. Untouched keys stay
     final below the cutoff (C2), so months holding none of the fresh
-    keys are safe to carry over."""
+    keys are safe to carry over.
+
+    A plain parquet table at the path is refused before anything is
+    fetched: the checkpoint already covers its rows, so treating it as
+    an empty target would publish a table holding only the overlap
+    slice."""
+    from callio_etl_spark.io import BACKUP_SUFFIX, _exists, _hadoop
     from callio_etl_spark.logging_utils import job_stage
     from callio_etl_spark.snapshots import (
         snapshot_partition_overwrite,
@@ -86,14 +93,26 @@ def _tick_snapshot(
     )
 
     table, prepare = JOB_TABLES[job]
-    path = os.path.join(cfg.work_dir, table.name)
+    path = os.path.join(cfg.work_dir, table.name).rstrip("/")
+    # job_stage labels every Spark job of this tick in the UI/history
+    # server (the reference's per-step progress bars, runner.py:356-567,
+    # rendered the cluster way) and gives operators a cancellable group.
     with job_stage(spark, f"tick:{table.name}"):
-        from callio_etl_spark.io import _exists, _hadoop
-
         jvm, fs, _ = _hadoop(spark, path)
         target = None
-        if _exists(jvm, fs, path.rstrip("/") + "/__snap__"):
+        if _exists(jvm, fs, path + "/__snap__"):
             target = snapshot_read(spark, path).drop("ym")
+        elif _holds_parquet_files(jvm, fs, path) or _holds_parquet_files(
+            jvm, fs, path + BACKUP_SUFFIX
+        ):
+            raise RuntimeError(
+                f"{path} is a plain parquet table, not a snapshot table; "
+                f"migrate it once before the next tick: read it with "
+                f"spark.read.parquet({path!r}), add ym = date_format("
+                f"timestamp_millis({table.time_col_ms}), 'yyyy-MM'), "
+                f"snapshot_partition_overwrite it by 'ym' into a new path, "
+                f"then move the new table to {path!r}"
+            )
         batch = prepare(spark, cfg.sf_dir)
         if cfg.limit_records:
             batch = batch.orderBy(F.col(table.time_col_ms).desc()).limit(
@@ -140,45 +159,18 @@ def _tick_snapshot(
         commit(store, table, TENANT, new_ck)
 
 
-def _tick(spark: SparkSession, cfg: EngineConfig, store: CheckpointStore, job: str) -> None:
-    from callio_etl_spark.io import atomic_overwrite, recover_table
+def _holds_parquet_files(jvm, fs, path: str) -> bool:
+    """True when ``path`` directly holds data files — the layout of a
+    plain parquet table. A snapshot table keeps only ``__snap__`` and
+    ``col=value`` dirs at its top level."""
+    from callio_etl_spark.io import _exists
 
-    from callio_etl_spark.logging_utils import job_stage
-
-    if cfg.table_format == "snapshot":
-        return _tick_snapshot(spark, cfg, store, job)
-
-    table, prepare = JOB_TABLES[job]
-    path = os.path.join(cfg.work_dir, table.name)
-    # Roll forward/back any commit a previous run crashed in the middle of
-    # BEFORE reading the target — the checkpoint only advances after a
-    # durable table swap, so recovery + overlap re-read keeps replays
-    # idempotent whichever side of the swap the crash landed on.
-    # job_stage labels every Spark job of this tick in the UI/history
-    # server (the reference's per-step progress bars, runner.py:356-567,
-    # rendered the cluster way) and gives operators a cancellable group.
-    with job_stage(spark, f"tick:{table.name}"):
-        recover_table(spark, path)
-        from callio_etl_spark.io import _exists, _hadoop
-
-        jvm, fs, _ = _hadoop(spark, path)
-        target = None
-        if _exists(jvm, fs, path):
-            target = spark.read.parquet(path)
-        batch = prepare(spark, cfg.sf_dir)
-        if cfg.limit_records:
-            batch = batch.orderBy(F.col(table.time_col_ms).desc()).limit(
-                cfg.limit_records
-            )
-        merged, new_ck = run_tick(spark, store, table, batch, target, TENANT)
-        if new_ck is not None:
-            # Atomic staging+rename swap (reads the old files while staging,
-            # so no localCheckpoint materialization): a crash here leaves the
-            # old table readable and the next tick's recover_table finishes
-            # or discards the commit. With keep_versions set, the displaced
-            # table is archived for `--mode versions/restore` time travel.
-            atomic_overwrite(spark, merged, path, keep_versions=cfg.keep_versions)
-        commit(store, table, TENANT, new_ck)
+    if not _exists(jvm, fs, path):
+        return False
+    return any(
+        st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path))
+    )
 
 
 def _refresh_reports(spark: SparkSession, cfg: EngineConfig) -> None:
@@ -206,10 +198,9 @@ def _staff_group_snapshot(
     (SURVEY 3.1); supplier/nation stand in for the staff/group
     endpoints at fixture scale, exactly as orders/events stand in for
     customer/call_log in JOB_TABLES. The dims land through the
-    versioned-parquet sink whichever --table-format the FACT tables
-    use: they are small, unpartitioned, replaced-or-merged whole, so
-    the partitioned snapshot machinery buys nothing here (same
-    whole-swap atomicity either way)."""
+    versioned-parquet sink, not the snapshot format of the tick tables:
+    they are small, unpartitioned, replaced-or-merged whole, so the
+    partitioned snapshot machinery buys nothing here."""
     from callio_etl_spark.dedup import latest_per_key
     from callio_etl_spark.io import _exists, _hadoop, atomic_overwrite, recover_table
     from callio_etl_spark.merge import MergeSpec, merge_upsert
@@ -432,17 +423,9 @@ def main(argv: list[str] | None = None) -> int:
         help="with --mode restore: snapshot version to roll the table back to",
     )
     p.add_argument(
-        "--table-format",
-        choices=["plain", "snapshot"],
-        default=None,
-        help="warehouse layout: plain rename protocol, or the manifest-"
-        "committed snapshot store (month-partitioned, snapshot-isolated)",
-    )
-    p.add_argument(
         "--tag-name",
         default=None,
-        help="with --mode tag/drop-tag: the immutable ref name "
-        "(snapshot table format only)",
+        help="with --mode tag/drop-tag: the immutable ref name",
     )
     p.add_argument(
         "--snapshot-version",
@@ -475,8 +458,6 @@ def main(argv: list[str] | None = None) -> int:
         cfg.work_dir = args.work_dir
     if args.keep_versions is not None:
         cfg.keep_versions = args.keep_versions
-    if args.table_format is not None:
-        cfg.table_format = args.table_format
     os.makedirs(cfg.work_dir, exist_ok=True)
 
     from callio_etl_spark.session import get_spark
@@ -515,48 +496,29 @@ def main(argv: list[str] | None = None) -> int:
         _refresh_reports(spark, cfg)  # post-run hook (runner.py:1004-1008)
 
     if args.mode == "versions":
+        from callio_etl_spark.snapshots import snapshot_history
+
         for job in jobs:
             path = os.path.join(cfg.work_dir, JOB_TABLES[job][0].name)
-            if cfg.table_format == "snapshot":
-                from callio_etl_spark.snapshots import snapshot_history
-
-                print(f"{JOB_TABLES[job][0].name}: {snapshot_history(spark, path)}")
-            else:
-                from callio_etl_spark.io import list_table_versions
-
-                print(
-                    f"{JOB_TABLES[job][0].name}: {list_table_versions(spark, path)}"
-                )
+            print(f"{JOB_TABLES[job][0].name}: {snapshot_history(spark, path)}")
     elif args.mode == "restore":
         if args.restore_version is None:
             p.error("--mode restore requires --restore-version")
         if args.job == "all":
             p.error("--mode restore requires a single --job")
         path = os.path.join(cfg.work_dir, JOB_TABLES[args.job][0].name)
-        if cfg.table_format == "snapshot":
-            from callio_etl_spark.snapshots import snapshot_restore
+        from callio_etl_spark.snapshots import snapshot_restore
 
-            snapshot_restore(
-                spark,
-                path,
-                args.restore_version,
-                keep_snapshots=max(cfg.keep_versions, 1) + 1,
-            )
-        else:
-            from callio_etl_spark.io import restore_table_version
-
-            restore_table_version(
-                spark,
-                path,
-                args.restore_version,
-                keep_versions=max(cfg.keep_versions, 1),
-            )
+        snapshot_restore(
+            spark,
+            path,
+            args.restore_version,
+            keep_snapshots=max(cfg.keep_versions, 1) + 1,
+        )
     elif args.mode in ("evolve-spec", "rename-column", "drop-column"):
-        # table-evolution verbs (snapshot format only): metadata-only
-        # commits — spec evolution and column rename/drop never rewrite
-        # a data file (snapshots.py era-aware reads resolve history)
-        if cfg.table_format != "snapshot":
-            p.error(f"--mode {args.mode} requires --table-format snapshot")
+        # table-evolution verbs: metadata-only commits — spec evolution
+        # and column rename/drop never rewrite a data file (snapshots.py
+        # era-aware reads resolve history)
         if args.job == "all":
             p.error(f"--mode {args.mode} requires a single --job")
         path = os.path.join(cfg.work_dir, JOB_TABLES[args.job][0].name)
@@ -592,8 +554,6 @@ def main(argv: list[str] | None = None) -> int:
         # snapshot-store ops surface: name a training corpus (tag), and
         # complete/abandon a write-audit-publish cycle staged by a
         # pipeline run or the library API
-        if cfg.table_format != "snapshot":
-            p.error(f"--mode {args.mode} requires --table-format snapshot")
         if args.job == "all":
             p.error(f"--mode {args.mode} requires a single --job")
         path = os.path.join(cfg.work_dir, JOB_TABLES[args.job][0].name)

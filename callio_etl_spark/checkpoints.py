@@ -193,14 +193,24 @@ class CheckpointStore:
         explicit-schema read AND a schema-inferring read over a mixed
         Spark+pyarrow file set. Crash-safe: written as a dot-hidden
         temp (invisible to Spark/Hadoop input listings) then renamed —
-        a crash strands only a hidden temp file. Remote warehouses
-        (hdfs://, s3a://...) return False and keep the distributed
-        write. Caller holds the service lock."""
+        a crash strands only a hidden temp file. The path's RESOLVED
+        scheme decides: a scheme-less path takes the cluster's
+        ``fs.defaultFS`` (hdfs:// on most clusters, where a driver-disk
+        write would be invisible to warm()/compact()), and only
+        ``file`` takes the fast path — remote warehouses (hdfs://,
+        s3a://...) return False and keep the distributed write. Neither
+        lookup instantiates a FileSystem. Caller holds the service
+        lock."""
         import re
 
-        if re.match(
-            r"^[a-z][a-z0-9+.-]*://", self.log_path
-        ) and not self.log_path.startswith("file:"):
+        jvm = self.spark.sparkContext._jvm
+        scheme = jvm.org.apache.hadoop.fs.Path(self.log_path).toUri().getScheme()
+        if scheme is None:
+            conf = self.spark.sparkContext._jsc.hadoopConfiguration()
+            scheme = jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(
+                conf
+            ).getScheme()
+        if scheme != "file":
             return False
         try:
             import pyarrow as pa

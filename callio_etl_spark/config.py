@@ -50,16 +50,14 @@ class EngineConfig:
     sf_dir: str = "/root/testdata/sf0.001"
     work_dir: str = "./_engine_work"
     cpus: int = 32
-    #: archived snapshots kept per warehouse table (0 = off). The engine's
-    #: stand-in for BigQuery's implicit time travel on the reference's
-    #: MERGE targets; lets `--mode restore` roll a bad tick back.
+    #: older versions kept per warehouse table besides the live one. The
+    #: tick tables are snapshot tables (snapshots.py: month-partitioned, one
+    #: manifest publish per tick) and keep ``keep_versions + 1`` manifests;
+    #: the unpartitioned outputs archive this many displaced copies (0 =
+    #: off). The engine's stand-in for BigQuery's implicit time travel on
+    #: the reference's MERGE targets; lets `--mode restore` roll a bad tick
+    #: back.
     keep_versions: int = 0
-    #: warehouse table layout: 'plain' = atomic_overwrite rename protocol;
-    #: 'snapshot' = the manifest-committed store (snapshots.py) — month-
-    #: partitioned, one manifest publish per tick touching only the months
-    #: the batch hit, snapshot isolation for concurrent readers, pinnable
-    #: history. The snapshot form is the BigQuery-parity production layout.
-    table_format: str = "plain"
 
     @classmethod
     def from_env(cls) -> "EngineConfig":
@@ -78,7 +76,4 @@ class EngineConfig:
             work_dir=os.environ.get("SPARK_GRAFT_WORK_DIR", cls.work_dir),
             cpus=_int_env("SPARK_GRAFT_CPUS", cls.cpus),
             keep_versions=_int_env("SPARK_GRAFT_KEEP_VERSIONS", cls.keep_versions),
-            table_format=os.environ.get(
-                "SPARK_GRAFT_TABLE_FORMAT", cls.table_format
-            ),
         )

@@ -6,14 +6,18 @@ delete, DDL) and runner.py:158-209 (staging lifecycle). Spark-first mapping:
 - S8  append sink with schema evolution  -> mode("append") + mergeSchema
 - S9  truncate-replace sink              -> mode("overwrite")
 - S10 SQL channel                        -> spark.sql
-- S11 range delete                       -> overwrite with the complement
-  predicate (Delta would be `DELETE WHERE`; parquet has no row deletes)
+- S11 range delete                       -> snapshots.snapshot_delete_rows
+  (merge-on-read delete files) / snapshot_delete_partitions
 - S12 DDL bootstrap w/ partitioning      -> first write with partitionBy
 - S13 staging tables                     -> temp views / staging paths
 
 Physical layout (section 1.4): day partitioning via partitionBy(date_col);
 BigQuery clustering maps to sortWithinPartitions on the cluster keys, which
 gives parquet row-group min/max data skipping on those columns.
+
+Partitioned tables that need atomic commits live in the snapshot format
+(snapshots.py). The commit protocol here, ``atomic_overwrite``, is the
+whole-table swap for unpartitioned outputs.
 """
 
 from __future__ import annotations
@@ -30,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 #: a dir inside the table would surface as a bogus partition to readers).
 STAGING_SUFFIX = ".__staging__"
 BACKUP_SUFFIX = ".__backup__"
-PBAK_SUFFIX = ".__pbak__"
 VERSIONS_SUFFIX = ".__versions__"
 LOCK_SUFFIX = ".__commitlock__"
 
@@ -450,7 +453,7 @@ def assert_commit_fencing(spark: SparkSession, path: str) -> None:
     freeze, pathological GC) that then RESUMED — must fail its publish
     loudly instead of tearing the new holder's commit. Called
     immediately before the decisive rename of every commit protocol
-    (manifest publish, table swap, partition-swap entry), it re-reads
+    (manifest publish, table swap), it re-reads
     the lock file's ownership token and raises if it no longer matches
     the token this process wrote at acquire time.
 
@@ -604,9 +607,8 @@ def _list_siblings(jvm, fs, path: str) -> list:
 
 def _recover_needed(jvm, fs, path: str, sibling_names: set[str]) -> bool:
     """One-probe gate for the in-lock ``recover_table`` call: recovery is
-    a pure no-op unless a commit-protocol sibling (whole-table staging,
-    backup, or partition-backup dir) survives beside the table or a mode
-    marker survives inside it (crash between the final rename and the
+    a pure no-op unless a commit-protocol sibling (staging or backup
+    dir) survives beside the table or a mode marker survives inside it (crash between the final rename and the
     marker delete). The common case — every previous commit completed —
     is NEITHER, and the full probe sequence costs ~8 py4j round trips on
     every commit; this gate reads the already-fetched sibling listing
@@ -615,7 +617,6 @@ def _recover_needed(jvm, fs, path: str, sibling_names: set[str]) -> bool:
     if (
         base + STAGING_SUFFIX in sibling_names
         or base + BACKUP_SUFFIX in sibling_names
-        or base + PBAK_SUFFIX in sibling_names
     ):
         return True
     if any(c in path for c in "*?[]{}"):
@@ -640,12 +641,11 @@ def _claim_age_s(name: str, st, now: float) -> float:
     return now - st.getModificationTime() / 1000.0
 
 
-#: Mode markers written INSIDE staging after the write completes, so
-#: recovery can tell a whole-table swap from a per-partition swap (the two
-#: roll forward differently). Underscore-prefixed => invisible to Spark's
-#: file index and partition discovery if one survives into a table dir.
+#: Mode marker written INSIDE staging after the write completes: its
+#: presence proves the staging is whole, so recovery may roll it forward.
+#: Underscore-prefixed => invisible to Spark's file index and partition
+#: discovery if one survives into a table dir.
 _TABLE_MARKER = "__COMMIT_TABLE__"
-_PARTS_MARKER = "__COMMIT_PARTS__"
 #: Variant of _TABLE_MARKER written by versioned commits: tells recovery the
 #: displaced table must be ARCHIVED as a version, not deleted (the marker is
 #: the only live state in the crash window between swap and archival).
@@ -656,8 +656,6 @@ def atomic_overwrite(
     spark: SparkSession,
     df: DataFrame,
     path: str,
-    partition_col: str | None = None,
-    cluster_cols: list[str] | None = None,
     keep_versions: int = 0,
 ) -> None:
     """Replace the table at ``path`` with ``df`` atomically (whole-table
@@ -692,12 +690,7 @@ def atomic_overwrite(
     staging, backup = path + STAGING_SUFFIX, path + BACKUP_SUFFIX
     wstaging = f"{staging}.{uuid.uuid4().hex[:12]}"  # writer-unique, unlocked
     jvm, fs, _ = _hadoop(spark, path)
-    if cluster_cols:
-        df = df.sortWithinPartitions(*cluster_cols)
-    w = df.write.mode("overwrite")
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.parquet(wstaging)
+    df.write.mode("overwrite").parquet(wstaging)
     marker = _TABLE_KEEP_MARKER if keep_versions > 0 else _TABLE_MARKER
     _touch(jvm, fs, f"{wstaging}/{marker}")
     acquire_table_lock(spark, path)
@@ -729,85 +722,14 @@ def atomic_overwrite(
         release_table_lock(spark, path)
 
 
-def atomic_partition_overwrite(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    partition_col: str,
-    cluster_cols: list[str] | None = None,
-    distribution: str | None = None,
-) -> None:
-    """Replace ONLY the partitions present in ``df`` (the atomic analog of
-    dynamic partition overwrite): df is staged partitioned beside the
-    table, then each affected partition directory is swapped in with a
-    backup-rename — so every individual partition is always either fully
-    old or fully new, and `recover_table` rolls any crash point forward.
-    Sibling partitions' files are never touched. Safe when df reads from
-    ``path`` (staging completes before any swap).
-
-    Scale: I/O is bounded by the affected partitions, exactly like the
-    dynamic-overwrite path it replaces; the swap itself is one rename pair
-    per partition — metadata ops, no data movement. Writer coordination
-    follows atomic_overwrite: unique staging written UNLOCKED, the
-    per-partition swap loop under the table's commit lock (concurrent
-    partition overwrites of disjoint partitions still serialize their
-    swaps — rename loops interleaving on the same pbak dir would corrupt
-    recovery)."""
-    path = path.rstrip("/")
-    staging, pbak = path + STAGING_SUFFIX, path + PBAK_SUFFIX
-    wstaging = f"{staging}.{uuid.uuid4().hex[:12]}"
-    jvm, fs, _ = _hadoop(spark, path)
-    from callio_etl_spark.snapshots import _distribute_for_write
-
-    df = _distribute_for_write(df, partition_col, override=distribution)
-    if cluster_cols:
-        df = df.sortWithinPartitions(*cluster_cols)
-    df.write.mode("overwrite").partitionBy(partition_col).parquet(wstaging)
-    _touch(jvm, fs, f"{wstaging}/{_PARTS_MARKER}")
-    acquire_table_lock(spark, path)
-    try:
-        sibs = _list_siblings(jvm, fs, path)
-        if _recover_needed(
-            jvm, fs, path, {st.getPath().getName() for st in sibs}
-        ):
-            recover_table(spark, path)
-        _vacuum_stale_stagings(jvm, fs, path, statuses=sibs)
-        assert_commit_fencing(spark, path)  # see atomic_overwrite
-        _rename(jvm, fs, wstaging, staging)
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(pbak))
-        for leaf in _partition_leaves(jvm, fs, staging):
-            if _exists(jvm, fs, f"{path}/{leaf}"):
-                _rename(jvm, fs, f"{path}/{leaf}", f"{pbak}/{leaf}")
-            _rename(jvm, fs, f"{staging}/{leaf}", f"{path}/{leaf}")
-        _delete(jvm, fs, pbak)
-        _delete(jvm, fs, staging)
-    finally:
-        release_table_lock(spark, path)
-
-
-def _partition_leaves(jvm, fs, table_dir: str) -> list[str]:
-    """First-level `col=value` directory names under a partitioned table."""
-    out = []
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(table_dir)):
-        name = st.getPath().getName()
-        if st.isDirectory() and "=" in name:
-            out.append(name)
-    return sorted(out)
-
-
 def recover_table(spark: SparkSession, path: str) -> str:
-    """Repair a table whose atomic_overwrite / atomic_partition_overwrite
-    crashed mid-commit. Decision key: the mode marker inside staging — it
-    is created only AFTER the staging write finishes, so its presence
-    proves staging is complete (and tells whole-table from per-partition
-    recovery); a marked staging rolls the commit FORWARD, an unmarked one
-    rolls BACK to the old table. Idempotent; returns what it did."""
+    """Repair a table whose atomic_overwrite crashed mid-commit. Decision
+    key: the mode marker inside staging — it is created only AFTER the
+    staging write finishes, so its presence proves staging is complete; a
+    marked staging rolls the commit FORWARD, an unmarked one rolls BACK to
+    the old table. Idempotent; returns what it did."""
     path = path.rstrip("/")
-    staging, backup, pbak = (
-        path + STAGING_SUFFIX,
-        path + BACKUP_SUFFIX,
-        path + PBAK_SUFFIX,
-    )
+    staging, backup = path + STAGING_SUFFIX, path + BACKUP_SUFFIX
     jvm, fs, _ = _hadoop(spark, path)
     actions: list[str] = []
     # keep-mode (versioned commit): the displaced table is archived, not
@@ -820,7 +742,6 @@ def recover_table(spark: SparkSession, path: str) -> str:
     table_mode = _exists(jvm, fs, f"{staging}/{_TABLE_MARKER}") or _exists(
         jvm, fs, f"{staging}/{_TABLE_KEEP_MARKER}"
     )
-    parts_mode = _exists(jvm, fs, f"{staging}/{_PARTS_MARKER}")
 
     def _dispose_backup() -> str:
         if keep_mode:
@@ -829,7 +750,7 @@ def recover_table(spark: SparkSession, path: str) -> str:
         _delete(jvm, fs, backup)
         return "dropped backup"
 
-    if _exists(jvm, fs, staging) and not (table_mode or parts_mode):
+    if _exists(jvm, fs, staging) and not table_mode:
         # Crashed during (or just after) the staging write, before the mode
         # marker: no rename has happened, the target is the intact old
         # table — roll back by dropping staging.
@@ -858,23 +779,6 @@ def recover_table(spark: SparkSession, path: str) -> str:
         # crash between final rename and backup disposal
         actions.append(_dispose_backup())
 
-    if parts_mode:
-        # Per-partition swap crashed mid-loop: roll every staged partition
-        # forward (each target partition is either old+unbacked, backed-up
-        # +missing, or already new — all three resolve to the new version).
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(pbak))
-        for leaf in _partition_leaves(jvm, fs, staging):
-            tgt = f"{path}/{leaf}"
-            if _exists(jvm, fs, tgt) and not _exists(jvm, fs, f"{pbak}/{leaf}"):
-                _rename(jvm, fs, tgt, f"{pbak}/{leaf}")  # not yet backed up
-            if not _exists(jvm, fs, tgt):
-                _rename(jvm, fs, f"{staging}/{leaf}", tgt)
-                actions.append(f"rolled {leaf} forward")
-        _delete(jvm, fs, staging)
-        actions.append("dropped committed staging")
-    if _exists(jvm, fs, pbak):
-        _delete(jvm, fs, pbak)
-        actions.append("dropped partition backups")
     for m in (_TABLE_MARKER, _TABLE_KEEP_MARKER):
         if _exists(jvm, fs, f"{path}/{m}"):
             _delete(jvm, fs, f"{path}/{m}")
@@ -1003,91 +907,6 @@ def write_partitioned(
     df.write.mode(mode).partitionBy(partition_col).parquet(path)
 
 
-def delete_rows_between(
-    spark: SparkSession,
-    path: str,
-    field: str,
-    start,
-    end,
-    partition_col: str | None = None,
-) -> None:
-    """S11 — DELETE WHERE f BETWEEN s AND e (bigquery_service.py:322-330;
-    staging cleanup runner.py:208-209). Parquet has no row deletes, so keep
-    the complement — with Delta this becomes a real `DELETE FROM`.
-
-    With ``partition_col``, the rewrite is partition-scoped: only the
-    partitions that actually contain in-range rows are recomputed (dynamic
-    partition overwrite keeps siblings' files untouched and the table's
-    layout intact), and partitions the delete empties completely are
-    removed directly — dynamic overwrite can't replace a partition with
-    zero rows. Without it the whole table is rewritten flat — fine for the
-    reference's dim-sized staging cleanups, table-sized I/O on a fact table
-    (use the partitioned form there).
-
-    Crash semantics (partition-scoped path): each partition's commit is an
-    atomic directory swap (atomic_partition_overwrite), so any individual
-    partition is always either fully-old or fully-new; a crash between the
-    swap and the emptied-dir removal can leave fully-deleted partitions
-    readable. RERUNNING THE SAME DELETE REPAIRS THIS: the stale rows are
-    still in-range, so the rerun re-lists their partitions as affected and
-    removes the dirs. Idempotent by construction — callers that need the
-    post-state immediately should rerun on failure (or call
-    recover_table first after a hard crash)."""
-    df = spark.read.parquet(path)
-    doomed = F.col(field).between(start, end)
-    if partition_col is None:
-        kept = df.where(~doomed)
-        atomic_overwrite(spark, kept, path)
-        return
-    # Affected-partition list: one scalar-sized collect, bounded by the
-    # partition count (the same budget as any partition-pruning planner).
-    affected = [
-        r[0] for r in df.where(doomed).select(partition_col).distinct().collect()
-    ]
-    if not affected:
-        return
-    # NULL partition values land in __HIVE_DEFAULT_PARTITION__ and never
-    # match isin() — membership must be null-safe or in-range rows with a
-    # NULL partition key would silently survive the delete.
-    non_null = [v for v in affected if v is not None]
-    in_affected = F.col(partition_col).isin(non_null)
-    if None in affected:
-        in_affected = in_affected | F.col(partition_col).isNull()
-    kept = df.where(in_affected & ~doomed)
-    survivors = {
-        r[0] for r in kept.select(partition_col).distinct().collect()
-    }
-    if survivors:
-        atomic_partition_overwrite(spark, kept, path, partition_col)
-    # Partitions whose every row was deleted: kept has no rows for them,
-    # so no swap replaced their dirs — drop them directly.
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    for value in set(affected) - survivors:
-        # Build the dir name exactly as Spark's file committer does —
-        # Hive path escaping for special chars, the default-partition
-        # sentinel for NULL — or string values like "a/b" would miss the
-        # real directory and resurrect their deleted rows.
-        leaf = _hive_partition_dirname(spark, partition_col, value)
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{leaf}")
-        fs = p.getFileSystem(conf)
-        fs.delete(p, True)
-
-
-def _hive_partition_dirname(spark: SparkSession, col: str, value) -> str:
-    """The on-disk directory name Spark writes for one partition value:
-    ``escapePathName(col)=escapePathName(str(value))`` with NULL mapped to
-    the __HIVE_DEFAULT_PARTITION__ sentinel. Delegates to the SAME JVM
-    routine the write path uses (ExternalCatalogUtils.getPartitionPathString)
-    so read-side path construction can never drift from what was written."""
-    utils = (
-        spark.sparkContext._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    )
-    if value is None:
-        return f"{utils.escapePathName(col)}={utils.DEFAULT_PARTITION_NAME()}"
-    return utils.getPartitionPathString(col, str(value))
-
-
 def stage_temp_view(df: DataFrame, name: str) -> str:
     """S13 — staging table as a temp view (runner.py:158-161: CREATE TEMP
     TABLE _S; bigquery_service.py:214-238: stg_customer)."""
@@ -1194,40 +1013,3 @@ def read_csv_table(
         reader = reader.schema(schema)
     return reader.csv(path)
 
-
-def compact_partition(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    partition_value,
-    target_files: int = 1,
-    cluster_cols: list[str] | None = None,
-) -> int:
-    """Small-file compaction for one partition — the OPTIMIZE half of table
-    maintenance that incremental pipelines need at scale: every AvailableNow
-    tick appends a few files per day-partition, and a year of ticks turns a
-    scan into an open()-per-kilobyte exercise. Rewrites the partition into
-    ``target_files`` files (re-sorted on the cluster keys so row-group
-    pruning survives compaction) via dynamic partition overwrite, so sibling
-    partitions are untouched. Returns the number of rows rewritten.
-
-    Scale: one shuffle of the single partition's data; at 100 TB this runs
-    per-partition (bounded work) on a schedule, never over the whole table.
-    With Delta this becomes OPTIMIZE ... WHERE + ZORDER."""
-    df = spark.read.parquet(path).where(F.col(partition_col) == partition_value)
-    compacted = df.repartition(target_files)
-    atomic_partition_overwrite(
-        spark, compacted, path, partition_col, cluster_cols=cluster_cols,
-        # the repartition(target_files) IS this write's distribution; the
-        # default rebalance would re-shuffle and override the file count
-        distribution="none",
-    )
-    # count AFTER the swap: same value (the swap moves every row of the
-    # partition, none are filtered), but the post-compaction read touches
-    # ``target_files`` footers instead of the fragmented pile the
-    # pre-count used to scan — one cheap metadata job, not two data jobs
-    return (
-        spark.read.parquet(path)
-        .where(F.col(partition_col) == partition_value)
-        .count()
-    )

@@ -6,11 +6,11 @@ container ships no Delta Lake, so the engine provides:
 
 - ``merge_upsert``       pure-compute merge: FULL OUTER join + per-column
   conditional selection; returns the post-merge DataFrame. Oracle-checkable.
-- ``merge_write``        physical upsert: partition-scoped rewrite — only the
-  date partitions the source touches are recomputed and swapped in through
-  io.py's atomic staging+rename commit, mirroring the reference's
-  `T.<date> BETWEEN part_min AND part_max` pruning conjunct in MERGE ON
-  (and BigQuery's job atomicity, which plain parquet overwrite lacks).
+- ``merge_write_snapshot`` physical upsert into a snapshot table
+  (snapshots.py): only the partitions in the merge window are read,
+  merged and replaced, in ONE manifest commit — the reference's
+  `T.<date> BETWEEN part_min AND part_max` pruning conjunct in MERGE ON,
+  with BigQuery's job atomicity.
 
 Correctness contract (as the reference enforces): the source must have ONE
 row per key — run dedup.latest_per_key first (runner.py:165-173 does exactly
@@ -29,8 +29,6 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
-
-from callio_etl_spark.io import atomic_overwrite, atomic_partition_overwrite
 
 
 @dataclass
@@ -109,91 +107,6 @@ def _and_all(conds: list[Column]) -> Column:
     return out
 
 
-#: Full-rewrite ceiling: the unwindowed path rewrites the ENTIRE target, so
-#: it is only ever correct for dimension-sized tables (the reference's
-#: staff/group). Above this row count the caller almost certainly forgot
-#: partition_col on a fact table — refuse instead of silently rewriting.
-FULL_REWRITE_MAX_ROWS = 10_000_000
-
-
-def merge_write(
-    spark: SparkSession,
-    target_path: str,
-    source: DataFrame,
-    spec: MergeSpec,
-    partition_col: str | None = None,
-    part_min=None,
-    part_max=None,
-    allow_full_rewrite: bool = False,
-) -> None:
-    """Physical upsert into a parquet table path via partition-scoped rewrite.
-
-    With a partition_col + window, only rows in [part_min, part_max] are read
-    from the target and only those partitions are overwritten (dynamic
-    partition overwrite) — the reference's partition-bounded MERGE
-    (runner.py:174-176, 699-701). Without one, the whole table is rewritten —
-    the small-dim path (reference's staff/group tables) — which is gated:
-    pass ``allow_full_rewrite=True`` to acknowledge it, and targets above
-    FULL_REWRITE_MAX_ROWS are refused outright so a forgotten
-    ``partition_col`` can't full-rewrite a fact table.
-
-    Both paths commit through io.py's staging + atomic-rename protocol: a
-    crash at any point leaves the old table (per-partition: each old
-    partition) intact, and io.recover_table(target_path) rolls a completed
-    staging forward."""
-    target = spark.read.parquet(target_path)
-    if partition_col and part_min is not None:
-        # Guard: a source row OUTSIDE [part_min, part_max] would be inserted
-        # into a partition excluded from window_target, and the dynamic
-        # partition overwrite would then rewrite that partition with ONLY the
-        # merged rows — silently deleting its pre-existing target rows. The
-        # reference's bounded MERGE can at worst duplicate, never delete, so
-        # fail fast instead (callers widen the window or pre-filter).
-        stray = source.where(
-            ~F.col(partition_col).between(part_min, part_max)
-            | F.col(partition_col).isNull()
-        )
-        if stray.limit(1).count() > 0:
-            raise ValueError(
-                f"merge_write: source rows outside the merge window "
-                f"[{part_min}, {part_max}] on {partition_col!r} would "
-                f"clobber partitions excluded from the windowed target"
-            )
-        window_target = target.where(F.col(partition_col).between(part_min, part_max))
-        # Atomic per-partition swap: the merged window is staged beside the
-        # table (reading the OLD files — no read-during-write, so no
-        # localCheckpoint materialization needed), then each affected
-        # partition dir is swapped in with a backup-rename. A mid-commit
-        # crash leaves every partition either fully-old or fully-new and
-        # io.recover_table rolls it forward — the atomicity the reference
-        # gets from BigQuery MERGE for free.
-        merged = merge_upsert(window_target, source, spec)
-        atomic_partition_overwrite(spark, merged, target_path, partition_col)
-    else:
-        # Full rewrite (small-dim path). Explicit opt-in plus a row-count
-        # ceiling: parquet row-group metadata makes the count cheap (no
-        # full scan), and it turns "forgot partition_col on a fact table"
-        # into an error instead of a table-sized rewrite.
-        if not allow_full_rewrite:
-            raise ValueError(
-                "merge_write without partition_col rewrites the ENTIRE "
-                "target; pass allow_full_rewrite=True for dimension-sized "
-                "tables, or supply partition_col + part_min/part_max"
-            )
-        n = target.count()
-        if n > FULL_REWRITE_MAX_ROWS:
-            raise ValueError(
-                f"merge_write: target has {n} rows (> FULL_REWRITE_MAX_ROWS="
-                f"{FULL_REWRITE_MAX_ROWS}); full rewrite refused — use the "
-                f"partition-scoped path"
-            )
-        # atomic_overwrite stages the merge result beside the table, so the
-        # write streams from the old files and the swap is a rename pair —
-        # no localCheckpoint materialization, no torn table on crash.
-        merged = merge_upsert(target, source, spec)
-        atomic_overwrite(spark, merged, target_path)
-
-
 def merge_write_snapshot(
     spark: SparkSession,
     target_path: str,
@@ -205,21 +118,20 @@ def merge_write_snapshot(
     keep_snapshots: int = 2,
     part_values=None,
 ) -> int:
-    """merge_write against a SNAPSHOT-isolated table (snapshots.py): the
+    """Physical MERGE into a SNAPSHOT-isolated table (snapshots.py): the
     windowed target is read from the live manifest, merged with
     merge_upsert, and committed as ONE manifest publish — so a reader
-    racing the MERGE sees the whole pre- or post-merge table, never the
-    rename-loop's partition mix, and the pre-merge version stays pinnable
-    for keep_snapshots more commits. This is BigQuery-atomic MERGE parity
-    (reference runner.py:163-199) on a plain filesystem, closing the gap
-    merge_write's per-partition swap documented.
+    racing the MERGE sees the whole pre- or post-merge table, and the
+    pre-merge version stays pinnable for keep_snapshots more commits.
+    This is BigQuery-atomic MERGE parity (reference runner.py:163-199,
+    174-176, 699-701) on a plain filesystem.
 
-    Same window contract as merge_write: only partitions in
-    [part_min, part_max] are read and replaced (stray source rows outside
-    the window fail fast — they would otherwise clobber partitions
-    excluded from the windowed target); partitions outside the window
-    carry over by manifest reference at zero I/O. Returns the committed
-    snapshot version.
+    Window contract: only partitions in [part_min, part_max] are read and
+    replaced (stray source rows outside the window fail fast — they would
+    otherwise clobber partitions excluded from the windowed target);
+    partitions outside the window carry over by manifest reference at
+    zero I/O. Without a window the whole table is merged. Returns the
+    committed snapshot version.
 
     ``part_values`` is the SET-valued window (mutually exclusive with
     part_min/part_max): only the named partition values — typically the

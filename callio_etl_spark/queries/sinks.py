@@ -3,15 +3,15 @@ write operators exercised end to end INSIDE an oracle-checked query, so the
 sink family can earn driver correctness rows, not just unit coverage.
 
 Each query writes deterministic slices of the testdata through the io.py
-sink operators into a per-invocation temp directory, reads the files back,
+and snapshots.py sink operators into a per-invocation temp directory, reads the files back,
 and returns a compact aggregate whose oracle recomputes the expected state
 in pure SQL over the source tables. A wrong append mode, broken schema
 merge, mis-scoped delete, or partition clobber changes the aggregate and
 breaks the hash match.
 
 Scale notes: the writes are the same code paths production uses
-(append+mergeSchema, partitionBy+sortWithinPartitions, complement-rewrite
-delete); the roundtrip data here is sf-sized, and every aggregate is a
+(append+mergeSchema, partitionBy+sortWithinPartitions, snapshot commits
+and merge-on-read deletes); the roundtrip data here is sf-sized, and every aggregate is a
 map-combined hash agg over the read-back — nothing driver-side except the
 temp-dir bookkeeping.
 """
@@ -26,11 +26,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from callio_etl_spark.io import (
-    delete_rows_between,
     load_append,
     load_truncate,
     stage_temp_view,
-    write_partitioned,
 )
 from callio_etl_spark.registry import register
 from callio_etl_spark.tables import load_table
@@ -126,14 +124,19 @@ GROUP BY 1
     tags=["S11", "S12", "sink"],
 )
 def sink_partition_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S12/S11 roundtrip: write events day-partitioned with in-file
-    clustering sort (partitionBy + sortWithinPartitions), range-delete an
-    event_id window PARTITION-SCOPED (only affected day-partitions are
-    rewritten; emptied ones removed; layout preserved), read the table
-    back, and aggregate per event_type. The oracle filters the source
-    directly — a delete that touched the wrong rows, dropped a partition
-    wholesale, or resurrected deleted rows via a stale file breaks the
-    match."""
+    """S12/S11 roundtrip: write events as a day-partitioned snapshot
+    table with in-file clustering sort, range-delete an event_id window
+    (merge-on-read delete files keyed on event_id: no data file is
+    rewritten), read the live snapshot back, and aggregate per
+    event_type. The oracle filters the source directly — a delete that
+    touched the wrong rows, dropped a partition wholesale, or missed
+    rows in some partition breaks the match."""
+    from callio_etl_spark.snapshots import (
+        snapshot_delete_rows,
+        snapshot_partition_overwrite,
+        snapshot_read,
+    )
+
     root = _tmp("partdel")
     path = f"{root}/events_t"
     e = load_table(spark, sf_dir, "events").select(
@@ -141,11 +144,16 @@ def sink_partition_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.to_date("ts").alias("d"),
     )
-    write_partitioned(e, path, "d", cluster_cols=["event_type", "event_id"])
-    delete_rows_between(
-        spark, path, "event_id", DELETE_LO, DELETE_HI, partition_col="d"
+    snapshot_partition_overwrite(
+        spark, e, path, "d", cluster_cols=["event_type", "event_id"]
     )
-    back = spark.read.parquet(path)
+    snapshot_delete_rows(
+        spark,
+        path,
+        F.col("event_id").between(DELETE_LO, DELETE_HI),
+        keys=["event_id"],
+    )
+    back = snapshot_read(spark, path)
     result = back.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("event_id").alias("id_sum"),
@@ -300,20 +308,26 @@ FROM s
 def sink_compact_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table-maintenance roundtrip — the OPTIMIZE + VACUUM pair every
     incremental lakehouse table needs on a schedule: write a partitioned
-    table fragmented into many small files, compact ONE partition to a
-    single file (siblings untouched), and prune a versioned table's
-    archive down to the newest snapshot. The aggregate re-reads the
-    post-compaction table, so lost/duplicated rows, a clobbered sibling
-    partition, or a vacuum that deleted the live snapshot all break the
-    hash; the file and version counts are measured (not assumed) and
-    compared against the deterministic expectation as literals."""
+    snapshot table fragmented into many small files, compact ONE
+    partition to a single file (siblings carry over), and prune a
+    versioned table's archive down to the newest snapshot. The aggregate
+    re-reads the post-compaction table, so lost/duplicated rows, a
+    clobbered sibling partition, or a vacuum that deleted the live
+    snapshot all break the hash; the file and version counts are
+    measured (not assumed) and compared against the deterministic
+    expectation as literals."""
     from callio_etl_spark.io import (
         _hadoop,
         atomic_overwrite,
-        compact_partition,
         list_table_versions,
         vacuum_table_versions,
-        write_partitioned,
+    )
+    from callio_etl_spark.snapshots import (
+        _leaf_toks,
+        snapshot_compact_partition,
+        snapshot_manifest,
+        snapshot_partition_overwrite,
+        snapshot_read,
     )
 
     root = _tmp("compact")
@@ -327,23 +341,34 @@ def sink_compact_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maintenance would make; the sinks' own staged-write work is
     # unchanged
     s = o.where(F.col("o_orderkey") % 4 == 0).persist()
-    # fragment: 6 round-robin tasks x 5 priorities => ~6 files per partition
-    write_partitioned(s.repartition(6), path, "o_orderpriority")
-
-    def _parquet_files(part_dir: str) -> int:
-        jvm, fs, jpath = _hadoop(spark, part_dir)
-        return sum(
-            1
-            for st in fs.listStatus(jpath)
-            if st.getPath().getName().endswith(".parquet")
-        )
-
-    part_dir = f"{path}/o_orderpriority=1-URGENT"
-    files_before = _parquet_files(part_dir)
-    n_compacted = compact_partition(
-        spark, path, "o_orderpriority", "1-URGENT", target_files=1
+    # fragment: 6 round-robin tasks x 5 priorities => ~6 files per
+    # partition ("none": the default rebalance would write one per leaf)
+    snapshot_partition_overwrite(
+        spark, s.repartition(6), path, "o_orderpriority", distribution="none"
     )
-    files_after = _parquet_files(part_dir)
+
+    def _live_files() -> int:
+        """Parquet files in the data dirs the live manifest lists for
+        the 1-URGENT leaf (the compacted-away dirs linger until vacuum)."""
+        leaf = "o_orderpriority=1-URGENT"
+        n = 0
+        for tok in _leaf_toks(snapshot_manifest(spark, path), leaf):
+            jvm, fs, jpath = _hadoop(spark, f"{path}/{leaf}/{tok}")
+            n += sum(
+                1
+                for st in fs.listStatus(jpath)
+                if st.getPath().getName().endswith(".parquet")
+            )
+        return n
+
+    files_before = _live_files()
+    snapshot_compact_partition(spark, path, "1-URGENT", target_files=1)
+    files_after = _live_files()
+    n_compacted = (
+        snapshot_read(spark, path)
+        .where(F.col("o_orderpriority") == "1-URGENT")
+        .count()
+    )
     if not (files_before > 1 and files_after == 1):
         raise AssertionError(
             f"compaction contract broken: {files_before} -> {files_after} files"
@@ -362,7 +387,7 @@ def sink_compact_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     versions_after = len(list_table_versions(spark, vpath))
     s.unpersist()
 
-    live = spark.read.parquet(path)
+    live = snapshot_read(spark, path)
     result = live.agg(
         F.count("*").cast("long").alias("n_rows"),
         F.sum("o_orderkey").alias("key_sum"),
@@ -404,8 +429,8 @@ FROM final f GROUP BY 1
 )
 def sink_snapshot_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-isolated table lifecycle end to end (snapshots.py — the
-    manifest-committed layout that closes atomic_partition_overwrite's
-    mixed-read window; reference MERGE gets the same isolation from
+    manifest-committed layout with no mixed-read window; reference
+    MERGE gets the same isolation from
     BigQuery's atomic jobs, runner.py:163-199): commit a partitioned
     aggregate table (v1), overwrite ONE partition's contents from a
     different deterministic slice (v2), metadata-delete another partition
@@ -603,8 +628,7 @@ def merge_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-merge state (windowed FULL OUTER + untouched months), so a
     merge that leaked into carried-over months, dropped them, or applied
     the wrong arm breaks the hash — and the pre-merge version remains
-    pinnable (asserted here), which merge_write's rename loop cannot
-    promise a racing reader."""
+    pinnable (asserted here) for a racing reader."""
     from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
     from callio_etl_spark.queries.merge_queries import _source, _target
     from callio_etl_spark.snapshots import (

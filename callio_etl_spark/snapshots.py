@@ -1,9 +1,9 @@
-"""Snapshot-isolated partitioned tables — the manifest-committed layout
-that closes the one isolation gap `atomic_partition_overwrite` leaves open
-(its per-partition rename loop lets a reader scanning MID-COMMIT see a mix
-of old and new partitions; reference MERGE is BigQuery-atomic, see
-`/root/reference/callio_etl/runner.py:163-199`). This is the Iceberg/Delta
-commit idea reduced to its plain-filesystem core:
+"""Snapshot-isolated partitioned tables — the engine's one format for
+partitioned tables, the manifest-committed layout that gives a reader
+scanning MID-COMMIT the whole old or the whole new table, never a mix of
+partitions (the reference's MERGE is BigQuery-atomic,
+`callio_etl/runner.py:163-199`). This is the Iceberg/Delta commit idea
+reduced to its plain-filesystem core:
 
 - data files are IMMUTABLE once written: each commit lands its partitions
   under `table/<col>=<val>/__s<version>_<token>__/` — a directory no
@@ -1214,7 +1214,9 @@ def _apply_deletes(
     data dirs in ONE version (the deletes cover the old rows, never the
     new ones). Partitions without delete entries pass through with no
     join at all; the delete side aggregates to max-delete-version per
-    key (tiny), so AQE broadcasts the join."""
+    key (tiny), so AQE broadcasts the join. The join is NULL-safe: a
+    NULL partition value (the __HIVE_DEFAULT_PARTITION__ leaf) or key
+    matches its delete row."""
     dels = {
         leaf: toks
         for leaf, toks in m.get("deletes", {}).items()
@@ -1238,19 +1240,25 @@ def _apply_deletes(
         1,
     ).cast("int")
     pc_type = dict(df.dtypes)[col]
+    on = list(dict.fromkeys([col, *keys]))
     dmax = (
         spark.read.option("basePath", path)
         .parquet(*dpaths)
         .select(F.col(col).cast(pc_type).alias(col), *keys, ver.alias("__dv"))
-        .groupBy(col, *keys)
+        .groupBy(*on)
         .agg(F.max("__dv").alias("__dv"))
+        .toDF(*[f"__d_{c}" for c in on], "__dv")
     )
-    return (
+    match = F.lit(True)
+    for c in on:
+        match = match & F.col(c).eqNullSafe(F.col(f"__d_{c}"))
+    live = (
         df.withColumn("__rv", ver)
-        .join(dmax, [col, *keys], "left")
+        .join(dmax, match, "left")
         .where(F.col("__dv").isNull() | (F.col("__rv") >= F.col("__dv")))
-        .drop("__rv", "__dv")
     )
+    # join columns first, as an equi-join USING them would order them
+    return live.select(*on, *[c for c in df.columns if c not in on])
 
 
 def _leaf_toks(m: dict, leaf: str) -> list[str]:
@@ -2747,12 +2755,16 @@ def snapshot_delete_partitions(
     return _commit(spark, path, keep_snapshots, build)
 
 
-def _partition_leaves(jvm, fs, table_dir: str, partition_col: str) -> list[str]:
-    prefix = f"{partition_col}="
+def _partition_leaves(
+    jvm, fs, table_dir: str, partition_col: str | None = None
+) -> list[str]:
+    """First-level ``<partition_col>=value`` dir names under ``table_dir``;
+    with ``partition_col=None``, every ``col=value`` dir (all spec eras)."""
+    prefix = f"{partition_col}=" if partition_col else ""
     out = []
     for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(table_dir)):
         name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(prefix):
+        if st.isDirectory() and name.startswith(prefix) and "=" in name:
             out.append(name)
     return sorted(out)
 
@@ -2918,9 +2930,7 @@ def _vacuum_snapshots(
             ):
                 fs.delete(st.getPath(), False)
     if full_sweep:
-        from callio_etl_spark.io import _partition_leaves as _all_leaves
-
-        candidates.update(_all_leaves(jvm, fs, path))
+        candidates.update(_partition_leaves(jvm, fs, path))
     for leaf in sorted(candidates):
         leaf_path = jvm.org.apache.hadoop.fs.Path(f"{path}/{leaf}")
         if not fs.exists(leaf_path):
@@ -3022,6 +3032,9 @@ def snapshot_compact_partition(
         # the default rebalance would re-shuffle and override the
         # requested file count
         distribution="none",
+        # a partition whose every row was deleted stages nothing: it
+        # retires instead of lingering with its delete files
+        retire_leaves=[leaf],
     )
 
 

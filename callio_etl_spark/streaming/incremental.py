@@ -194,10 +194,11 @@ def run_foreach_batch_merge(
     merge_fn,
     output_mode: str = "update",
 ) -> None:
-    """C7 — streaming MERGE: each micro-batch is handed to the batch merge
-    operator (merge.merge_write) via foreachBatch; this is the standard
-    Spark pattern for upsert sinks without Delta (and the only way to emit
-    `update`-mode stateful results to an append-only format like parquet)."""
+    """C7 — streaming MERGE: each micro-batch is handed to a batch merge
+    operator (merge.merge_write_snapshot, say) via foreachBatch; this is
+    the standard Spark pattern for upsert sinks without Delta (and the
+    only way to emit `update`-mode stateful results to an append-only
+    format like parquet)."""
     q = (
         stream_df.writeStream.foreachBatch(lambda batch, _id: merge_fn(batch))
         .option("checkpointLocation", checkpoint_dir)

@@ -172,6 +172,28 @@ def test_flush_local_fastpath_byte_parity_with_spark_writer(spark, store):
     assert remote._flush_local_fastpath() is False
 
 
+def test_flush_fastpath_follows_default_fs_scheme(spark, tmp_path):
+    """A scheme-less log path resolves against ``fs.defaultFS``: on a
+    cluster whose default filesystem is HDFS, the driver-side pyarrow
+    append would land on the driver's local disk, where warm() and
+    compact() never look — the fast path must refuse it."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    old = conf.get("fs.defaultFS")
+    conf.set("fs.defaultFS", "hdfs://nn:8020")
+    try:
+        store = CheckpointStore(spark, str(tmp_path / "update_log"))
+        store.log("t", "PK", 1, 1, "MERGED")
+        assert store._flush_local_fastpath() is False
+        assert not (tmp_path / "update_log").exists()
+    finally:
+        if old is None:
+            conf.unset("fs.defaultFS")
+        else:
+            conf.set("fs.defaultFS", old)
+    # back on the local default the same path takes the fast path
+    assert store._flush_local_fastpath() is True
+
+
 def test_checkpoint_table_name_normalization(spark, store):
     """Reference _normalize_table parity (checkpoints.py:83-85): strip,
     lowercase, '-'/' ' -> '_', applied on set/get/log/warm — 'Call-Log ' and
@@ -207,79 +229,55 @@ def test_checkpoint_warm_propagates_non_missing_errors(spark, tmp_path):
 
 def test_merge_write_rejects_out_of_window_source(spark, tmp_path):
     """ADVICE: a source row outside [part_min, part_max] would land in a
-    partition excluded from the windowed target, and dynamic partition
+    partition excluded from the windowed target, and the partition
     overwrite would then clobber that partition's pre-existing rows. The
-    windowed merge_write must refuse; in-window sources must merge and leave
-    sibling partitions untouched."""
+    windowed merge_write_snapshot must refuse before committing anything;
+    in-window sources must merge and leave sibling partitions untouched."""
     import pytest
 
-    import pyspark.sql.functions as F
-    from callio_etl_spark.merge import MergeSpec, merge_write
+    from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
+    from callio_etl_spark.snapshots import (
+        snapshot_partition_overwrite,
+        snapshot_read,
+        snapshot_versions,
+    )
 
     path = str(tmp_path / "fact")
     target = spark.createDataFrame(
         [("2024-01-01", 1, "old"), ("2024-01-02", 2, "keep"), ("2024-01-03", 3, "other-part")],
         "d string, k long, v string",
     )
-    target.write.partitionBy("d").parquet(path)
+    snapshot_partition_overwrite(spark, target, path, "d")
+
+    def rows():
+        return {(r["d"], r["k"]): r["v"] for r in snapshot_read(spark, path).collect()}
 
     spec = MergeSpec(keys=["k"])
-    # out-of-window source row -> refuse before any write happens
-    stray = spark.createDataFrame([("2024-01-03", 3, "clobber")], "d string, k long, v string")
-    with pytest.raises(ValueError, match="outside the merge window"):
-        merge_write(spark, path, stray, spec, partition_col="d",
-                    part_min="2024-01-01", part_max="2024-01-02")
-    after = {(str(r["d"]), r["k"]): r["v"] for r in spark.read.parquet(path).collect()}
-    assert after[("2024-01-03", 3)] == "other-part"  # untouched
+    # out-of-window source rows -> refuse before any write happens: one
+    # past the window, one BETWEEN-window NULL partition value
+    strays = [
+        spark.createDataFrame([("2024-01-03", 3, "clobber")], "d string, k long, v string"),
+        spark.createDataFrame([(None, 4, "null-part")], "d string, k long, v string"),
+    ]
+    for stray in strays:
+        with pytest.raises(ValueError, match="outside the merge window"):
+            merge_write_snapshot(spark, path, stray, spec, partition_col="d",
+                                 part_min="2024-01-01", part_max="2024-01-02")
+    assert rows()[("2024-01-03", 3)] == "other-part"  # untouched
+    assert snapshot_versions(spark, path) == [1]  # nothing committed
 
     # in-window source: update k=1, insert k=9, keep k=2, never touch 01-03
     src = spark.createDataFrame(
         [("2024-01-01", 1, "new"), ("2024-01-02", 9, "ins")], "d string, k long, v string"
     )
-    merge_write(spark, path, src, spec, partition_col="d",
-                part_min="2024-01-01", part_max="2024-01-02")
-    after = {(str(r["d"]), r["k"]): r["v"] for r in spark.read.parquet(path).collect()}
-    assert after == {
+    merge_write_snapshot(spark, path, src, spec, partition_col="d",
+                         part_min="2024-01-01", part_max="2024-01-02")
+    assert rows() == {
         ("2024-01-01", 1): "new",
         ("2024-01-02", 2): "keep",
         ("2024-01-02", 9): "ins",
         ("2024-01-03", 3): "other-part",
     }
-
-
-def test_merge_write_full_rewrite_is_gated(spark, tmp_path):
-    """VERDICT r3 item 8: without partition_col merge_write rewrites the
-    whole target, so it must refuse unless allow_full_rewrite=True, and
-    refuse regardless above FULL_REWRITE_MAX_ROWS — a forgotten
-    partition_col must never silently full-rewrite a fact table."""
-    import pytest
-
-    from callio_etl_spark import merge as m
-
-    path = str(tmp_path / "dim")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "k long, v string"
-    ).write.parquet(path)
-    spec = m.MergeSpec(keys=["k"])
-    src = spark.createDataFrame([(1, "A"), (3, "c")], "k long, v string")
-
-    with pytest.raises(ValueError, match="allow_full_rewrite"):
-        m.merge_write(spark, path, src, spec)
-    assert {r["v"] for r in spark.read.parquet(path).collect()} == {"a", "b"}
-
-    # explicit opt-in on a dim-sized table: merge applies
-    m.merge_write(spark, path, src, spec, allow_full_rewrite=True)
-    after = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert after == {1: "A", 2: "b", 3: "c"}
-
-    # even with opt-in, a fact-sized target is refused (ceiling check)
-    orig = m.FULL_REWRITE_MAX_ROWS
-    m.FULL_REWRITE_MAX_ROWS = 2
-    try:
-        with pytest.raises(ValueError, match="full rewrite refused"):
-            m.merge_write(spark, path, src, spec, allow_full_rewrite=True)
-    finally:
-        m.FULL_REWRITE_MAX_ROWS = orig
 
 
 def test_merge_upsert_null_key_rows_survive(spark):

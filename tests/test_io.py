@@ -8,7 +8,6 @@ import time
 import pyspark.sql.functions as F
 
 from callio_etl_spark.io import (
-    delete_rows_between,
     load_append,
     load_truncate,
     write_partitioned,
@@ -46,14 +45,6 @@ def test_partitioned_write_layout(spark, tmp_path):
     assert [r["tenant"] for r in one.collect()] == ["a"]
     files = [f for r in one.select(F.input_file_name()).distinct().collect() for f in r]
     assert all("d=2024-01-01" in f for f in files)
-
-
-def test_delete_rows_between(spark, tmp_path):
-    p = str(tmp_path / "t")
-    spark.range(10).withColumn("v", F.col("id") * 2).write.parquet(p)
-    delete_rows_between(spark, p, "id", 3, 6)  # S11: staging-window cleanup
-    left = sorted(r["id"] for r in spark.read.parquet(p).collect())
-    assert left == [0, 1, 2, 7, 8, 9]
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
@@ -180,35 +171,6 @@ def test_csv_ingest_with_corrupt_quarantine(spark, tmp_path):
     assert [r.id for r in bad.collect()] == [2]
 
 
-def test_compact_partition_rewrites_only_target(spark, tmp_path):
-    """Compaction merges one partition's files and leaves siblings alone."""
-    import glob
-
-    from callio_etl_spark.io import compact_partition, write_partitioned
-
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(d, i, f"v{i}") for d in ("2024-01-01", "2024-01-02") for i in range(40)],
-        "d string, k int, v string",
-    )
-    write_partitioned(df, path, "d")
-    # fragment partition d=2024-01-01 into many small files
-    frag = spark.createDataFrame(
-        [("2024-01-01", 100 + i, "x") for i in range(8)], "d string, k int, v string"
-    )
-    frag.repartition(8).write.mode("append").partitionBy("d").parquet(path)
-
-    files_before_sibling = set(glob.glob(f"{path}/d=2024-01-02/*.parquet"))
-    rows = compact_partition(spark, path, "d", "2024-01-01", target_files=1,
-                             cluster_cols=["k"])
-    assert rows == 48
-    assert len(glob.glob(f"{path}/d=2024-01-01/*.parquet")) == 1
-    assert set(glob.glob(f"{path}/d=2024-01-02/*.parquet")) == files_before_sibling
-    got = spark.read.parquet(path)
-    assert got.count() == 88
-    assert got.where(F.col("d") == "2024-01-01").count() == 48
-
-
 def test_orc_roundtrip(spark, tmp_path):
     """ORC write/read roundtrip — the other splittable columnar format the
     engine supports out of the box (predicate pushdown + column pruning
@@ -236,52 +198,14 @@ def test_salted_join_rejects_right_preserving_types(spark):
     assert salted_join(left, right, "k", n_salts=4, how="left").count() == 1
 
 
-def test_delete_rows_between_partition_scoped(spark, tmp_path):
-    """Partition-scoped S11: only partitions containing in-range rows are
-    rewritten (sibling partition FILES are byte-identical afterwards), a
-    fully-emptied partition's directory is removed, and the surviving rows
-    are exactly the complement."""
-    import glob
-    import os
-
-    p = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(i, f"d{i // 10}", i * 2) for i in range(40)], "id long, d string, v long"
-    )
-    df.repartition(1).write.partitionBy("d").parquet(p)
-
-    def snapshot(part):
-        return {
-            f: (os.path.getmtime(f), os.path.getsize(f))
-            for f in glob.glob(f"{p}/d={part}/*.parquet")
-        }
-
-    untouched_before = snapshot("d3")
-    assert untouched_before
-    # delete ids 10..24: empties d1 (10-19) entirely, trims d2 (20-24),
-    # leaves d0 and d3 alone
-    delete_rows_between(spark, p, "id", 10, 24, partition_col="d")
-    left = sorted(r["id"] for r in spark.read.parquet(p).collect())
-    assert left == list(range(10)) + list(range(25, 40))
-    assert snapshot("d3") == untouched_before  # sibling files untouched
-    assert not os.path.exists(f"{p}/d=d1")  # emptied partition dir removed
-    assert os.path.exists(f"{p}/d=d2")  # trimmed partition still there
-    # layout preserved: the read still prunes on d
-    pruned = spark.read.parquet(p).where(F.col("d") == "d0")
-    assert sorted(r["id"] for r in pruned.collect()) == list(range(10))
-
-
 # ----------------------------------------------------- atomic commit protocol
 
 
-def _write_staging(spark, src_rows, staging, marker, partition_col=None):
+def _write_staging(spark, src_rows, staging, marker):
     """Simulate a COMPLETED staging write that crashed before any rename:
     the parquet job finished and the mode marker was touched."""
     df = spark.createDataFrame(src_rows, "id long, d string, v long")
-    w = df.repartition(1).write.mode("overwrite")
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.parquet(staging)
+    df.repartition(1).write.mode("overwrite").parquet(staging)
     open(f"{staging}/{marker}", "w").close()
 
 
@@ -390,148 +314,6 @@ def test_recover_drops_committed_backup(spark, tmp_path):
     assert not os.path.exists(p + ".__backup__")
 
 
-def test_atomic_partition_overwrite_swaps_only_affected(spark, tmp_path):
-    """Only partitions present in df are replaced; sibling partition files
-    are byte-identical afterwards; protocol dirs are cleaned up."""
-    import glob
-
-    from callio_etl_spark.io import atomic_partition_overwrite
-
-    p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(i, f"d{i % 3}", i) for i in range(30)], "id long, d string, v long"
-    ).repartition(1).write.partitionBy("d").parquet(p)
-    before = {
-        f: os.path.getmtime(f) for f in glob.glob(f"{p}/d=d2/*.parquet")
-    }
-    assert before
-    repl = spark.createDataFrame(
-        [(100, "d0", 0), (101, "d1", 0)], "id long, d string, v long"
-    )
-    atomic_partition_overwrite(spark, repl, p, "d")
-    got = sorted(r["id"] for r in spark.read.parquet(p).collect())
-    d2_ids = sorted(i for i in range(30) if i % 3 == 2)
-    assert got == sorted([100, 101] + d2_ids)
-    after = {f: os.path.getmtime(f) for f in glob.glob(f"{p}/d=d2/*.parquet")}
-    assert after == before
-    assert not os.path.exists(p + ".__staging__")
-    assert not os.path.exists(p + ".__pbak__")
-
-
-def test_recover_partition_swap_mid_loop(spark, tmp_path):
-    """Crash halfway through the per-partition swap loop: one partition
-    already swapped (old dir in pbak), one not started. Recovery must roll
-    BOTH forward and drop the protocol dirs."""
-    from callio_etl_spark.io import recover_table
-
-    p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 2)], "id long, d string, v long"
-    ).repartition(1).write.partitionBy("d").parquet(p)
-    staging, pbak = p + ".__staging__", p + ".__pbak__"
-    _write_staging(
-        spark, [(10, "a", 0), (20, "b", 0)], staging, "__COMMIT_PARTS__",
-        partition_col="d",
-    )
-    # simulate: d=a fully swapped, d=b untouched
-    os.makedirs(pbak)
-    os.rename(f"{p}/d=a", f"{pbak}/d=a")
-    os.rename(f"{staging}/d=a", f"{p}/d=a")
-    recover_table(spark, p)
-    got = sorted(r["id"] for r in spark.read.parquet(p).collect())
-    assert got == [10, 20]
-    assert not os.path.exists(staging)
-    assert not os.path.exists(pbak)
-
-
-def test_delete_rows_between_null_partition(spark, tmp_path):
-    """In-range rows whose partition value is NULL (the
-    __HIVE_DEFAULT_PARTITION__ dir) must be deleted too — isin() alone
-    never matches NULL — and an emptied default partition's dir removed."""
-    p = str(tmp_path / "t")
-    rows = [(i, None if i < 10 else "d1", i) for i in range(20)]
-    spark.createDataFrame(
-        rows, "id long, d string, v long"
-    ).repartition(1).write.partitionBy("d").parquet(p)
-    assert os.path.exists(f"{p}/d=__HIVE_DEFAULT_PARTITION__")
-    delete_rows_between(spark, p, "id", 0, 9, partition_col="d")
-    left = sorted(r["id"] for r in spark.read.parquet(p).collect())
-    assert left == list(range(10, 20))
-    assert not os.path.exists(f"{p}/d=__HIVE_DEFAULT_PARTITION__")
-
-
-def test_delete_rows_between_escaped_partition_value(spark, tmp_path):
-    """Partition values containing Hive-escaped characters (:, #, space)
-    must still have their emptied dirs removed — path construction goes
-    through the same escaping the writer used, so deleted rows cannot
-    resurrect from a missed directory."""
-    p = str(tmp_path / "t")
-    rows = [(i, "a:b #1" if i < 10 else "plain", i) for i in range(20)]
-    spark.createDataFrame(
-        rows, "id long, d string, v long"
-    ).repartition(1).write.partitionBy("d").parquet(p)
-    delete_rows_between(spark, p, "id", 0, 9, partition_col="d")
-    left = sorted(r["id"] for r in spark.read.parquet(p).collect())
-    assert left == list(range(10, 20))
-    # the escaped dir is gone: re-running the same delete is a no-op and
-    # nothing resurrects
-    delete_rows_between(spark, p, "id", 0, 9, partition_col="d")
-    assert spark.read.parquet(p).count() == 10
-
-
-def test_merge_write_crash_recovery_end_to_end(spark, tmp_path, monkeypatch):
-    """merge_write's partition path through an injected mid-swap crash:
-    after recover_table the merged state is exactly what an uncrashed
-    merge produces."""
-    import callio_etl_spark.io as io
-    from callio_etl_spark.merge import MergeSpec, merge_write
-
-    p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "2024-01-01", "old"), (2, "2024-01-02", "old")],
-        "k long, d string, val string",
-    ).repartition(1).write.partitionBy("d").parquet(p)
-    src = spark.createDataFrame(
-        [(2, "2024-01-02", "new"), (3, "2024-01-02", "ins")],
-        "k long, d string, val string",
-    )
-    spec = MergeSpec(keys=["k"])
-
-    real_rename = io._rename
-    calls = {"n": 0}
-
-    def boom(jvm, fs, srcp, dstp):
-        # let the backup rename of the first partition through, then crash
-        # before its staging dir lands in the table
-        calls["n"] += 1
-        # "__staging__/" (with slash): a partition LEAF leaving staging —
-        # not the writer-unique -> fixed staging handoff rename
-        if ".__pbak__" not in dstp and ".__staging__/" in srcp:
-            raise RuntimeError("injected crash mid-partition-swap")
-        return real_rename(jvm, fs, srcp, dstp)
-
-    monkeypatch.setattr(io, "_rename", boom)
-    try:
-        merge_write(
-            spark, p, src, spec,
-            partition_col="d", part_min="2024-01-02", part_max="2024-01-02",
-        )
-        raise AssertionError("injected crash did not fire")
-    except RuntimeError:
-        pass
-    monkeypatch.setattr(io, "_rename", real_rename)
-    io.recover_table(spark, p)
-    # partition discovery infers d as DATE — stringify for the compare
-    got = sorted(
-        (r["k"], str(r["d"]), r["val"]) for r in spark.read.parquet(p).collect()
-    )
-    assert got == [
-        (1, "2024-01-01", "old"),
-        (2, "2024-01-02", "new"),
-        (3, "2024-01-02", "ins"),
-    ]
-
-
 def test_atomic_overwrite_crash_sweep_every_step(spark, tmp_path):
     """Exhaustive crash-point sweep: abort the whole-table commit at the
     Nth filesystem mutation (rename/delete/marker-touch) for every N, run
@@ -587,73 +369,6 @@ def test_atomic_overwrite_crash_sweep_every_step(spark, tmp_path):
         if not crashed:
             assert got == new_rows
             break  # no injection fired: every crash point swept
-
-
-def test_atomic_partition_overwrite_crash_sweep_every_step(spark, tmp_path):
-    """Same exhaustive sweep for the per-partition swap: after recovery,
-    every partition must be fully old or fully new — and once the staging
-    marker exists, recovery rolls FORWARD, so swapped/unswapped mixes
-    resolve to the new state per partition."""
-    import itertools
-
-    import callio_etl_spark.io as io
-
-    def read_state(p):
-        out = {}
-        for r in spark.read.parquet(p).collect():
-            out.setdefault(r["d"], set()).add((r["id"], r["v"]))
-        return out
-
-    old = {"a": {(1, 10), (2, 20)}, "b": {(3, 30)}, "c": {(9, 90)}}
-    new = {"a": {(1, 11)}, "b": {(3, 33), (4, 44)}}  # c untouched
-
-    real = {"rename": io._rename, "delete": io._delete, "touch": io._touch}
-
-    for crash_at in itertools.count(1):
-        p = str(tmp_path / f"pt{crash_at}")
-        rows = [(i, d, v) for d, s in old.items() for i, v in s]
-        spark.createDataFrame(
-            rows, "id long, d string, v long"
-        ).repartition(1).write.partitionBy("d").parquet(p)
-        repl = spark.createDataFrame(
-            [(i, d, v) for d, s in new.items() for i, v in s],
-            "id long, d string, v long",
-        )
-
-        calls = {"n": 0}
-
-        def make_boom(fn):
-            def wrapped(*args, **kw):
-                calls["n"] += 1
-                if calls["n"] == crash_at:
-                    raise RuntimeError(f"crash at fs-op {crash_at}")
-                return fn(*args, **kw)
-
-            return wrapped
-
-        for name, fn in real.items():
-            setattr(io, f"_{name}", make_boom(fn))
-        try:
-            io.atomic_partition_overwrite(spark, repl, p, "d")
-            crashed = False
-        except RuntimeError:
-            crashed = True
-        finally:
-            for name, fn in real.items():
-                setattr(io, f"_{name}", fn)
-
-        io.recover_table(spark, p)
-        got = read_state(p)
-        for d in got:
-            assert got[d] in (old.get(d), new.get(d)), (
-                f"crash at op {crash_at}: partition {d} torn: {got[d]}"
-            )
-        assert got["c"] == old["c"]  # untouched sibling always intact
-        assert not os.path.exists(p + ".__staging__")
-        assert not os.path.exists(p + ".__pbak__")
-        if not crashed:
-            assert got == {**old, **new}
-            break
 
 
 def test_salted_join_balances_hot_key_across_tasks(spark):

@@ -98,9 +98,10 @@ def test_cli_once_is_idempotent(tmp_path, monkeypatch):
     assert main(args) == 0
 
     from callio_etl_spark.session import get_spark
+    from callio_etl_spark.snapshots import snapshot_read
 
     spark = get_spark("cli-test")
-    first = spark.read.parquet(f"{wd}/call_log").count()
+    first = snapshot_read(spark, f"{wd}/call_log").count()
     assert first > 0
     assert spark.read.parquet(f"{wd}/fact_staff_daily").count() > 0
     assert spark.read.parquet(f"{wd}/fact_status_pivot").count() > 0
@@ -108,7 +109,7 @@ def test_cli_once_is_idempotent(tmp_path, monkeypatch):
     assert main(args) == 0
     # idempotent: the overlap tail re-merges (mode MERGED, C2 semantics) but
     # the row_hash guard changes nothing — count stays identical
-    assert spark.read.parquet(f"{wd}/call_log").count() == first
+    assert snapshot_read(spark, f"{wd}/call_log").count() == first
     log = spark.read.parquet(f"{wd}/update_log")
     modes = [r["mode"] for r in log.where(F_table("call_log")).collect()]
     assert modes == ["MERGED", "MERGED"]
@@ -121,9 +122,10 @@ def F_table(name):
 
 
 def test_cli_versioned_tick_and_restore(tmp_path, monkeypatch):
-    """CLI time travel: ticks with --keep-versions archive the displaced
-    warehouse tables; --mode versions lists them; --mode restore rolls a
-    table back to a snapshot (and --mode restore guards its arguments)."""
+    """CLI time travel: ticks with --keep-versions keep the older
+    manifests of the warehouse tables; --mode versions lists them; --mode
+    restore rolls a table back to a snapshot (and --mode restore guards
+    its arguments)."""
     import pytest
 
     monkeypatch.setenv("DAYS_TO_FETCH_IF_EMPTY", "100000")
@@ -132,30 +134,32 @@ def test_cli_versioned_tick_and_restore(tmp_path, monkeypatch):
     wd = str(tmp_path / "work")
     base = ["--sf-dir", "/root/testdata/sf0.001", "--work-dir", wd,
             "--keep-versions", "2"]
-    # tick 1 bootstraps (no prior table -> no version); tick 2 re-merges the
-    # overlap tail and archives the displaced generation
+    # tick 1 bootstraps v1; tick 2 re-merges the overlap tail as v2 and
+    # keeps v1 readable
     assert main(["--mode", "once", "--job", "call", *base]) == 0
     assert main(["--mode", "once", "--job", "call", *base]) == 0
 
-    from callio_etl_spark.io import list_table_versions, read_table_version
     from callio_etl_spark.session import get_spark
+    from callio_etl_spark.snapshots import snapshot_read, snapshot_versions
 
     spark = get_spark("cli-version-test")
-    vers = list_table_versions(spark, f"{wd}/call_log")
-    assert vers, "second tick should have archived the first generation"
-    live = spark.read.parquet(f"{wd}/call_log").count()
-    snap = read_table_version(spark, f"{wd}/call_log", vers[-1]).count()
-    assert snap == live  # idempotent ticks: same rows, different generation
+    table = f"{wd}/call_log"
+    vers = snapshot_versions(spark, table)
+    assert len(vers) == 2, "second tick should have kept the first version"
+    live = snapshot_read(spark, table).count()
+    snap = snapshot_read(spark, table, version=vers[0]).count()
+    assert snap == live  # idempotent ticks: same rows, different version
 
     assert main(["--mode", "versions", "--job", "call", *base]) == 0
     assert (
         main(["--mode", "restore", "--job", "call",
-              "--restore-version", str(vers[-1]), *base])
+              "--restore-version", str(vers[0]), *base])
         == 0
     )
-    assert spark.read.parquet(f"{wd}/call_log").count() == snap
-    # restore is itself versioned: the pre-restore live table was archived
-    assert len(list_table_versions(spark, f"{wd}/call_log")) >= 1
+    assert snapshot_read(spark, table).count() == snap
+    # restore is itself a commit: the pre-restore head stays readable
+    after = snapshot_versions(spark, table)
+    assert after[-1] > vers[-1] and vers[-1] in after
 
     with pytest.raises(SystemExit):
         main(["--mode", "restore", "--job", "call", *base])  # no version
@@ -383,20 +387,16 @@ def test_curate_grouped_path_matches_row_grain_survivors(tmp_path):
 
 
 def test_cli_snapshot_table_format(tmp_path, monkeypatch):
-    """--table-format snapshot: ticks land as month-partitioned manifest
-    commits (only the fresh months touched), reads and counts match the
-    plain-format run, --mode versions prints the op history, and --mode
-    restore rolls back via a manifest copy."""
+    """The snapshot warehouse: ticks land as month-partitioned manifest
+    commits (only the fresh months touched) holding one row per fixture
+    key, --mode versions prints the op history, and --mode restore rolls
+    back via a manifest copy."""
     monkeypatch.setenv("DAYS_TO_FETCH_IF_EMPTY", "100000")
-    from callio_etl_spark.__main__ import main
+    from callio_etl_spark.__main__ import _prepared_events, main
 
     wd = str(tmp_path / "work")
-    wd_plain = str(tmp_path / "work_plain")
-    base = ["--sf-dir", "/root/testdata/sf0.001",
-            "--table-format", "snapshot", "--keep-versions", "3"]
+    base = ["--sf-dir", "/root/testdata/sf0.001", "--keep-versions", "3"]
     assert main(["--mode", "once", "--job", "call", "--work-dir", wd, *base]) == 0
-    assert main(["--mode", "once", "--job", "call", "--work-dir", wd_plain,
-                 "--sf-dir", "/root/testdata/sf0.001"]) == 0
 
     from callio_etl_spark.session import get_spark
     from callio_etl_spark.snapshots import (
@@ -407,8 +407,13 @@ def test_cli_snapshot_table_format(tmp_path, monkeypatch):
 
     spark = get_spark("cli-snap-test")
     snap_rows = snapshot_read(spark, f"{wd}/call_log").count()
-    plain_rows = spark.read.parquet(f"{wd_plain}/call_log").count()
-    assert snap_rows == plain_rows > 0
+    fixture_keys = (
+        _prepared_events(spark, "/root/testdata/sf0.001")
+        .select("tenant", "event_id")
+        .distinct()
+        .count()
+    )
+    assert snap_rows == fixture_keys > 0
     hist = snapshot_history(spark, f"{wd}/call_log")
     assert hist[-1]["op"] == "overwrite" and hist[-1]["n_partitions"] >= 1
 
@@ -511,9 +516,9 @@ def test_tick_snapshot_cross_month_update_retires_old_row(spark, tmp_path):
     orig = cli.JOB_TABLES.get("xmon")
     cli.JOB_TABLES["xmon"] = (table, prepare)
     try:
-        cli._tick_snapshot(spark, cfg, store, "xmon")
+        cli._tick(spark, cfg, store, "xmon")
         state["i"] = 1
-        cli._tick_snapshot(spark, cfg, store, "xmon")
+        cli._tick(spark, cfg, store, "xmon")
     finally:
         if orig is None:
             cli.JOB_TABLES.pop("xmon", None)
@@ -527,18 +532,61 @@ def test_tick_snapshot_cross_month_update_retires_old_row(spark, tmp_path):
     assert got.where(F.col("k") == 1).count() == 1
 
 
+def test_cli_tick_refuses_a_plain_parquet_table(tmp_path, monkeypatch):
+    """A work dir whose call_log is a plain parquet table (the layout of
+    the removed rename-swap tick) must make the tick raise before it
+    fetches anything: the warmed checkpoint is already past those rows,
+    so treating the table as empty would publish a snapshot table
+    holding only the overlap slice. The error names the path and the
+    migration; the dir and the update_log stay as they were."""
+    import datetime as dt
+    import os
+
+    import pytest
+
+    monkeypatch.setenv("DAYS_TO_FETCH_IF_EMPTY", "100000")
+    from callio_etl_spark.__main__ import main
+    from callio_etl_spark.checkpoints import UPDATE_LOG_SCHEMA
+    from callio_etl_spark.session import get_spark
+
+    wd = str(tmp_path / "work")
+    spark = get_spark("cli-test")
+    spark.createDataFrame(
+        [("PK", 1, 1704067200000)], "tenant string, event_id long, createTime long"
+    ).write.parquet(f"{wd}/call_log")
+    spark.createDataFrame(
+        [("call_log", "PK", dt.datetime(2024, 1, 1), 1, 1704067200000, "MERGED")],
+        UPDATE_LOG_SCHEMA,
+    ).write.parquet(f"{wd}/update_log")
+
+    def listing():
+        return {
+            (os.path.relpath(os.path.join(d, f), wd), st.st_size, st.st_mtime_ns)
+            for d, _, files in os.walk(wd)
+            for f in files
+            for st in [os.stat(os.path.join(d, f))]
+        }
+
+    before = listing()
+    with pytest.raises(RuntimeError, match="plain parquet table") as exc:
+        main(["--mode", "once", "--job", "call",
+              "--sf-dir", "/root/testdata/sf0.001", "--work-dir", wd])
+    msg = str(exc.value)
+    assert f"{wd}/call_log" in msg
+    assert "spark.read.parquet" in msg and "snapshot_partition_overwrite" in msg
+    assert listing() == before
+
 def test_cli_evolution_verbs(tmp_path, monkeypatch):
     """--mode evolve-spec / rename-column / drop-column on the snapshot
     warehouse: metadata-only commits through the CLI, readable history,
-    and the guard rails (--table-format snapshot, single --job)."""
+    and the guard rail (single --job)."""
     import pyspark.sql.functions as F
 
     monkeypatch.setenv("DAYS_TO_FETCH_IF_EMPTY", "100000")
     from callio_etl_spark.__main__ import main
 
     wd = str(tmp_path / "work")
-    base = ["--sf-dir", "/root/testdata/sf0.001",
-            "--table-format", "snapshot", "--keep-versions", "3",
+    base = ["--sf-dir", "/root/testdata/sf0.001", "--keep-versions", "3",
             "--work-dir", wd, "--job", "call"]
     assert main(["--mode", "once", *base]) == 0
 

@@ -1,6 +1,7 @@
-"""Snapshot-isolated partitioned tables (callio_etl_spark/snapshots.py).
+"""Snapshot-isolated partitioned tables (callio_etl_spark/snapshots.py),
+the engine's one format for partitioned tables.
 
-The contract under test is the one `atomic_partition_overwrite` cannot give
+The contract under test is the one a per-partition rename loop cannot give
 on a plain filesystem: a reader racing a partition overwrite observes only
 BEFORE-or-AFTER states — never a mix of old and new partitions — because a
 commit is a single manifest publish over immutable data dirs (the
@@ -738,6 +739,48 @@ def test_row_deletes_merge_on_read(spark, tmp_path):
         r["id"] for r in snap.snapshot_read(spark, p).collect()
     ) == list(range(1, 9))
 
+
+@pytest.mark.parametrize(
+    "part", [None, "a:b #1"], ids=["null_partition", "escaped_partition_value"]
+)
+def test_row_deletes_null_and_escaped_partition_values(spark, tmp_path, part):
+    """In-range rows whose partition value is NULL (the
+    __HIVE_DEFAULT_PARTITION__ leaf) or needs Hive path escaping (:, #,
+    space) are deleted like any other; re-running the same delete is a
+    no-op, and compacting the emptied partition retires its leaf without
+    resurrecting a row."""
+    p = str(tmp_path / "t")
+    rows = [(i, part if i < 10 else "plain", i) for i in range(20)]
+    snap.snapshot_partition_overwrite(
+        spark,
+        spark.createDataFrame(rows, "id long, d string, v long"),
+        p,
+        "d",
+        keep_snapshots=9,
+    )
+    (leaf,) = set(snap.snapshot_manifest(spark, p)["partitions"]) - {"d=plain"}
+    in_part = F.col("d").eqNullSafe(F.lit(part))
+    assert snap.snapshot_read(spark, p).where(in_part).count() == 10
+
+    doomed = F.col("id").between(0, 9)
+    v = snap.snapshot_delete_rows(spark, p, doomed, keys=["id"], keep_snapshots=9)
+    live = snap.snapshot_read(spark, p)
+    assert sorted(r["id"] for r in live.collect()) == list(range(10, 20))
+    assert live.where(in_part).count() == 0
+    # the predicate matches nothing live any more: no new version
+    assert snap.snapshot_delete_rows(
+        spark, p, doomed, keys=["id"], keep_snapshots=9
+    ) == v
+
+    snap.snapshot_compact_partition(
+        spark, p, leaf.split("=", 1)[1], keep_snapshots=9
+    )
+    m = snap.snapshot_manifest(spark, p)
+    assert sorted(m["partitions"]) == ["d=plain"]
+    assert not m.get("deletes")
+    assert sorted(
+        r["id"] for r in snap.snapshot_read(spark, p).collect()
+    ) == list(range(10, 20))
 
 def test_row_deletes_ivm_and_vacuum(spark, tmp_path):
     """The IVM refresh consumes delete-only commits correctly, and vacuum
