@@ -8,8 +8,12 @@ events = call_log, orders = customer-assignment stream).
 facts (the reference's post-run hook, runner.py:1004-1008). ``daemon`` wraps
 the same ticks in the slot scheduler (scheduler.run_daemon).
 
-The tick tables (call_log, customer) are snapshot tables (snapshots.py).
-``versions`` / ``restore`` list and roll back their manifest history;
+Every warehouse table is a snapshot table (snapshots.py): the tick
+tables (call_log, customer) month-partitioned, the whole-table outputs
+(staff, group, the two reporting facts, curated_docs, curated_shards)
+through ``snapshot_overwrite``. Each keeps ``--keep-versions`` older
+versions besides the live one. ``versions`` / ``restore`` list and roll
+back the tick tables' manifest history;
 ``tag`` / ``drop-tag`` name an immutable ref on the published head
 (vacuum-pinned provenance pointer), ``publish`` / ``discard-staged``
 complete or abandon a write-audit-publish cycle staged by the library
@@ -85,7 +89,6 @@ def _tick(spark: SparkSession, cfg: EngineConfig, store: CheckpointStore, job: s
     fetched: the checkpoint already covers its rows, so treating it as
     an empty target would publish a table holding only the overlap
     slice."""
-    from callio_etl_spark.io import BACKUP_SUFFIX, _exists, _hadoop
     from callio_etl_spark.logging_utils import job_stage
     from callio_etl_spark.snapshots import (
         snapshot_partition_overwrite,
@@ -98,21 +101,14 @@ def _tick(spark: SparkSession, cfg: EngineConfig, store: CheckpointStore, job: s
     # server (the reference's per-step progress bars, runner.py:356-567,
     # rendered the cluster way) and gives operators a cancellable group.
     with job_stage(spark, f"tick:{table.name}"):
-        jvm, fs, _ = _hadoop(spark, path)
         target = None
-        if _exists(jvm, fs, path + "/__snap__"):
-            target = snapshot_read(spark, path).drop("ym")
-        elif _holds_parquet_files(jvm, fs, path) or _holds_parquet_files(
-            jvm, fs, path + BACKUP_SUFFIX
+        if _snapshot_table_at(
+            spark,
+            path,
+            f"add ym = date_format(timestamp_millis({table.time_col_ms}), "
+            f"'yyyy-MM'), snapshot_partition_overwrite it by 'ym'",
         ):
-            raise RuntimeError(
-                f"{path} is a plain parquet table, not a snapshot table; "
-                f"migrate it once before the next tick: read it with "
-                f"spark.read.parquet({path!r}), add ym = date_format("
-                f"timestamp_millis({table.time_col_ms}), 'yyyy-MM'), "
-                f"snapshot_partition_overwrite it by 'ym' into a new path, "
-                f"then move the new table to {path!r}"
-            )
+            target = snapshot_read(spark, path).drop("ym")
         batch = prepare(spark, cfg.sf_dir)
         if cfg.limit_records:
             batch = batch.orderBy(F.col(table.time_col_ms).desc()).limit(
@@ -154,34 +150,64 @@ def _tick(spark: SparkSession, cfg: EngineConfig, store: CheckpointStore, job: s
                 out.where(F.col("ym").isin(months)),
                 path,
                 "ym",
-                keep_snapshots=max(cfg.keep_versions, 0) + 1,
+                keep_snapshots=_keep_snapshots(cfg),
             )
         commit(store, table, TENANT, new_ck)
 
 
-def _holds_parquet_files(jvm, fs, path: str) -> bool:
-    """True when ``path`` directly holds data files — the layout of a
-    plain parquet table. A snapshot table keeps only ``__snap__`` and
-    ``col=value`` dirs at its top level."""
-    from callio_etl_spark.io import _exists
+def _keep_snapshots(cfg: EngineConfig) -> int:
+    """Versions every warehouse table keeps: the live one plus
+    ``keep_versions`` older ones."""
+    return max(cfg.keep_versions, 0) + 1
 
-    if not _exists(jvm, fs, path):
-        return False
-    return any(
-        st.isFile() and not st.getPath().getName().startswith(("_", "."))
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path))
-    )
+
+def _snapshot_table_at(
+    spark: SparkSession, path: str, migrate: str = "snapshot_overwrite it"
+) -> bool:
+    """True when ``path`` holds a snapshot table, False when it holds
+    nothing. Raises when it holds a plain parquet table — data files
+    directly under it, or under the ``.__backup__`` sibling a crashed
+    rename swap left (a snapshot table keeps only ``__snap__`` and
+    ``col=value`` dirs at its top level): a snapshot commit there would
+    mix two formats in one directory. ``migrate`` is the conversion step
+    the message names (the default suits a whole-table output)."""
+    from callio_etl_spark.io import BACKUP_SUFFIX, _exists, _hadoop
+
+    jvm, fs, _ = _hadoop(spark, path)
+    if _exists(jvm, fs, path + "/__snap__"):
+        return True
+
+    def holds_files(p: str) -> bool:
+        return _exists(jvm, fs, p) and any(
+            st.isFile() and not st.getPath().getName().startswith(("_", "."))
+            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(p))
+        )
+
+    if holds_files(path) or holds_files(path + BACKUP_SUFFIX):
+        raise RuntimeError(
+            f"{path} is a plain parquet table, not a snapshot table; "
+            f"migrate it once before the next run: read it with "
+            f"spark.read.parquet({path!r}), {migrate} into a new path, "
+            f"then move the new table to {path!r}"
+        )
+    return False
 
 
 def _refresh_reports(spark: SparkSession, cfg: EngineConfig) -> None:
-    from callio_etl_spark.io import atomic_overwrite
     from callio_etl_spark.registry import all_queries
+    from callio_etl_spark.snapshots import snapshot_overwrite
 
     qs = all_queries()
-    for name in ("fact_staff_daily", "fact_status_pivot"):
-        out = os.path.join(cfg.work_dir, name)
-        atomic_overwrite(
-            spark, qs[name](spark, cfg.sf_dir), out, keep_versions=cfg.keep_versions
+    outs = {
+        name: os.path.join(cfg.work_dir, name)
+        for name in ("fact_staff_daily", "fact_status_pivot")
+    }
+    for out in outs.values():
+        _snapshot_table_at(spark, out)
+    for name, out in outs.items():
+        snapshot_overwrite(
+            spark, qs[name](spark, cfg.sf_dir), out,
+            keep_snapshots=_keep_snapshots(cfg),
         )
 
 
@@ -197,14 +223,20 @@ def _staff_group_snapshot(
     fetches audit NOOP. Tenants are a column, one frame carries all
     (SURVEY 3.1); supplier/nation stand in for the staff/group
     endpoints at fixture scale, exactly as orders/events stand in for
-    customer/call_log in JOB_TABLES. The dims land through the
-    versioned-parquet sink, not the snapshot format of the tick tables:
-    they are small, unpartitioned, replaced-or-merged whole, so the
-    partitioned snapshot machinery buys nothing here."""
+    customer/call_log in JOB_TABLES. Both dims are whole-table snapshot
+    tables (``snapshot_overwrite``): small, unpartitioned, replaced or
+    merged whole, with the same history as every other warehouse
+    table."""
     from callio_etl_spark.dedup import latest_per_key
-    from callio_etl_spark.io import _exists, _hadoop, atomic_overwrite, recover_table
+    from callio_etl_spark.io import _delete, _exists, _hadoop
     from callio_etl_spark.merge import MergeSpec, merge_upsert
     from callio_etl_spark.pipeline import snapshot_truncate, stage_batch
+    from callio_etl_spark.snapshots import snapshot_overwrite, snapshot_read
+
+    path = os.path.join(cfg.work_dir, "staff")
+    group_path = os.path.join(cfg.work_dir, "group")
+    staff_exists = _snapshot_table_at(spark, path)
+    _snapshot_table_at(spark, group_path)
 
     # No updateTime: the staff endpoint's snapshot rows carry none here,
     # and the reference's schema-dynamic MERGE adds the newer-updateTime
@@ -227,17 +259,12 @@ def _staff_group_snapshot(
     # run's append-then-read would merge them alongside fresh rows —
     # resurrecting keys absent from the new snapshot and understating the
     # MERGED audit count. Clear before staging each snapshot run.
-    _jvm0, _fs0, _ = _hadoop(spark, stg)
-    if _exists(_jvm0, _fs0, stg):
-        from callio_etl_spark.io import _delete
-
-        _delete(_jvm0, _fs0, stg)
+    jvm, fs, _ = _hadoop(spark, stg)
+    if _exists(jvm, fs, stg):
+        _delete(jvm, fs, stg)
     n = stage_batch(store, "staff", "ALL", staff, stg)
     if n:
-        path = os.path.join(cfg.work_dir, "staff")
-        recover_table(spark, path)
-        jvm, fs, _ = _hadoop(spark, path)
-        target = spark.read.parquet(path) if _exists(jvm, fs, path) else None
+        target = snapshot_read(spark, path) if staff_exists else None
         staged = spark.read.parquet(stg)
         # one staged row per key, deterministic pick (max _id) — the
         # reference's ROW_NUMBER dedup falls back to `name` ordering
@@ -255,14 +282,14 @@ def _staff_group_snapshot(
                 target, fresh,
                 MergeSpec(keys=["tenant", "name"], update_condition=cond),
             )
-        atomic_overwrite(spark, merged, path, keep_versions=cfg.keep_versions)
+        snapshot_overwrite(
+            spark, merged, path, keep_snapshots=_keep_snapshots(cfg)
+        )
         # audit carries the STAGED count, mirroring the reference
         # (runner.py:382-385 logs the same `rows` on both rows)
         store.log("staff", "ALL", n, None, "MERGED")
         # staging is consumed by the merge (the reference drops stg_staff
         # after a successful MERGE) — next snapshot stages fresh
-        from callio_etl_spark.io import _delete
-
         _delete(jvm, fs, stg)
     group = load_table(spark, cfg.sf_dir, "nation").select(
         F.lit(TENANT).alias("tenant"),
@@ -271,8 +298,8 @@ def _staff_group_snapshot(
         F.col("n_regionkey").cast("string").alias("region_id"),
     )
     snapshot_truncate(
-        spark, store, "group", group, os.path.join(cfg.work_dir, "group"),
-        keep_versions=cfg.keep_versions,
+        spark, store, "group", group, group_path,
+        keep_snapshots=_keep_snapshots(cfg),
     )
     store.flush()
 
@@ -292,15 +319,15 @@ def _curate(spark: SparkSession, cfg: EngineConfig) -> dict:
       4. token-balanced shard assignment (sampling.assign_shards — the
          same layout rule shard_manifest proves against its oracle),
 
-    with both outputs (curated_docs, curated_shards) committed through
-    the atomic staging+rename protocol (versioned when --keep-versions
-    is set). The curated frame is localCheckpointed once, so the write,
-    the manifest, and the curated/shard counts read the materialized
+    with both outputs (curated_docs, curated_shards) committed as
+    whole-table snapshot tables (``snapshot_overwrite``, keeping
+    --keep-versions older versions). The curated frame is
+    localCheckpointed once, so the write, the manifest, and the
+    curated/shard counts read the materialized
     stage; the after_filter / after_exact_dedup accounting deliberately
     re-runs its own (shorter) lineage once each — drop those two counts
     in a deployment that doesn't want the extra passes. Returns the
     per-stage row accounting (also logged)."""
-    from callio_etl_spark.io import atomic_overwrite
     from callio_etl_spark.llm_ops.dedup_ops import (
         _pipeline_clusters,
         content_fp,
@@ -313,7 +340,12 @@ def _curate(spark: SparkSession, cfg: EngineConfig) -> dict:
     )
     from callio_etl_spark.llm_ops.text_analysis import TOKEN_RE, corpus_filter
     from callio_etl_spark.logging_utils import job_stage
+    from callio_etl_spark.snapshots import snapshot_overwrite
 
+    docs_path = os.path.join(cfg.work_dir, "curated_docs")
+    shards_path = os.path.join(cfg.work_dir, "curated_shards")
+    for out in (docs_path, shards_path):
+        _snapshot_table_at(spark, out)
     with job_stage(spark, "curate:documents"):
         d = load_table(spark, cfg.sf_dir, "documents")
         n_input = d.count()
@@ -362,18 +394,9 @@ def _curate(spark: SparkSession, cfg: EngineConfig) -> dict:
             sharded.select("doc_id", "shard", "tokens"), "doc_id"
         ).localCheckpoint(eager=True)
         manifest = shard_summary(out_docs.select("doc_id", "tokens", "shard"))
-        atomic_overwrite(
-            spark,
-            out_docs,
-            os.path.join(cfg.work_dir, "curated_docs"),
-            keep_versions=cfg.keep_versions,
-        )
-        atomic_overwrite(
-            spark,
-            manifest,
-            os.path.join(cfg.work_dir, "curated_shards"),
-            keep_versions=cfg.keep_versions,
-        )
+        keep = _keep_snapshots(cfg)
+        snapshot_overwrite(spark, out_docs, docs_path, keep_snapshots=keep)
+        snapshot_overwrite(spark, manifest, shards_path, keep_snapshots=keep)
         return {
             "input_docs": n_input,
             "after_filter": kept.count(),
@@ -414,7 +437,7 @@ def main(argv: list[str] | None = None) -> int:
         "--keep-versions",
         type=int,
         default=None,
-        help="archived snapshots kept per warehouse table (time travel)",
+        help="older snapshot versions kept per warehouse table (time travel)",
     )
     p.add_argument(
         "--restore-version",

@@ -50,13 +50,12 @@ class EngineConfig:
     sf_dir: str = "/root/testdata/sf0.001"
     work_dir: str = "./_engine_work"
     cpus: int = 32
-    #: older versions kept per warehouse table besides the live one. The
-    #: tick tables are snapshot tables (snapshots.py: month-partitioned, one
-    #: manifest publish per tick) and keep ``keep_versions + 1`` manifests;
-    #: the unpartitioned outputs archive this many displaced copies (0 =
-    #: off). The engine's stand-in for BigQuery's implicit time travel on
-    #: the reference's MERGE targets; lets `--mode restore` roll a bad tick
-    #: back.
+    #: older versions kept per warehouse table besides the live one. Every
+    #: warehouse table is a snapshot table (snapshots.py) and keeps
+    #: ``keep_versions + 1`` manifests: the month-partitioned tick tables
+    #: and the whole-table outputs alike. The engine's stand-in for
+    #: BigQuery's implicit time travel on the reference's MERGE targets;
+    #: lets `--mode restore` roll a bad tick back.
     keep_versions: int = 0
 
     @classmethod

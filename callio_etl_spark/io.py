@@ -15,9 +15,12 @@ Physical layout (section 1.4): day partitioning via partitionBy(date_col);
 BigQuery clustering maps to sortWithinPartitions on the cluster keys, which
 gives parquet row-group min/max data skipping on those columns.
 
-Partitioned tables that need atomic commits live in the snapshot format
-(snapshots.py). The commit protocol here, ``atomic_overwrite``, is the
-whole-table swap for unpartitioned outputs.
+Every versioned table lives in the snapshot format (snapshots.py):
+partitioned tables, and whole-table outputs through
+``snapshots.snapshot_overwrite``. The commit protocol here,
+``atomic_overwrite``, is the unversioned whole-table swap for the few
+plain parquet tables: the update_log compaction, ``load_truncate`` and
+the two incremental view tables.
 """
 
 from __future__ import annotations
@@ -34,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 #: a dir inside the table would surface as a bogus partition to readers).
 STAGING_SUFFIX = ".__staging__"
 BACKUP_SUFFIX = ".__backup__"
-VERSIONS_SUFFIX = ".__versions__"
 LOCK_SUFFIX = ".__commitlock__"
 
 #: Writer-coordination knobs: how long a committer waits for the table
@@ -81,7 +83,7 @@ def load_truncate(df: DataFrame, path: str) -> None:
 #
 # Rename is atomic on HDFS and on POSIX filesystems; on S3-like object
 # stores it is copy+delete, where the right answer is a real table format
-# (Delta/Iceberg) — merge.py already prefers Delta MERGE when importable.
+# (Delta/Iceberg).
 # `recover_table` repairs any crash point; readers of a mid-commit table see
 # either the old table, the new table, or a loud missing-path error — never
 # a torn mix.
@@ -608,27 +610,17 @@ def _list_siblings(jvm, fs, path: str) -> list:
 def _recover_needed(jvm, fs, path: str, sibling_names: set[str]) -> bool:
     """One-probe gate for the in-lock ``recover_table`` call: recovery is
     a pure no-op unless a commit-protocol sibling (staging or backup
-    dir) survives beside the table or a mode marker survives inside it (crash between the final rename and the
-    marker delete). The common case — every previous commit completed —
-    is NEITHER, and the full probe sequence costs ~8 py4j round trips on
-    every commit; this gate reads the already-fetched sibling listing
-    plus ONE glob (both marker names match ``__COMMIT_TABLE*__``)."""
+    dir) survives beside the table or the mode marker survives inside it
+    (crash between the final rename and the marker delete). The common
+    case — every previous commit completed — is NEITHER, and the full
+    probe sequence costs ~8 py4j round trips on every commit; this gate
+    reads the already-fetched sibling listing plus ONE marker probe."""
     base = jvm.org.apache.hadoop.fs.Path(path).getName()
-    if (
+    return (
         base + STAGING_SUFFIX in sibling_names
         or base + BACKUP_SUFFIX in sibling_names
-    ):
-        return True
-    if any(c in path for c in "*?[]{}"):
-        # glob metachars in the TABLE path would corrupt the pattern —
-        # fall back to two plain probes (still cheaper than full recovery)
-        return _exists(jvm, fs, f"{path}/{_TABLE_MARKER}") or _exists(
-            jvm, fs, f"{path}/{_TABLE_KEEP_MARKER}"
-        )
-    hits = fs.globStatus(
-        jvm.org.apache.hadoop.fs.Path(path + "/__COMMIT_TABLE*__")
+        or _exists(jvm, fs, f"{path}/{_TABLE_MARKER}")
     )
-    return hits is not None and len(hits) > 0
 
 
 def _claim_age_s(name: str, st, now: float) -> float:
@@ -646,32 +638,16 @@ def _claim_age_s(name: str, st, now: float) -> float:
 #: Underscore-prefixed => invisible to Spark's file index and partition
 #: discovery if one survives into a table dir.
 _TABLE_MARKER = "__COMMIT_TABLE__"
-#: Variant of _TABLE_MARKER written by versioned commits: tells recovery the
-#: displaced table must be ARCHIVED as a version, not deleted (the marker is
-#: the only live state in the crash window between swap and archival).
-_TABLE_KEEP_MARKER = "__COMMIT_TABLE_KEEP__"
 
 
-def atomic_overwrite(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    keep_versions: int = 0,
-) -> None:
-    """Replace the table at ``path`` with ``df`` atomically (whole-table
-    swap). Safe when df READS FROM ``path``: the staging write completes
-    against the old files before any rename touches them — no
-    localCheckpoint materialization needed, the old table itself is the
-    checkpoint until commit.
-
-    With ``keep_versions`` > 0, the displaced table is ARCHIVED under
-    ``<path>.__versions__/v<k>`` instead of deleted, and the archive is
-    pruned to the newest ``keep_versions`` entries — snapshot time travel,
-    the capability the reference gets from BigQuery for free (`FOR
-    SYSTEM_TIME AS OF`, 7-day window). Read archived snapshots with
-    ``read_table_version``; roll back with ``restore_table_version``. The
-    archival is one directory rename — metadata-only, no data copy, any
-    table size.
+def atomic_overwrite(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Replace the plain parquet table at ``path`` with ``df`` atomically
+    (whole-table swap, no history: the displaced table is deleted). Safe
+    when df READS FROM ``path``: the staging write completes against the
+    old files before any rename touches them — no localCheckpoint
+    materialization needed, the old table itself is the checkpoint until
+    commit. Tables that need time travel are snapshot tables
+    (``snapshots.snapshot_overwrite``).
 
     CONCURRENT WRITERS (the contract BigQuery's atomic jobs give the
     reference): each writer stages its data into a writer-unique dir
@@ -691,8 +667,7 @@ def atomic_overwrite(
     wstaging = f"{staging}.{uuid.uuid4().hex[:12]}"  # writer-unique, unlocked
     jvm, fs, _ = _hadoop(spark, path)
     df.write.mode("overwrite").parquet(wstaging)
-    marker = _TABLE_KEEP_MARKER if keep_versions > 0 else _TABLE_MARKER
-    _touch(jvm, fs, f"{wstaging}/{marker}")
+    _touch(jvm, fs, f"{wstaging}/{_TABLE_MARKER}")
     acquire_table_lock(spark, path)
     try:
         sibs = _list_siblings(jvm, fs, path)
@@ -711,13 +686,8 @@ def atomic_overwrite(
             _rename(jvm, fs, path, backup)
         _rename(jvm, fs, staging, path)
         if had_old:
-            if keep_versions > 0:
-                _archive_backup(
-                    jvm, fs, path, backup, prune_to=keep_versions
-                )
-            else:
-                _delete(jvm, fs, backup)
-        _delete(jvm, fs, f"{path}/{marker}")
+            _delete(jvm, fs, backup)
+        _delete(jvm, fs, f"{path}/{_TABLE_MARKER}")
     finally:
         release_table_lock(spark, path)
 
@@ -732,23 +702,7 @@ def recover_table(spark: SparkSession, path: str) -> str:
     staging, backup = path + STAGING_SUFFIX, path + BACKUP_SUFFIX
     jvm, fs, _ = _hadoop(spark, path)
     actions: list[str] = []
-    # keep-mode (versioned commit): the displaced table is archived, not
-    # deleted. The marker is the only durable record of the writer's intent
-    # across the crash window — staging carries it pre-swap, the new live
-    # table carries it post-swap.
-    keep_mode = _exists(jvm, fs, f"{staging}/{_TABLE_KEEP_MARKER}") or _exists(
-        jvm, fs, f"{path}/{_TABLE_KEEP_MARKER}"
-    )
-    table_mode = _exists(jvm, fs, f"{staging}/{_TABLE_MARKER}") or _exists(
-        jvm, fs, f"{staging}/{_TABLE_KEEP_MARKER}"
-    )
-
-    def _dispose_backup() -> str:
-        if keep_mode:
-            _archive_backup(jvm, fs, path, backup)
-            return "archived backup as version"
-        _delete(jvm, fs, backup)
-        return "dropped backup"
+    table_mode = _exists(jvm, fs, f"{staging}/{_TABLE_MARKER}")
 
     if _exists(jvm, fs, staging) and not table_mode:
         # Crashed during (or just after) the staging write, before the mode
@@ -766,7 +720,8 @@ def recover_table(spark: SparkSession, path: str) -> str:
             else:
                 _delete(jvm, fs, staging)  # swap already finished
                 actions.append("dropped committed staging")
-            actions.append(_dispose_backup())
+            _delete(jvm, fs, backup)
+            actions.append("dropped backup")
         elif _exists(jvm, fs, path):
             # Crashed before `path -> backup`: commit never started.
             _delete(jvm, fs, staging)
@@ -777,118 +732,12 @@ def recover_table(spark: SparkSession, path: str) -> str:
             actions.append("rolled staging forward")
     elif _exists(jvm, fs, backup) and _exists(jvm, fs, path):
         # crash between final rename and backup disposal
-        actions.append(_dispose_backup())
+        _delete(jvm, fs, backup)
+        actions.append("dropped backup")
 
-    for m in (_TABLE_MARKER, _TABLE_KEEP_MARKER):
-        if _exists(jvm, fs, f"{path}/{m}"):
-            _delete(jvm, fs, f"{path}/{m}")
+    if _exists(jvm, fs, f"{path}/{_TABLE_MARKER}"):
+        _delete(jvm, fs, f"{path}/{_TABLE_MARKER}")
     return "; ".join(actions) or "clean"
-
-
-# --------------------------------------------------------------------------
-# Snapshot versions / time travel. Versioned commits (atomic_overwrite with
-# keep_versions > 0) archive each displaced table whole under
-# <path>.__versions__/v<k> via a single directory rename. Reference parity:
-# BigQuery time travel (`FOR SYSTEM_TIME AS OF`) which the reference's
-# MERGE targets enjoy implicitly. At 100 TB an archived version costs zero
-# data movement (rename) and storage equal to the snapshot it preserves —
-# the same bill Delta/Iceberg pay until VACUUM.
-# --------------------------------------------------------------------------
-
-
-def _versions_dir(path: str) -> str:
-    return path.rstrip("/") + VERSIONS_SUFFIX
-
-
-def _archive_backup(
-    jvm, fs, path: str, backup: str, prune_to: int | None = None
-) -> int:
-    """Move the displaced table (already renamed to ``backup``) into the
-    version archive as the next version. One rename; returns the version.
-
-    ``prune_to``: also drop archived versions beyond the newest
-    ``prune_to`` (the vacuum the versioned commit path runs anyway) —
-    reusing the listing this archival already fetched instead of
-    ``vacuum_table_versions``'s fresh one (two extra py4j round trips
-    per versioned commit)."""
-    vdir = _versions_dir(path)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(vdir))
-    nums = _version_numbers(jvm, fs, vdir)
-    k = max(nums, default=0) + 1
-    _rename(jvm, fs, backup, f"{vdir}/v{k:06d}")
-    if prune_to is not None and prune_to > 0:
-        for old in (nums + [k])[:-prune_to]:
-            _delete(jvm, fs, f"{vdir}/v{old:06d}")
-    return k
-
-
-def _version_numbers(jvm, fs, vdir: str) -> list[int]:
-    if not _exists(jvm, fs, vdir):
-        return []
-    out = []
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(vdir)):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v") and name[1:].isdigit():
-            out.append(int(name[1:]))
-    return sorted(out)
-
-
-def list_table_versions(spark: SparkSession, path: str) -> list[int]:
-    """Archived snapshot versions available for time travel, oldest first.
-    The live table is always newer than every listed version."""
-    jvm, fs, _ = _hadoop(spark, path)
-    return _version_numbers(jvm, fs, _versions_dir(path))
-
-
-def read_table_version(
-    spark: SparkSession, path: str, version: int | None = None
-) -> DataFrame:
-    """Time-travel read: the archived snapshot ``version`` (as listed by
-    ``list_table_versions``), or the live table when ``version`` is None.
-    Snapshots are plain parquet directories — full pushdown/pruning apply."""
-    if version is None:
-        return spark.read.parquet(path)
-    jvm, fs, _ = _hadoop(spark, path)
-    vpath = f"{_versions_dir(path)}/v{version:06d}"
-    if not _exists(jvm, fs, vpath):
-        raise FileNotFoundError(
-            f"no archived version {version} for {path}; have "
-            f"{_version_numbers(jvm, fs, _versions_dir(path))}"
-        )
-    return spark.read.parquet(vpath)
-
-
-def restore_table_version(
-    spark: SparkSession, path: str, version: int, keep_versions: int = 3
-) -> None:
-    """Roll the live table back to an archived snapshot — itself a
-    versioned commit, so the pre-restore live table is archived too and the
-    restore is undoable. The snapshot is read from the archive dir (not the
-    live path), so the staged write never races its own input."""
-    atomic_overwrite(
-        spark,
-        read_table_version(spark, path, version),
-        path,
-        keep_versions=keep_versions,
-    )
-
-
-def vacuum_table_versions(
-    spark: SparkSession, path: str, keep: int = 3
-) -> list[int]:
-    """Drop archived snapshots beyond the newest ``keep`` (storage
-    reclamation, Delta VACUUM's role). Returns the versions removed.
-    Deletion order is oldest-first so a crash mid-vacuum leaves a
-    contiguous newest-K suffix."""
-    jvm, fs, _ = _hadoop(spark, path)
-    vdir = _versions_dir(path)
-    nums = _version_numbers(jvm, fs, vdir)
-    doomed = nums[:-keep] if keep > 0 else nums
-    for k in doomed:
-        _delete(jvm, fs, f"{vdir}/v{k:06d}")
-    if not _version_numbers(jvm, fs, vdir) and _exists(jvm, fs, vdir):
-        _delete(jvm, fs, vdir)
-    return doomed
 
 
 def write_partitioned(

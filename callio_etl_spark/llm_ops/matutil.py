@@ -11,8 +11,9 @@ memory hog (VERDICT r14 item 4; guide §5: caching competes with
 execution memory).
 
 ``materialize`` keeps the r14 plan shape (one producing pass feeding a
-materialized table read k times) but picks the medium by the same
-Catalyst-estimate rule ``snapshots._distribute_for_write`` gates on:
+materialized table read k times) but picks the medium by the
+Catalyst-estimate rule ``snapshots._distribute_for_write`` gates on
+(``snapshots._plan_size_estimate``):
 
 - estimate unavailable (the defaultSizeInBytes sentinel band — local
   relations, RDD-backed frames, anything already checkpointed) or below
@@ -41,6 +42,8 @@ import tempfile
 
 from pyspark.sql import DataFrame
 
+from callio_etl_spark.snapshots import _parse_bytes_conf, _plan_size_estimate
+
 _SCRATCH_DIRS: list[str] = []
 
 
@@ -53,35 +56,12 @@ def _cleanup_scratch() -> None:  # pragma: no cover - atexit plumbing
 atexit.register(_cleanup_scratch)
 
 
-def _plan_size_estimate(df: DataFrame) -> int | None:
-    """Catalyst's optimizer size estimate, or None when the plan is
-    stats-less (the >= sentinel/8 band — the same rule as
-    snapshots._distribute_for_write, see the ADVICE r14 note there on
-    sentinel scaling through Project/Filter)."""
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        sentinel = int(
-            df.sparkSession.conf.get(
-                "spark.sql.defaultSizeInBytes", str(2**63 - 1)
-            )
-        )
-    except Exception:
-        return None
-    if est >= sentinel // 8:
-        return None
-    return est
-
-
 def materialize(df: DataFrame, label: str = "tbl") -> DataFrame:
     """Materialize a derived table once: localCheckpoint below the spill
     gate (or when the size is unknowable), parquet scratch above it."""
     est = _plan_size_estimate(df)
     spark = df.sparkSession
     try:
-        from callio_etl_spark.snapshots import _parse_bytes_conf
-
         advisory = _parse_bytes_conf(
             spark.conf.get(
                 "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864b"

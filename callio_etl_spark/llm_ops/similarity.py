@@ -2512,6 +2512,9 @@ def maintain_vector_index(
                 if idx_exists
                 else []
             )
+            # fence AT this chain's publish: the delta assignment and the
+            # carry above are where a stall can outlast the stale window
+            assert_service_fencing(spark, index_path)
             if cells_with_rows:
                 snapshot_partition_overwrite(
                     spark, out, index_path, "assigned_cell",
@@ -2561,6 +2564,7 @@ def maintain_vector_index(
                 if fwd_exists
                 else []
             )
+            assert_service_fencing(spark, index_path)
             if bkts_with_rows:
                 snapshot_partition_overwrite(
                     spark, fout, fwd_path, "bkt",
@@ -2570,19 +2574,19 @@ def maintain_vector_index(
             elif fwd_retire:
                 _retire_only(fwd_path, fwd_retire)
 
-        # fence AT the commit point (not just batch entry): the delta
-        # assignment above is where a stall can outlast the stale window.
         # The postings and forward-map chains are INDEPENDENT given fresh
         # + changed_ids (both localCheckpointed): each builds its carry
         # from ITS table's immutable published head and commits to ITS
         # manifest, so they run concurrently (guide §2.6 — overlap
         # independent jobs; the two ~1 s commit jobs were strictly
-        # serial before, r15). Crash semantics are unchanged: the cursor
-        # acks only after BOTH commits return, so a crash leaving either
-        # table (or both) behind replays the batch — same at-least-once
-        # window as the old postings-then-fwd order; each publish still
-        # passes the manifest-level fencing in _write_manifest.
-        assert_service_fencing(spark, index_path)
+        # serial before, r15). Each chain fences the service lock right
+        # before its own publish, so a stall inside a chain cannot
+        # publish under a reclaimed lock. Crash semantics are unchanged:
+        # the cursor acks only after BOTH commits return, so a crash or
+        # a fenced-out chain leaving either table (or both) behind
+        # replays the batch — same at-least-once window as the old
+        # postings-then-fwd order; each publish still passes the
+        # manifest-level fencing in _write_manifest.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
@@ -2684,13 +2688,13 @@ def rebuild_vector_index(
                 r["assigned_cell"]
                 for r in fresh.select("assigned_cell").distinct().collect()
             }
+            retire = _retire(index_path, "assigned_cell", cells_present) or None
+            # fence AT this chain's publish (see maintain_vector_index)
+            assert_service_fencing(spark, index_path)
             snapshot_partition_overwrite(
                 spark, fresh, index_path, "assigned_cell",
                 keep_snapshots=keep_snapshots,
-                retire_leaves=_retire(
-                    index_path, "assigned_cell", cells_present
-                )
-                or None,
+                retire_leaves=retire,
                 properties={"ivf.quantizer_md5": fp},
             )
 
@@ -2702,17 +2706,18 @@ def rebuild_vector_index(
             bkts_present = {
                 r["bkt"] for r in fwd.select("bkt").distinct().collect()
             }
+            retire = _retire(fwd_path, "bkt", bkts_present) or None
+            assert_service_fencing(spark, index_path)
             snapshot_partition_overwrite(
                 spark, fwd, fwd_path, "bkt", keep_snapshots=keep_snapshots,
-                retire_leaves=_retire(fwd_path, "bkt", bkts_present) or None,
+                retire_leaves=retire,
             )
 
-        # one commit-point fence, then the two tables' chains run
-        # concurrently — independent given the checkpointed fresh, same
-        # crash semantics as the serial order (cursor acks only after
-        # both), each publish still fenced in _write_manifest (see
+        # the two tables' chains run concurrently, each fenced right
+        # before its publish — independent given the checkpointed fresh,
+        # same crash semantics as the serial order (cursor acks only
+        # after both), each publish still fenced in _write_manifest (see
         # maintain_vector_index for the full argument)
-        assert_service_fencing(spark, index_path)
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:

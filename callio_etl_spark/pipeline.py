@@ -239,21 +239,21 @@ def snapshot_truncate(
     df: DataFrame,
     path: str,
     tenant: str = "ALL",
-    keep_versions: int = 0,
+    keep_snapshots: int = 1,
 ) -> int:
     """TRUNCATE — the reference's group-snapshot shape (runner.py:405-413):
     the dimension is small and ownership-free, so each snapshot replaces
-    the whole table (S9, atomic swap) and audits the replaced row count
-    under the ALL pseudo-tenant; no checkpoint (snapshots are not
-    incremental). ``keep_versions`` archives the displaced snapshots for
-    rollback, same knob as every other versioned sink. Returns the
-    loaded row count."""
-    from callio_etl_spark.io import atomic_overwrite
+    the whole table (S9, one ``snapshot_overwrite`` commit) and audits the
+    replaced row count under the ALL pseudo-tenant; no checkpoint
+    (snapshots are not incremental). ``keep_snapshots`` bounds the
+    table's retained history for rollback, the same knob as every other
+    snapshot table. Returns the loaded row count."""
+    from callio_etl_spark.snapshots import snapshot_overwrite
 
-    df = df.persist()  # count + atomic swap read the same rows
+    df = df.persist()  # count + staged write read the same rows
     try:
         n = df.count()
-        atomic_overwrite(spark, df, path, keep_versions=keep_versions)
+        snapshot_overwrite(spark, df, path, keep_snapshots=keep_snapshots)
         store.log(table, tenant, n, None, "TRUNCATE")
         return n
     finally:

@@ -178,32 +178,34 @@ SELECT CAST((SELECT COUNT(*) FROM g1) AS BIGINT)          AS n_live,
 )
 def sink_versioned_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-versioning roundtrip (BigQuery time-travel parity, which
-    the reference's MERGE targets get implicitly): commit generation 1,
-    overwrite with generation 2 under keep_versions, time-travel-read the
-    archived gen-1, RESTORE it as the live table (archiving gen-2), then
-    aggregate the post-restore live table and the archived gen-2 snapshot.
-    The oracle recomputes both generations from the source — a restore
-    that reads the wrong snapshot, loses the displaced table, or leaves a
-    torn directory breaks the hash."""
-    from callio_etl_spark.io import (
-        atomic_overwrite,
-        list_table_versions,
-        read_table_version,
-        restore_table_version,
+    the reference's MERGE targets get implicitly): commit generation 1
+    and generation 2 as whole-table snapshots, RESTORE v1 as the live
+    table (a new version; gen-2 stays retained), then aggregate the
+    post-restore live table and the time-travel read of gen-2. The
+    oracle recomputes both generations from the source — a restore that
+    reads the wrong snapshot, loses the displaced version, or leaves a
+    torn table breaks the hash."""
+    from callio_etl_spark.snapshots import (
+        snapshot_overwrite,
+        snapshot_read,
+        snapshot_restore,
+        snapshot_versions,
     )
 
     root = _tmp("versioned")
     path = f"{root}/orders_v"
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    atomic_overwrite(
-        spark, o.where(F.col("o_orderkey") % 5 == 0), path, keep_versions=2
+    snapshot_overwrite(
+        spark, o.where(F.col("o_orderkey") % 5 == 0), path, keep_snapshots=3
     )
-    atomic_overwrite(
-        spark, o.where(F.col("o_orderkey") % 5 <= 1), path, keep_versions=2
+    snapshot_overwrite(
+        spark, o.where(F.col("o_orderkey") % 5 <= 1), path, keep_snapshots=3
     )
-    restore_table_version(spark, path, 1, keep_versions=2)  # back to gen 1
-    live = spark.read.parquet(path)
-    archived = read_table_version(spark, path, list_table_versions(spark, path)[-1])
+    snapshot_restore(spark, path, 1, keep_snapshots=3)  # back to gen 1
+    live = snapshot_read(spark, path)
+    archived = snapshot_read(
+        spark, path, version=snapshot_versions(spark, path)[-2]
+    )
     result = live.agg(
         F.count("*").cast("long").alias("n_live"),
         F.sum("o_orderkey").alias("key_sum_live"),
@@ -242,15 +244,15 @@ FROM d GROUP BY change
     tags=["sink", "versioning", "cdc"],
 )
 def sink_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot CDC: commit generation 1 under versioning, overwrite with a
-    generation that adds, removes, and mutates rows, then DIFF THE LIVE
-    TABLE AGAINST ITS ARCHIVED SNAPSHOT (full outer on the key,
+    """Snapshot CDC: commit generation 1 as a whole-table snapshot,
+    overwrite with a generation that adds, removes, and mutates rows, then
+    DIFF THE LIVE TABLE AGAINST ITS PREVIOUS VERSION (full outer on the key,
     added/removed/changed/same classification) — the audit query time
     travel exists for ('what changed since yesterday's commit?'), the
     same shape BigQuery users run against FOR SYSTEM_TIME AS OF. The
     oracle recomputes both generations from source; a restore that reads
     the wrong snapshot or a diff that misclassifies breaks the hash."""
-    from callio_etl_spark.io import atomic_overwrite, read_table_version
+    from callio_etl_spark.snapshots import snapshot_overwrite, snapshot_read
 
     root = _tmp("vdiff")
     path = f"{root}/orders_d"
@@ -264,12 +266,12 @@ def sink_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("o_totalprice"))
         .alias("p"),
     )
-    atomic_overwrite(spark, g1, path, keep_versions=1)
-    atomic_overwrite(spark, g2, path, keep_versions=1)
-    live = spark.read.parquet(path).select(
+    snapshot_overwrite(spark, g1, path, keep_snapshots=2)
+    snapshot_overwrite(spark, g2, path, keep_snapshots=2)
+    live = snapshot_read(spark, path).select(
         F.col("k").alias("lk"), F.col("p").alias("lp")
     )
-    snap = read_table_version(spark, path, 1).select(
+    snap = snapshot_read(spark, path, version=1).select(
         F.col("k").alias("sk"), F.col("p").alias("sp")
     )
     d = live.join(snap, F.col("lk") == F.col("sk"), "full_outer").select(
@@ -309,25 +311,23 @@ def sink_compact_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table-maintenance roundtrip — the OPTIMIZE + VACUUM pair every
     incremental lakehouse table needs on a schedule: write a partitioned
     snapshot table fragmented into many small files, compact ONE
-    partition to a single file (siblings carry over), and prune a
-    versioned table's archive down to the newest snapshot. The aggregate
+    partition to a single file (siblings carry over), and vacuum a
+    whole-table snapshot's history down to one older version. The aggregate
     re-reads the post-compaction table, so lost/duplicated rows, a
     clobbered sibling partition, or a vacuum that deleted the live
     snapshot all break the hash; the file and version counts are
     measured (not assumed) and compared against the deterministic
     expectation as literals."""
-    from callio_etl_spark.io import (
-        _hadoop,
-        atomic_overwrite,
-        list_table_versions,
-        vacuum_table_versions,
-    )
+    from callio_etl_spark.io import _hadoop
     from callio_etl_spark.snapshots import (
         _leaf_toks,
         snapshot_compact_partition,
         snapshot_manifest,
+        snapshot_overwrite,
         snapshot_partition_overwrite,
         snapshot_read,
+        snapshot_vacuum,
+        snapshot_versions,
     )
 
     root = _tmp("compact")
@@ -336,7 +336,7 @@ def sink_compact_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderpriority"
     )
     # the filtered input feeds FOUR sink actions (the fragmented write +
-    # three versioned generations) — pin it once instead of re-scanning
+    # three whole-table generations) — pin it once instead of re-scanning
     # the orders parquet per action, the same move a user scheduling this
     # maintenance would make; the sinks' own staged-write work is
     # unchanged
@@ -376,15 +376,17 @@ def sink_compact_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vpath = f"{root}/orders_vac"
     base = s.select("o_orderkey", "o_custkey")
-    for gen_mod in (0, 1, 2):  # three generations under keep_versions=3
-        atomic_overwrite(
+    for gen_mod in (0, 1, 2):  # three generations, all retained
+        snapshot_overwrite(
             spark,
             base.where(F.col("o_custkey") % 3 <= gen_mod),
             vpath,
-            keep_versions=3,
+            keep_snapshots=3,
         )
-    removed = vacuum_table_versions(spark, vpath, keep=1)
-    versions_after = len(list_table_versions(spark, vpath))
+    # keep the live version and one older: v1 goes
+    removed = snapshot_vacuum(spark, vpath, keep_snapshots=2)
+    # older versions still retained besides the live one
+    versions_after = len(snapshot_versions(spark, vpath)) - 1
     s.unpersist()
 
     live = snapshot_read(spark, path)

@@ -1,7 +1,8 @@
-"""Snapshot-isolated partitioned tables — the engine's one format for
-partitioned tables, the manifest-committed layout that gives a reader
-scanning MID-COMMIT the whole old or the whole new table, never a mix of
-partitions (the reference's MERGE is BigQuery-atomic,
+"""Snapshot-isolated tables — the engine's one format for versioned
+tables (partitioned ones, and whole tables stored under one reserved
+constant leaf by ``snapshot_overwrite``), the manifest-committed layout
+that gives a reader scanning MID-COMMIT the whole old or the whole new
+table, never a mix of partitions (the reference's MERGE is BigQuery-atomic,
 `callio_etl/runner.py:163-199`). This is the Iceberg/Delta commit idea
 reduced to its plain-filesystem core:
 
@@ -83,6 +84,10 @@ _TAG_PREFIX = "tag_"  # tag_<name>.json — one file per tag (atomic create)
 #: later commit can reuse it: a reader/auditor still pinned to that
 #: version must error, never silently read an unrelated commit's rows.
 _TOMBSTONE_PREFIX = "x"
+#: The reserved constant partition column of a WHOLE table
+#: (``snapshot_overwrite``): its one leaf holds the whole table, and
+#: ``snapshot_read`` drops the column again.
+WHOLE_TABLE_COL = "__table__"
 
 
 def _snap_dir(path: str) -> str:
@@ -808,6 +813,8 @@ def snapshot_read(
     PartitionFilters pruning identical to a plain partitioned read. A
     commit racing this read cannot change what it sees: the resolved dirs
     are immutable and stay on disk for ``keep_snapshots`` more commits.
+    A whole table (``snapshot_overwrite``) reads without its reserved
+    ``WHOLE_TABLE_COL``.
 
     ``between=(col, lo, hi)`` prunes by the manifest's per-partition
     [min, max] stats for a NON-partition column (recorded by commits
@@ -888,6 +895,11 @@ def snapshot_read(
         )
         want_leaves = [f"{point[0]}={esc(str(v))}" for v in vals]
     m = snapshot_manifest(spark, path, version, tag=tag, leaves=want_leaves)
+    if m["partition_col"] == WHOLE_TABLE_COL:
+        # the constant leaf column is storage layout, not table data
+        return _read_single_spec(spark, path, m, between, point).drop(
+            WHOLE_TABLE_COL
+        )
     prefixes = {leaf.split("=", 1)[0] for leaf in m["partitions"]}
     if len(prefixes) > 1:
         from functools import reduce
@@ -1894,6 +1906,31 @@ def _parse_bytes_conf(raw: str) -> int:
     return int(num) * units.get(suffix, 1)
 
 
+def _plan_size_estimate(df: DataFrame) -> int | None:
+    """Catalyst's optimizer size estimate for ``df`` in bytes, or None
+    when the plan has none. Catalyst reports UNKNOWN size as the
+    defaultSizeInBytes sentinel (Long.MaxValue unless overridden) for
+    local relations, RDD-backed frames and some join products. That is
+    "no estimate", not "huge". The optimizer also SCALES leaf sizes
+    through Project/Filter (a projection over a stats-less leaf reports
+    sentinel * ratio, strictly below the sentinel), so an exact equality
+    test would leak those frames through as huge (ADVICE r14): anything
+    within a factor of 8 of the sentinel counts as stats-less too. The
+    one rule for the write-distribution gate (``_distribute_for_write``)
+    and the materialization gate (``llm_ops.matutil.materialize``)."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+    try:
+        sentinel = int(
+            df.sparkSession.conf.get("spark.sql.defaultSizeInBytes", str(2**63 - 1))
+        )
+    except Exception:
+        sentinel = 2**63 - 1
+    return None if est >= sentinel // 8 else est
+
+
 def _distribute_for_write(
     df: DataFrame,
     partition_col: str | None,
@@ -1925,14 +1962,11 @@ def _distribute_for_write(
     core-count constant: fixture-scale commits skip the exchange and
     keep bench parity, while any production-scale frame crosses the
     threshold and gets Iceberg-hash file sizing. Catalyst over-estimates
-    (e.g. join products) fire the rebalance early, which is safe —
-    EXCEPT estimates at or above sentinel/8, which are indistinguishable
-    from a stats-less leaf scaled through a Project/Filter (Catalyst
-    multiplies the defaultSizeInBytes sentinel by selectivity ratios,
-    so "no estimate" frames can report any value in that band) and are
-    treated as "no estimate": the plain write. A genuine >=2^60-byte
-    single-frame estimate keeping the plain write is acceptable — at
-    that size the writer's task count already fans the leaf out.
+    (e.g. join products) fire the rebalance early, which is safe; a
+    frame with no estimate (``_plan_size_estimate``: the sentinel/8
+    band) keeps the plain write. A genuine >=2^60-byte single-frame
+    estimate keeping the plain write is acceptable — at that size the
+    writer's task count already fans the leaf out.
 
     Production knob: ``spark.callio.write.distribution`` — ``rebalance``
     (default, Iceberg's hash mode, size-gated), ``always`` (ungated, for
@@ -1953,38 +1987,18 @@ def _distribute_for_write(
     if mode not in ("rebalance", "always"):
         return df
     if mode == "rebalance":
+        # no estimate -> keep the plain write (see _plan_size_estimate)
+        est = _plan_size_estimate(df)
+        if est is None:
+            return df
         try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            raw = df.sparkSession.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864b"
-            )
-            advisory = _parse_bytes_conf(raw)
-        except Exception:
-            est, advisory = 0, 1  # estimate unavailable: keep the plain write
-        # Catalyst reports UNKNOWN size as the defaultSizeInBytes sentinel
-        # (Long.MaxValue unless overridden) for local relations, RDD-backed
-        # frames and some join products. That is "no estimate", not "huge":
-        # firing the rebalance on it re-pays the fixed exchange this gate
-        # exists to skip on every tiny stats-less commit. The optimizer
-        # additionally SCALES leaf sizes through Project/Filter (a
-        # projection over a stats-less leaf reports sentinel * ratio,
-        # strictly below the sentinel), so an exact equality test leaks
-        # those frames through as "huge" (ADVICE r14): anything within a
-        # factor of 8 of the sentinel is treated as stats-less too. Same
-        # policy as the except-branch: no estimate -> keep the plain
-        # write.
-        try:
-            sentinel = int(
+            advisory = _parse_bytes_conf(
                 df.sparkSession.conf.get(
-                    "spark.sql.defaultSizeInBytes", str(2**63 - 1)
+                    "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864b"
                 )
             )
         except Exception:
-            sentinel = 2**63 - 1
-        if est >= sentinel // 8:
-            return df
+            return df  # advisory size unavailable: keep the plain write
         if est < advisory:
             return df
     if partition_col:
@@ -2411,6 +2425,54 @@ def snapshot_partition_overwrite(
         if audit:
             changes.update(staged=True, parent=prev["version"] if prev else 0)
         return changes, set(staged) | set(retire_leaves or [])
+
+    return _commit(spark, path, keep_snapshots, build)
+
+
+def snapshot_overwrite(
+    spark: SparkSession, df: DataFrame, path: str, keep_snapshots: int = 2
+) -> int:
+    """Replace the WHOLE table with ``df`` in one snapshot commit — the
+    form of the table format for unpartitioned outputs that are rebuilt
+    whole (report facts, dimensions, curated corpora). ``df`` is staged
+    under one constant leaf of the reserved ``WHOLE_TABLE_COL``, which
+    ``snapshot_read`` drops, so readers see exactly ``df``'s columns
+    while restore, ``version=``/``tag=`` reads and vacuum work as on
+    any snapshot table. Nothing carries over from the head's data or
+    schema: an empty ``df`` publishes an empty table (the old leaf is
+    retired in the same commit). Safe when ``df`` reads from the table,
+    whose files are immutable. Returns the committed version."""
+    path = path.rstrip("/")
+    if keep_snapshots < 1:
+        raise ValueError("keep_snapshots must be >= 1 (the live snapshot)")
+    if WHOLE_TABLE_COL in df.columns:
+        raise ValueError(f"column {WHOLE_TABLE_COL!r} is reserved")
+    out = df.withColumn(WHOLE_TABLE_COL, F.lit("all"))
+    # no column to rebalance on: one leaf, sized by the plain rebalance
+    wstaging = _stage(_distribute_for_write(out, None), path, WHOLE_TABLE_COL)
+    schema_json = json.loads(out.schema.json())
+    jvm, fs, _ = _hadoop(spark, path)
+
+    def build(prev, version):
+        if prev and prev["partition_col"] != WHOLE_TABLE_COL:
+            raise ValueError(
+                f"table {path} is partitioned by {prev['partition_col']!r}; "
+                "snapshot_overwrite replaces whole tables only"
+            )
+        token = _token(version)
+        maps = _leaf_maps(None)
+        staged = _land(jvm, fs, wstaging, path, WHOLE_TABLE_COL, token)
+        for leaf in staged:
+            maps["partitions"][leaf] = token
+        changes = {
+            "op": "overwrite",
+            "partition_col": WHOLE_TABLE_COL,
+            **maps,
+            "schema": schema_json,
+            "bloom": None,
+            "bucket_spec": None,
+        }
+        return changes, set(staged) | set((prev or {}).get("partitions", {}))
 
     return _commit(spark, path, keep_snapshots, build)
 
@@ -2855,10 +2917,10 @@ def _vacuum_snapshots(
     keep_snapshots: int,
     sweep_leaves=None,
     full_sweep: bool = False,
-) -> None:
+) -> list[int]:
     """Under the commit lock: drop manifests beyond the newest
     ``keep_snapshots`` and reclaim the data dirs no retained manifest
-    references. The reclaim sweep is SCOPED to the leaves that can
+    references; returns the dropped versions, oldest first. The reclaim sweep is SCOPED to the leaves that can
     actually hold newly-dead dirs — the leaves where a dropped
     manifest's tokens are not all still referenced by a kept one
     (``_newly_dead_leaves``: at steady state, exactly the leaves the
@@ -2946,6 +3008,7 @@ def _vacuum_snapshots(
                 fs.delete(st.getPath(), True)
         if not fs.listStatus(leaf_path):
             fs.delete(leaf_path, True)
+    return dropped
 
 
 def snapshot_remove_orphans(
@@ -2972,6 +3035,23 @@ def snapshot_remove_orphans(
         _vacuum_snapshots(
             spark, jvm, fs, path, keep_snapshots, full_sweep=True
         )
+
+
+def snapshot_vacuum(
+    spark: SparkSession, path: str, keep_snapshots: int
+) -> list[int]:
+    """VACUUM on demand: drop published versions beyond the newest
+    ``keep_snapshots`` (tagged and staged ones stay pinned) and the data
+    dirs only they referenced — the same sweep every commit runs, for a
+    table whose retention is being tightened. Returns the dropped
+    versions, oldest first."""
+    path = path.rstrip("/")
+    if keep_snapshots < 1:
+        raise ValueError("keep_snapshots must be >= 1 (the live snapshot)")
+    with _table_locked(spark, path) as (jvm, fs):
+        if not _manifest_versions(jvm, fs, path):
+            raise FileNotFoundError(f"no committed snapshot at {path}")
+        return _vacuum_snapshots(spark, jvm, fs, path, keep_snapshots)
 
 
 def snapshot_compact_partition(
@@ -3198,10 +3278,22 @@ def snapshot_changes(
     # reference is ambiguous
     join_keys = list(dict.fromkeys([col, *keys]))
     o = old.select(
-        *[F.col(c).alias(f"__old_{c}") if c in data_cols else F.col(c) for c in old.columns]
+        *[F.col(c).alias(f"__old_{c}") for c in old.columns]
     ).withColumn("__in_old", F.lit(1))
     n = new.withColumn("__in_new", F.lit(1))
-    j = n.join(o, join_keys, "full_outer")
+    # NULL-safe on every join key: a row in the NULL partition
+    # (__HIVE_DEFAULT_PARTITION__) or with a NULL key is the same row on
+    # both sides, not a delete plus an insert. The select restores the
+    # columns an equi-join USING the keys would give.
+    match = F.lit(True)
+    for c in join_keys:
+        match = match & F.col(c).eqNullSafe(F.col(f"__old_{c}"))
+    j = n.join(o, match, "full_outer").select(
+        *[F.coalesce(c, f"__old_{c}").alias(c) for c in join_keys],
+        *[c for c in n.columns if c not in join_keys],
+        *[f"__old_{c}" for c in old.columns if c not in join_keys],
+        "__in_old",
+    )
     differs = F.lit(False)
     for c in data_cols:
         differs = differs | ~(
@@ -3463,7 +3555,6 @@ def maintain_join_view(
     sum_cols: list[str],
     prep_fact=None,
     prep_dim=None,
-    keep_versions: int = 0,
 ) -> tuple[int, int]:
     """Keep a materialized FACT ⋈ DIM aggregate view current with BOTH
     source snapshot tables (the join-view analog of
@@ -3541,7 +3632,6 @@ def maintain_join_view(
             "_dim_version", F.lit(live_d)
         ),
         view_path,
-        keep_versions=keep_versions,
     )
     return live_f, live_d
 
@@ -3554,7 +3644,6 @@ def maintain_agg_view(
     group_cols: list[str],
     sum_cols: list[str],
     prep=None,
-    keep_versions: int = 0,
 ) -> int:
     """Keep a materialized aggregate view current with the snapshot table
     at ``src_path``: on every call, advance the view stored at
@@ -3626,10 +3715,7 @@ def maintain_agg_view(
     else:
         out = full()
     atomic_overwrite(
-        spark,
-        out.withColumn("_src_version", F.lit(live)),
-        view_path,
-        keep_versions=keep_versions,
+        spark, out.withColumn("_src_version", F.lit(live)), view_path
     )
     return live
 

@@ -426,213 +426,6 @@ def test_salted_join_balances_hot_key_across_tasks(spark):
                 spark.conf.set(k, v)
 
 
-def test_versioned_overwrite_time_travel_and_restore(spark, tmp_path):
-    """Versioned commits archive each displaced table as a readable
-    snapshot: after three generations, both priors time-travel back
-    bit-identically, and restore_table_version rolls the live table back
-    while archiving the pre-restore state (restore is undoable)."""
-    import callio_etl_spark.io as io
-
-    p = str(tmp_path / "vt")
-    gen = lambda k: {(i, i * k) for i in range(5)}
-    df = lambda k: spark.createDataFrame(sorted(gen(k)), "id long, v long")
-
-    io.atomic_overwrite(spark, df(1), p, keep_versions=3)
-    assert io.list_table_versions(spark, p) == []  # first write: no prior
-    io.atomic_overwrite(spark, df(2), p, keep_versions=3)
-    io.atomic_overwrite(spark, df(3), p, keep_versions=3)
-    assert io.list_table_versions(spark, p) == [1, 2]
-
-    read = lambda ver: {
-        (r["id"], r["v"])
-        for r in io.read_table_version(spark, p, ver).collect()
-    }
-    assert read(None) == gen(3)
-    assert read(1) == gen(1)
-    assert read(2) == gen(2)
-
-    io.restore_table_version(spark, p, 1, keep_versions=3)
-    assert read(None) == gen(1)
-    # pre-restore live table (gen 3) was archived as version 3
-    assert io.list_table_versions(spark, p) == [1, 2, 3]
-    assert read(3) == gen(3)
-
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        io.read_table_version(spark, p, 99)
-
-
-def test_versioned_overwrite_vacuum_prunes_oldest(spark, tmp_path):
-    """keep_versions bounds the archive: the newest K snapshots survive as
-    a contiguous suffix, older ones are vacuumed by the next commit."""
-    import callio_etl_spark.io as io
-
-    p = str(tmp_path / "vv")
-    for k in range(1, 6):
-        df = spark.createDataFrame([(i, i * k) for i in range(3)], "id long, v long")
-        io.atomic_overwrite(spark, df, p, keep_versions=2)
-    # 5 commits -> 4 displaced tables; only the newest 2 remain
-    assert io.list_table_versions(spark, p) == [3, 4]
-    removed = io.vacuum_table_versions(spark, p, keep=1)
-    assert removed == [3]
-    assert io.list_table_versions(spark, p) == [4]
-
-
-def test_versioned_overwrite_crash_sweep_never_loses_snapshot(
-    spark, tmp_path
-):
-    """Crash-point sweep for the VERSIONED commit: abort at the Nth fs
-    mutation, recover, and require (a) the live table reads complete-old
-    or complete-new, and (b) whenever the new table is live, the displaced
-    old table is present in the version archive — a crash can never both
-    commit the replacement and lose the snapshot it displaced."""
-    import itertools
-
-    import callio_etl_spark.io as io
-
-    old_rows = {(i, i * 2) for i in range(8)}
-    new_rows = {(i, i * 3) for i in range(4)}
-    real = {"rename": io._rename, "delete": io._delete, "touch": io._touch}
-
-    for crash_at in itertools.count(1):
-        p = str(tmp_path / f"vc{crash_at}")
-        spark.createDataFrame(sorted(old_rows), "id long, v long").write.parquet(p)
-        new_df = spark.createDataFrame(sorted(new_rows), "id long, v long")
-
-        calls = {"n": 0}
-
-        def make_boom(fn):
-            def wrapped(*args, **kw):
-                calls["n"] += 1
-                if calls["n"] == crash_at:
-                    raise RuntimeError(f"crash at fs-op {crash_at}")
-                return fn(*args, **kw)
-
-            return wrapped
-
-        for name, fn in real.items():
-            setattr(io, f"_{name}", make_boom(fn))
-        try:
-            io.atomic_overwrite(spark, new_df, p, keep_versions=3)
-            crashed = False
-        except RuntimeError:
-            crashed = True
-        finally:
-            for name, fn in real.items():
-                setattr(io, f"_{name}", fn)
-
-        io.recover_table(spark, p)
-        got = {(r["id"], r["v"]) for r in spark.read.parquet(p).collect()}
-        assert got in (old_rows, new_rows), (
-            f"crash at op {crash_at}: torn table {got}"
-        )
-        if got == new_rows:
-            vers = io.list_table_versions(spark, p)
-            assert vers, f"crash at op {crash_at}: committed but snapshot lost"
-            archived = {
-                (r["id"], r["v"])
-                for r in io.read_table_version(spark, p, vers[-1]).collect()
-            }
-            assert archived == old_rows
-        assert not os.path.exists(p + ".__staging__")
-        assert not os.path.exists(p + ".__backup__")
-        if not crashed:
-            assert got == new_rows
-            break
-
-
-def test_restore_with_minimal_retention(spark, tmp_path):
-    """restore_table_version with keep_versions=1: the restore reads the
-    snapshot from the archive BEFORE the commit prunes it, so rolling back
-    works even when retention immediately evicts the source version."""
-    import callio_etl_spark.io as io
-
-    p = str(tmp_path / "vr")
-    gen = lambda k: {(i, i * k) for i in range(4)}
-    for k in (1, 2):
-        io.atomic_overwrite(
-            spark,
-            spark.createDataFrame(sorted(gen(k)), "id long, v long"),
-            p,
-            keep_versions=1,
-        )
-    assert io.list_table_versions(spark, p) == [1]
-    io.restore_table_version(spark, p, 1, keep_versions=1)
-    got = {(r["id"], r["v"]) for r in spark.read.parquet(p).collect()}
-    assert got == gen(1)
-    # retention kept only the newest snapshot (the displaced gen-2 table)
-    vers = io.list_table_versions(spark, p)
-    assert len(vers) == 1
-    archived = {
-        (r["id"], r["v"])
-        for r in io.read_table_version(spark, p, vers[0]).collect()
-    }
-    assert archived == gen(2)
-
-
-def test_versioning_model_based_random_sequences(spark, tmp_path):
-    """Model-based check of the versioned table lifecycle: drive random
-    sequences of commit / restore / vacuum against a pure-Python model of
-    (live generation, archived generation list) and require the real
-    table to agree after every step — the whole-subsystem invariant the
-    single-scenario tests can't sweep."""
-    import random
-
-    import callio_etl_spark.io as io
-
-    KEEP = 3
-
-    def df_for(gen):
-        return spark.createDataFrame(
-            [(i, gen) for i in range(3)], "id long, gen long"
-        )
-
-    def live_gen(p):
-        rows = spark.read.parquet(p).collect()
-        gens = {r["gen"] for r in rows}
-        assert len(gens) == 1, f"torn table: {gens}"
-        return gens.pop()
-
-    for seed in (7, 23, 99):
-        rng = random.Random(seed)
-        p = str(tmp_path / f"model{seed}")
-        # model state: live generation + dict version-number -> generation
-        next_gen = 1
-        io.atomic_overwrite(spark, df_for(next_gen), p, keep_versions=KEEP)
-        live, archive, next_v = next_gen, {}, 1
-        for _ in range(12):
-            op = rng.choice(["commit", "commit", "restore", "vacuum"])
-            if op == "commit":
-                next_gen += 1
-                io.atomic_overwrite(spark, df_for(next_gen), p, keep_versions=KEEP)
-                archive[next_v] = live
-                next_v += 1
-                live = next_gen
-                for v in sorted(archive)[:-KEEP]:
-                    del archive[v]
-            elif op == "restore" and archive:
-                v = rng.choice(sorted(archive))
-                io.restore_table_version(spark, p, v, keep_versions=KEEP)
-                target = archive[v]
-                archive[next_v] = live
-                next_v += 1
-                live = target
-                for w in sorted(archive)[:-KEEP]:
-                    del archive[w]
-            elif op == "vacuum":
-                k = rng.randint(1, KEEP)
-                io.vacuum_table_versions(spark, p, keep=k)
-                for w in sorted(archive)[:-k]:
-                    del archive[w]
-            # real state must equal the model after every operation
-            assert live_gen(p) == live
-            assert io.list_table_versions(spark, p) == sorted(archive)
-            for v, gen in archive.items():
-                got = {r["gen"] for r in io.read_table_version(spark, p, v).collect()}
-                assert got == {gen}, (v, gen, got)
-
-
 def test_concurrent_atomic_overwrites_no_torn_table(spark, tmp_path):
     """Two writers racing interleaved atomic_overwrites on one table: after
     every round the table must read as EXACTLY one writer's complete
@@ -1203,10 +996,9 @@ def test_service_fencing_blocks_a_reclaimed_maintainer(spark, tmp_path):
 def test_recover_needed_gate_matches_recovery_conditions(spark, tmp_path):
     """r13 commit fast path: `_recover_needed` must be False exactly when
     recover_table is a no-op (clean table), and True for each survivable
-    crash artifact — a protocol sibling beside the table or a mode
+    crash artifact — a protocol sibling beside the table or the mode
     marker inside it (crash between the final rename and marker delete)."""
     from callio_etl_spark.io import (
-        _TABLE_KEEP_MARKER,
         _TABLE_MARKER,
         _hadoop,
         _list_siblings,
@@ -1230,11 +1022,10 @@ def test_recover_needed_gate_matches_recovery_conditions(spark, tmp_path):
     assert probe() is False, "clean table flagged for recovery"
 
     # marker inside the live table (crash after swap, before marker delete)
-    for marker in (_TABLE_MARKER, _TABLE_KEEP_MARKER):
-        _touch(jvm, fs, f"{path}/{marker}")
-        assert probe() is True, f"{marker} not detected"
-        recover_table(spark, path)  # sweeps the stray marker
-        assert probe() is False
+    _touch(jvm, fs, f"{path}/{_TABLE_MARKER}")
+    assert probe() is True, f"{_TABLE_MARKER} not detected"
+    recover_table(spark, path)  # sweeps the stray marker
+    assert probe() is False
 
     # protocol sibling beside the table (crashed writer's staged commit)
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(path + ".__staging__"))

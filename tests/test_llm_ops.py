@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from callio_etl_spark.llm_ops.multimodal import (
     decode_image_stub,
@@ -2557,3 +2558,67 @@ def test_materialize_size_gate_both_arms(spark, tmp_path):
     finally:
         spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
         spark.conf.unset("spark.callio.materialize.spillFactor")
+
+
+@pytest.mark.parametrize(
+    "verb, chain",
+    [("maintain", "_fwd_chain"), ("rebuild", "_postings_chain")],
+)
+def test_vector_index_chain_fences_its_own_publish(
+    spark, tmp_path, monkeypatch, verb, chain
+):
+    """The postings and forward-map commit chains run concurrently, so
+    each one fences the service lock right before its own publish: a
+    holder that stalls inside a chain and lost the lock must not
+    publish there. The fence is made to fail inside one chain only;
+    that chain's table gains no manifest and the consumer cursor is not
+    acknowledged (the batch replays under the next owner)."""
+    import sys
+
+    from callio_etl_spark import io as cio
+    from callio_etl_spark import snapshots as snap
+    from callio_etl_spark.llm_ops.similarity import (
+        maintain_vector_index,
+        rebuild_vector_index,
+    )
+
+    vp = str(tmp_path / "vecs")
+    ip, fwd = str(tmp_path / "idx"), str(tmp_path / "fwd")
+    cursor = str(tmp_path / "cursor.json")
+    schema = "vec_id long, embedding array<double>, p string"
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 2)], str(i % 2)) for i in range(12)],
+        schema,
+    )
+    cells = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
+        "label int, cv array<double>",
+    )
+    snap.snapshot_partition_overwrite(spark, vecs, vp, "p", keep_snapshots=5)
+    assert maintain_vector_index(spark, vp, ip, fwd, cursor, cells) is not None
+    snap.snapshot_partition_overwrite(
+        spark,
+        spark.createDataFrame([(100, [0.5, 0.5, 0.0], "0")], schema),
+        vp, "p", keep_snapshots=5,
+    )
+    fenced_table = fwd if chain == "_fwd_chain" else ip
+    before = snap.snapshot_versions(spark, fenced_table)
+    with open(cursor) as fh:
+        acked = fh.read()
+
+    real = cio.assert_service_fencing
+
+    def fence(spark_, path):
+        if sys._getframe(1).f_code.co_name == chain:
+            raise RuntimeError("commit fencing: service lock reclaimed")
+        return real(spark_, path)
+
+    monkeypatch.setattr(cio, "assert_service_fencing", fence)
+    with pytest.raises(RuntimeError, match="commit fencing"):
+        if verb == "maintain":
+            maintain_vector_index(spark, vp, ip, fwd, cursor, cells)
+        else:
+            rebuild_vector_index(spark, vp, ip, fwd, cursor, cells)
+    assert snap.snapshot_versions(spark, fenced_table) == before
+    with open(cursor) as fh:
+        assert fh.read() == acked

@@ -103,8 +103,8 @@ def test_cli_once_is_idempotent(tmp_path, monkeypatch):
     spark = get_spark("cli-test")
     first = snapshot_read(spark, f"{wd}/call_log").count()
     assert first > 0
-    assert spark.read.parquet(f"{wd}/fact_staff_daily").count() > 0
-    assert spark.read.parquet(f"{wd}/fact_status_pivot").count() > 0
+    assert snapshot_read(spark, f"{wd}/fact_staff_daily").count() > 0
+    assert snapshot_read(spark, f"{wd}/fact_status_pivot").count() > 0
 
     assert main(args) == 0
     # idempotent: the overlap tail re-merges (mode MERGED, C2 semantics) but
@@ -230,10 +230,11 @@ def test_cli_curate_pipeline(tmp_path):
 
     import pyspark.sql.functions as F
     from callio_etl_spark.session import get_spark
+    from callio_etl_spark.snapshots import snapshot_read, snapshot_versions
 
     spark = get_spark("cli-curate-test")
-    docs = spark.read.parquet(f"{wd}/curated_docs")
-    shards = spark.read.parquet(f"{wd}/curated_shards")
+    docs = snapshot_read(spark, f"{wd}/curated_docs")
+    shards = snapshot_read(spark, f"{wd}/curated_shards")
     n_input = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").count()
     n_curated = docs.count()
     assert 0 < n_curated <= n_input
@@ -253,12 +254,11 @@ def test_cli_curate_pipeline(tmp_path):
     assert main(args) == 0  # idempotent second run
     again = {
         r["doc_id"]
-        for r in spark.read.parquet(f"{wd}/curated_docs").select("doc_id").collect()
+        for r in snapshot_read(spark, f"{wd}/curated_docs").select("doc_id").collect()
     }
     assert again == curated_ids
-    # the displaced first output was archived (keep-versions)
-    import os
-    assert os.path.isdir(f"{wd}/curated_docs.__versions__")
+    # the first output stays retained as an older version (keep-versions)
+    assert len(snapshot_versions(spark, f"{wd}/curated_docs")) == 2
 
 
 def test_curate_keeps_alive_representative_when_canonical_filtered(tmp_path):
@@ -269,6 +269,7 @@ def test_curate_keeps_alive_representative_when_canonical_filtered(tmp_path):
     from callio_etl_spark.__main__ import _curate
     from callio_etl_spark.config import EngineConfig
     from callio_etl_spark.session import get_spark
+    from callio_etl_spark.snapshots import snapshot_read
 
     spark = get_spark("curate-regression", cpus=8)
     body = " ".join(f"w{i} x{i} y{i}" for i in range(8))  # 24 distinct tokens
@@ -295,7 +296,7 @@ def test_curate_keeps_alive_representative_when_canonical_filtered(tmp_path):
     counts = _curate(spark, cfg)
     docs = {
         r["doc_id"]
-        for r in spark.read.parquet(f"{cfg.work_dir}/curated_docs").collect()
+        for r in snapshot_read(spark, f"{cfg.work_dir}/curated_docs").collect()
     }
     assert 1 in docs, f"surviving copy lost: {docs} counts={counts}"
     assert 0 not in docs  # the filtered canonical stays out
@@ -327,6 +328,7 @@ def test_curate_grouped_path_matches_row_grain_survivors(tmp_path):
     )
     from callio_etl_spark.llm_ops.text_analysis import corpus_filter
     from callio_etl_spark.session import get_spark
+    from callio_etl_spark.snapshots import snapshot_read
 
     spark = get_spark("curate-grouped", cpus=8)
     # duplicate-heavy corpus: fixture docs plus verbatim mirrors
@@ -347,7 +349,7 @@ def test_curate_grouped_path_matches_row_grain_survivors(tmp_path):
     _curate(spark, cfg)
     cli_docs = {
         r["doc_id"]
-        for r in spark.read.parquet(f"{cfg.work_dir}/curated_docs").collect()
+        for r in snapshot_read(spark, f"{cfg.work_dir}/curated_docs").collect()
     }
 
     # row-grain reference: same filter + exact dedup, then the UNGROUPED
@@ -576,6 +578,96 @@ def test_cli_tick_refuses_a_plain_parquet_table(tmp_path, monkeypatch):
     assert "spark.read.parquet" in msg and "snapshot_partition_overwrite" in msg
     assert listing() == before
 
+WHOLE_OUTPUTS = (
+    "fact_staff_daily",
+    "fact_status_pivot",
+    "staff",
+    "group",
+    "curated_docs",
+    "curated_shards",
+)
+
+
+def test_cli_whole_table_outputs_are_snapshot_tables(tmp_path, monkeypatch):
+    """Every whole-table output — the two reporting facts, the staff and
+    group dims, and both curate outputs — is a snapshot table: two runs
+    with --keep-versions 2 leave two versions each, a restore of staff
+    to v1 reads back the first run's rows, and no read shows the
+    reserved leaf column."""
+    monkeypatch.setenv("DAYS_TO_FETCH_IF_EMPTY", "100000")
+    from callio_etl_spark.__main__ import main
+    from callio_etl_spark.session import get_spark
+    from callio_etl_spark.snapshots import (
+        WHOLE_TABLE_COL,
+        snapshot_read,
+        snapshot_restore,
+        snapshot_versions,
+    )
+    from tests.conftest import SF_DIR
+
+    wd = str(tmp_path / "work")
+    base = ["--sf-dir", SF_DIR, "--work-dir", wd,
+            "--keep-versions", "2"]
+    spark = get_spark("cli-test")
+    assert main(["--mode", "once", *base]) == 0
+    staff_v1 = {tuple(r) for r in snapshot_read(spark, f"{wd}/staff").collect()}
+    assert staff_v1
+    assert main(["--mode", "once", *base]) == 0
+    assert main(["--mode", "curate", *base]) == 0
+    assert main(["--mode", "curate", *base]) == 0
+
+    for name in WHOLE_OUTPUTS:
+        path = f"{wd}/{name}"
+        assert snapshot_versions(spark, path) == [1, 2], name
+        assert WHOLE_TABLE_COL not in snapshot_read(spark, path).columns
+
+    snapshot_restore(spark, f"{wd}/staff", 1, keep_snapshots=3)
+    restored = snapshot_read(spark, f"{wd}/staff")
+    assert WHOLE_TABLE_COL not in restored.columns
+    assert {tuple(r) for r in restored.collect()} == staff_v1
+
+
+def test_cli_refuses_a_plain_whole_table_output(tmp_path, monkeypatch):
+    """A work dir holding a plain parquet staff dim (the layout of the
+    removed rename-swap sink) makes the staff_group job raise before it
+    stages or writes anything: a snapshot commit beside the plain files
+    would mix two formats in one directory. The error names the path
+    and the migration; the work dir stays as it was."""
+    import os
+
+    import pytest
+
+    monkeypatch.setenv("DAYS_TO_FETCH_IF_EMPTY", "100000")
+    from callio_etl_spark.__main__ import main
+    from callio_etl_spark.session import get_spark
+    from tests.conftest import SF_DIR
+
+    wd = str(tmp_path / "work")
+    spark = get_spark("cli-test")
+    spark.createDataFrame(
+        [("PK", "s1", "1", "1", "h")],
+        "tenant string, name string, _id string, group_id string,"
+        " row_hash string",
+    ).write.parquet(f"{wd}/staff")
+
+    def listing():
+        return {
+            (os.path.relpath(os.path.join(d, f), wd), st.st_size, st.st_mtime_ns)
+            for d, _, files in os.walk(wd)
+            for f in files
+            for st in [os.stat(os.path.join(d, f))]
+        }
+
+    before = listing()
+    with pytest.raises(RuntimeError, match="plain parquet table") as exc:
+        main(["--mode", "once", "--job", "staff_group",
+              "--sf-dir", SF_DIR, "--work-dir", wd])
+    msg = str(exc.value)
+    assert f"{wd}/staff" in msg
+    assert "spark.read.parquet" in msg and "snapshot_overwrite" in msg
+    assert listing() == before
+
+
 def test_cli_evolution_verbs(tmp_path, monkeypatch):
     """--mode evolve-spec / rename-column / drop-column on the snapshot
     warehouse: metadata-only commits through the CLI, readable history,
@@ -663,6 +755,7 @@ def test_cli_staff_group_snapshot_job(tmp_path, monkeypatch):
     monkeypatch.setenv("DAYS_TO_FETCH_IF_EMPTY", "100000")
     from callio_etl_spark.__main__ import main
     from callio_etl_spark.session import get_spark
+    from callio_etl_spark.snapshots import snapshot_read
 
     wd = str(tmp_path / "work")
     args = ["--mode", "once", "--job", "staff_group",
@@ -670,15 +763,15 @@ def test_cli_staff_group_snapshot_job(tmp_path, monkeypatch):
     assert main(args) == 0
 
     spark = get_spark("cli-test")
-    staff = spark.read.parquet(f"{wd}/staff")
-    group = spark.read.parquet(f"{wd}/group")
+    staff = snapshot_read(spark, f"{wd}/staff")
+    group = snapshot_read(spark, f"{wd}/group")
     n_staff, n_group = staff.count(), group.count()
     assert n_staff > 0 and n_group == 25  # nation is 25 rows at every sf
     assert not os.path.exists(f"{wd}/stg_staff"), "staging not consumed"
 
     assert main(args) == 0
-    assert spark.read.parquet(f"{wd}/staff").count() == n_staff
-    assert spark.read.parquet(f"{wd}/group").count() == n_group
+    assert snapshot_read(spark, f"{wd}/staff").count() == n_staff
+    assert snapshot_read(spark, f"{wd}/group").count() == n_group
     log = spark.read.parquet(f"{wd}/update_log")
     by_mode = {
         (r["table_name"], r["mode"])
@@ -746,6 +839,7 @@ def test_staff_group_clears_stale_staging_before_staging(tmp_path, monkeypatch):
     monkeypatch.setenv("DAYS_TO_FETCH_IF_EMPTY", "100000")
     from callio_etl_spark.__main__ import main
     from callio_etl_spark.session import get_spark
+    from callio_etl_spark.snapshots import snapshot_read
 
     wd = str(tmp_path / "work")
     args = ["--mode", "once", "--job", "staff_group",
@@ -753,7 +847,7 @@ def test_staff_group_clears_stale_staging_before_staging(tmp_path, monkeypatch):
     assert main(args) == 0
 
     spark = get_spark("cli-test")
-    staff = spark.read.parquet(f"{wd}/staff")
+    staff = snapshot_read(spark, f"{wd}/staff")
     n_staff = staff.count()
 
     # simulate the crashed prior run: a staged batch that never merged,
@@ -766,7 +860,7 @@ def test_staff_group_clears_stale_staging_before_staging(tmp_path, monkeypatch):
     ghost.write.mode("append").parquet(f"{wd}/stg_staff")
 
     assert main(args) == 0
-    staff2 = spark.read.parquet(f"{wd}/staff")
+    staff2 = snapshot_read(spark, f"{wd}/staff")
     ghosts = staff2.where(F.col("name") == "GHOST-STAFF").count()
     assert ghosts == 0, "stale staged rows resurrected into the dim"
     assert staff2.count() == n_staff

@@ -3730,3 +3730,195 @@ def test_every_commit_verb_carries_table_metadata(spark, tmp_path):
     snap.snapshot_set_properties(spark, p, {"tier": None}, **keep)
     check(spec_history=evolved)
 
+
+
+def _gen_df(spark, gen, n=4):
+    return spark.createDataFrame(
+        [(i, i * gen) for i in range(n)], "id long, v long"
+    )
+
+
+def _gen_rows(gen, n=4):
+    return {(i, i * gen) for i in range(n)}
+
+
+def _rows(df):
+    return {(r["id"], r["v"]) for r in df.collect()}
+
+
+def test_whole_table_overwrite_time_travel_and_restore(spark, tmp_path):
+    """snapshot_overwrite replaces the whole table per commit: every
+    retained version time-travels back exactly, readers see only the
+    frame's columns, and a restore is itself a commit (undoable)."""
+    p = str(tmp_path / "wt")
+    assert [
+        snap.snapshot_overwrite(spark, _gen_df(spark, k), p, keep_snapshots=4)
+        for k in (1, 2, 3)
+    ] == [1, 2, 3]
+    assert snap.snapshot_versions(spark, p) == [1, 2, 3]
+    live = snap.snapshot_read(spark, p)
+    assert live.columns == ["id", "v"]
+    assert _rows(live) == _gen_rows(3)
+    for k in (1, 2):
+        old = snap.snapshot_read(spark, p, version=k)
+        assert old.columns == ["id", "v"]
+        assert _rows(old) == _gen_rows(k)
+
+    assert snap.snapshot_restore(spark, p, 1, keep_snapshots=4) == 4
+    assert _rows(snap.snapshot_read(spark, p)) == _gen_rows(1)
+    # the pre-restore head stays readable: the restore is undoable
+    assert snap.snapshot_versions(spark, p) == [1, 2, 3, 4]
+    assert _rows(snap.snapshot_read(spark, p, version=3)) == _gen_rows(3)
+    snap.snapshot_tag(spark, p, "gen2", version=2)
+    assert _rows(snap.snapshot_read(spark, p, tag="gen2")) == _gen_rows(2)
+
+    with pytest.raises(FileNotFoundError):
+        snap.snapshot_read(spark, p, version=99)
+    with pytest.raises(ValueError, match="reserved"):
+        snap.snapshot_overwrite(
+            spark, live.withColumn(snap.WHOLE_TABLE_COL, F.lit(1)), p
+        )
+    with pytest.raises(ValueError, match="partitioned by"):
+        snap.snapshot_partition_overwrite(
+            spark, _gen_df(spark, 5).withColumn("d", F.lit("a")), p, "d"
+        )
+
+
+def test_whole_table_overwrite_retention_bound_and_vacuum(spark, tmp_path):
+    """keep_snapshots bounds a whole table's history: the newest K
+    versions survive as a contiguous suffix, each with exactly one data
+    dir on disk; snapshot_vacuum tightens it and reports what it
+    dropped."""
+    p = str(tmp_path / "wv")
+    for k in range(1, 6):
+        snap.snapshot_overwrite(spark, _gen_df(spark, k), p, keep_snapshots=3)
+    assert snap.snapshot_versions(spark, p) == [3, 4, 5]
+    leaf = os.path.join(p, f"{snap.WHOLE_TABLE_COL}=all")
+
+    def data_dirs():
+        return sorted(d for d in os.listdir(leaf) if d.startswith("__s"))
+
+    assert len(data_dirs()) == 3
+    assert snap.snapshot_vacuum(spark, p, keep_snapshots=2) == [3]
+    assert snap.snapshot_versions(spark, p) == [4, 5]
+    assert len(data_dirs()) == 2
+    assert snap.snapshot_vacuum(spark, p, keep_snapshots=2) == []
+    assert _rows(snap.snapshot_read(spark, p, version=4)) == _gen_rows(4)
+    assert _rows(snap.snapshot_read(spark, p)) == _gen_rows(5)
+    with pytest.raises(ValueError):
+        snap.snapshot_vacuum(spark, p, keep_snapshots=0)
+    with pytest.raises(FileNotFoundError):
+        snap.snapshot_vacuum(spark, str(tmp_path / "none"), keep_snapshots=1)
+
+
+def test_whole_table_restore_with_minimal_retention(spark, tmp_path):
+    """A restore at the smallest retention that still holds an older
+    version (keep_snapshots=2): the restored content is read from the
+    source manifest before the commit's vacuum drops it, and the
+    displaced head stays retained, so the restore can be undone."""
+    p = str(tmp_path / "wr")
+    for k in (1, 2):
+        snap.snapshot_overwrite(spark, _gen_df(spark, k), p, keep_snapshots=2)
+    assert snap.snapshot_versions(spark, p) == [1, 2]
+    assert snap.snapshot_restore(spark, p, 1, keep_snapshots=2) == 3
+    assert _rows(snap.snapshot_read(spark, p)) == _gen_rows(1)
+    assert snap.snapshot_versions(spark, p) == [2, 3]
+    assert _rows(snap.snapshot_read(spark, p, version=2)) == _gen_rows(2)
+    snap.snapshot_restore(spark, p, 2, keep_snapshots=2)  # undo
+    assert _rows(snap.snapshot_read(spark, p)) == _gen_rows(2)
+
+
+def test_whole_table_empty_overwrite_empties_the_table(spark, tmp_path):
+    """An empty frame publishes an empty table in one commit (the old
+    leaf retires with it) and keeps the frame's columns; the previous
+    version stays readable and a later overwrite refills the table."""
+    p = str(tmp_path / "we")
+    snap.snapshot_overwrite(spark, _gen_df(spark, 1), p, keep_snapshots=3)
+    assert snap.snapshot_overwrite(
+        spark, _gen_df(spark, 1).limit(0), p, keep_snapshots=3
+    ) == 2
+    empty = snap.snapshot_read(spark, p)
+    assert empty.columns == ["id", "v"] and empty.count() == 0
+    assert [h["n_partitions"] for h in snap.snapshot_history(spark, p)] == [1, 0]
+    assert _rows(snap.snapshot_read(spark, p, version=1)) == _gen_rows(1)
+    snap.snapshot_overwrite(spark, _gen_df(spark, 2), p, keep_snapshots=3)
+    assert _rows(snap.snapshot_read(spark, p)) == _gen_rows(2)
+
+
+def test_whole_table_model_based_random_sequences(spark, tmp_path):
+    """Model-based check of the whole-table lifecycle: random sequences
+    of overwrite / restore / vacuum against a pure-Python model of the
+    retained history ({version: generation}, newest = live); the real
+    table must agree after every step."""
+    import random
+
+    KEEP = 3
+
+    def df_for(gen):
+        return spark.createDataFrame(
+            [(i, gen) for i in range(3)], "id long, gen long"
+        )
+
+    def gens(version=None):
+        return {r["gen"] for r in snap.snapshot_read(spark, p, version=version).collect()}
+
+    for seed in (7, 23, 99):
+        rng = random.Random(seed)
+        p = str(tmp_path / f"model{seed}")
+        snap.snapshot_overwrite(spark, df_for(1), p, keep_snapshots=KEEP)
+        history, next_gen, next_v = {1: 1}, 2, 2
+        for _ in range(12):
+            op = rng.choice(["commit", "commit", "restore", "vacuum"])
+            if op == "commit":
+                snap.snapshot_overwrite(
+                    spark, df_for(next_gen), p, keep_snapshots=KEEP
+                )
+                history[next_v] = next_gen
+                next_gen += 1
+            elif op == "restore":
+                v = rng.choice(sorted(history))
+                snap.snapshot_restore(spark, p, v, keep_snapshots=KEEP)
+                history[next_v] = history[v]
+            else:
+                k = rng.randint(1, KEEP)
+                dropped = snap.snapshot_vacuum(spark, p, keep_snapshots=k)
+                assert dropped == sorted(history)[:-k]
+                for w in dropped:
+                    del history[w]
+                continue
+            next_v += 1
+            for w in sorted(history)[:-KEEP]:
+                del history[w]
+            assert snap.snapshot_versions(spark, p) == sorted(history)
+            assert gens() == {history[max(history)]}
+            for v, gen in history.items():
+                assert gens(v) == {gen}, (seed, v, gen)
+
+
+def test_changes_match_null_partition_and_null_key_rows(spark, tmp_path):
+    """snapshot_changes joins old and new NULL-safely: a row in the NULL
+    partition (__HIVE_DEFAULT_PARTITION__) or with a NULL key that both
+    versions hold unchanged is not a change, even when its partition was
+    rewritten; only the updated row is reported, in both feed forms."""
+    p = str(tmp_path / "cn")
+    schema = "id long, d string, v long"
+    rows = [(1, None, 10), (None, "a", 20), (2, "a", 30), (3, "b", 40)]
+    snap.snapshot_partition_overwrite(
+        spark, spark.createDataFrame(rows, schema), p, "d", keep_snapshots=3
+    )
+    rows[2] = (2, "a", 31)
+    snap.snapshot_partition_overwrite(
+        spark, spark.createDataFrame(rows[:3], schema), p, "d", keep_snapshots=3
+    )
+    def feed(**kw):
+        out = snap.snapshot_changes(spark, p, 1, 2, keys=["id"], **kw)
+        assert sorted(out.columns) == ["_change", "d", "id", "v"]
+        return sorted(
+            (r["d"], r["id"], r["v"], r["_change"]) for r in out.collect()
+        )
+
+    assert feed() == [("a", 2, 31, "update")]
+    assert feed(preimages=True) == [
+        ("a", 2, 30, "update_preimage"),
+        ("a", 2, 31, "update_postimage"),
+    ]
