@@ -35,6 +35,7 @@ from callio_etl_spark.checkpoints import CheckpointStore
 from callio_etl_spark.config import EngineConfig
 from callio_etl_spark.functions import row_hash
 from callio_etl_spark.pipeline import IncrementalTable, commit, run_tick
+from callio_etl_spark.snapshots import _snapshot_table_at
 from callio_etl_spark.tables import load_table
 
 TENANT = "PK"
@@ -161,38 +162,6 @@ def _keep_snapshots(cfg: EngineConfig) -> int:
     return max(cfg.keep_versions, 0) + 1
 
 
-def _snapshot_table_at(
-    spark: SparkSession, path: str, migrate: str = "snapshot_overwrite it"
-) -> bool:
-    """True when ``path`` holds a snapshot table, False when it holds
-    nothing. Raises when it holds a plain parquet table — data files
-    directly under it, or under the ``.__backup__`` sibling a crashed
-    rename swap left (a snapshot table keeps only ``__snap__`` and
-    ``col=value`` dirs at its top level): a snapshot commit there would
-    mix two formats in one directory. ``migrate`` is the conversion step
-    the message names (the default suits a whole-table output)."""
-    from callio_etl_spark.io import BACKUP_SUFFIX, _exists, _hadoop
-
-    jvm, fs, _ = _hadoop(spark, path)
-    if _exists(jvm, fs, path + "/__snap__"):
-        return True
-
-    def holds_files(p: str) -> bool:
-        return _exists(jvm, fs, p) and any(
-            st.isFile() and not st.getPath().getName().startswith(("_", "."))
-            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(p))
-        )
-
-    if holds_files(path) or holds_files(path + BACKUP_SUFFIX):
-        raise RuntimeError(
-            f"{path} is a plain parquet table, not a snapshot table; "
-            f"migrate it once before the next run: read it with "
-            f"spark.read.parquet({path!r}), {migrate} into a new path, "
-            f"then move the new table to {path!r}"
-        )
-    return False
-
-
 def _refresh_reports(spark: SparkSession, cfg: EngineConfig) -> None:
     from callio_etl_spark.registry import all_queries
     from callio_etl_spark.snapshots import snapshot_overwrite
@@ -265,7 +234,7 @@ def _staff_group_snapshot(
     n = stage_batch(store, "staff", "ALL", staff, stg)
     if n:
         target = snapshot_read(spark, path) if staff_exists else None
-        staged = spark.read.parquet(stg)
+        staged = snapshot_read(spark, stg)
         # one staged row per key, deterministic pick (max _id) — the
         # reference's ROW_NUMBER dedup falls back to `name` ordering
         # when no updateTime exists (runner.py:470)

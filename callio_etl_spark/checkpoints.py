@@ -17,11 +17,15 @@ _normalize_table does (checkpoints.py:83-85): strip + lowercase + '-'/' '
 -> '_'. Checkpoints silently miss if the normalization differs (SURVEY
 section 7.5), so e.g. 'call-log' and 'Call Log' key identically.
 
-Spark shape: the log is an append-only parquet table; the warm is one small
-aggregate collected to the driver (a sanctioned scalar collect). In
-Structured Streaming terms, checkpoint == watermark state and overlap ==
-withWatermark delay; this batch implementation is the Trigger.AvailableNow
-equivalent the reference's scheduler approximates.
+Spark shape: the log is a whole snapshot table (snapshots.py), the same
+format as every other table the engine commits: each flush is one
+``snapshot_append`` of the buffered rows, staged by pyarrow with no
+Spark job on a local path, and compaction is one ``snapshot_overwrite``.
+The warm is one small aggregate over ``snapshot_read`` collected to the
+driver (a sanctioned scalar collect). In Structured Streaming terms,
+checkpoint == watermark state and overlap == withWatermark delay; this
+batch implementation is the Trigger.AvailableNow equivalent the
+reference's scheduler approximates.
 """
 
 from __future__ import annotations
@@ -64,7 +68,7 @@ def normalize_table(name: str) -> str:
 
 @dataclass
 class CheckpointStore:
-    """Checkpoint cache + update-log buffer over a parquet path."""
+    """Checkpoint cache + update-log buffer over a snapshot table path."""
 
     spark: SparkSession
     log_path: str
@@ -77,66 +81,33 @@ class CheckpointStore:
         """C1 — rebuild the cache from the log: GROUP BY (table, tenant)
         MAX(max_update_ms) (reference checkpoints.py:60-78; the A6 agg).
 
-        Only the missing-log cold start is swallowed; any other read error
+        Only the missing-log cold start (no snapshot table, or one whose
+        first commit never published) is swallowed; any other read error
         (corrupt footer, permissions, transient FS failure) propagates —
         silently resetting every checkpoint to the 30-day lookback would
-        re-read the whole window and mask the real failure.
+        re-read the whole window and mask the real failure. A plain
+        parquet log left by an older engine raises for the same reason,
+        naming the migration (the format guard). The read needs no lock:
+        it resolves one published manifest, whose files are immutable."""
+        from callio_etl_spark.snapshots import _snapshot_table_at, snapshot_read
 
-        A MISSING path is first run through ``recover_table``: a compact()
-        killed between its two swap renames leaves the whole log under the
-        backup name for a moment, and a daemon restarting inside that
-        window must roll the swap forward rather than silently cold-start
-        every checkpoint (and the recovery must happen BEFORE anything
-        recreates the path — see flush())."""
-        from pyspark.errors import AnalysisException
-
-        def read_rows():
-            log = self.spark.read.schema(UPDATE_LOG_SCHEMA).parquet(
-                self.log_path
-            )
-            return (
-                log.where(F.col("max_update_ms").isNotNull())
-                .groupBy(
-                    F.regexp_replace(
-                        F.lower(F.trim("table_name")), "[- ]", "_"
-                    ).alias("t"),
-                    "tenant",
-                )
-                .agg(F.max("max_update_ms").alias("ck"))
-                .collect()
-            )
-
+        if not _snapshot_table_at(self.spark, self.log_path):
+            return  # no log yet — cold start everywhere
         try:
-            rows = read_rows()
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" not in str(exc) and (
-                "Path does not exist" not in str(exc)
-            ):
-                raise
-            from callio_etl_spark.io import (
-                _hadoop,
-                acquire_service_lock,
-                recover_table,
-                release_service_lock,
+            log = snapshot_read(self.spark, self.log_path)
+        except FileNotFoundError:
+            return  # the first flush crashed before its publish
+        rows = (
+            log.where(F.col("max_update_ms").isNotNull())
+            .groupBy(
+                F.regexp_replace(
+                    F.lower(F.trim("table_name")), "[- ]", "_"
+                ).alias("t"),
+                "tenant",
             )
-
-            # recovery under the log's SERVICE lock: a missing path may
-            # also be a LIVE compact mid-swap (another table's tick —
-            # several stores can share one log) — rolling ITS staged
-            # swap forward from here would corrupt its rename sequence;
-            # waiting out the lock sees either the finished swap or a
-            # genuinely torn one. The hold we may be waiting out is a
-            # whole compact, not a plain commit — covered by
-            # acquire_service_lock's tick-sized default timeout.
-            acquire_service_lock(self.spark, self.log_path)
-            try:
-                recover_table(self.spark, self.log_path)
-                jvm, fs, p = _hadoop(self.spark, self.log_path)
-                if not fs.exists(p):
-                    return  # genuinely no log yet — cold start everywhere
-                rows = read_rows()  # the healed (rolled-forward) log
-            finally:
-                release_service_lock(self.spark, self.log_path)
+            .agg(F.max("max_update_ms").alias("ck"))
+            .collect()
+        )
         for r in rows:
             self._cache[(r["t"], r["tenant"])] = r["ck"]
 
@@ -179,163 +150,92 @@ class CheckpointStore:
             )
         )
 
-    def _flush_local_fastpath(self) -> bool:
-        """Driver-side single-file append for LOCAL log paths (r15,
-        guide §5 inverted: the driver should do no *data* work, but a
-        flush is a handful of driver-resident audit scalars — pushing
-        them through a Spark job costs a fixed ~0.5-0.9 s per flush
-        (job launch + one-row shuffle + committer) where a direct
-        pyarrow write of the identical parquet bytes is ~1 ms; measured
-        on http_loop_snapshot_sink / update_log_modes, flush was the
-        single biggest fixed cost). Byte-compatibility is pinned by
-        test: timestamps land as TIMESTAMP(MICROS, adjusted-to-UTC),
-        longs as INT64, read back identically by warm()'s
-        explicit-schema read AND a schema-inferring read over a mixed
-        Spark+pyarrow file set. Crash-safe: written as a dot-hidden
-        temp (invisible to Spark/Hadoop input listings) then renamed —
-        a crash strands only a hidden temp file. The path's RESOLVED
-        scheme decides: a scheme-less path takes the cluster's
-        ``fs.defaultFS`` (hdfs:// on most clusters, where a driver-disk
-        write would be invisible to warm()/compact()), and only
-        ``file`` takes the fast path — remote warehouses (hdfs://,
-        s3a://...) return False and keep the distributed write. Neither
-        lookup instantiates a FileSystem. Caller holds the service
-        lock."""
-        import re
-
-        jvm = self.spark.sparkContext._jvm
-        scheme = jvm.org.apache.hadoop.fs.Path(self.log_path).toUri().getScheme()
-        if scheme is None:
-            conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-            scheme = jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(
-                conf
-            ).getScheme()
-        if scheme != "file":
-            return False
-        try:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover - pyspark ships pyarrow
-            return False
-        import os
-        import uuid
-
-        path = re.sub(r"^file:(//)?", "", self.log_path)
-        os.makedirs(path, exist_ok=True)
-        cols = list(zip(*self._buffer))
-        tbl = pa.table(
-            {
-                "table_name": pa.array(cols[0], pa.string()),
-                "tenant": pa.array(cols[1], pa.string()),
-                # buffered as naive-UTC datetimes (log()); tz="UTC" makes
-                # the parquet annotation adjusted-to-UTC, matching what
-                # Spark's writer records for TimestampType
-                "updated_at": pa.array(cols[2], pa.timestamp("us", tz="UTC")),
-                "rows_loaded": pa.array(cols[3], pa.int64()),
-                "max_update_ms": pa.array(cols[4], pa.int64()),
-                "mode": pa.array(cols[5], pa.string()),
-            }
-        )
-        tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}")
-        pq.write_table(tbl, tmp, compression="snappy")
-        os.rename(
-            tmp, os.path.join(path, f"part-{uuid.uuid4().hex}.snappy.parquet")
-        )
-        return True
-
     def flush(self) -> None:
-        """C5 — append the buffer to the log table (checkpoints.py:42-50).
+        """C5 — append the buffer to the log table (checkpoints.py:42-50)
+        as one whole-table ``snapshot_append`` commit. The buffer is a
+        handful of driver-resident audit scalars, so it goes in as a
+        ``pyarrow.Table``: on a local log path pyarrow stages it with no
+        Spark job (a Spark job costs a fixed ~0.5 s per flush, the
+        biggest fixed cost of a tick); on any other resolved scheme
+        Spark stages it as one file.
 
         The append runs under the log's SERVICE lock so it can never race
-        a concurrent ``compact()``'s whole-table swap (the swap would
-        silently displace an append that landed between its read and its
-        rename — in the table whose loss rewinds every checkpoint to the
-        30-day lookback). Uncontended cost is one create+delete pair on
-        the lock file per flushed tick."""
+        a concurrent ``compact()``, whose overwrite would silently drop an
+        append that committed between its read and its commit — in the
+        table whose loss rewinds every checkpoint to the 30-day
+        lookback."""
         if not self._buffer:
             return
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from callio_etl_spark.io import (
             acquire_service_lock,
             release_service_lock,
         )
+        from callio_etl_spark.snapshots import _snapshot_table_at, snapshot_append
 
-        # a flush racing a long compact of a ~100k-file log must wait the
-        # compact out, not raise a spurious 120 s commit-timeout and fail
-        # the tick — acquire_service_lock's tick-sized default timeout
+        # buffered as naive-UTC datetimes (log()); the UTC-adjusted arrow
+        # timestamp is what Spark's writer records for TimestampType
+        schema = to_arrow_schema(UPDATE_LOG_SCHEMA)
+        batch = pa.Table.from_arrays(
+            [
+                pa.array(col, f.type)
+                for col, f in zip(zip(*self._buffer), schema)
+            ],
+            schema=schema,
+        )
+        # a flush racing a long compact of the log must wait the compact
+        # out, not raise a spurious 120 s commit-timeout and fail the
+        # tick — acquire_service_lock's tick-sized default timeout
         acquire_service_lock(self.spark, self.log_path)
         try:
-            # heal a torn compact swap BEFORE appending: if a crash left
-            # the log under its backup name, creating a fresh path here
-            # would make the later recovery read "swap already finished"
-            # and DISPOSE the backup — the entire pre-crash log. One
-            # exists probe per flush; recovery only when path is missing.
-            from callio_etl_spark.io import _hadoop, recover_table
-
-            jvm, fs, p = _hadoop(self.spark, self.log_path)
-            if not fs.exists(p):
-                recover_table(self.spark, self.log_path)
-            if not self._flush_local_fastpath():
-                # remote warehouse: one file per flush, not one per
-                # createDataFrame slice — every extra part file is paid
-                # again by EVERY later warm()'s full-log scan.
-                # repartition(1), NOT coalesce(1): coalesce on a local
-                # relation defeats the LocalTableScan fast path and costs
-                # a measured ~4.5 s FIXED per flush (r14 bisect — it
-                # tripled every flush-bearing service row); the one-row
-                # shuffle is free.
-                df = self.spark.createDataFrame(
-                    self._buffer, UPDATE_LOG_SCHEMA
-                ).repartition(1)
-                df.write.mode("append").parquet(self.log_path)
+            _snapshot_table_at(self.spark, self.log_path)  # refuses a plain log
+            snapshot_append(self.spark, batch, self.log_path, None)
             self._buffer.clear()
         finally:
             release_service_lock(self.spark, self.log_path)
 
     def compact(self, keep_rows_per_key: int = 512) -> int:
-        """C5 at daemon lifetime: every flushed tick appends one small
-        parquet file to the update_log FOREVER — a year of 5-minute ticks
-        is ~100k files, and warm()'s group-by-max scans all of them on
-        every restart/tick. Compaction rewrites the log down to the
-        newest ``keep_rows_per_key`` audit rows per (table, tenant) PLUS
-        each key's max(max_update_ms) row — the checkpoint row itself can
+        """C5 at daemon lifetime: every flushed tick stacks one small data
+        dir onto the update_log FOREVER — a year of 5-minute ticks is
+        ~100k dirs, and warm()'s group-by-max scans all of them on every
+        restart/tick. Compaction rewrites the log down to the newest
+        ``keep_rows_per_key`` audit rows per (table, tenant) PLUS each
+        key's max(max_update_ms) row — the checkpoint row itself can
         never be dropped, even when it is older than the audit window
         (a long run of NOOP/ERROR ticks could otherwise age it out and
         silently rewind the next warm() to the 30-day lookback). One
-        atomic whole-table swap (io.atomic_overwrite: staged write +
-        locked rename), safe while the df reads from the path it
-        replaces. Returns the retained row count.
+        ``snapshot_overwrite`` commit, safe while the frame reads from
+        the table it replaces (its files are immutable). Returns the
+        retained row count.
 
-        SELF-FENCING: the read-plan-swap runs under the log's own
+        SELF-FENCING: the read-plan-commit runs under the log's own
         SERVICE lock — the same lock every ``flush()`` appends under —
-        so a compact can never displace a concurrent flush's rows, no
-        matter where the caller invokes it from (the r12 version only
-        DOCUMENTED this race as caller discipline). The reference's
+        so a compact can never drop a concurrent flush's rows, no
+        matter where the caller invokes it from. The reference's
         update_log lives in BigQuery where this bound is a table TTL;
         this is the same bound on a plain filesystem."""
-        from pyspark.errors import AnalysisException
         from pyspark.sql import Window
 
         from callio_etl_spark.io import (
             acquire_service_lock,
             assert_service_fencing,
-            atomic_overwrite,
             release_service_lock,
+        )
+        from callio_etl_spark.snapshots import (
+            _snapshot_table_at,
+            snapshot_overwrite,
+            snapshot_read,
         )
 
         # a compact may queue behind another store's long compact of the
         # same shared log (see flush()) — tick-sized default timeout
         acquire_service_lock(self.spark, self.log_path)
         try:
-            try:
-                log = self.spark.read.schema(UPDATE_LOG_SCHEMA).parquet(
-                    self.log_path
-                )
-            except AnalysisException as exc:
-                if "PATH_NOT_FOUND" in str(exc) or (
-                    "Path does not exist" in str(exc)
-                ):
-                    return 0  # no log yet: nothing to compact
-                raise
+            if not _snapshot_table_at(self.spark, self.log_path):
+                return 0  # no log yet: nothing to compact
+            log = snapshot_read(self.spark, self.log_path)
             key = F.regexp_replace(
                 F.lower(F.trim("table_name")), "[- ]", "_"
             ).alias("__t")
@@ -358,12 +258,12 @@ class CheckpointStore:
                 .drop("__t", "__rn", "__rk")
             )
             assert_service_fencing(self.spark, self.log_path)
-            atomic_overwrite(self.spark, kept, self.log_path)
+            snapshot_overwrite(self.spark, kept, self.log_path)
             # single scan of the PRE-compaction log (the expensive side —
-            # this operator exists for the ~100k-file case): the retained
+            # this operator exists for the ~100k-dir case): the retained
             # count is read back from the compacted table, which is
             # ≤ keep_rows_per_key × keys rows by construction
-            return self.spark.read.parquet(self.log_path).count()
+            return snapshot_read(self.spark, self.log_path).count()
         finally:
             release_service_lock(self.spark, self.log_path)
 
@@ -371,24 +271,26 @@ class CheckpointStore:
         self, max_files: int = 256, keep_rows_per_key: int = 512
     ) -> int | None:
         """Opportunistic retention: compact() once the log has
-        accumulated more than ``max_files`` part files — one cheap
-        directory listing per call (through the Hadoop FS abstraction,
-        so hdfs://-/s3a://-style warehouses count correctly), so a
-        daemon can call this EVERY tick at its quiet point (right after
-        flush(), inside the tick's single-writer section) and pay the
-        rewrite only ~once per ``max_files`` ticks. Returns the retained
-        row count when a compaction ran, else None."""
-        from callio_etl_spark.io import _hadoop
-
-        jvm, fs, _ = _hadoop(self.spark, self.log_path)
-        p = jvm.org.apache.hadoop.fs.Path(self.log_path)
-        if not fs.exists(p):
-            return None
-        n_files = sum(
-            1
-            for st in fs.listStatus(p)
-            if st.getPath().getName().endswith(".parquet")
+        accumulated more than ``max_files`` data files — read off the
+        live manifest, which lists the one data dir every flush adds
+        (each holding one file), so a daemon can call this EVERY tick at
+        its quiet point (right after flush(), inside the tick's
+        single-writer section) and pay the rewrite only ~once per
+        ``max_files`` ticks. Returns the retained row count when a
+        compaction ran, else None."""
+        from callio_etl_spark.snapshots import (
+            _leaf_toks,
+            _snapshot_table_at,
+            snapshot_manifest,
         )
+
+        if not _snapshot_table_at(self.spark, self.log_path):
+            return None
+        try:
+            m = snapshot_manifest(self.spark, self.log_path)
+        except FileNotFoundError:
+            return None  # the first flush crashed before its publish
+        n_files = sum(len(_leaf_toks(m, leaf)) for leaf in m["partitions"])
         if n_files <= max_files:
             return None
         return self.compact(keep_rows_per_key)

@@ -3,8 +3,9 @@
 Reference: /root/reference/callio_etl/bigquery_service.py:265-330 (loads,
 delete, DDL) and runner.py:158-209 (staging lifecycle). Spark-first mapping:
 
-- S8  append sink with schema evolution  -> mode("append") + mergeSchema
-- S9  truncate-replace sink              -> mode("overwrite")
+- S8  append sink with schema evolution  -> snapshots.snapshot_append
+  (``partition_col=None``: whole table, schema union)
+- S9  truncate-replace sink              -> snapshots.snapshot_overwrite
 - S10 SQL channel                        -> spark.sql
 - S11 range delete                       -> snapshots.snapshot_delete_rows
   (merge-on-read delete files) / snapshot_delete_partitions
@@ -15,12 +16,10 @@ Physical layout (section 1.4): day partitioning via partitionBy(date_col);
 BigQuery clustering maps to sortWithinPartitions on the cluster keys, which
 gives parquet row-group min/max data skipping on those columns.
 
-Every versioned table lives in the snapshot format (snapshots.py):
-partitioned tables, and whole-table outputs through
-``snapshots.snapshot_overwrite``. The commit protocol here,
-``atomic_overwrite``, is the unversioned whole-table swap for the few
-plain parquet tables: the update_log compaction, ``load_truncate`` and
-the two incremental view tables.
+Every table the engine commits is a snapshot table (snapshots.py), whose
+one commit is a manifest publish. This module holds what that commit
+builds on: the Hadoop FS helpers, the table and service locks with their
+heartbeat, reclaim and fencing, and the stale-staging sweep.
 """
 
 from __future__ import annotations
@@ -36,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 #: Commit-protocol sibling dirs (next to the table path, never inside it —
 #: a dir inside the table would surface as a bogus partition to readers).
 STAGING_SUFFIX = ".__staging__"
-BACKUP_SUFFIX = ".__backup__"
 LOCK_SUFFIX = ".__commitlock__"
 
 #: Writer-coordination knobs: how long a committer waits for the table
@@ -53,75 +51,47 @@ LOCK_STALE_S = 3600.0
 STAGING_STALE_S = 24 * 3600.0
 
 
-def load_append(df: DataFrame, path: str, merge_schema: bool = True) -> None:
-    """S8 — WRITE_APPEND with ALLOW_FIELD_ADDITION/RELAXATION
-    (bigquery_service.py:276-300): parquet append; readers pass
-    mergeSchema=true to see evolved columns."""
-    df.write.mode("append").option("mergeSchema", str(merge_schema).lower()).parquet(path)
+#: (JVM view, its ``org.apache.hadoop.fs.Path`` class): resolving the
+#: class through the view costs five py4j round trips per lookup, and a
+#: commit builds dozens of paths.
+_PATH_CLASS: list = [None, None]
 
 
-def load_truncate(df: DataFrame, path: str) -> None:
-    """S9 — WRITE_TRUNCATE, no schema updates (bigquery_service.py:302-309).
-    Atomic: the replacement is staged beside the table and committed by
-    rename, so a crashed truncate never leaves a half-written table (the
-    reference gets this from BigQuery's job atomicity for free)."""
-    atomic_overwrite(df.sparkSession, df, path)
-
-
-# --------------------------------------------------------------------------
-# Atomic commit protocol (staging + rename). The reference's sinks write to
-# BigQuery, whose load/query jobs are atomic; plain `mode("overwrite")` on a
-# parquet path is NOT — a mid-write crash leaves a truncated table. These
-# helpers restore the missing guarantee with the classic staging-directory
-# protocol (same shape as Hadoop's FileOutputCommitter v1 job commit):
-#
-#   write df -> <path>.__staging__      (crash here: target untouched)
-#   touch staging/__COMMIT_*__ marker   (proves staging complete + mode)
-#   rename <path> -> <path>.__backup__  (crash past here: recover_table
-#   rename staging -> <path>             rolls the commit forward)
-#   delete backup
-#
-# Rename is atomic on HDFS and on POSIX filesystems; on S3-like object
-# stores it is copy+delete, where the right answer is a real table format
-# (Delta/Iceberg).
-# `recover_table` repairs any crash point; readers of a mid-commit table see
-# either the old table, the new table, or a loud missing-path error — never
-# a torn mix.
-# --------------------------------------------------------------------------
+def _jpath(jvm, path: str):
+    """``new org.apache.hadoop.fs.Path(path)`` in one py4j round trip."""
+    if _PATH_CLASS[0] is not jvm:
+        _PATH_CLASS[:] = [jvm, jvm.org.apache.hadoop.fs.Path]
+    return _PATH_CLASS[1](path)
 
 
 def _hadoop(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = _jpath(jvm, path)
     return jvm, p.getFileSystem(conf), p
 
 
 def _rename(jvm, fs, src: str, dst: str) -> None:
     ok = fs.rename(
-        jvm.org.apache.hadoop.fs.Path(src), jvm.org.apache.hadoop.fs.Path(dst)
+        _jpath(jvm, src), _jpath(jvm, dst)
     )
     if not ok:
         raise IOError(f"atomic commit: rename failed: {src} -> {dst}")
 
 
 def _exists(jvm, fs, path: str) -> bool:
-    return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
+    return fs.exists(_jpath(jvm, path))
 
 
 def _delete(jvm, fs, path: str) -> None:
-    fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
-
-
-def _touch(jvm, fs, path: str) -> None:
-    fs.create(jvm.org.apache.hadoop.fs.Path(path)).close()
+    fs.delete(_jpath(jvm, path), True)
 
 
 def _try_create_exclusive(jvm, fs, path: str, content: str = "") -> bool:
     """Atomic create-if-absent (overwrite=false): exactly one of N
     concurrent callers wins — the mutual-exclusion primitive on HDFS and
     POSIX (object stores without atomic create need a real table format's
-    commit service instead; same boundary as the rename note above).
+    commit service instead — rename is copy+delete there too).
     ``content`` (the winner's ownership token) is written into the file
     on the same exclusive stream.
 
@@ -129,7 +99,7 @@ def _try_create_exclusive(jvm, fs, path: str, content: str = "") -> bool:
     then opens it — two creators racing through that gap both win — so a
     local path is created with O_EXCL, which the kernel makes atomic."""
     if fs.getScheme() == "file":
-        local = fs.pathToFile(jvm.org.apache.hadoop.fs.Path(path)).getPath()
+        local = fs.pathToFile(_jpath(jvm, path)).getPath()
         try:
             os.makedirs(os.path.dirname(local), exist_ok=True)
             fd = os.open(local, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
@@ -139,7 +109,7 @@ def _try_create_exclusive(jvm, fs, path: str, content: str = "") -> bool:
             out.write(content)
         return True
     try:
-        out = fs.create(jvm.org.apache.hadoop.fs.Path(path), False)
+        out = fs.create(_jpath(jvm, path), False)
     except Exception:
         return False
     try:
@@ -151,7 +121,7 @@ def _try_create_exclusive(jvm, fs, path: str, content: str = "") -> bool:
 
 
 def _mtime_s(jvm, fs, path: str) -> float:
-    return fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(path)).getModificationTime() / 1000.0
+    return fs.getFileStatus(_jpath(jvm, path)).getModificationTime() / 1000.0
 
 
 #: Live heartbeats for locks held by THIS process: lock path -> record
@@ -210,7 +180,7 @@ def _start_lock_heartbeat(
                 # would silently lose its live-holder protection
                 try:
                     jvm, fs, _ = _hadoop(spark, lock)
-                    p = jvm.org.apache.hadoop.fs.Path(lock)
+                    p = _jpath(jvm, lock)
                 except Exception:
                     jvm = fs = p = None
                     continue  # retry at the next beat interval
@@ -286,10 +256,11 @@ def acquire_table_lock(
 ) -> str:
     """Take the table's commit lock (create-if-absent lock file beside the
     table). Concurrent committers spin until the holder releases; a lock
-    older than ``stale_s`` is presumed crashed and reclaimed (the next
-    committer's recover_table call then heals whatever the dead writer
-    left mid-swap). Raises TimeoutError after ``timeout_s`` — a committer
-    must never silently skip the swap it staged.
+    older than ``stale_s`` is presumed crashed and reclaimed (a dead
+    writer leaves at most unpublished staging and token dirs, which the
+    next commit's sweeps reclaim). Raises TimeoutError after
+    ``timeout_s`` — a committer must never silently skip the commit it
+    staged.
 
     A LIVE holder is never mistaken for a crashed one: the winner writes
     an ownership token into the lock file and a daemon heartbeat re-touches
@@ -407,7 +378,7 @@ def release_table_lock(spark: SparkSession, path: str) -> None:
                         return  # already gone (reclaim deleted it)
                     try:
                         cur = _read_lock_token(
-                            jvm, fs, jvm.org.apache.hadoop.fs.Path(claim)
+                            jvm, fs, _jpath(jvm, claim)
                         )
                         if cur == token:
                             _delete(jvm, fs, claim)
@@ -454,8 +425,8 @@ def assert_commit_fencing(spark: SparkSession, path: str) -> None:
     stale reclaim — a process paused past ``stale_s`` (SIGSTOP, VM
     freeze, pathological GC) that then RESUMED — must fail its publish
     loudly instead of tearing the new holder's commit. Called
-    immediately before the decisive rename of every commit protocol
-    (manifest publish, table swap), it re-reads
+    immediately before the decisive rename of every commit (the
+    manifest publish), it re-reads
     the lock file's ownership token and raises if it no longer matches
     the token this process wrote at acquire time.
 
@@ -491,7 +462,7 @@ def assert_commit_fencing(spark: SparkSession, path: str) -> None:
     jvm, fs, _ = _hadoop(spark, path)
     try:
         cur = _read_lock_token(
-            jvm, fs, jvm.org.apache.hadoop.fs.Path(lock)
+            jvm, fs, _jpath(jvm, lock)
         )
     except Exception:
         return  # claim window / transient read: token survives restores
@@ -552,12 +523,11 @@ def assert_service_fencing(spark: SparkSession, path: str) -> None:
 
 
 def _vacuum_stale_stagings(
-    jvm, fs, path: str, stale_s: float = STAGING_STALE_S, statuses=None
+    jvm, fs, path: str, stale_s: float = STAGING_STALE_S
 ) -> None:
     """Drop writer-unique staging dirs (<path>.__staging__.<token>) left by
-    writers that died BEFORE taking the lock — they are invisible to
-    recover_table (which heals only the locked commit sequence) and would
-    otherwise leak forever. Age-gated so an in-flight concurrent writer's
+    writers that died BEFORE taking the lock — no manifest references
+    them, so they would otherwise leak forever. Age-gated so an in-flight concurrent writer's
     staging is never touched (a data write outlasting STAGING_STALE_S
     would fail its later rename loudly and simply restage).
 
@@ -571,12 +541,8 @@ def _vacuum_stale_stagings(
     lock would look instantly sweep-eligible by mtime); names without a
     timestamp segment (pre-r12 strands) fall back to mtime. The age gate
     therefore protects EVERY in-flight claim, including one claimed from
-    a long-stale lock.
-
-    ``statuses``: an already-fetched ``listStatus`` of the table's parent
-    (the commit paths list it once and share it with the recovery probe —
-    each listing is a py4j round trip paid on EVERY commit)."""
-    name0 = jvm.org.apache.hadoop.fs.Path(path).getName()
+    a long-stale lock."""
+    name0 = _jpath(jvm, path).getName()
     prefix = name0 + STAGING_SUFFIX + "."
     claim_prefixes = (
         name0 + LOCK_SUFFIX + ".reclaim.",
@@ -584,10 +550,11 @@ def _vacuum_stale_stagings(
         name0 + SERVICE_LOCK_INFIX + LOCK_SUFFIX + ".reclaim.",
         name0 + SERVICE_LOCK_INFIX + LOCK_SUFFIX + ".release.",
     )
-    if statuses is None:
-        statuses = _list_siblings(jvm, fs, path)
+    parent = _jpath(jvm, path).getParent()
+    if parent is None or not fs.exists(parent):
+        return
     now = time.time()
-    for st in statuses:
+    for st in fs.listStatus(parent):
         name = st.getPath().getName()
         age = now - st.getModificationTime() / 1000.0
         if name.startswith(prefix) and age > stale_s:
@@ -595,32 +562,6 @@ def _vacuum_stale_stagings(
         elif name.startswith(claim_prefixes):
             if _claim_age_s(name, st, now) > LOCK_STALE_S:
                 fs.delete(st.getPath(), True)
-
-
-def _list_siblings(jvm, fs, path: str) -> list:
-    """``listStatus`` of the table's parent directory (empty when the
-    parent is missing). Fetched ONCE per commit, inside the lock, and
-    shared by the recovery probe and the staging/claim sweep."""
-    parent = jvm.org.apache.hadoop.fs.Path(path).getParent()
-    if parent is None or not fs.exists(parent):
-        return []
-    return list(fs.listStatus(parent))
-
-
-def _recover_needed(jvm, fs, path: str, sibling_names: set[str]) -> bool:
-    """One-probe gate for the in-lock ``recover_table`` call: recovery is
-    a pure no-op unless a commit-protocol sibling (staging or backup
-    dir) survives beside the table or the mode marker survives inside it
-    (crash between the final rename and the marker delete). The common
-    case — every previous commit completed — is NEITHER, and the full
-    probe sequence costs ~8 py4j round trips on every commit; this gate
-    reads the already-fetched sibling listing plus ONE marker probe."""
-    base = jvm.org.apache.hadoop.fs.Path(path).getName()
-    return (
-        base + STAGING_SUFFIX in sibling_names
-        or base + BACKUP_SUFFIX in sibling_names
-        or _exists(jvm, fs, f"{path}/{_TABLE_MARKER}")
-    )
 
 
 def _claim_age_s(name: str, st, now: float) -> float:
@@ -631,113 +572,6 @@ def _claim_age_s(name: str, st, now: float) -> float:
     if len(parts) >= 2 and parts[-2].isdigit():
         return now - int(parts[-2]) / 1000.0
     return now - st.getModificationTime() / 1000.0
-
-
-#: Mode marker written INSIDE staging after the write completes: its
-#: presence proves the staging is whole, so recovery may roll it forward.
-#: Underscore-prefixed => invisible to Spark's file index and partition
-#: discovery if one survives into a table dir.
-_TABLE_MARKER = "__COMMIT_TABLE__"
-
-
-def atomic_overwrite(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Replace the plain parquet table at ``path`` with ``df`` atomically
-    (whole-table swap, no history: the displaced table is deleted). Safe
-    when df READS FROM ``path``: the staging write completes against the
-    old files before any rename touches them — no localCheckpoint
-    materialization needed, the old table itself is the checkpoint until
-    commit. Tables that need time travel are snapshot tables
-    (``snapshots.snapshot_overwrite``).
-
-    CONCURRENT WRITERS (the contract BigQuery's atomic jobs give the
-    reference): each writer stages its data into a writer-unique dir
-    UNLOCKED — concurrent 100 TB writes proceed in parallel — then takes
-    the table's commit lock for the metadata swap only (milliseconds).
-    Commits serialize; the last committer wins whole; a reader always
-    sees exactly one complete table. What this does NOT give is snapshot
-    isolation for a df that READS FROM ``path`` while another writer
-    commits mid-staging — single-writer read-modify-write remains safe
-    (the old files survive until this writer's own swap), multi-writer
-    read-modify-write needs a real table format (Delta/Iceberg, SURVEY
-    section 4's production binding). Crash anywhere: pre-lock leaves an
-    age-vacuumed orphan staging and an intact table; in-swap is healed by
-    the next committer's recover_table after the stale-lock reclaim."""
-    path = path.rstrip("/")
-    staging, backup = path + STAGING_SUFFIX, path + BACKUP_SUFFIX
-    wstaging = f"{staging}.{uuid.uuid4().hex[:12]}"  # writer-unique, unlocked
-    jvm, fs, _ = _hadoop(spark, path)
-    df.write.mode("overwrite").parquet(wstaging)
-    _touch(jvm, fs, f"{wstaging}/{_TABLE_MARKER}")
-    acquire_table_lock(spark, path)
-    try:
-        sibs = _list_siblings(jvm, fs, path)
-        if _recover_needed(
-            jvm, fs, path, {st.getPath().getName() for st in sibs}
-        ):
-            recover_table(spark, path)  # heal any crashed commit first
-        _vacuum_stale_stagings(jvm, fs, path, statuses=sibs)
-        # fence BEFORE entering the recoverable sequence: past this
-        # rename, recovery rolls the commit FORWARD, so a fenced-out
-        # writer must stop while stopping still means "nothing happened"
-        assert_commit_fencing(spark, path)
-        _rename(jvm, fs, wstaging, staging)  # enter the recoverable sequence
-        had_old = _exists(jvm, fs, path)
-        if had_old:
-            _rename(jvm, fs, path, backup)
-        _rename(jvm, fs, staging, path)
-        if had_old:
-            _delete(jvm, fs, backup)
-        _delete(jvm, fs, f"{path}/{_TABLE_MARKER}")
-    finally:
-        release_table_lock(spark, path)
-
-
-def recover_table(spark: SparkSession, path: str) -> str:
-    """Repair a table whose atomic_overwrite crashed mid-commit. Decision
-    key: the mode marker inside staging — it is created only AFTER the
-    staging write finishes, so its presence proves staging is complete; a
-    marked staging rolls the commit FORWARD, an unmarked one rolls BACK to
-    the old table. Idempotent; returns what it did."""
-    path = path.rstrip("/")
-    staging, backup = path + STAGING_SUFFIX, path + BACKUP_SUFFIX
-    jvm, fs, _ = _hadoop(spark, path)
-    actions: list[str] = []
-    table_mode = _exists(jvm, fs, f"{staging}/{_TABLE_MARKER}")
-
-    if _exists(jvm, fs, staging) and not table_mode:
-        # Crashed during (or just after) the staging write, before the mode
-        # marker: no rename has happened, the target is the intact old
-        # table — roll back by dropping staging.
-        _delete(jvm, fs, staging)
-        actions.append("dropped incomplete staging")
-
-    if table_mode:
-        if _exists(jvm, fs, backup):
-            # Crashed after `path -> backup`: finish the swap.
-            if not _exists(jvm, fs, path):
-                _rename(jvm, fs, staging, path)
-                actions.append("rolled staging forward")
-            else:
-                _delete(jvm, fs, staging)  # swap already finished
-                actions.append("dropped committed staging")
-            _delete(jvm, fs, backup)
-            actions.append("dropped backup")
-        elif _exists(jvm, fs, path):
-            # Crashed before `path -> backup`: commit never started.
-            _delete(jvm, fs, staging)
-            actions.append("dropped pre-commit staging")
-        else:
-            # First write ever (no old table): just roll forward.
-            _rename(jvm, fs, staging, path)
-            actions.append("rolled staging forward")
-    elif _exists(jvm, fs, backup) and _exists(jvm, fs, path):
-        # crash between final rename and backup disposal
-        _delete(jvm, fs, backup)
-        actions.append("dropped backup")
-
-    if _exists(jvm, fs, f"{path}/{_TABLE_MARKER}"):
-        _delete(jvm, fs, f"{path}/{_TABLE_MARKER}")
-    return "; ".join(actions) or "clean"
 
 
 def write_partitioned(

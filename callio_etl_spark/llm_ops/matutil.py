@@ -29,27 +29,40 @@ Threshold: ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` x
 64 MB advisory default). Both are runtime confs, so a deployment sizes
 the gate to its executors without code changes; the factor — not a
 fixed byte count — keeps the rule scale-adaptive the same way the
-write-distribution gate is. Scratch dirs are created under the system
-temp dir and removed at interpreter exit (they must outlive the
-returned frame's consumers, which is the rest of the query run).
+write-distribution gate is. Scratch dirs are created under
+``spark.sql.warehouse.dir`` — a root every executor can write, where the
+driver's temp dir is a path on one machine — and removed through the
+Hadoop FS at interpreter exit (they must outlive the returned frame's
+consumers, which is the rest of the query run).
 """
 
 from __future__ import annotations
 
 import atexit
 import shutil
-import tempfile
+import uuid
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
+from callio_etl_spark.io import _hadoop
 from callio_etl_spark.snapshots import _parse_bytes_conf, _plan_size_estimate
 
+#: Qualified URIs of the spill scratch dirs this process wrote.
 _SCRATCH_DIRS: list[str] = []
 
 
-def _cleanup_scratch() -> None:  # pragma: no cover - atexit plumbing
+def _cleanup_scratch() -> None:
+    """Remove every spill scratch dir through the Hadoop FS (a local one
+    directly once the session is stopped)."""
+    spark = SparkSession.getActiveSession()
     for d in _SCRATCH_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
+        try:
+            _, fs, p = _hadoop(spark, d)
+            fs.delete(p, True)
+        except Exception:
+            if d.startswith("file:"):
+                shutil.rmtree(urlparse(d).path, ignore_errors=True)
     _SCRATCH_DIRS.clear()
 
 
@@ -72,7 +85,9 @@ def materialize(df: DataFrame, label: str = "tbl") -> DataFrame:
         advisory, factor = 64 * 1024 * 1024, 16
     if est is None or est < advisory * max(1, factor):
         return df.localCheckpoint(eager=True)
-    scratch = tempfile.mkdtemp(prefix=f"callio_mat_{label}_")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
+    _, fs, p = _hadoop(spark, f"{warehouse}/callio_mat_{label}_{uuid.uuid4().hex}")
+    scratch = fs.makeQualified(p).toString()
     _SCRATCH_DIRS.append(scratch)
     df.write.mode("overwrite").parquet(scratch)
     return spark.read.parquet(scratch)

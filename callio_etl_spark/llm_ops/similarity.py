@@ -2238,16 +2238,20 @@ VINDEX_BUCKETS = 64
 
 def _ckpt_once(df: DataFrame) -> DataFrame:
     """``localCheckpoint(eager=True)`` unless the frame already IS a
-    checkpoint (a LogicalRDD plan). The service roundtrips pass the same
-    quantizer frame into several maintain/rebuild calls; each call used
-    to re-checkpoint it (~0.2 s job apiece, r15 profile: 22
-    localCheckpoint jobs in one rebuild_vector_index pass). One cheap
-    plan-class probe replaces the redundant jobs; any probe failure
-    falls back to checkpointing (always safe)."""
+    checkpoint: a LogicalRDD plan over an RDD that has been checkpointed
+    (``spark.createDataFrame(rdd)`` and a lazy checkpoint also plan as a
+    LogicalRDD, but recompute their lineage on every use). The service
+    roundtrips pass the same quantizer frame into several
+    maintain/rebuild calls; each call used to re-checkpoint it (~0.2 s
+    job apiece, r15 profile: 22 localCheckpoint jobs in one
+    rebuild_vector_index pass). One cheap plan probe replaces the
+    redundant jobs; any probe failure falls back to checkpointing
+    (always safe)."""
     try:
+        plan = df._jdf.queryExecution().analyzed()
         if (
-            df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-            == "LogicalRDD"
+            plan.getClass().getSimpleName() == "LogicalRDD"
+            and plan.rdd().isCheckpointed()
         ):
             return df
     except Exception:

@@ -173,12 +173,13 @@ def stage_batch(
     batch: DataFrame,
     staging_path: str,
 ) -> int:
-    """STAGED — land the transformed batch in its staging table (S13)
-    and audit the landing with the staged row count, checkpoint
-    untouched (the checkpoint advances only when the later MERGE
-    commits — reference runner.py:139-146: customer rows are STAGED per
-    tenant, merged per window). Returns the staged row count."""
-    from callio_etl_spark.io import load_append
+    """STAGED — land the transformed batch in its staging table (S13, a
+    whole snapshot table: one ``snapshot_append`` per landing) and audit
+    the landing with the staged row count, checkpoint untouched (the
+    checkpoint advances only when the later MERGE commits — reference
+    runner.py:139-146: customer rows are STAGED per tenant, merged per
+    window). Returns the staged row count."""
+    from callio_etl_spark.snapshots import snapshot_append
 
     # pin the batch across the count + write pair: the audited row count
     # must equal the rows actually staged even under a nondeterministic
@@ -189,7 +190,7 @@ def stage_batch(
         if n == 0:
             store.log(table, tenant, 0, None, "NOOP")
             return 0
-        load_append(batch, staging_path)
+        snapshot_append(batch.sparkSession, batch, staging_path, None)
         store.log(table, tenant, n, None, "STAGED")
         return n
     finally:
@@ -206,10 +207,11 @@ def append_tick(
 ) -> int | None:
     """APPEND — the reference's call-log shape (runner.py:295-313):
     append-only facts land straight in the target (no MERGE — call
-    records are immutable), the checkpoint advances to the batch's max
-    event time, and the audit row carries the NEW checkpoint. Returns
-    the new checkpoint (None on an empty batch, which audits NOOP)."""
-    from callio_etl_spark.io import load_append
+    records are immutable; one whole-table ``snapshot_append``), the
+    checkpoint advances to the batch's max event time, and the audit row
+    carries the NEW checkpoint. Returns the new checkpoint (None on an
+    empty batch, which audits NOOP)."""
+    from callio_etl_spark.snapshots import snapshot_append
 
     fresh = batch.where(F.col(table.tenant_col) == tenant).persist()
     try:
@@ -219,7 +221,7 @@ def append_tick(
                 table.name, tenant, 0, store.get(table.name, tenant), "NOOP"
             )
             return None
-        load_append(fresh, target_path)
+        snapshot_append(spark, fresh, target_path, None)
         prior = store.get(table.name, tenant)
         if prior is None or (max_ms is not None and max_ms > prior):
             store.set(table.name, tenant, max_ms)

@@ -563,8 +563,9 @@ def _snapshot_loop_tick(
         store.log("HttpSnapEvents", "PK", n_rows, int(new_ck), "MERGED")
         store.flush()
         # retention at the tick's quiet point, still inside the
-        # single-writer section (no concurrent flush can race the swap):
-        # one dir listing per tick, a rewrite ~once per max_files ticks
+        # single-writer section (no concurrent flush can race the
+        # rewrite): one manifest read per tick, a rewrite ~once per
+        # max_files ticks
         store.compact_if_needed()
 
 
@@ -703,7 +704,7 @@ def update_log_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     _normalize_table on the write path too."""
     import shutil as _shutil
 
-    from callio_etl_spark.checkpoints import UPDATE_LOG_SCHEMA, CheckpointStore
+    from callio_etl_spark.checkpoints import CheckpointStore
     from callio_etl_spark.pipeline import (
         IncrementalTable,
         append_tick,
@@ -714,6 +715,7 @@ def update_log_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage_batch,
     )
     from callio_etl_spark.queries.sinks import _tmp
+    from callio_etl_spark.snapshots import snapshot_read
     from callio_etl_spark.sources.local_api_server import LocalCallioApiServer
     from callio_etl_spark.sources.paged_api import HttpApiTransport
 
@@ -801,7 +803,7 @@ def update_log_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store.flush()
 
-    log = spark.read.schema(UPDATE_LOG_SCHEMA).parquet(f"{root}/update_log")
+    log = snapshot_read(spark, f"{root}/update_log")
     result = log.groupBy("table_name", "mode").agg(
         F.count("*").cast("long").alias("n_entries"),
         F.sum("rows_loaded").cast("long").alias("rows_sum"),

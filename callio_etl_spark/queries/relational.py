@@ -436,16 +436,14 @@ def checkpoint_log_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm() to the cold-start lookback) all break the hash. warm() parity
     across the compaction is additionally asserted in-query.
 
-    Scale shape: two window passes + one atomic whole-table swap over a
-    log that is metadata-sized by construction (one row per tick), never
-    the data tables themselves."""
+    Scale shape: two window passes + one ``snapshot_overwrite`` commit
+    over a log that is metadata-sized by construction (one row per tick),
+    never the data tables themselves."""
     import shutil as _shutil
 
-    from callio_etl_spark.checkpoints import (
-        UPDATE_LOG_SCHEMA,
-        CheckpointStore,
-    )
+    from callio_etl_spark.checkpoints import CheckpointStore
     from callio_etl_spark.queries.sinks import _tmp
+    from callio_etl_spark.snapshots import snapshot_append, snapshot_read
 
     e = load_table(spark, sf_dir, "events")
     log = (
@@ -473,8 +471,9 @@ def checkpoint_log_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     root = _tmp("cklog")
-    # many small files — the exact shape a per-tick flush leaves behind
-    log.repartition(24).write.mode("append").parquet(root)
+    # many small files in the log's snapshot format — the shape a run of
+    # per-tick flushes leaves behind
+    snapshot_append(spark, log.repartition(24), root, None)
     try:
         store = CheckpointStore(spark, root)
         before = CheckpointStore(spark, root)
@@ -487,7 +486,7 @@ def checkpoint_log_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "compaction changed the warmed checkpoints: "
                 f"{before._cache} != {after._cache}"
             )
-        out = spark.read.schema(UPDATE_LOG_SCHEMA).parquet(root).select(
+        out = snapshot_read(spark, root).select(
             "table_name",
             "tenant",
             F.unix_millis("updated_at").alias("updated_ms"),

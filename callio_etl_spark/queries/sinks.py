@@ -10,10 +10,10 @@ merge, mis-scoped delete, or partition clobber changes the aggregate and
 breaks the hash match.
 
 Scale notes: the writes are the same code paths production uses
-(append+mergeSchema, partitionBy+sortWithinPartitions, snapshot commits
-and merge-on-read deletes); the roundtrip data here is sf-sized, and every aggregate is a
-map-combined hash agg over the read-back — nothing driver-side except the
-temp-dir bookkeeping.
+(whole-table appends with schema union, partitioned snapshot commits and
+merge-on-read deletes); the roundtrip data here is sf-sized, and every
+aggregate is a map-combined hash agg over the read-back — nothing
+driver-side except the temp-dir bookkeeping.
 """
 
 from __future__ import annotations
@@ -25,11 +25,7 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from callio_etl_spark.io import (
-    load_append,
-    load_truncate,
-    stage_temp_view,
-)
+from callio_etl_spark.io import stage_temp_view
 from callio_etl_spark.registry import register
 from callio_etl_spark.tables import load_table
 
@@ -70,28 +66,38 @@ FROM u
     tags=["S8", "S9", "S10", "S13", "sink"],
 )
 def sink_append_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8/S9 roundtrip + S13/S10 readback: bootstrap a table with the
-    truncate sink (2-column slice), append a second slice that ADDS the
-    o_totalprice column (schema evolution), read back with mergeSchema so
-    the evolved column surfaces (NULL for pre-evolution rows), stage the
-    readback as a temp view, and aggregate it through the SQL channel.
-    The oracle rebuilds the expected post-evolution table in SQL; an
-    append that overwrote, a merge that dropped the new column, or NULL
-    backfill applied to the wrong slice all break the hash."""
+    """S8/S9 roundtrip + S13/S10 readback: bootstrap a whole snapshot
+    table with the truncate sink (``snapshot_overwrite``, 2-column
+    slice), append a second slice that ADDS the o_totalprice column
+    (``snapshot_append``, whose committed schema is the union), read it
+    back so the evolved column surfaces (NULL for pre-evolution rows),
+    stage the readback as a temp view, and aggregate it through the SQL
+    channel. The oracle rebuilds the expected post-evolution table in
+    SQL; an append that overwrote, a union that dropped the new column,
+    or NULL backfill applied to the wrong slice all break the hash."""
+    from callio_etl_spark.snapshots import (
+        snapshot_append,
+        snapshot_overwrite,
+        snapshot_read,
+    )
+
     root = _tmp("append")
     path = f"{root}/orders_t"
     o = load_table(spark, sf_dir, "orders")
-    load_truncate(
+    snapshot_overwrite(
+        spark,
         o.where(F.col("o_orderkey") % 7 == 0).select("o_orderkey", "o_custkey"),
         path,
     )
-    load_append(
+    snapshot_append(
+        spark,
         o.where(F.col("o_orderkey") % 7 == 1).select(
             "o_orderkey", "o_custkey", "o_totalprice"
         ),
         path,
+        None,
     )
-    back = spark.read.option("mergeSchema", "true").parquet(path)
+    back = snapshot_read(spark, path)
     view = stage_temp_view(back, f"stg_sink_{uuid.uuid4().hex}")
     result = spark.sql(
         f"""
@@ -1523,6 +1529,7 @@ def ivm_refresh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from callio_etl_spark.snapshots import (
         maintain_join_view,
         snapshot_partition_overwrite,
+        snapshot_read,
     )
 
     root = _tmp("ivmj")
@@ -1588,7 +1595,7 @@ def ivm_refresh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = maintain()  # ONE refresh folds both feeds
     if not (v1 > v0):
         raise AssertionError(f"view did not advance: {v0} -> {v1}")
-    view = spark.read.parquet(vp).drop("_fact_version", "_dim_version")
+    view = snapshot_read(spark, vp).drop("_fact_version", "_dim_version")
     result = view.select(
         "seg",
         F.col("n"),

@@ -83,62 +83,19 @@ def register(name: str, oracle: str | None = None, tags: list[str] | None = None
 #: stream_ingest_vector_index — the rebuilds are themselves r10-stale),
 #: then the r10-vintage cohort oldest-first alphabetically (27 fit; the
 #: remaining 17 hold positions 51-67 and lead the next window).
+#:
+#: r16 rotation: the ledger from CORRECTNESS_r01..r15 shows the 17
+#: r10-vintage rows r15 left at positions 51-67 as the oldest; they lead.
+#: Next come the six rows whose write path moved onto the snapshot verbs
+#: when the update_log, the IVM views and the S8/S9 sinks became
+#: snapshot tables (update_log_modes, checkpoint_log_compact, the two
+#: HTTP loops, ivm_refresh_agg, ivm_refresh_join; sink_append_evolve,
+#: sink_version_diff and sink_versioned_restore are already in the lead
+#: group). The r11-vintage cohort fills the rest oldest-first
+#: alphabetically (27 of 45 fit; the remaining 18 hold positions 51-68
+#: and lead the next window).
 DRIVER_PRIORITY: list[str] = [
-    # --- the r9-vintage cohort: oldest driver rows, must refresh (18)
-    "pack_sequences",
-    "pq_codes",
-    "sink_segmented_manifest",
-    "sink_widen_evolve",
-    "stream_ingest_band_index",
-    "tpch_q19_discounted",
-    "tpch_q20_promotion_suppliers",
-    "tpch_q21_waiting_orders",
-    "tpch_q22_opportunity",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q3_topk",
-    "tpch_q4_priority",
-    "tpch_q5_volume",
-    "tpch_q6_forecast",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_profit",
-    "weighted_sample",
-    # --- canaries: the index-service paths r15 restructures (5) ---
-    "maintain_band_index",
-    "maintain_vector_index",
-    "rebuild_band_index",
-    "rebuild_vector_index",
-    "stream_ingest_vector_index",
-    # --- oldest-first re-checks: the r10-vintage cohort (27 of 47) ---
-    "api_http_ingest",
-    "array_hof_suite",
-    "asof_join_latest_order",
-    "bigram_lm_score",
-    "bitwise_agg_suite",
-    "bm25_topk",
-    "bpe_pair_counts",
-    "bpe_segment_docs",
-    "bpe_train_merges",
-    "char_diversity",
-    "cross_source_neardup",
-    "cube_agg",
-    "curriculum_bins",
-    "date_fn_suite",
-    "date_spine_fill",
-    "dedup_pipeline",
-    "dedup_span_removal",
-    "distinct_rows",
-    "domain_stats",
-    "embedding_decontaminate",
-    "embedding_neardup_cells",
-    "grouping_sets_explicit",
-    "hashed_classifier_score",
-    "heavy_hitters_cms",
-    "hopping_window_agg",
-    "hybrid_rrf_fusion",
-    "ivf_delta_assign",
-    # --- positions 51-67: the r10 cohort's remaining seventeen fall
-    #     just outside the 50-row window and lead the next window
+    # --- the r10-vintage rows from r15's positions 51-67 (17) ---
     "ivf_train_rounds",
     "join_anti",
     "join_semi",
@@ -156,6 +113,61 @@ DRIVER_PRIORITY: list[str] = [
     "sink_versioned_restore",
     "unigram_rarity",
     "zorder_layout",
+    # --- canaries: the write paths now on the snapshot verbs (6) ---
+    "update_log_modes",
+    "checkpoint_log_compact",
+    "http_incremental_loop",
+    "http_loop_snapshot_sink",
+    "ivm_refresh_agg",
+    "ivm_refresh_join",
+    # --- oldest-first re-checks: the r11-vintage cohort (27 of 45) ---
+    "ann_topk_brute",
+    "ann_topk_ivf",
+    "checkpoint_warm",
+    "chunk_documents",
+    "chunk_overlap",
+    "conditional_agg",
+    "corpus_filter",
+    "curriculum_bins_audit",
+    "customer_in_range",
+    "dedup_cluster_assign",
+    "dedup_exact",
+    "dedup_first_wins",
+    "dedup_survivors",
+    "dq_checks",
+    "embedding_neardup",
+    "embedding_neardup_bucketed",
+    "embedding_quantize",
+    "exists_subquery",
+    "extrema",
+    "frame_sample",
+    "hash_split",
+    "join_fanout",
+    "join_full_outer",
+    "join_left_dim",
+    "merge_upsert_mor",
+    "merge_upsert_snapshot",
+    "minhash_lsh_pairs_capped",
+    # --- positions 51-68: the r11 cohort's remaining eighteen fall
+    #     just outside the 50-row window and lead the next window
+    "minhash_lsh_pairs_grouped",
+    "percentile_summary",
+    "pivot_event_types",
+    "pmi_cooccurrence",
+    "posexplode_tokens",
+    "profile_columns",
+    "range_join_bucketed",
+    "regexp_suite",
+    "rollup_agg",
+    "semantic_dedup",
+    "semantic_dedup_gemm",
+    "sessionize",
+    "set_intersect_except",
+    "sink_bloom_skip",
+    "sink_compact_vacuum",
+    "sketch_error_bounds",
+    "token_dist_drift",
+    "vocab_coverage",
 ]
 
 

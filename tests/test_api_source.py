@@ -1104,7 +1104,7 @@ def test_snapshot_loop_tick_error_login_holds_checkpoint(spark, tmp_path):
         assert not os.path.exists(f"{table_path}/{SNAP_DIR}"), (
             "failed login still published"
         )
-        log = spark.read.parquet(f"{root}/update_log")
+        log = snapshot_read(spark, f"{root}/update_log")
         el = log.where("mode = 'ERROR_LOGIN'").collect()
         assert len(el) == 1 and el[0]["rows_loaded"] == 0
         store = CheckpointStore(spark, f"{root}/update_log")
@@ -1151,7 +1151,9 @@ def test_snapshot_loop_noop_tick_runs_retention(spark, tmp_path, monkeypatch):
         spark.dataSource.register(CallioPagedDataSource)
         _snapshot_loop_tick(spark, base, root, T0 + 8 * HOUR)
         assert calls, "NOOP tick skipped update_log retention"
-        log = spark.read.parquet(f"{root}/update_log")
+        from callio_etl_spark.snapshots import snapshot_read
+
+        log = snapshot_read(spark, f"{root}/update_log")
         assert {r["mode"] for r in log.collect()} == {"NOOP"}
     finally:
         srv.stop()

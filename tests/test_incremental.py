@@ -10,6 +10,7 @@ import pytest
 from callio_etl_spark.checkpoints import CheckpointStore
 from callio_etl_spark.flatten import flatten_customer
 from callio_etl_spark.pipeline import IncrementalTable, commit, run_tick
+from callio_etl_spark.snapshots import snapshot_read
 
 SCHEMA = (
     "_id string, assignedTime long, createTime long, updateTime long,"
@@ -115,7 +116,7 @@ def test_noop_and_log_modes(spark, store, tmp_path):
     assert ck2 is None
     assert store.get("customer", "PK") == ck1
 
-    log = spark.read.parquet(store.log_path)
+    log = snapshot_read(spark, store.log_path)
     modes = {r["mode"] for r in log.collect()}
     assert modes == {"MERGED", "NOOP"}
 
@@ -125,73 +126,123 @@ def test_noop_and_log_modes(spark, store, tmp_path):
     assert fresh.get("customer", "PK") == ck1
 
 
+def test_local_flush_starts_no_spark_job(spark, store):
+    """A flush on a local log path is one whole-table snapshot_append
+    commit whose rows pyarrow stages on the driver: no Spark job (a job
+    costs a fixed ~0.5 s per flushed tick). Counted as the delta of the
+    status tracker's job ids around the flush."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def job_ids():
+        spark.sparkContext.setJobGroup("flush-probe", "flush job count")
+        return set(tracker.getJobIdsForGroup("flush-probe"))
+
+    store.log("t1", "PK", 1, 1000, "MERGED")
+    store.flush()  # the first flush creates the table
+    before = job_ids()
+    try:
+        store.log("t1", "PK", 2, 2000, "MERGED")
+        store.flush()
+        assert set(tracker.getJobIdsForGroup("flush-probe")) == before
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert not store._buffer, "flush did not clear the buffer"
+    fresh = CheckpointStore(spark, store.log_path)
+    fresh.warm()
+    assert fresh.get("t1", "PK") == 2000
+
+
 def test_flush_local_fastpath_byte_parity_with_spark_writer(spark, store):
-    """r15 flush fast path: a LOCAL log path appends audit rows through a
-    driver-side pyarrow write (the Spark job costs a fixed ~0.5-0.9 s per
-    flushed tick; the bytes are the same). Parity is the contract: a log
-    holding BOTH Spark-written and fastpath-written files must read back
-    identically through warm()'s explicit-schema read and through a
-    schema-inferring read, timestamps and NULLs intact."""
+    """The update_log holds data dirs staged two ways: pyarrow on the
+    driver (a flush on a local path) and Spark's writer (a DataFrame
+    append, and every flush on a non-local filesystem). Both must read
+    back identically through snapshot_read and through a
+    schema-inferring read of the data dirs themselves, timestamps and
+    NULLs intact."""
     import datetime as dt
 
     from callio_etl_spark.checkpoints import UPDATE_LOG_SCHEMA
+    from callio_etl_spark.snapshots import snapshot_append, snapshot_manifest
 
-    # one Spark-written file (the remote-warehouse arm, forced)
-    spark.createDataFrame(
-        [("t1", "PK", dt.datetime(2024, 1, 1, 12, 0, 0), 5, 1000, "MERGED")],
-        UPDATE_LOG_SCHEMA,
-    ).repartition(1).write.mode("append").parquet(store.log_path)
-    # two fastpath-written rows, one with a NULL checkpoint
+    # one Spark-staged leaf, then two pyarrow-staged rows, one with a
+    # NULL checkpoint
+    snapshot_append(
+        spark,
+        spark.createDataFrame(
+            [("t1", "PK", dt.datetime(2024, 1, 1, 12, 0, 0), 5, 1000, "MERGED")],
+            UPDATE_LOG_SCHEMA,
+        ),
+        store.log_path,
+        None,
+    )
     store.log("t1", "PK", 7, None, "NOOP")
     store.log("t2", "VN", 0, 2000, "ERROR_LOGIN")
     store.flush()
     assert not store._buffer, "flush did not clear the buffer"
 
-    got = {
-        (r["table_name"], r["tenant"], r["updated_at"] is not None,
-         r["rows_loaded"], r["max_update_ms"], r["mode"])
-        for r in spark.read.schema(UPDATE_LOG_SCHEMA)
-        .parquet(store.log_path).collect()
-    }
-    assert got == {
+    want = {
         ("t1", "PK", True, 5, 1000, "MERGED"),
         ("t1", "PK", True, 7, None, "NOOP"),
         ("t2", "VN", True, 0, 2000, "ERROR_LOGIN"),
     }
-    # schema-inferring read over the mixed file set agrees with the
-    # declared schema (no NTZ drift, no int32 narrowing)
-    inferred = spark.read.parquet(store.log_path)
+
+    def rows(df):
+        return {
+            (r["table_name"], r["tenant"], r["updated_at"] is not None,
+             r["rows_loaded"], r["max_update_ms"], r["mode"])
+            for r in df.collect()
+        }
+
+    got = snapshot_read(spark, store.log_path)
+    assert got.schema == UPDATE_LOG_SCHEMA
+    assert rows(got) == want
+    # schema-inferring read over both data dirs agrees with the declared
+    # schema (no NTZ drift, no int32 narrowing)
+    m = snapshot_manifest(spark, store.log_path)
+    dirs = [
+        f"{store.log_path}/{leaf}/{tok}"
+        for leaf, toks in m["partitions"].items()
+        for tok in toks
+    ]
+    assert len(dirs) == 2
+    inferred = spark.read.parquet(*dirs)
     assert inferred.schema == UPDATE_LOG_SCHEMA
-    # warm() folds the fastpath rows back (the checkpoint row survives)
+    assert rows(inferred) == want
+    # warm() folds the pyarrow-staged rows back
     fresh = CheckpointStore(spark, store.log_path)
     fresh.warm()
     assert fresh.get("t2", "VN") == 2000
-    # a remote-scheme path refuses the fastpath (falls back to Spark)
-    remote = CheckpointStore(spark, "s3a://bucket/update_log")
-    remote.log("t", "PK", 1, 1, "MERGED")
-    assert remote._flush_local_fastpath() is False
 
 
 def test_flush_fastpath_follows_default_fs_scheme(spark, tmp_path):
     """A scheme-less log path resolves against ``fs.defaultFS``: on a
-    cluster whose default filesystem is HDFS, the driver-side pyarrow
-    append would land on the driver's local disk, where warm() and
-    compact() never look — the fast path must refuse it."""
+    cluster whose default filesystem is HDFS, a driver-side pyarrow
+    write would land on the driver's local disk, where warm() and
+    compact() never look. With no namenode here, a viewfs default FS
+    mounted onto a local dir stands in for it: the flush must stage
+    through Spark, land under the mount, and write nothing at the
+    scheme-less path on the driver's disk."""
     conf = spark.sparkContext._jsc.hadoopConfiguration()
+    remote, mounted = tmp_path / "remote", tmp_path / "mounted"
+    link = f"fs.viewfs.mounttable.c.link.{remote}"
     old = conf.get("fs.defaultFS")
-    conf.set("fs.defaultFS", "hdfs://nn:8020")
+    conf.set(link, f"file://{mounted}")
+    conf.set("fs.defaultFS", "viewfs://c/")
     try:
-        store = CheckpointStore(spark, str(tmp_path / "update_log"))
+        store = CheckpointStore(spark, f"{remote}/update_log")
         store.log("t", "PK", 1, 1, "MERGED")
-        assert store._flush_local_fastpath() is False
-        assert not (tmp_path / "update_log").exists()
+        store.flush()
+        fresh = CheckpointStore(spark, store.log_path)
+        fresh.warm()
+        assert fresh.get("t", "PK") == 1
     finally:
         if old is None:
             conf.unset("fs.defaultFS")
         else:
             conf.set("fs.defaultFS", old)
-    # back on the local default the same path takes the fast path
-    assert store._flush_local_fastpath() is True
+        conf.unset(link)
+    assert not remote.exists(), "the flush wrote to the driver's disk"
+    assert (mounted / "update_log" / "__snap__").is_dir()
 
 
 def test_checkpoint_table_name_normalization(spark, store):
@@ -308,15 +359,16 @@ def test_merge_upsert_null_key_rows_survive(spark):
 def test_update_log_compaction_bounds_files_and_keeps_checkpoints(
     spark, store, tmp_path
 ):
-    """r12: the update_log appends one parquet file per flushed tick
+    """r12: the update_log gains one parquet file per flushed tick
     forever; compact() bounds it to newest-N audit rows per key PLUS
     each key's checkpoint row (max max_update_ms) — which must survive
     even when a long run of NOOP ticks pushes it past the audit window —
-    and a fresh store's warm() sees identical checkpoints after."""
-    import glob
-    import os
-
+    and a fresh store's warm() sees identical checkpoints after. Files
+    are counted on the live snapshot (what every warm() scans)."""
     from callio_etl_spark.checkpoints import CheckpointStore
+
+    def live_files():
+        return len(snapshot_read(spark, store.log_path).inputFiles())
 
     # 8 flushed ticks for TableA: one MERGED advance to T0+5h, then 7
     # NOOP audit rows carrying a STALE watermark (T0+1h) — newer by
@@ -330,7 +382,7 @@ def test_update_log_compaction_bounds_files_and_keeps_checkpoints(
             store.log("TableA", "PK", 0, T0 + 1 * HOUR, "NOOP")
         store.log("Table-B", "PK", 10 + i, T0 + i * HOUR, "MERGED")
         store.flush()
-    files_before = len(glob.glob(store.log_path + "/*.parquet"))
+    files_before = live_files()
     assert files_before >= 8, "precondition: one file per flush"
 
     warm_before = CheckpointStore(spark, store.log_path)
@@ -339,7 +391,7 @@ def test_update_log_compaction_bounds_files_and_keeps_checkpoints(
     # per key: 3 audit rows; TableA's checkpoint row (the i==0 MERGED,
     # OLDER than the 3 newest NOOPs) must be the +1
     assert kept == 7, f"retained {kept}, want 3+1 (TableA) + 3 (Table-B)"
-    files_after = len(glob.glob(store.log_path + "/*.parquet"))
+    files_after = live_files()
     assert files_after < files_before
 
     warm_after = CheckpointStore(spark, store.log_path)
@@ -347,7 +399,7 @@ def test_update_log_compaction_bounds_files_and_keeps_checkpoints(
     for key in (("tablea", "PK"), ("table_b", "PK")):
         assert warm_after._cache[key] == warm_before._cache[key], key
     # the preserved TableA checkpoint row is the MERGED one
-    rows = spark.read.parquet(store.log_path).where(
+    rows = snapshot_read(spark, store.log_path).where(
         "table_name = 'tablea' and mode = 'MERGED'"
     ).collect()
     assert len(rows) == 1 and rows[0]["max_update_ms"] == T0 + 5 * HOUR
@@ -424,7 +476,7 @@ def test_flush_vs_compact_never_loses_rows(spark, store):
         t.join()
     assert not errors, errors
     assert compactions, "compactor never got a turn"
-    n = spark.read.parquet(store.log_path).count()
+    n = snapshot_read(spark, store.log_path).count()
     assert n == n_ticks, f"lost {n_ticks - n} audit rows to the race"
     after = CheckpointStore(spark, store.log_path)
     after.warm()
@@ -467,7 +519,7 @@ def test_audit_mode_vocabulary_emitted_from_triggers(spark, store, tmp_path):
     new_ck = append_tick(spark, store, table, batch, str(tmp_path / "cl"), "T1")
     assert new_ck == T0 + 2 * HOUR
     assert store.get("call-log", "T1") == T0 + 2 * HOUR
-    assert spark.read.parquet(str(tmp_path / "cl")).count() == 2
+    assert snapshot_read(spark, str(tmp_path / "cl")).count() == 2
     # an older replay never rewinds the checkpoint (reference runner.py:310)
     old = spark.createDataFrame([("c", T0, "T1")], "id string, ts_ms long, tenant string")
     append_tick(spark, store, table, old, str(tmp_path / "cl"), "T1")
@@ -478,7 +530,7 @@ def test_audit_mode_vocabulary_emitted_from_triggers(spark, store, tmp_path):
 
     log = {
         (r["table_name"], r["tenant"], r["mode"]): r
-        for r in spark.read.parquet(store.log_path).collect()
+        for r in snapshot_read(spark, store.log_path).collect()
     }
     assert log[("call_log", "T9", "ERROR_LOGIN")]["rows_loaded"] == 0
     assert log[("call_log", "T9", "ERROR_LOGIN")]["max_update_ms"] is None
@@ -524,60 +576,44 @@ def test_compact_retention_over_mixed_mode_history(spark, store):
     after = CheckpointStore(spark, store.log_path)
     after.warm()
     assert after.get("call-log", "T1") == before.get("call-log", "T1") == T0 + 3 * HOUR
-    kept = spark.read.parquet(store.log_path)
+    kept = snapshot_read(spark, store.log_path)
     assert kept.where("mode = 'APPEND'").count() == 1, "checkpoint row dropped"
     # the mode-free keys keep their newest audit rows too
     assert kept.where("table_name = 'group'").count() == 1
 
 
-def test_warm_and_flush_heal_a_torn_compact_swap(spark, store):
-    """r13: compact()'s whole-table swap can be killed between its two
-    renames — the entire log then sits under the BACKUP name with the
-    committed staging beside it. A daemon restarting in that window must
-    NOT cold-start (warm() rolls the swap forward first), and a flush
-    landing first must NOT recreate the path (recovery would then read
-    'swap already finished' and dispose the backup — the entire
-    pre-crash history)."""
-    from callio_etl_spark.checkpoints import CheckpointStore
-    from callio_etl_spark.io import (
-        _TABLE_MARKER,
-        BACKUP_SUFFIX,
-        STAGING_SUFFIX,
-        _hadoop,
-        _rename,
-        _touch,
+def test_plain_parquet_update_log_is_refused(spark, tmp_path):
+    """A plain parquet update_log (the layout before the log became a
+    snapshot table) must make warm(), flush() and compact() raise with
+    the path and the migration: read as "no snapshot", every checkpoint
+    would silently cold-start to the 30-day lookback. The same holds for
+    the whole log left under the ``.__backup__`` sibling by a crashed
+    rename swap of that layout. Nothing is written to either path."""
+    import datetime as dt
+    import os
+
+    from callio_etl_spark.checkpoints import UPDATE_LOG_SCHEMA
+
+    row = [("t", "PK", dt.datetime(2024, 1, 1), 5, T0, "MERGED")]
+    plain = str(tmp_path / "plain_log")
+    spark.createDataFrame(row, UPDATE_LOG_SCHEMA).write.parquet(plain)
+    torn = str(tmp_path / "torn_log")
+    spark.createDataFrame(row, UPDATE_LOG_SCHEMA).write.parquet(
+        torn + ".__backup__"
     )
-
-    store.log("TableA", "PK", 5, T0 + 3 * HOUR, "MERGED")
-    store.flush()
-    path = store.log_path
-    jvm, fs, _ = _hadoop(spark, path)
-
-    def tear():
-        # the exact crash state: path -> backup done, staging (marked,
-        # i.e. fully written) not yet renamed in
-        spark.read.parquet(path).write.mode("overwrite").parquet(
-            path + STAGING_SUFFIX
-        )
-        _touch(jvm, fs, f"{path}{STAGING_SUFFIX}/{_TABLE_MARKER}")
-        _rename(jvm, fs, path, path + BACKUP_SUFFIX)
-
-    tear()
-    fresh = CheckpointStore(spark, path)
-    fresh.warm()  # must heal, not cold-start
-    assert fresh.get("TableA", "PK") == T0 + 3 * HOUR
-    assert spark.read.parquet(path).count() == 1
-
-    tear()
-    # flush-first path: the append must heal BEFORE creating the table
-    fresh2 = CheckpointStore(spark, path)
-    fresh2.log("TableA", "PK", 1, T0 + 4 * HOUR, "MERGED")
-    fresh2.flush()
-    log = spark.read.parquet(path)
-    assert log.count() == 2, "torn swap lost the pre-crash history"
-    after = CheckpointStore(spark, path)
-    after.warm()
-    assert after.get("TableA", "PK") == T0 + 4 * HOUR
+    for path in (plain, torn):
+        before = sorted(os.listdir(tmp_path))
+        store = CheckpointStore(spark, path)
+        store.log("t", "PK", 1, T0 + HOUR, "MERGED")
+        for step in (store.warm, store.flush, store.compact):
+            with pytest.raises(RuntimeError, match="plain parquet table") as exc:
+                step()
+            assert path in str(exc.value)
+            assert "spark.read.parquet" in str(exc.value)
+            assert "snapshot_overwrite" in str(exc.value)
+        assert store.get("t", "PK") is None
+        assert sorted(os.listdir(tmp_path)) == before
+        assert not os.path.exists(f"{path}/__snap__")
 
 
 def test_update_log_lock_waits_tick_sized_not_commit_sized(
@@ -604,11 +640,13 @@ def test_update_log_lock_waits_tick_sized_not_commit_sized(
 
     store.log("Customer", "PK", 1, T0, "MERGED")
     store.flush()           # append under the service lock
-    store.compact(1)        # whole-table swap under the service lock
-    # warm() takes the lock only on the missing-path recovery branch
+    store.compact(1)        # whole-table overwrite under the service lock
+    assert len(seen) == 2, f"service-lock acquires not seen: {seen}"
+    # warm() reads one published manifest and takes no lock at all
     missing = CheckpointStore(spark, store.log_path + "_missing")
     missing.warm()
-    assert len(seen) >= 3, f"service-lock acquires not seen: {seen}"
+    CheckpointStore(spark, store.log_path).warm()
+    assert len(seen) == 2, f"warm() took the service lock: {seen}"
     bad = [(p, t) for p, t in seen if t != expected]
     assert not bad, (
         f"service-lock waits must pass timeout_s={expected}: {bad}"

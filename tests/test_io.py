@@ -7,19 +7,26 @@ import time
 
 import pyspark.sql.functions as F
 
-from callio_etl_spark.io import (
-    load_append,
-    load_truncate,
-    write_partitioned,
+from callio_etl_spark.io import write_partitioned
+from callio_etl_spark.snapshots import (
+    snapshot_append,
+    snapshot_overwrite,
+    snapshot_read,
+    snapshot_versions,
 )
 
 
 def test_append_with_schema_evolution(spark, tmp_path):
     p = str(tmp_path / "t")
-    load_append(spark.createDataFrame([(1, "a")], "id long, x string"), p)
+    snapshot_append(spark, spark.createDataFrame([(1, "a")], "id long, x string"), p, None)
     # S8: later batch adds a column (ALLOW_FIELD_ADDITION)
-    load_append(spark.createDataFrame([(2, "b", 9.5)], "id long, x string, y double"), p)
-    df = spark.read.option("mergeSchema", "true").parquet(p)
+    snapshot_append(
+        spark,
+        spark.createDataFrame([(2, "b", 9.5)], "id long, x string, y double"),
+        p,
+        None,
+    )
+    df = snapshot_read(spark, p)
     rows = {r["id"]: r for r in df.collect()}
     assert set(df.columns) == {"id", "x", "y"}
     assert rows[1]["y"] is None and rows[2]["y"] == 9.5
@@ -27,9 +34,9 @@ def test_append_with_schema_evolution(spark, tmp_path):
 
 def test_truncate_replaces(spark, tmp_path):
     p = str(tmp_path / "t")
-    load_append(spark.createDataFrame([(1,)], "id long"), p)
-    load_truncate(spark.createDataFrame([(2,), (3,)], "id long"), p)
-    assert sorted(r["id"] for r in spark.read.parquet(p).collect()) == [2, 3]
+    snapshot_append(spark, spark.createDataFrame([(1,)], "id long"), p, None)
+    snapshot_overwrite(spark, spark.createDataFrame([(2,), (3,)], "id long"), p)
+    assert sorted(r["id"] for r in snapshot_read(spark, p).collect()) == [2, 3]
 
 
 def test_partitioned_write_layout(spark, tmp_path):
@@ -198,143 +205,147 @@ def test_salted_join_rejects_right_preserving_types(spark):
     assert salted_join(left, right, "k", n_salts=4, how="left").count() == 1
 
 
-# ----------------------------------------------------- atomic commit protocol
+# ----------------------------------------------- whole-table commit protocol
+# The whole-table commit is snapshot_overwrite: staged unlocked beside the
+# table, then one manifest publish under the table lock. These tests carry
+# the crash points of the rename swap it replaced over to that commit.
 
 
-def _write_staging(spark, src_rows, staging, marker):
-    """Simulate a COMPLETED staging write that crashed before any rename:
-    the parquet job finished and the mode marker was touched."""
-    df = spark.createDataFrame(src_rows, "id long, d string, v long")
-    df.repartition(1).write.mode("overwrite").parquet(staging)
-    open(f"{staging}/{marker}", "w").close()
+def _seed(spark, p, rows, ddl="id long, d string, v long"):
+    snapshot_overwrite(spark, spark.createDataFrame(rows, ddl), p)
+
+
+def _staging_siblings(tmp_path, name):
+    return [n for n in os.listdir(tmp_path) if n.startswith(name + ".__staging__")]
 
 
 def test_atomic_overwrite_reads_own_target(spark, tmp_path):
     """The classic self-overwrite: df is derived FROM the table it
-    replaces. No localCheckpoint needed — staging completes against the
-    old files before the swap — and no protocol dirs survive a clean
-    commit."""
-    from callio_etl_spark.io import atomic_overwrite
-
+    replaces. No localCheckpoint needed — the old data files are
+    immutable, so staging completes against them — and no staging
+    survives a clean commit."""
     p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(i, "x", i) for i in range(20)], "id long, d string, v long"
-    ).write.parquet(p)
-    halved = spark.read.parquet(p).where(F.col("id") < 10)
-    atomic_overwrite(spark, halved, p)
-    assert sorted(r["id"] for r in spark.read.parquet(p).collect()) == list(range(10))
-    assert not os.path.exists(p + ".__staging__")
-    assert not os.path.exists(p + ".__backup__")
-    assert not os.path.exists(f"{p}/__COMMIT_TABLE__")
+    _seed(spark, p, [(i, "x", i) for i in range(20)])
+    halved = snapshot_read(spark, p).where(F.col("id") < 10)
+    snapshot_overwrite(spark, halved, p)
+    assert sorted(r["id"] for r in snapshot_read(spark, p).collect()) == list(range(10))
+    assert not _staging_siblings(tmp_path, "t")
 
 
 def test_atomic_overwrite_crash_injection_keeps_old_table(spark, tmp_path, monkeypatch):
-    """Inject a failure into the FIRST rename of the commit (old -> backup):
-    the crashed table must still read as the old content after
-    recover_table."""
-    import callio_etl_spark.io as io
+    """Inject a failure into the decisive step of the commit (the
+    manifest publish): the table must still read as the old content,
+    and a retry commits."""
+    import callio_etl_spark.snapshots as snap
 
     p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(i, "x", i) for i in range(10)], "id long, d string, v long"
-    ).write.parquet(p)
+    _seed(spark, p, [(i, "x", i) for i in range(10)])
 
-    real_rename = io._rename
+    real_rename = snap._rename
 
     def boom(jvm, fs, src, dst):
-        if dst.endswith(".__backup__"):
+        if dst.endswith(".json"):
             raise RuntimeError("injected crash mid-commit")
         return real_rename(jvm, fs, src, dst)
 
-    monkeypatch.setattr(io, "_rename", boom)
+    monkeypatch.setattr(snap, "_rename", boom)
     new = spark.createDataFrame([(99, "y", 0)], "id long, d string, v long")
     try:
-        io.atomic_overwrite(spark, new, p)
+        snapshot_overwrite(spark, new, p)
         raise AssertionError("injected crash did not fire")
     except RuntimeError:
         pass
-    monkeypatch.setattr(io, "_rename", real_rename)
-    # Staging is complete+marked but commit never started: recover rolls
-    # BACK (the old table was never touched).
-    io.recover_table(spark, p)
-    assert sorted(r["id"] for r in spark.read.parquet(p).collect()) == list(range(10))
-    assert not os.path.exists(p + ".__staging__")
+    monkeypatch.setattr(snap, "_rename", real_rename)
+    assert sorted(r["id"] for r in snapshot_read(spark, p).collect()) == list(range(10))
+    assert not _staging_siblings(tmp_path, "t")
+    snapshot_overwrite(spark, new, p)
+    assert [r["id"] for r in snapshot_read(spark, p).collect()] == [99]
 
 
 def test_recover_drops_incomplete_staging(spark, tmp_path):
-    """Crash DURING the staging write (no mode marker): recovery must
-    delete the torn staging and leave the table untouched."""
-    from callio_etl_spark.io import recover_table
+    """Crash DURING the staging write: the torn writer-unique staging
+    beside the table is dropped by the next commit once it is older than
+    the staging window, and the table is untouched by it. A fresh
+    staging (a concurrent writer's, in flight) is left alone."""
+    from callio_etl_spark.io import STAGING_STALE_S
 
     p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", 1)], "id long, d string, v long"
-    ).write.parquet(p)
-    staging = p + ".__staging__"
-    os.makedirs(staging)
-    open(f"{staging}/part-00000.parquet", "w").write("torn")
-    assert "incomplete" in recover_table(spark, p)
-    assert not os.path.exists(staging)
-    assert spark.read.parquet(p).count() == 1
+    _seed(spark, p, [(1, "a", 1)])
+    torn, live = p + ".__staging__.deadbeef0001", p + ".__staging__.cafebabe0002"
+    for d in (torn, live):
+        os.makedirs(d)
+        open(f"{d}/part-00000.parquet", "w").write("torn")
+    aged = time.time() - STAGING_STALE_S - 60
+    os.utime(torn, (aged, aged))
+    assert snapshot_read(spark, p).count() == 1
+    _seed(spark, p, [(2, "b", 2)])
+    assert not os.path.exists(torn)
+    assert os.path.exists(live)
+    assert [r["id"] for r in snapshot_read(spark, p).collect()] == [2]
 
 
-def test_recover_rolls_forward_after_backup_rename(spark, tmp_path):
-    """Crash between `path -> backup` and `staging -> path`: the table dir
-    is MISSING; recovery must finish the commit (new content visible,
-    protocol dirs gone)."""
-    from callio_etl_spark.io import recover_table
+def test_recover_rolls_forward_after_backup_rename(spark, tmp_path, monkeypatch):
+    """Crash past the decisive step (here: in the vacuum right after the
+    manifest publish): the commit is complete — readers see the new
+    content — with no recovery step at all."""
+    import callio_etl_spark.snapshots as snap
 
     p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, "a", 1)], "id long, d string, v long"
-    ).write.parquet(p)
-    _write_staging(spark, [(2, "b", 2)], p + ".__staging__", "__COMMIT_TABLE__")
-    os.rename(p, p + ".__backup__")  # the crash point
-    recover_table(spark, p)
-    rows = spark.read.parquet(p).collect()
+    _seed(spark, p, [(1, "a", 1)])
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected crash after publish")
+
+    monkeypatch.setattr(snap, "_vacuum_snapshots", boom)
+    try:
+        _seed(spark, p, [(2, "b", 2)])
+        raise AssertionError("injected crash did not fire")
+    except RuntimeError:
+        pass
+    monkeypatch.undo()
+    rows = snapshot_read(spark, p).collect()
     assert [r["id"] for r in rows] == [2]
-    assert not os.path.exists(p + ".__backup__")
-    assert not os.path.exists(p + ".__staging__")
+    assert snapshot_versions(spark, p) == [1, 2]
+    assert not _staging_siblings(tmp_path, "t")
 
 
 def test_recover_drops_committed_backup(spark, tmp_path):
-    """Crash between `staging -> path` and backup deletion: new table is
-    live; recovery just drops the backup."""
-    from callio_etl_spark.io import recover_table
+    """The displaced generation (the swap's backup) stays readable while
+    retention keeps it, and the commit that pushes it past retention
+    drops its data dir: the new table is live, the old files are gone."""
+    import glob
 
     p = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(2, "b", 2)], "id long, d string, v long"
-    ).write.parquet(p)
-    spark.createDataFrame(
-        [(1, "a", 1)], "id long, d string, v long"
-    ).write.parquet(p + ".__backup__")
-    recover_table(spark, p)
-    assert [r["id"] for r in spark.read.parquet(p).collect()] == [2]
-    assert not os.path.exists(p + ".__backup__")
+    _seed(spark, p, [(1, "a", 1)])
+    old_dirs = glob.glob(f"{p}/*=*/__s*__")
+    _seed(spark, p, [(2, "b", 2)])
+    assert [r["id"] for r in snapshot_read(spark, p, version=1).collect()] == [1]
+    assert all(os.path.exists(d) for d in old_dirs)
+    _seed(spark, p, [(3, "c", 3)])  # keep_snapshots=2: version 1 goes
+    assert [r["id"] for r in snapshot_read(spark, p).collect()] == [3]
+    assert old_dirs and not any(os.path.exists(d) for d in old_dirs)
 
 
 def test_atomic_overwrite_crash_sweep_every_step(spark, tmp_path):
     """Exhaustive crash-point sweep: abort the whole-table commit at the
-    Nth filesystem mutation (rename/delete/marker-touch) for every N, run
-    recover_table, and require the table to read back as EITHER the
-    complete old state or the complete new state — never torn, never
-    missing. This is the protocol's actual guarantee, tested at every
-    reachable crash point."""
+    Nth filesystem mutation (rename/delete) for every N, and require the
+    table to read back as EITHER the complete old state or the complete
+    new state — never torn, never missing — with the lock released and
+    the next commit landing cleanly. This is the commit's actual
+    guarantee, tested at every reachable crash point."""
     import itertools
 
-    import callio_etl_spark.io as io
+    import callio_etl_spark.snapshots as snap
+    from callio_etl_spark.io import LOCK_SUFFIX
 
     old_rows = {(i, i * 2) for i in range(10)}
     new_rows = {(i, i * 3) for i in range(5)}
 
-    real = {"rename": io._rename, "delete": io._delete, "touch": io._touch}
+    real = {"rename": snap._rename, "delete": snap._delete}
 
     for crash_at in itertools.count(1):
         p = str(tmp_path / f"t{crash_at}")
-        spark.createDataFrame(
-            sorted(old_rows), "id long, v long"
-        ).write.parquet(p)
+        _seed(spark, p, sorted(old_rows), "id long, v long")
         new_df = spark.createDataFrame(sorted(new_rows), "id long, v long")
 
         calls = {"n": 0}
@@ -349,26 +360,26 @@ def test_atomic_overwrite_crash_sweep_every_step(spark, tmp_path):
             return wrapped
 
         for name, fn in real.items():
-            setattr(io, f"_{name}", make_boom(fn))
+            setattr(snap, f"_{name}", make_boom(fn))
         try:
-            io.atomic_overwrite(spark, new_df, p)
+            snapshot_overwrite(spark, new_df, p)
             crashed = False
         except RuntimeError:
             crashed = True
         finally:
             for name, fn in real.items():
-                setattr(io, f"_{name}", fn)
+                setattr(snap, f"_{name}", fn)
 
-        io.recover_table(spark, p)
-        got = {(r["id"], r["v"]) for r in spark.read.parquet(p).collect()}
+        got = {(r["id"], r["v"]) for r in snapshot_read(spark, p).collect()}
         assert got in (old_rows, new_rows), (
             f"crash at op {crash_at}: torn table {got}"
         )
-        assert not os.path.exists(p + ".__staging__")
-        assert not os.path.exists(p + ".__backup__")
+        assert not os.path.exists(p + LOCK_SUFFIX)
         if not crashed:
             assert got == new_rows
             break  # no injection fired: every crash point swept
+        snapshot_overwrite(spark, new_df, p)
+        assert {(r["id"], r["v"]) for r in snapshot_read(spark, p).collect()} == new_rows
 
 
 def test_salted_join_balances_hot_key_across_tasks(spark):
@@ -427,29 +438,26 @@ def test_salted_join_balances_hot_key_across_tasks(spark):
 
 
 def test_concurrent_atomic_overwrites_no_torn_table(spark, tmp_path):
-    """Two writers racing interleaved atomic_overwrites on one table: after
-    every round the table must read as EXACTLY one writer's complete
-    dataset (never a torn mix, never missing), no commit-protocol debris
-    survives, and the lock is released. This is the last-writer-wins
-    contract the commit lock adds over the single-writer protocol."""
+    """Two writers racing interleaved whole-table overwrites on one table:
+    after every round the table must read as EXACTLY one writer's
+    complete dataset (never a torn mix, never missing), every retained
+    version too, no staging survives, and the lock is released. This is
+    the last-writer-wins contract the commit lock adds over the
+    single-writer protocol."""
     import threading
 
-    from callio_etl_spark.io import LOCK_SUFFIX, recover_table
+    from callio_etl_spark.io import LOCK_SUFFIX
 
     p = str(tmp_path / "race_t")
-    spark.createDataFrame(
-        [(i, "seed") for i in range(5)], "id long, w string"
-    ).write.parquet(p)
+    _seed(spark, p, [(i, "seed") for i in range(5)], "id long, w string")
 
     def writer(tag: str, n: int, errors: list):
         try:
-            import callio_etl_spark.io as io
-
             df = spark.createDataFrame(
                 [(i, tag) for i in range(n)], "id long, w string"
             )
             for _ in range(4):
-                io.atomic_overwrite(spark, df, p)
+                snapshot_overwrite(spark, df, p)
         except Exception as e:  # surfaced below — assert in main thread
             errors.append(e)
 
@@ -459,17 +467,16 @@ def test_concurrent_atomic_overwrites_no_torn_table(spark, tmp_path):
     ta.start(); tb.start(); ta.join(); tb.join()
     assert not errors, errors
 
-    rows = spark.read.parquet(p).collect()
-    tags = {r["w"] for r in rows}
-    assert len(tags) == 1, f"torn table: {tags}"
-    tag = tags.pop()
-    want = 50 if tag == "aa" else 80
-    assert len(rows) == want and sorted(r["id"] for r in rows) == list(range(want))
-    assert recover_table(spark, p) == "clean"
+    for version in snapshot_versions(spark, p):
+        rows = snapshot_read(spark, p, version=version).collect()
+        tags = {r["w"] for r in rows}
+        assert len(tags) == 1, f"torn table: {tags}"
+        tag = tags.pop()
+        want = 50 if tag == "aa" else 80
+        assert len(rows) == want and sorted(r["id"] for r in rows) == list(range(want))
+    assert snapshot_versions(spark, p)[-1] == 9  # seed + 8 commits
     assert not os.path.exists(p + LOCK_SUFFIX)
-    leftovers = [
-        n for n in os.listdir(tmp_path) if n.startswith("race_t.__staging__")
-    ]
+    leftovers = _staging_siblings(tmp_path, "race_t")
     assert not leftovers, leftovers
 
 
@@ -477,10 +484,10 @@ def test_stale_commit_lock_is_reclaimed(spark, tmp_path):
     """A lock file left by a crashed writer (mtime older than the stale
     window) must not block the next committer: it reclaims the lock,
     commits, and the table reflects the new write."""
-    from callio_etl_spark.io import LOCK_SUFFIX, atomic_overwrite
+    from callio_etl_spark.io import LOCK_SUFFIX
 
     p = str(tmp_path / "stale_t")
-    spark.createDataFrame([(1, "old")], "id long, w string").write.parquet(p)
+    _seed(spark, p, [(1, "old")], "id long, w string")
     lock = p + LOCK_SUFFIX
     with open(lock, "w"):
         pass
@@ -488,8 +495,8 @@ def test_stale_commit_lock_is_reclaimed(spark, tmp_path):
     os.utime(lock, (two_hours_ago, two_hours_ago))
 
     new = spark.createDataFrame([(2, "new")], "id long, w string")
-    atomic_overwrite(spark, new, p)  # must not TimeoutError
-    assert [r["w"] for r in spark.read.parquet(p).collect()] == ["new"]
+    snapshot_overwrite(spark, new, p)  # must not TimeoutError
+    assert [r["w"] for r in snapshot_read(spark, p).collect()] == ["new"]
     assert not os.path.exists(lock)
 
 
@@ -499,10 +506,10 @@ def test_live_commit_lock_blocks_until_released(spark, tmp_path):
     short timeout to prove the waiter was genuinely blocked."""
     import threading
 
-    from callio_etl_spark.io import LOCK_SUFFIX, atomic_overwrite
+    from callio_etl_spark.io import LOCK_SUFFIX
 
     p = str(tmp_path / "block_t")
-    spark.createDataFrame([(1, "old")], "id long, w string").write.parquet(p)
+    _seed(spark, p, [(1, "old")], "id long, w string")
     lock = p + LOCK_SUFFIX
     with open(lock, "w"):
         pass  # fresh lock: held
@@ -517,10 +524,10 @@ def test_live_commit_lock_blocks_until_released(spark, tmp_path):
     t = threading.Thread(target=release_later)
     t.start()
     new = spark.createDataFrame([(2, "new")], "id long, w string")
-    atomic_overwrite(spark, new, p)
+    snapshot_overwrite(spark, new, p)
     t.join()
     assert released.is_set(), "commit finished while the lock was held"
-    assert [r["w"] for r in spark.read.parquet(p).collect()] == ["new"]
+    assert [r["w"] for r in snapshot_read(spark, p).collect()] == ["new"]
 
 
 def test_lock_heartbeat_prevents_live_reclaim(spark, tmp_path):
@@ -716,10 +723,10 @@ def test_stale_lock_claim_strands_are_swept(spark, tmp_path):
     failed delete (or a waiter that died mid-claim) is swept by the next
     commit's staging vacuum once older than LOCK_STALE_S; a fresh claim
     (an in-flight waiter's) is never touched."""
-    from callio_etl_spark.io import LOCK_SUFFIX, atomic_overwrite
+    from callio_etl_spark.io import LOCK_SUFFIX
 
     p = str(tmp_path / "sweep_t")
-    spark.createDataFrame([(1, "a")], "id long, w string").write.parquet(p)
+    _seed(spark, p, [(1, "a")], "id long, w string")
     stale_claim = p + LOCK_SUFFIX + ".reclaim.deadbeef"
     fresh_claim = p + LOCK_SUFFIX + ".release.cafebabe"
     # r12 ADVICE fix: a claim renamed from an ALREADY-STALE lock inherits
@@ -735,7 +742,7 @@ def test_stale_lock_claim_strands_are_swept(spark, tmp_path):
     os.utime(stale_claim, (two_hours_ago, two_hours_ago))
     os.utime(inflight_from_stale, (two_hours_ago, two_hours_ago))
 
-    atomic_overwrite(
+    snapshot_overwrite(
         spark, spark.createDataFrame([(2, "b")], "id long, w string"), p
     )
     assert not os.path.exists(stale_claim), "aged claim strand not swept"
@@ -991,48 +998,6 @@ def test_service_fencing_blocks_a_reclaimed_maintainer(spark, tmp_path):
     release_service_lock(spark, idx)  # token-checked: leaves the file
     assert os.path.exists(lock)
     os.remove(lock)
-
-
-def test_recover_needed_gate_matches_recovery_conditions(spark, tmp_path):
-    """r13 commit fast path: `_recover_needed` must be False exactly when
-    recover_table is a no-op (clean table), and True for each survivable
-    crash artifact — a protocol sibling beside the table or the mode
-    marker inside it (crash between the final rename and marker delete)."""
-    from callio_etl_spark.io import (
-        _TABLE_MARKER,
-        _hadoop,
-        _list_siblings,
-        _recover_needed,
-        _touch,
-        atomic_overwrite,
-        recover_table,
-    )
-
-    path = str(tmp_path / "t")
-    df = spark.range(5).selectExpr("id", "id * 2 AS v")
-    atomic_overwrite(spark, df, path)
-    jvm, fs, _ = _hadoop(spark, path)
-
-    def probe():
-        sibs = _list_siblings(jvm, fs, path)
-        return _recover_needed(
-            jvm, fs, path, {st.getPath().getName() for st in sibs}
-        )
-
-    assert probe() is False, "clean table flagged for recovery"
-
-    # marker inside the live table (crash after swap, before marker delete)
-    _touch(jvm, fs, f"{path}/{_TABLE_MARKER}")
-    assert probe() is True, f"{_TABLE_MARKER} not detected"
-    recover_table(spark, path)  # sweeps the stray marker
-    assert probe() is False
-
-    # protocol sibling beside the table (crashed writer's staged commit)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(path + ".__staging__"))
-    assert probe() is True, "staging sibling not detected"
-    recover_table(spark, path)
-    assert probe() is False
-    assert spark.read.parquet(path).count() == 5
 
 
 def test_service_lock_default_timeout_is_tick_sized(spark, tmp_path, monkeypatch):

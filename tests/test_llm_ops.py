@@ -2504,6 +2504,7 @@ def test_materialize_size_gate_both_arms(spark, tmp_path):
     scratch write above it (corpus-scale postings must not pin executor
     block storage). Both arms return the same rows."""
     import glob
+    from urllib.parse import urlparse
 
     import pyspark.sql.functions as F
 
@@ -2538,7 +2539,7 @@ def test_materialize_size_gate_both_arms(spark, tmp_path):
         spark.conf.set("spark.callio.materialize.spillFactor", "1")
         got2 = matutil.materialize(df, "gate_test")
         assert len(matutil._SCRATCH_DIRS) == len(before) + 1
-        scratch = matutil._SCRATCH_DIRS[-1]
+        scratch = urlparse(matutil._SCRATCH_DIRS[-1]).path
         assert glob.glob(f"{scratch}/*.parquet"), "no scratch files"
         assert "parquet" in got2._jdf.queryExecution().optimizedPlan().toString().lower()
         assert {(r["k"], r["n"]) for r in got2.collect()} == want
@@ -2558,6 +2559,62 @@ def test_materialize_size_gate_both_arms(spark, tmp_path):
     finally:
         spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
         spark.conf.unset("spark.callio.materialize.spillFactor")
+
+
+def test_materialize_spill_scratch_under_warehouse_dir(spark, tmp_path):
+    """The spill arm's scratch must sit where every executor can write
+    — under ``spark.sql.warehouse.dir``, not the driver's temp dir — and
+    ``_cleanup_scratch`` removes it through the Hadoop FS."""
+    import os
+    from urllib.parse import urlparse
+
+    import pyspark.sql.functions as F
+
+    from callio_etl_spark.llm_ops import matutil
+
+    df = spark.range(0, 100).select("id", (F.col("id") % 3).alias("k"))
+    try:
+        spark.conf.set(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "1b"
+        )
+        spark.conf.set("spark.callio.materialize.spillFactor", "1")
+        got = matutil.materialize(df, "scratch_test")
+    finally:
+        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        spark.conf.unset("spark.callio.materialize.spillFactor")
+    assert got.count() == 100
+    scratch = matutil._SCRATCH_DIRS[-1]
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    local = urlparse(scratch).path
+    assert local.startswith(warehouse.rstrip("/") + "/"), (scratch, warehouse)
+    assert os.path.isdir(local)
+    matutil._cleanup_scratch()
+    assert not os.path.exists(local)
+    assert matutil._SCRATCH_DIRS == []
+
+
+def test_ckpt_once_checkpoints_an_rdd_backed_frame(spark):
+    """``_ckpt_once`` skips only a frame that really is checkpointed:
+    ``spark.createDataFrame(rdd)`` also plans as a LogicalRDD, but its
+    RDD recomputes the lineage on every use, so it must be
+    checkpointed; a checkpointed frame is returned as it is."""
+    from callio_etl_spark.llm_ops.similarity import _ckpt_once
+
+    def checkpointed(df):
+        plan = df._jdf.queryExecution().analyzed()
+        return (
+            plan.getClass().getSimpleName() == "LogicalRDD"
+            and plan.rdd().isCheckpointed()
+        )
+
+    from_rdd = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1,), (2,)]), "a long"
+    )
+    assert not checkpointed(from_rdd)
+    got = _ckpt_once(from_rdd)
+    assert checkpointed(got)
+    assert sorted(r["a"] for r in got.collect()) == [1, 2]
+    assert _ckpt_once(got) is got
 
 
 @pytest.mark.parametrize(

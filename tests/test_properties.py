@@ -820,6 +820,7 @@ def test_update_log_compaction_matches_python_mirror(spark, rows, keep):
         CheckpointStore,
         normalize_table,
     )
+    from callio_etl_spark.snapshots import snapshot_append, snapshot_read
 
     t0 = dt.datetime(2024, 1, 1)
     data = [
@@ -830,9 +831,9 @@ def test_update_log_compaction_matches_python_mirror(spark, rows, keep):
     # @given (one dir would be shared across examples) — per-example dir
     root = tempfile.mkdtemp(prefix="plog_")
     log_path = f"{root}/log_{uuid.uuid4().hex[:8]}"
-    spark.createDataFrame(data, UPDATE_LOG_SCHEMA).write.mode(
-        "append"
-    ).parquet(log_path)
+    snapshot_append(
+        spark, spark.createDataFrame(data, UPDATE_LOG_SCHEMA), log_path, None
+    )
 
     # Python mirror of the two window rules
     by_key: dict = {}
@@ -859,7 +860,7 @@ def test_update_log_compaction_matches_python_mirror(spark, rows, keep):
     got = {
         (r["table_name"], r["tenant"], r["updated_at"], r["rows_loaded"],
          r["max_update_ms"], r["mode"])
-        for r in spark.read.parquet(log_path).collect()
+        for r in snapshot_read(spark, log_path).collect()
     }
     assert got == expected, (
         f"retention diverged: extra={got - expected} "

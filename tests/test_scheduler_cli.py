@@ -110,7 +110,7 @@ def test_cli_once_is_idempotent(tmp_path, monkeypatch):
     # idempotent: the overlap tail re-merges (mode MERGED, C2 semantics) but
     # the row_hash guard changes nothing — count stays identical
     assert snapshot_read(spark, f"{wd}/call_log").count() == first
-    log = spark.read.parquet(f"{wd}/update_log")
+    log = snapshot_read(spark, f"{wd}/update_log")
     modes = [r["mode"] for r in log.where(F_table("call_log")).collect()]
     assert modes == ["MERGED", "MERGED"]
 
@@ -550,16 +550,21 @@ def test_cli_tick_refuses_a_plain_parquet_table(tmp_path, monkeypatch):
     from callio_etl_spark.__main__ import main
     from callio_etl_spark.checkpoints import UPDATE_LOG_SCHEMA
     from callio_etl_spark.session import get_spark
+    from callio_etl_spark.snapshots import snapshot_overwrite
 
     wd = str(tmp_path / "work")
     spark = get_spark("cli-test")
     spark.createDataFrame(
         [("PK", 1, 1704067200000)], "tenant string, event_id long, createTime long"
     ).write.parquet(f"{wd}/call_log")
-    spark.createDataFrame(
-        [("call_log", "PK", dt.datetime(2024, 1, 1), 1, 1704067200000, "MERGED")],
-        UPDATE_LOG_SCHEMA,
-    ).write.parquet(f"{wd}/update_log")
+    snapshot_overwrite(
+        spark,
+        spark.createDataFrame(
+            [("call_log", "PK", dt.datetime(2024, 1, 1), 1, 1704067200000, "MERGED")],
+            UPDATE_LOG_SCHEMA,
+        ),
+        f"{wd}/update_log",
+    )
 
     def listing():
         return {
@@ -772,7 +777,7 @@ def test_cli_staff_group_snapshot_job(tmp_path, monkeypatch):
     assert main(args) == 0
     assert snapshot_read(spark, f"{wd}/staff").count() == n_staff
     assert snapshot_read(spark, f"{wd}/group").count() == n_group
-    log = spark.read.parquet(f"{wd}/update_log")
+    log = snapshot_read(spark, f"{wd}/update_log")
     by_mode = {
         (r["table_name"], r["mode"])
         for r in log.collect()

@@ -649,7 +649,7 @@ def test_maintain_agg_view_across_ticks(spark, tmp_path, monkeypatch):
 
     def view_rows():
         return sorted(
-            map(tuple, spark.read.parquet(vw).drop("_src_version").collect())
+            map(tuple, snap.snapshot_read(spark, vw).drop("_src_version").collect())
         )
 
     commit([(i, str(i % 2), i * 10) for i in range(8)])
@@ -1738,7 +1738,7 @@ def test_maintain_agg_view_default_prep_first_build(spark, tmp_path):
     assert snap.maintain_agg_view(spark, src, vw, ["id"], ["d"], ["val"]) == 1
     got = {
         r["d"]: (r["n"], r["sum_val"])
-        for r in spark.read.parquet(vw).collect()
+        for r in snap.snapshot_read(spark, vw).collect()
     }
     assert got == {"0": (5, 20.0), "1": (5, 25.0)}
 
@@ -2064,7 +2064,7 @@ def test_join_view_ivm_random_commit_sequences(spark, tmp_path):
         return sorted(
             map(
                 tuple,
-                spark.read.parquet(vp)
+                snap.snapshot_read(spark, vp)
                 .drop("_fact_version", "_dim_version")
                 .collect(),
             )
@@ -2152,7 +2152,7 @@ def test_maintain_view_degrades_across_spec_evolution(spark, tmp_path):
     def view_rows():
         return sorted(
             map(tuple,
-                spark.read.parquet(vw).drop("_src_version").collect())
+                snap.snapshot_read(spark, vw).drop("_src_version").collect())
         )
 
     assert snap.maintain_agg_view(spark, src, vw, ["k"], ["ym"], ["val"], prep=prep) == 1
@@ -2258,7 +2258,7 @@ def test_column_rename_evolution(spark, tmp_path):
     snap.maintain_agg_view(spark, p2, vw, ["k"], ["d"], ["m"], prep=prep)
     got_view = {
         (x["d"], x["n"], float(x["sum_m"]))
-        for x in spark.read.parquet(vw).drop("_src_version").collect()
+        for x in snap.snapshot_read(spark, vw).drop("_src_version").collect()
     }
     exp = {}
     for k, v in want:

@@ -306,7 +306,9 @@ def test_stream_crash_resume_merge_checkpoint_parity(spark, tmp_path):
     # audit log: exactly two committed MERGED ticks (60-row replayed batch
     # committed once — the crashed attempt's buffer died with its process —
     # then the 15-row incremental tick), and no NOOP noise.
-    log = spark.read.parquet(log_path)
+    from callio_etl_spark.snapshots import snapshot_read
+
+    log = snapshot_read(spark, log_path)
     merged_counts = sorted(r["rows_loaded"] for r in log.collect())
     assert merged_counts == [15, 60]
     assert {r["mode"] for r in log.collect()} == {"MERGED"}
@@ -723,7 +725,7 @@ def test_streaming_ticks_drive_materialized_view(spark, dirs, tmp_path):
 
     def view_rows():
         return sorted(
-            map(tuple, spark.read.parquet(view).drop("_src_version").collect())
+            map(tuple, snap.snapshot_read(spark, view).drop("_src_version").collect())
         )
 
     def recompute():
@@ -937,7 +939,7 @@ def test_streaming_ticks_drive_join_view(spark, dirs, tmp_path):
     def view_rows():
         return sorted(
             map(tuple,
-                spark.read.parquet(view)
+                snap.snapshot_read(spark, view)
                 .drop("_fact_version", "_dim_version").collect())
         )
 
