@@ -15,14 +15,21 @@ plus the slowest per-query entries that fit a 1900-byte budget:
      "queries_in_line": <k>, "queries": {"<slowest>": sec, ...}, "sf": <sf>}
 
 The COMPLETE per-query dict is also persisted to
-``BENCH_DETAIL_r{N}.json`` beside this script (N inferred from the
-newest ``BENCH_r{N}.json`` + 1, i.e. the round being recorded): the
-driver's archive truncates the stdout line to its last ~65 rows, and
-per-query numbers are what spike forensics and the >2 s AND >1.5x
-calibrated signal line run on.
+``BENCH_DETAIL_r{N}_c{cpus}.json`` beside this script (N inferred from
+the newest ``BENCH_r{N}.json`` + 1, i.e. the round being recorded;
+cpus the session's local[cpus]; an existing file is never overwritten —
+a repeat run gets a ``-2``, ``-3``... suffix): the driver's archive
+truncates the stdout line to its last ~65 rows, and per-query numbers
+are what spike forensics and the >2 s AND >1.5x calibrated signal line
+run on.
 
-RUN ORDER: the multi-commit index-service rows (maintain_*/rebuild_*/
-stream_ingest_*) run LAST, in their own tail block. They allocate
+RE-MEASURE RULE: after the sweep, every row tagged ``index`` or
+``http`` (the multi-commit service rows) plus every row crossing the
+signal guard is re-measured in isolation, best-of-2, into the detail
+artifact's ``isolated_service_s``.
+
+RUN ORDER: the multi-commit index-service rows (tagged ``index``) run
+LAST, in their own tail block. They allocate
 10-20 s of block-manager/GC pressure each; with registry-order
 interleaving, whichever innocent queries ran directly behind them
 absorbed the eviction storm and fired false signal hits two rounds
@@ -115,13 +122,15 @@ def _write_detail_artifact(
     calibration: float,
     sf_val,
     run_order: list[str],
-    isolated: dict[str, float] | None = None,
+    isolated: dict[str, float],
+    cpus: int,
 ) -> None:
-    """Persist the COMPLETE per-query dict to BENCH_DETAIL_r{N}.json in
-    the repo root (docstring: the driver's stdout archive truncates).
+    """Persist the COMPLETE per-query dict to BENCH_DETAIL_r{N}_c{cpus}.json
+    in the repo root (docstring: the driver's stdout archive truncates).
     N = newest existing BENCH_r{N}.json + 1 — the round this run is
-    recording for; a local re-run before the driver's simply overwrites
-    the same round's detail. Never fails the bench (best-effort I/O)."""
+    recording for. An existing artifact is never overwritten: a repeat
+    run of the same round and core count takes the next free ``-k``
+    suffix. Never fails the bench (best-effort I/O)."""
     import glob
     import re
 
@@ -135,6 +144,7 @@ def _write_detail_artifact(
         n = (max(rounds) + 1) if rounds else 1
         payload = {
             "round": n,
+            "cpus": cpus,
             "metric": "wall_seconds_all_queries",
             "value": total,
             "unit": "sec",
@@ -143,15 +153,24 @@ def _write_detail_artifact(
             "n_queries": len(timings),
             "run_order": run_order,
             "queries": timings,
-            # dispose-by-default for the tail block (VERDICT r12 item 7):
-            # the multi-commit service/HTTP rows re-measured ONCE each,
-            # isolated, after the sweep — in-run they absorb each other's
-            # block-manager/GC pressure, and without this column every
-            # round re-litigated the same expected-mutual-pressure spikes
-            "isolated_service_s": isolated or {},
+            # dispose-by-default (VERDICT r12 item 7): the re-measure
+            # rule's rows, isolated, after the sweep — in-run the service
+            # rows absorb each other's block-manager/GC pressure, and
+            # without this column every round re-litigated the same
+            # expected-mutual-pressure spikes
+            "isolated_service_s": isolated,
         }
-        with open(os.path.join(here, f"BENCH_DETAIL_r{n:02d}.json"), "w") as fh:
-            json.dump(payload, fh, indent=1)
+        stem = os.path.join(here, f"BENCH_DETAIL_r{n:02d}_c{cpus}")
+        name, k = f"{stem}.json", 1
+        while True:
+            try:
+                with open(name, "x") as fh:
+                    json.dump(payload, fh, indent=1)
+                break
+            except FileExistsError:
+                k += 1
+                name = f"{stem}-{k}.json"
+        print(f"bench: wrote {os.path.basename(name)}", file=sys.stderr)
     except OSError as exc:
         print(f"bench: detail artifact not written: {exc}", file=sys.stderr)
 
@@ -161,19 +180,18 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from callio_etl_spark.session import get_spark
-    from callio_etl_spark.registry import all_queries
+    from callio_etl_spark.registry import REGISTRY, all_queries
 
     spark = get_spark("callio-etl-bench")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
-    # The multi-commit service rows run LAST (docstring: position-bias
-    # fix). Everything else keeps registry order.
-    heavy_tail = [
-        n
-        for n in queries
-        if n.startswith(("maintain_", "rebuild_", "stream_ingest_"))
-    ]
+    def tagged(*tags: str) -> list[str]:
+        return [n for n in queries if set(tags) & set(REGISTRY[n].tags)]
+
+    # The multi-commit index-service rows run LAST (docstring:
+    # position-bias fix). Everything else keeps registry order.
+    heavy_tail = tagged("index")
     run_order = [n for n in queries if n not in set(heavy_tail)] + heavy_tail
 
     # Warm-up at smoke scale (not measured): flagship for JVM codegen/JIT,
@@ -231,75 +249,43 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
 
-    # Isolated re-measure of the service rows (the tail block + the HTTP
-    # loop rows): one extra pass each AFTER the sweep, behind a GC beat,
-    # so BENCH_DETAIL carries the disposition number itself — the in-run
-    # tail figures include mutual block-manager/GC pressure by design.
-    isolated: dict[str, float] = {}
-    service_rows = heavy_tail + [
-        n for n in ("http_incremental_loop", "http_loop_snapshot_sink")
-        if n in queries
-    ]
-    # VERDICT r14 items 6-7 watchlist: rows whose r14 signal re-measures
-    # failed to dispose (the late-sweep isolated block was globally
-    # inflated). They get an UNCONDITIONAL isolated best-of-3 this
-    # round so the driver's own artifact carries the disposition number
-    # the verdict asked for. Additive: in-run timings are untouched.
-    watch_rows = [
-        n
-        for n in (
-            "ann_recall_pq",
-            "ann_recall_pq_rerank",
-            "contamination_check",
-            "bloom_decontaminate",
-        )
-        if n in queries
-    ]
-    # SELF-DISPOSING signal line: any row whose in-run best crosses the
-    # per-query guard (>2 s AND >1.5x calibrated vs its BASELINE.md row)
-    # is re-measured isolated too — ambient/position spikes then carry
-    # their own disposition number in the artifact instead of costing a
-    # manual forensics pass every round.
+    # The re-measure rule (docstring): the service rows — tagged index
+    # or http — plus every row whose in-run best crosses the per-query
+    # guard (>2 s AND >1.5x vs its BASELINE.md row, on the calibrated
+    # OR the raw ratio: baselines recorded on a slow host would
+    # under-trigger the calibrated form alone). Each gets one isolated
+    # best-of-2 after the sweep, behind a GC beat, so BENCH_DETAIL
+    # carries the disposition number itself — a disposition that could
+    # itself be one jitter spike disposes nothing. Additive: in-run
+    # timings are untouched.
     base = _baseline_seconds()
-    signal_rows = [
-        n
-        for n, t in timings.items()
-        if n not in set(service_rows)
-        and t > 2.0
-        and n in base
-        and base[n] > 0
-        # EITHER trigger fires the re-measure: the calibrated ratio
-        # (honest cross-host compare) OR the raw ratio — rows whose
-        # baseline was recorded on a slow host (registration calibrations
-        # ran 1.08-1.30, see BASELINE.md notes) would under-trigger the
-        # calibrated form alone; an extra isolated pass on a false
-        # trigger costs seconds and disposes itself
-        and (
-            (t / calibration) / (base[n] / _BASELINE_CAL_S) > 1.5
-            or t / base[n] > 1.5
+    service = set(tagged("index", "http"))
+
+    def crosses_guard(n: str, t: float) -> bool:
+        return (
+            t > 2.0
+            and base.get(n, 0) > 0
+            and (
+                (t / calibration) / (base[n] / _BASELINE_CAL_S) > 1.5
+                or t / base[n] > 1.5
+            )
         )
-    ]
-    for name in service_rows + watch_rows + signal_rows:
+
+    isolated: dict[str, float] = {}
+    for name in [
+        n for n in run_order if n in service or crosses_guard(n, timings[n])
+    ]:
         import gc
 
         gc.collect()
         spark.sparkContext._jvm.System.gc()
         time.sleep(0.5)
         best = float("inf")
-        # service rows: one pass (commit-latency floors, stable); watch
-        # rows: best-of-3 (the verdict's disposition bar); signal rows:
-        # best-of-2 — a disposition that could itself be one jitter
-        # spike disposes nothing. Per-row error isolation: a transient
-        # failure here (port bind, server hiccup) must not lose the whole
-        # recording — the sweep already succeeded.
+        # Per-row error isolation: a transient failure here (port bind,
+        # server hiccup) must not lose the whole recording — the sweep
+        # already succeeded.
         try:
-            for _ in range(
-                1
-                if name in set(service_rows)
-                else 3
-                if name in set(watch_rows)
-                else 2
-            ):
+            for _ in range(2):
                 t0 = time.perf_counter()
                 queries[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
@@ -315,7 +301,8 @@ def main() -> None:
 
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     _write_detail_artifact(
-        timings, total, calibration, sf_val, run_order, isolated
+        timings, total, calibration, sf_val, run_order, isolated,
+        spark.sparkContext.defaultParallelism,
     )
     print(
         json.dumps(
@@ -337,13 +324,13 @@ def main() -> None:
     # 5.4+ KB compact and can NEVER survive that window, so the final
     # line carries the headline PLUS as many per-query entries as fit a
     # 1900-byte budget, slowest queries first — the rows that carry the
-    # wall-clock total and every >1 s service/watchlist row the verdict
-    # tracks. The line is self-describing (n_queries = full count,
+    # wall-clock total and every >1 s service row the verdict tracks.
+    # The line is self-describing (n_queries = full count,
     # queries_in_line = entries present, detail = the complete artifact)
     # so a partial dict can't be misread as dropped queries; the full
-    # dict is the line above and BENCH_DETAIL_r{N}.json. Existing keys
-    # unchanged; `queries` here is ADDITIVE (the compact final line
-    # never had it).
+    # dict is the line above and BENCH_DETAIL_r{N}_c{cpus}.json.
+    # Existing keys unchanged; `queries` here is ADDITIVE (the compact
+    # final line never had it).
     head = {
         "metric": "wall_seconds_all_queries",
         "value": total,

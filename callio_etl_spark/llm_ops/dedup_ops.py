@@ -1727,7 +1727,8 @@ def maintain_band_index(
     tick's writes collapse to a partition overwrite of the touched
     buckets: carried rows of those buckets are anti-joined by the
     changed doc_ids (distributed — no driver-side id list) and unioned
-    with the fresh bands, one manifest commit. Cost per tick:
+    with the fresh bands, one manifest commit that also drops every
+    touched bucket the rows leave empty (``retire_leaves``). Cost per tick:
     O(|delta| signatures + touched buckets' index rows); the full index
     is never rewritten, and `streaming.neardup_stream` /
     `minhash_incremental_planned`-style probes read the index table as
@@ -1767,6 +1768,7 @@ def maintain_band_index(
         release_service_lock,
     )
     from callio_etl_spark.snapshots import (
+        _rewrite_touched,
         snapshot_consume_changes,
         snapshot_manifest,
         snapshot_partition_overwrite,
@@ -1786,6 +1788,8 @@ def maintain_band_index(
             r["bkt"]
             for r in changed_ids.select(bkt).distinct().collect()
         ]  # ≤ INDEX_BUCKETS values — metadata-sized
+        if not touched:
+            return  # a net-empty delta changes no bucket: nothing to commit
         from callio_etl_spark.io import _exists, _hadoop
 
         # Hadoop-FS probe (not os.path): the index may live on an
@@ -1868,70 +1872,27 @@ def maintain_band_index(
         fresh = band_projection(
             changed.where(F.col("_change") != "delete"), r_use, b_use
         ).select("doc_id", "band", "band_key", bkt)
-        if exists:
-            carried = (
-                snapshot_read(spark, index_path)
-                .where(F.col("bkt").isin(touched))
-                .join(changed_ids, "doc_id", "left_anti")
-            )
-            out = carried.select(*fresh.columns).unionByName(fresh)
-        else:
-            out = fresh
-        out = out.localCheckpoint(eager=True)
-        with_rows = {r["bkt"] for r in out.select("bkt").distinct().collect()}
-        retire: list[str] = []
-        if exists:
-            # a touched bucket whose every doc was deleted writes NO rows,
-            # so the dynamic overwrite cannot replace it — retire the
-            # emptied buckets IN THE SAME COMMIT (retire_leaves): one
-            # manifest publish per tick instead of two, and readers never
-            # see the post-overwrite/pre-retirement half state
-            cand = sorted(set(touched) - with_rows)
-            # partial resolve: membership of the candidate buckets only —
-            # O(touched) metadata, never the index's full enumeration
-            leaves = snapshot_manifest(
-                spark, index_path, leaves=[f"bkt={b}" for b in cand]
-            )["partitions"]
-            retire = [f"bkt={b}" for b in cand if f"bkt={b}" in leaves]
+        # one commit per tick: a touched bucket the rows still fill is
+        # replaced, one every doc left is dropped (retire_leaves' rule),
+        # and a backfilled pin rides the same publish
+        out, retire = _rewrite_touched(
+            spark, index_path, "bkt", touched, fresh, changed_ids, "doc_id",
+            exists,
+        )
         # re-assert the fence AT the commit point: the O(delta) banding
         # above is exactly where a stall can outlast the stale window —
         # an entry-only fence would let the resumed tick commit buckets
         # banded under a pin a rebuild has since replaced
         assert_service_fencing(spark, index_path)
-        if with_rows:
-            snapshot_partition_overwrite(
-                spark, out, index_path, "bkt", keep_snapshots=keep_snapshots,
-                retire_leaves=retire or None,
-                properties=(
-                    {"band.rows_per_band": r_use, "band.n_bands": b_use}
-                    if pin_now
-                    else None
-                ),
-            )
-        elif retire:
-            # pure-delete tick with nothing to write: metadata-only retire
-            from callio_etl_spark.snapshots import snapshot_delete_partitions
-
-            snapshot_delete_partitions(
-                spark,
-                index_path,
-                [lf.split("=", 1)[1] for lf in retire],
-                keep_snapshots=keep_snapshots,
-            )
-        if pin_now and exists and not with_rows:
-            # the backfill pin found no data commit to ride (pure-delete
-            # or no-op tick against a pre-pin index): record the INFERRED
-            # geometry now via a metadata-only properties commit rather
-            # than deferring to the next non-empty tick — the deferral
-            # window would leave drift protection silently disabled.
-            from callio_etl_spark.snapshots import snapshot_set_properties
-
-            snapshot_set_properties(
-                spark,
-                index_path,
-                {"band.rows_per_band": r_use, "band.n_bands": b_use},
-                keep_snapshots=keep_snapshots,
-            )
+        snapshot_partition_overwrite(
+            spark, out, index_path, "bkt", keep_snapshots=keep_snapshots,
+            retire_leaves=retire or None,
+            properties=(
+                {"band.rows_per_band": r_use, "band.n_bands": b_use}
+                if pin_now
+                else None
+            ),
+        )
 
     acquire_service_lock(spark, index_path)
     try:
@@ -1986,7 +1947,7 @@ def _band_index_roundtrip(
     cohort, id-shifted by a multiple of {INDEX_BUCKETS} so bucket
     residues are preserved), and the EMPTIED-BUCKET class (every doc of
     id-bucket 9 deleted, and no insert lands there — the index leaf must
-    be retired by a metadata delete, not carried stale) — and tick the
+    be dropped by the tick's commit, not carried stale) — and tick the
     maintainer again. The result is the maintained index itself
     (doc_id, band, band_key); the oracle recomputes the banding from the
     FINAL corpus directly, so a stale band row, a missed retirement, a
@@ -2354,13 +2315,14 @@ def rebuild_band_index(
     geometry pin points to: re-plan (rows_per_band, n_bands) from the
     CURRENT corpus size through the integer occupancy thresholds, band
     the whole live corpus at the new geometry in one pass, replace the
-    index (buckets emptied since the last geometry are retired in the
-    SAME commit via retire_leaves), re-pin the new geometry as table
-    properties, and acknowledge the consumer cursor at the docs version
-    the rebuild derived from — a full re-derivation supersedes every
-    change up to that version, so the next maintain tick consumes only
-    commits that landed after it (commits racing the rebuild are simply
-    the next tick's delta). This is the compaction-cadence operation a
+    index (every bucket the head holds is listed in retire_leaves, so
+    one the new rows leave empty drops in the SAME commit), re-pin the
+    new geometry as table properties, and acknowledge the consumer
+    cursor at the docs version the rebuild derived from — a full
+    re-derivation supersedes every change up to that version, so the
+    next maintain tick consumes only commits that landed after it
+    (commits racing the rebuild are simply the next tick's delta).
+    This is the compaction-cadence operation a
     production service runs when the index crosses an occupancy
     threshold; between rebuilds `maintain_band_index` refuses to drift.
 
@@ -2407,24 +2369,20 @@ def rebuild_band_index(
             .select("doc_id", "band", "band_key", bkt)
             .localCheckpoint(eager=True)
         )
-        present = {
-            row["bkt"] for row in fresh.select("bkt").distinct().collect()
-        }
         retire: list[str] = []
         jvm, fs, _ = _hadoop(spark, index_path)
         if _exists(jvm, fs, index_path + "/__snap__"):
+            # every bucket the head holds: the fresh rows replace the ones
+            # they fill and the rest drop (retire_leaves' rule). A
             # membership probe of the fixed residue set via the
             # partial-leaves path (O(INDEX_BUCKETS) metadata even on a
             # spilled manifest), never a full segment enumeration
-            leaves = snapshot_manifest(
-                spark,
-                index_path,
-                leaves=[f"bkt={b_}" for b_ in range(INDEX_BUCKETS)],
-            )["partitions"]
             retire = sorted(
-                leaf
-                for leaf in leaves
-                if int(leaf.split("=", 1)[1]) not in present
+                snapshot_manifest(
+                    spark,
+                    index_path,
+                    leaves=[f"bkt={b_}" for b_ in range(INDEX_BUCKETS)],
+                )["partitions"]
             )
         from callio_etl_spark.io import assert_service_fencing
 
@@ -2487,7 +2445,7 @@ def maintain_band_index_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometry — maintain_band_index(plan_geometry=True): the first tick
     derives (rows_per_band, n_bands) from the corpus size through the
     integer occupancy thresholds and records it as TABLE PROPERTIES on
-    the index manifest (snapshot_set_properties); the second tick is
+    the index manifest in the build's own commit; the second tick is
     deliberately called with a WRONG geometry argument and must use the
     pinned properties instead — key-compatibility by construction, the
     drift class a rolling service must exclude. Same adversarial change

@@ -2307,10 +2307,11 @@ def maintain_vector_index(
     up old cells through the forward map's touched buckets, rewrite the
     union of old+new cell partitions (carried postings anti-joined by
     the changed ids, plus the fresh assignments), and rewrite the
-    touched forward buckets; cells/buckets emptied by deletions are
-    retired by metadata deletes. Centroid refresh stays a separate
-    batch job (the ivf_train_rounds pass) exactly as in FAISS —
-    re-assignments it causes arrive as ordinary updates.
+    touched forward buckets; a touched cell/bucket the rewrite leaves
+    empty drops in the same commit (``retire_leaves``). Centroid
+    refresh stays a separate batch job (the ivf_train_rounds pass)
+    exactly as in FAISS — re-assignments it causes arrive as ordinary
+    updates.
 
     QUANTIZER PINNING: the index records a fingerprint of ``cells``
     (md5 over the sorted (label, centroid) rows) as a table property at
@@ -2339,8 +2340,8 @@ def maintain_vector_index(
         release_service_lock,
     )
     from callio_etl_spark.snapshots import (
+        _rewrite_touched,
         snapshot_consume_changes,
-        snapshot_delete_partitions,
         snapshot_manifest,
         snapshot_partition_overwrite,
         snapshot_read,
@@ -2348,28 +2349,6 @@ def maintain_vector_index(
 
     cells = _ckpt_once(cells)
     cells_fp = _quantizer_fp(cells)
-
-    def _emptied(path: str, col: str, touched, with_rows) -> list[str]:
-        """Leaf names of touched partitions left with no rows — computed
-        BEFORE the tick's overwrite so retirement rides the same commit
-        (retire_leaves): one manifest publish per table per tick, and
-        readers never see the post-overwrite/pre-retirement half state.
-        Partial resolve: membership of the candidates only — O(touched)
-        metadata, never the table's full enumeration."""
-        cand = sorted(set(touched) - set(with_rows))
-        leaves = snapshot_manifest(
-            spark, path, leaves=[f"{col}={v}" for v in cand]
-        )["partitions"]
-        return [f"{col}={v}" for v in cand if f"{col}={v}" in leaves]
-
-    def _retire_only(path: str, retire: list[str]) -> None:
-        # pure-delete tick with nothing to write: metadata-only retire
-        snapshot_delete_partitions(
-            spark,
-            path,
-            [lf.split("=", 1)[1] for lf in retire],
-            keep_snapshots=keep_snapshots,
-        )
 
     def process(batch: DataFrame, bound_version: int) -> None:
         # a tick that stalled past the stale window and lost its service
@@ -2475,8 +2454,10 @@ def maintain_vector_index(
         # old cells via the forward map's touched buckets (O(buckets));
         # the touched-bucket list is collected ONCE and reused by the
         # forward-map rewrite below — it is the same set by definition
-        old_cells = []
         tb = [r["bkt"] for r in changed_ids.select(bkt).distinct().collect()]
+        if not tb:
+            return  # a net-empty delta changes no posting: nothing to commit
+        old_cells = []
         if fwd_exists:
             old_cells = [
                 r["assigned_cell"]
@@ -2493,90 +2474,37 @@ def maintain_vector_index(
         ]
         touched_cells = sorted(set(old_cells) | set(new_cells))
 
+        # each chain makes one commit per table: a touched partition the
+        # rows still fill is replaced, one the tick emptied is dropped
+        # (retire_leaves' rule), and a backfilled pin rides the publish
         def _postings_chain() -> None:
-            # postings: rewrite the touched cell partitions
-            if idx_exists:
-                carried = (
-                    snapshot_read(spark, index_path)
-                    .where(F.col("assigned_cell").isin(touched_cells))
-                    .join(changed_ids, "vec_id", "left_anti")
-                )
-                out = carried.select(*fresh.columns).unionByName(fresh)
-            else:
-                out = fresh
-            out = out.localCheckpoint(eager=True)
-            cells_with_rows = {
-                r["assigned_cell"]
-                for r in out.select("assigned_cell").distinct().collect()
-            }
-            idx_retire = (
-                _emptied(
-                    index_path, "assigned_cell", touched_cells, cells_with_rows
-                )
-                if idx_exists
-                else []
+            out, retire = _rewrite_touched(
+                spark, index_path, "assigned_cell", touched_cells, fresh,
+                changed_ids, "vec_id", idx_exists,
             )
             # fence AT this chain's publish: the delta assignment and the
             # carry above are where a stall can outlast the stale window
             assert_service_fencing(spark, index_path)
-            if cells_with_rows:
-                snapshot_partition_overwrite(
-                    spark, out, index_path, "assigned_cell",
-                    keep_snapshots=keep_snapshots,
-                    retire_leaves=idx_retire or None,
-                    properties=(
-                        {"ivf.quantizer_md5": cells_fp} if pin_now else None
-                    ),
-                )
-            elif idx_retire:
-                _retire_only(index_path, idx_retire)
-            if pin_now and idx_exists and not cells_with_rows:
-                # the proven backfill fingerprint found no data commit to
-                # ride (pure-delete tick against a pre-pin index): record
-                # it now via a metadata-only properties commit rather than
-                # leaving drift protection disabled until the next
-                # non-empty tick.
-                from callio_etl_spark.snapshots import snapshot_set_properties
-
-                snapshot_set_properties(
-                    spark,
-                    index_path,
-                    {"ivf.quantizer_md5": cells_fp},
-                    keep_snapshots=keep_snapshots,
-                )
+            snapshot_partition_overwrite(
+                spark, out, index_path, "assigned_cell",
+                keep_snapshots=keep_snapshots,
+                retire_leaves=retire or None,
+                properties=(
+                    {"ivf.quantizer_md5": cells_fp} if pin_now else None
+                ),
+            )
 
         def _fwd_chain() -> None:
-            # forward map: rewrite the touched id buckets
-            fwd_fresh = fresh.select("vec_id", "assigned_cell", bkt)
-            if fwd_exists:
-                fcarried = (
-                    snapshot_read(spark, fwd_path)
-                    .where(F.col("bkt").isin(tb))
-                    .join(changed_ids, "vec_id", "left_anti")
-                )
-                fout = fcarried.select(*fwd_fresh.columns).unionByName(
-                    fwd_fresh
-                )
-            else:
-                fout = fwd_fresh
-            fout = fout.localCheckpoint(eager=True)
-            bkts_with_rows = {
-                r["bkt"] for r in fout.select("bkt").distinct().collect()
-            }
-            fwd_retire = (
-                _emptied(fwd_path, "bkt", tb, bkts_with_rows)
-                if fwd_exists
-                else []
+            fout, retire = _rewrite_touched(
+                spark, fwd_path, "bkt", tb,
+                fresh.select("vec_id", "assigned_cell", bkt),
+                changed_ids, "vec_id", fwd_exists,
             )
             assert_service_fencing(spark, index_path)
-            if bkts_with_rows:
-                snapshot_partition_overwrite(
-                    spark, fout, fwd_path, "bkt",
-                    keep_snapshots=keep_snapshots,
-                    retire_leaves=fwd_retire or None,
-                )
-            elif fwd_retire:
-                _retire_only(fwd_path, fwd_retire)
+            snapshot_partition_overwrite(
+                spark, fout, fwd_path, "bkt", keep_snapshots=keep_snapshots,
+                retire_leaves=retire or None,
+            )
 
         # The postings and forward-map chains are INDEPENDENT given fresh
         # + changed_ids (both localCheckpointed): each builds its carry
@@ -2622,8 +2550,9 @@ def rebuild_vector_index(
     """EXPLICIT RE-INDEX against a (possibly refreshed) quantizer — the
     rebuild verb the quantizer pin points to: assign the whole live
     corpus to ``cells`` in one broadcast-argmax pass, replace the
-    postings and forward-map tables (cells/buckets emptied since the
-    old quantizer are retired in the SAME commits via retire_leaves),
+    postings and forward-map tables (every leaf each head holds is
+    listed in retire_leaves, so one the new rows leave empty drops in
+    the SAME commit),
     re-pin the new quantizer's fingerprint as a table property, and
     acknowledge the consumer cursor at the vectors version the rebuild
     derived from (racing commits stay in the feed for the next tick).
@@ -2675,24 +2604,17 @@ def rebuild_vector_index(
             raise ValueError("rebuild needs a non-empty vector corpus")
         jvm, fs, _ = _hadoop(spark, index_path)
 
-        def _retire(path: str, col: str, present) -> list[str]:
+        def _held(path: str) -> list[str] | None:
+            # every leaf the head holds: the fresh rows replace the ones
+            # they fill and the rest drop (retire_leaves' rule)
             if not _exists(jvm, fs, path + "/__snap__"):
-                return []
-            leaves = snapshot_manifest(spark, path)["partitions"]
-            return sorted(
-                leaf
-                for leaf in leaves
-                if int(leaf.split("=", 1)[1]) not in present
-            )
+                return None
+            return sorted(snapshot_manifest(spark, path)["partitions"]) or None
 
         from callio_etl_spark.io import assert_service_fencing
 
         def _postings_chain() -> None:
-            cells_present = {
-                r["assigned_cell"]
-                for r in fresh.select("assigned_cell").distinct().collect()
-            }
-            retire = _retire(index_path, "assigned_cell", cells_present) or None
+            retire = _held(index_path)
             # fence AT this chain's publish (see maintain_vector_index)
             assert_service_fencing(spark, index_path)
             snapshot_partition_overwrite(
@@ -2704,17 +2626,11 @@ def rebuild_vector_index(
 
         def _fwd_chain() -> None:
             bkt = (F.col("vec_id") % VINDEX_BUCKETS).cast("int").alias("bkt")
-            fwd = fresh.select(
-                "vec_id", "assigned_cell", bkt
-            ).localCheckpoint(eager=True)
-            bkts_present = {
-                r["bkt"] for r in fwd.select("bkt").distinct().collect()
-            }
-            retire = _retire(fwd_path, "bkt", bkts_present) or None
+            retire = _held(fwd_path)
             assert_service_fencing(spark, index_path)
             snapshot_partition_overwrite(
-                spark, fwd, fwd_path, "bkt", keep_snapshots=keep_snapshots,
-                retire_leaves=retire,
+                spark, fresh.select("vec_id", "assigned_cell", bkt), fwd_path,
+                "bkt", keep_snapshots=keep_snapshots, retire_leaves=retire,
             )
 
         # the two tables' chains run concurrently, each fenced right

@@ -2388,13 +2388,21 @@ def snapshot_partition_overwrite(
     pin is absent or stale, and the next maintenance tick would silently
     key its delta against the wrong parameters.
 
-    ``retire_leaves`` drops the named partition leaves (exact dir names,
-    e.g. ``d=2024-01-05``) in the SAME commit that lands ``df``'s
-    partitions — the atomic move a spec-evolution migration needs: read
-    an old-spec partition's rows, rewrite them under the current spec,
-    and retire the old dir in one manifest publish, so no reader ever
-    sees the rows doubled or missing. Retired dirs stay pinnable in
-    older versions until retention sweeps them."""
+    ``retire_leaves`` names partition leaves (exact dir names, e.g.
+    ``d=2024-01-05``) that this commit REPLACES OR DROPS: a listed leaf
+    that ``df`` writes is replaced by its staged rows, and a listed leaf
+    that ``df`` leaves empty is dropped — both in the one manifest
+    publish that lands the frame (an empty frame publishes a pure drop).
+    Each listed leaf must be held by the head (``FileNotFoundError``
+    otherwise — the spec-evolve migration's typo guard). Callers that
+    rely on the rule: the spec-evolution migration (retire the old-spec
+    dir as its rows land under the current spec),
+    ``snapshot_compact_partition`` (a fully deleted partition retires),
+    the keyed-delta rewrites of ``maintain_band_index`` /
+    ``maintain_vector_index`` (every touched leaf, via
+    ``_rewrite_touched``), their ``rebuild_*`` verbs (every head leaf)
+    and ``run_foreach_batch_snapshot``'s moved-key path. Retired dirs
+    stay pinnable in older versions until retention sweeps them."""
     path = path.rstrip("/")
     if keep_snapshots < 1:
         raise ValueError("keep_snapshots must be >= 1 (the live snapshot)")
@@ -2513,6 +2521,42 @@ def snapshot_partition_overwrite(
         return changes, set(staged) | set(retire_leaves or [])
 
     return _commit(spark, path, keep_snapshots, build)
+
+
+def _rewrite_touched(
+    spark: SparkSession,
+    path: str,
+    col: str,
+    values,
+    fresh: DataFrame,
+    changed: DataFrame,
+    key: str,
+    exists: bool,
+) -> tuple[DataFrame, list[str]]:
+    """The rows and retire list of a keyed-delta rewrite of the touched
+    partitions ``col IN values``: the head's rows there whose ``key`` is
+    not in ``changed``, plus ``fresh``, checkpointed eagerly; and the
+    touched leaves the head holds. Pass both to
+    ``snapshot_partition_overwrite(retire_leaves=)``: a touched leaf the
+    rows still fill is replaced, one they leave empty is dropped, in one
+    commit. The leaf probe is a partial manifest resolve — O(touched)
+    metadata, never the table's full enumeration."""
+    if not exists:
+        return fresh.localCheckpoint(eager=True), []
+    values = sorted(set(values))
+    carried = (
+        snapshot_read(spark, path)
+        .where(F.col(col).isin(values))
+        .join(changed, key, "left_anti")
+    )
+    out = (
+        carried.select(*fresh.columns)
+        .unionByName(fresh)
+        .localCheckpoint(eager=True)
+    )
+    names = [_leaf_name(spark, col, v) for v in values]
+    held = snapshot_manifest(spark, path, leaves=names)["partitions"]
+    return out, [n for n in names if n in held]
 
 
 def snapshot_overwrite(

@@ -266,9 +266,11 @@ def run_foreach_batch_snapshot(
     retired in the same commit if emptied — pass
     ``stable_partitions=True`` to skip that lookup when the partition
     value is a pure function of the merge key (residue buckets, say),
-    keeping the tick O(touched partitions). Partition leaf names use
-    the house ``col=value`` rendering (exact for str/int values — the
-    same contract as snapshot_delete_partitions).
+    keeping the tick O(touched partitions). The retired leaves are
+    every old partition the lookup found beyond the batch's own, named
+    by ``snapshots._leaf_name`` (the writer's exact dir rendering for
+    every value type); ``retire_leaves`` replaces those the carry still
+    fills and drops the emptied ones.
 
     ``cluster_cols`` / ``stats_cols`` / ``zorder_cols`` / ``file_stats``
     / ``bloom_cols`` thread through to every tick's commit, so a
@@ -429,22 +431,18 @@ def run_foreach_batch_snapshot(
             out = carried.select(*batch.columns).unionByName(batch)
             if not stable_partitions:
                 # a moved key can EMPTY its old partition: out then has
-                # no rows for it, the dynamic overwrite couldn't replace
-                # it, and the stale copy would survive — retire those
-                # leaves in the same commit. Leaf names render through
-                # the snapshot layer's writer-exact helper (bool ->
-                # 'true', date forms, percent-escaping), never a bare
-                # f-string that only matches str/int values.
-                have = {
-                    _norm_part(r[0])
-                    for r in carried.select(partition_col)
-                    .distinct()
-                    .collect()
-                } | batch_parts
+                # no rows for it, and the dynamic overwrite alone would
+                # keep the stale copy — so list every old partition the
+                # lookup found beyond the batch's own in retire_leaves
+                # (replaced where the carry still fills it, dropped where
+                # not). Leaf names render through the snapshot layer's
+                # writer-exact helper (bool -> 'true', date forms,
+                # percent-escaping), never a bare f-string that only
+                # matches str/int values.
                 retire = [
                     _leaf_name(spark, partition_col, part_originals[v])
                     for v in sorted(
-                        (v for v in touched_vals if v not in have),
+                        touched_vals - batch_parts,
                         key=lambda v: (v is None, str(v)),
                     )
                 ] or None

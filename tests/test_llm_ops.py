@@ -2310,12 +2310,11 @@ def test_maintain_and_rebuild_hold_service_lock(spark, tmp_path, monkeypatch):
 
 def test_band_index_pure_delete_tick_still_backfills_pin(spark, tmp_path):
     """r11 ADVICE fix (dedup_ops self-heal path): a PURE-DELETE tick
-    against a pre-pin index has nothing to ride its backfill pin on (the
-    partition overwrite never happens), so the old code deferred the pin
-    to the next non-empty tick — a window with drift protection silently
-    disabled. The inferred geometry must now land as a metadata-only
-    properties commit on the same tick; the emptied buckets are retired
-    as before."""
+    against a pre-pin index writes no rows, yet it must still record the
+    inferred geometry on the same tick — deferring the pin to the next
+    non-empty tick would leave drift protection silently disabled. The
+    tick publishes exactly one version: the overwrite that drops the
+    emptied buckets (retire_leaves) carries the pin."""
     from callio_etl_spark import snapshots as snap
     from callio_etl_spark.llm_ops.dedup_ops import (
         maintain_band_index,
@@ -2355,11 +2354,16 @@ def test_band_index_pure_delete_tick_still_backfills_pin(spark, tmp_path):
     snap.snapshot_partition_overwrite(
         spark, docs_df([2, 3, 4, 5]), docs_p, "p", keep_snapshots=10
     )
+    head = snap.snapshot_versions(spark, idx_p)[-1]
     assert (
         maintain_band_index(spark, docs_p, idx_p, cursor, rows_per_band=2,
                             n_bands=4)
         is not None
     )
+    # one commit carries the retirement AND the pin: a separate
+    # properties commit would leave a window with the index unpinned
+    assert snap.snapshot_versions(spark, idx_p)[-1] == head + 1
+    assert snap.snapshot_history(spark, idx_p)[-1]["op"] == "overwrite"
     props = snap.snapshot_properties(spark, idx_p)
     assert (
         int(props["band.rows_per_band"]),
@@ -2377,10 +2381,10 @@ def test_band_index_pure_delete_tick_still_backfills_pin(spark, tmp_path):
 
 def test_vector_index_pure_delete_tick_still_backfills_pin(spark, tmp_path):
     """r11 ADVICE fix, IVF twin: a pure-delete tick against a pre-pin
-    postings table proves the sample agreement but previously deferred
-    the fingerprint pin (no postings commit to ride). It must now land
-    as a metadata-only properties commit, and the re-armed pin refuses a
-    drifted quantizer on the very next tick."""
+    postings table proves the sample agreement and must record the
+    fingerprint on the same tick, in the one overwrite per table that
+    drops the emptied cell; the re-armed pin refuses a drifted quantizer
+    on the very next tick."""
     import pytest as _pytest
 
     from callio_etl_spark import snapshots as snap
@@ -2430,10 +2434,15 @@ def test_vector_index_pure_delete_tick_still_backfills_pin(spark, tmp_path):
     snap.snapshot_partition_overwrite(
         spark, vecs_df([0, 1, 3, 4, 6, 7]), vp, "p", keep_snapshots=10
     )
+    heads = {p: snap.snapshot_versions(spark, p)[-1] for p in (ip, fwd)}
     assert (
         maintain_vector_index(spark, vp, ip, fwd, cursor, cells_a)
         is not None
     )
+    # one overwrite per table: the retirement and the pin share a commit
+    for p in (ip, fwd):
+        assert snap.snapshot_versions(spark, p)[-1] == heads[p] + 1, p
+        assert snap.snapshot_history(spark, p)[-1]["op"] == "overwrite", p
     props = snap.snapshot_properties(spark, ip)
     assert props.get("ivf.quantizer_md5") == pinned0, (
         "pure-delete tick must still backfill the proven fingerprint"

@@ -3922,3 +3922,49 @@ def test_changes_match_null_partition_and_null_key_rows(spark, tmp_path):
         ("a", 2, 30, "update_preimage"),
         ("a", 2, 31, "update_postimage"),
     ]
+
+
+def test_retire_leaves_replaces_or_drops_in_one_commit(spark, tmp_path):
+    """The rule the keyed-delta rewrites (the index services, the
+    streaming sink's moved keys) rely on: a listed leaf the frame writes
+    is replaced, a listed leaf the frame leaves empty is dropped, an
+    unlisted leaf carries over — one version per call, even for an empty
+    frame that only drops leaves and sets properties. A listed leaf the
+    head lacks is refused."""
+    p = str(tmp_path / "t")
+    snap.snapshot_partition_overwrite(spark, _df(spark, range(8)), p, "d")
+    v = snap.snapshot_versions(spark, p)[-1]
+
+    # d=0 listed and written (replaced), d=1 listed and empty (dropped),
+    # d=2 / d=3 unlisted (carried)
+    snap.snapshot_partition_overwrite(
+        spark, _df(spark, [0], mult=100), p, "d",
+        retire_leaves=["d=0", "d=1"],
+    )
+    assert snap.snapshot_versions(spark, p)[-1] == v + 1
+    assert sorted(snap.snapshot_manifest(spark, p)["partitions"]) == [
+        "d=0", "d=2", "d=3",
+    ]
+    rows = snap.snapshot_read(spark, p).collect()
+    got = sorted((r["id"], r["d"]) for r in rows)
+    assert got == [(0, "0"), (2, "2"), (3, "3"), (6, "2"), (7, "3")]
+
+    # an empty frame: a pure drop plus a property, still one version
+    empty = spark.createDataFrame([], "id long, d string")
+    snap.snapshot_partition_overwrite(
+        spark, empty, p, "d", retire_leaves=["d=2"],
+        properties={"pin": "x"},
+    )
+    assert snap.snapshot_versions(spark, p)[-1] == v + 2
+    assert sorted(snap.snapshot_manifest(spark, p)["partitions"]) == [
+        "d=0", "d=3",
+    ]
+    assert snap.snapshot_properties(spark, p)["pin"] == "x"
+    assert snap.snapshot_read(spark, p).count() == 3
+
+    # the head no longer holds d=1: refused, nothing published
+    with pytest.raises(FileNotFoundError, match="retire_leaves"):
+        snap.snapshot_partition_overwrite(
+            spark, _df(spark, [3]), p, "d", retire_leaves=["d=1"]
+        )
+    assert snap.snapshot_versions(spark, p)[-1] == v + 2
