@@ -3,10 +3,12 @@
 runner.py:967-1010) over the engine's fixture schema (FIXTURES.md mapping:
 events = call_log, orders = customer-assignment stream).
 
-``once`` runs one incremental tick per selected job (scan -> dedup -> MERGE
--> checkpoint commit -> audit log) and then refreshes the two reporting
-facts (the reference's post-run hook, runner.py:1004-1008). ``daemon`` wraps
-the same ticks in the slot scheduler (scheduler.run_daemon).
+``once`` runs one incremental tick per selected job — ``pipeline.run_tick``,
+the same durable, service-locked tick the HTTP loop rows run (scan ->
+dedup -> windowed MERGE -> checkpoint commit -> audit log) — and then
+refreshes the two reporting facts (the reference's post-run hook,
+runner.py:1004-1008). ``daemon`` wraps the same ticks in the slot
+scheduler (scheduler.run_daemon).
 
 Every warehouse table is a snapshot table (snapshots.py): the tick
 tables (call_log, customer) month-partitioned, the whole-table outputs
@@ -34,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from callio_etl_spark.checkpoints import CheckpointStore
 from callio_etl_spark.config import EngineConfig
 from callio_etl_spark.functions import row_hash
-from callio_etl_spark.pipeline import IncrementalTable, commit, run_tick
+from callio_etl_spark.pipeline import IncrementalTable, run_tick
 from callio_etl_spark.snapshots import _snapshot_table_at
 from callio_etl_spark.tables import load_table
 
@@ -71,89 +73,40 @@ def _month_of(time_col_ms: str):
 
 
 def _tick(spark: SparkSession, cfg: EngineConfig, store: CheckpointStore, job: str) -> None:
-    """One incremental tick: the merged warehouse lands as a
-    month-partitioned SNAPSHOT commit (snapshots.py) touching ONLY the
-    months the fresh batch hit — untouched months carry over by
-    reference, readers get snapshot isolation + pinnable history for
-    free, and the commit cost is O(touched months), not O(table).
-
-    The rewrite set must cover BOTH sides of every merged key: the month
-    its new row lands in (from the fresh slice) AND the month its
-    superseded old row lived in (from the target). An update whose
-    time_col_ms moves across a month boundary would otherwise leave the
-    stale copy behind in the old partition, carried over by manifest
-    reference — a duplicate key in the warehouse. Untouched keys stay
-    final below the cutoff (C2), so months holding none of the fresh
-    keys are safe to carry over.
-
-    A plain parquet table at the path is refused before anything is
-    fetched: the checkpoint already covers its rows, so treating it as
-    an empty target would publish a table holding only the overlap
-    slice."""
+    """One incremental tick of ``job``: ``pipeline.run_tick`` into the
+    snapshot table ``<work_dir>/<table>``, partitioned by ``ym`` (yyyy-MM
+    of the event time), so an update crossing a month boundary retires
+    its old copy and untouched months carry over by reference. A plain
+    parquet table at the path is refused before the lock is taken or
+    anything fetched: the checkpoint already covers its rows, so
+    treating it as empty would publish only the overlap slice."""
     from callio_etl_spark.logging_utils import job_stage
-    from callio_etl_spark.snapshots import (
-        snapshot_partition_overwrite,
-        snapshot_read,
-    )
 
     table, prepare = JOB_TABLES[job]
     path = os.path.join(cfg.work_dir, table.name).rstrip("/")
-    # job_stage labels every Spark job of this tick in the UI/history
-    # server (the reference's per-step progress bars, runner.py:356-567,
-    # rendered the cluster way) and gives operators a cancellable group.
-    with job_stage(spark, f"tick:{table.name}"):
-        target = None
-        if _snapshot_table_at(
-            spark,
-            path,
-            f"add ym = date_format(timestamp_millis({table.time_col_ms}), "
-            f"'yyyy-MM'), snapshot_partition_overwrite it by 'ym'",
-        ):
-            target = snapshot_read(spark, path).drop("ym")
+    _snapshot_table_at(
+        spark,
+        path,
+        f"add ym = date_format(timestamp_millis({table.time_col_ms}), "
+        f"'yyyy-MM'), snapshot_partition_overwrite it by 'ym'",
+    )
+
+    def fetch(cutoff: int) -> DataFrame:
         batch = prepare(spark, cfg.sf_dir)
         if cfg.limit_records:
             batch = batch.orderBy(F.col(table.time_col_ms).desc()).limit(
                 cfg.limit_records
             )
-        cutoff = store.cutoff_ms(table.name, TENANT)
-        merged, new_ck = run_tick(spark, store, table, batch, target, TENANT)
-        if new_ck is not None:
-            fresh = batch.where(
-                (F.col(table.tenant_col) == TENANT)
-                & (F.col(table.time_col_ms) > F.lit(cutoff))
-            )
-            months = {
-                r[0]
-                for r in fresh.select(_month_of(table.time_col_ms).alias("ym"))
-                .distinct()
-                .collect()
-            }
-            if target is not None:
-                # months where the matched keys' PREVIOUS rows live — a
-                # cross-month update must retire the old copy too, so its
-                # partition joins the rewrite set (metadata-sized collect:
-                # distinct yyyy-MM values only)
-                months |= {
-                    r[0]
-                    for r in target.join(
-                        fresh.select(*table.keys).distinct(),
-                        table.keys,
-                        "left_semi",
-                    )
-                    .select(_month_of(table.time_col_ms).alias("ym"))
-                    .distinct()
-                    .collect()
-                }
-            months = sorted(months)
-            out = merged.withColumn("ym", _month_of(table.time_col_ms))
-            snapshot_partition_overwrite(
-                spark,
-                out.where(F.col("ym").isin(months)),
-                path,
-                "ym",
-                keep_snapshots=_keep_snapshots(cfg),
-            )
-        commit(store, table, TENANT, new_ck)
+        return batch.withColumn("ym", _month_of(table.time_col_ms))
+
+    # job_stage labels every Spark job of this tick in the UI/history
+    # server (the reference's per-step progress bars, runner.py:356-567,
+    # rendered the cluster way) and gives operators a cancellable group.
+    with job_stage(spark, f"tick:{table.name}"):
+        run_tick(
+            spark, store, table, path, "ym", fetch, TENANT,
+            _keep_snapshots(cfg),
+        )
 
 
 def _keep_snapshots(cfg: EngineConfig) -> int:

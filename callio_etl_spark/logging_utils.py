@@ -21,6 +21,7 @@ runner.py:356,393,529,567). Port decisions:
 from __future__ import annotations
 
 import logging
+import sys
 import time
 from collections.abc import Iterable, Iterator
 from contextlib import contextmanager
@@ -35,10 +36,18 @@ T = TypeVar("T")
 _PROGRESS_INTERVAL_S = 2.0
 
 
+class _StderrHandler(logging.StreamHandler):
+    """A StreamHandler on whatever ``sys.stderr`` is when it emits, not
+    the stream of its creation time (which a test runner closes)."""
+
+    stream = property(lambda self: sys.stderr, lambda self, _: None)
+
+
 def configure_logging(level: str = "INFO") -> logging.Logger:
     """Root logger setup (reference logging_utils.py:53-64): RichHandler
-    when Rich is importable, stdlib StreamHandler otherwise; always
-    force-reconfigures so repeated CLI invocations don't stack handlers."""
+    when Rich is importable, a stdlib handler on the current stderr
+    otherwise; always force-reconfigures so repeated CLI invocations
+    don't stack handlers."""
     try:
         from rich.logging import RichHandler  # optional, like the reference
 
@@ -47,7 +56,7 @@ def configure_logging(level: str = "INFO") -> logging.Logger:
         )
         fmt = "%(message)s"
     except ImportError:
-        handler = logging.StreamHandler()
+        handler = _StderrHandler()
         fmt = "%(asctime)s %(levelname)s %(name)s: %(message)s"
     logging.basicConfig(level=level, handlers=[handler], format=fmt, force=True)
     return logging.getLogger("callio_etl_spark")

@@ -8,9 +8,11 @@ container ships no Delta Lake, so the engine provides:
   conditional selection; returns the post-merge DataFrame. Oracle-checkable.
 - ``merge_write_snapshot`` physical upsert into a snapshot table
   (snapshots.py): only the partitions in the merge window are read,
-  merged and replaced, in ONE manifest commit — the reference's
+  merged and rewritten — a window partition the merge empties is
+  dropped — in ONE manifest commit: the reference's
   `T.<date> BETWEEN part_min AND part_max` pruning conjunct in MERGE ON,
-  with BigQuery's job atomicity.
+  with BigQuery's job atomicity. ``pipeline.run_tick`` is its
+  incremental caller.
 
 Correctness contract (as the reference enforces): the source must have ONE
 row per key — run dedup.latest_per_key first (runner.py:165-173 does exactly
@@ -29,6 +31,7 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import NumericType
 
 
 @dataclass
@@ -127,7 +130,7 @@ def merge_write_snapshot(
     174-176, 699-701) on a plain filesystem.
 
     Window contract: only partitions in [part_min, part_max] are read and
-    replaced (stray source rows outside the window fail fast — they would
+    rewritten (stray source rows outside the window fail fast — they would
     otherwise clobber partitions excluded from the windowed target);
     partitions outside the window carry over by manifest reference at
     zero I/O. Without a window the whole table is merged. Returns the
@@ -136,10 +139,22 @@ def merge_write_snapshot(
     ``part_values`` is the SET-valued window (mutually exclusive with
     part_min/part_max): only the named partition values — typically the
     exact touched set, e.g. the id buckets a delta hashes into — are
-    read and replaced, so the merge I/O is O(touched partitions) even
+    read and rewritten, so the merge I/O is O(touched partitions) even
     when the touched set is not a contiguous range. Same stray-row
-    fail-fast."""
-    from callio_etl_spark.snapshots import snapshot_partition_overwrite, snapshot_read
+    fail-fast.
+
+    The window is rewritten exactly: every window partition the head
+    holds goes into ``retire_leaves``, so one the merge leaves empty (a
+    key moved to another window partition) is dropped in the same
+    commit instead of carrying its stale rows forward. No window holds
+    the NULL partition."""
+    from callio_etl_spark.snapshots import (
+        _leaf_name,
+        _leaf_value_in,
+        snapshot_manifest,
+        snapshot_partition_overwrite,
+        snapshot_read,
+    )
 
     if part_values is not None and (
         part_min is not None or part_max is not None
@@ -158,30 +173,53 @@ def merge_write_snapshot(
                 "and merge nothing; skip the merge for an empty delta "
                 "instead"
             )
-        stray = source.where(
-            ~F.col(partition_col).isin(vals)
-            | F.col(partition_col).isNull()
+        in_window = F.col(partition_col).isin(vals)
+        window = f"{sorted(vals, key=str)!r}"
+        # partial probe: O(window) metadata, never the full enumeration
+        names = [
+            _leaf_name(spark, partition_col, v)
+            for v in set(vals)
+            if v is not None
+        ]
+        held = snapshot_manifest(spark, target_path, leaves=names)
+        retire = [n for n in names if n in held["partitions"]]
+    elif part_min is not None:
+        in_window = F.col(partition_col).between(part_min, part_max)
+        window = f"[{part_min}, {part_max}]"
+        # a leaf value compares in the bounds' type, while Spark compares
+        # a numeric column numerically: string bounds on a numeric column
+        # decide no leaf (a misjudged leaf would be retired unread)
+        decidable = isinstance(
+            target.schema[partition_col].dataType, NumericType
+        ) == (
+            isinstance(part_min, (int, float))
+            and not isinstance(part_min, bool)
         )
+        retire = [
+            leaf
+            for leaf in snapshot_manifest(spark, target_path)["partitions"]
+            if decidable
+            and leaf.split("=", 1)[0] == partition_col
+            and _leaf_value_in(spark, leaf, part_min, part_max) is True
+        ]
+    else:
+        in_window = None
+        retire = list(snapshot_manifest(spark, target_path)["partitions"])
+    if in_window is not None:
+        stray = source.where(~in_window | F.col(partition_col).isNull())
         if stray.limit(1).count() > 0:
             raise ValueError(
                 f"merge_write_snapshot: source rows outside the merge "
-                f"window {sorted(vals)!r} on {partition_col!r} would "
-                f"clobber partitions excluded from the windowed target"
+                f"window {window} on {partition_col!r} would clobber "
+                f"partitions excluded from the windowed target"
             )
-        target = target.where(F.col(partition_col).isin(vals))
-    elif part_min is not None:
-        stray = source.where(
-            ~F.col(partition_col).between(part_min, part_max)
-            | F.col(partition_col).isNull()
-        )
-        if stray.limit(1).count() > 0:
-            raise ValueError(
-                f"merge_write_snapshot: source rows outside the merge window "
-                f"[{part_min}, {part_max}] on {partition_col!r} would "
-                f"clobber partitions excluded from the windowed target"
-            )
-        target = target.where(F.col(partition_col).between(part_min, part_max))
+        target = target.where(in_window)
     merged = merge_upsert(target, source, spec)
     return snapshot_partition_overwrite(
-        spark, merged, target_path, partition_col, keep_snapshots=keep_snapshots
+        spark,
+        merged,
+        target_path,
+        partition_col,
+        keep_snapshots=keep_snapshots,
+        retire_leaves=retire or None,
     )

@@ -2,11 +2,13 @@
 (SURVEY.md sections 2.9, 3.1-3.2) as a generic Spark flow.
 
 Reference: runner.py:55-146 (customer tick), 523-563 (window merge + commit).
-One tick = cutoff -> scan filter -> transform -> dedup latest-per-key ->
-MERGE into target -> advance checkpoint -> audit log. The ordering is the
-exactly-once-ish contract (C4): the checkpoint commits only after a
-successful merge, and the overlap re-read (C2) + conditional MERGE (J8) make
-replays idempotent.
+``run_tick`` is the engine's ONE incremental tick, shared by the CLI and
+the HTTP loop rows: under the table's service lock it runs cutoff ->
+fetch -> dedup latest-per-key -> windowed MERGE into the snapshot table
+-> advance checkpoint -> audit log. The ordering is the exactly-once-ish
+contract (C4): the checkpoint commits only after the MERGE published,
+and the overlap re-read (C2) + conditional MERGE (J8) make replays
+idempotent.
 
 Tenants are a column, not a loop (SURVEY section 3.1): one DataFrame carries
 all tenants through the same plan; per-tenant checkpoints come from one
@@ -16,6 +18,7 @@ group-by-max, not N queries.
 from __future__ import annotations
 
 import contextlib
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
@@ -23,41 +26,32 @@ from pyspark.sql import DataFrame, SparkSession
 
 from callio_etl_spark.checkpoints import CheckpointStore
 from callio_etl_spark.dedup import latest_per_key
-from callio_etl_spark.merge import MergeSpec, merge_upsert
 
 
 @contextlib.contextmanager
 def single_writer_tick(spark: SparkSession, table_path: str):
-    """Serialize a WHOLE incremental-loop tick — read checkpoint -> fetch
-    -> merge -> publish -> checkpoint advance — against a concurrent loop
-    instance on the same durable target (a restarted daemon racing its
-    predecessor, a double-started scheduler slot: exactly the split-brain
-    the reference's single-daemon deployment makes implicit,
-    runner.py:55-210).
+    """Serialize a WHOLE incremental tick — read checkpoint -> fetch ->
+    merge -> publish -> checkpoint advance — against a concurrent tick on
+    the same durable target (a restarted daemon racing its predecessor, a
+    double-started scheduler slot: the split-brain the reference's
+    single-daemon deployment makes implicit, runner.py:55-210).
 
-    The per-commit table lock inside the merge publish serializes COMMITS
-    but not the tick's read-modify-write: two loop instances could both
-    read target version v, both merge their overlapping delta, and the
-    second publish — computed against v, not v+1 — would silently DROP
-    the first's rows (and the doubled checkpoint flush could re-deliver
-    or skip a window). The tick therefore runs under the table's SERVICE
-    lock, the same second-layer mutex the index maintainers hold across
-    their multi-commit sequences; a second loop instance blocks at
-    acquire and then runs against the updated target + checkpoint.
-
-    Callers MUST call ``io.assert_service_fencing(spark, table_path)``
-    immediately before the merge publish and before the checkpoint flush:
-    a tick that stalled past the stale window and lost this lock to a
-    reclaim then aborts loudly instead of publishing over the new owner —
-    and its retry under a fresh lock is idempotent (latest-per-key dedup
-    + the row_hash-guarded MERGE make a replayed delta a no-op).
+    The per-commit table lock serializes COMMITS but not the tick's
+    read-modify-write: two ticks could both read target version v and
+    merge against it, and the second publish would silently DROP the
+    first's rows (and the doubled checkpoint flush could re-deliver or
+    skip a window). So the tick holds the table's SERVICE lock, the same
+    second-layer mutex the index maintainers hold; a second instance
+    blocks at acquire, then runs against the updated target and
+    checkpoint. ``run_tick`` fences before the publish and before the
+    checkpoint flush, so a tick that lost this lock to a reclaim aborts
+    instead of publishing over the new owner; its retry is idempotent
+    (latest-per-key dedup + the row_hash-guarded MERGE).
 
     The acquire waits out a WHOLE tick plus the stale window (not the
-    120 s per-commit default): a tick can legitimately run minutes on a
-    backlog window, and a waiter that timed out mid-hold would crash the
-    restarted daemon instead of serializing behind the live one; past
-    stale_s a genuinely dead holder is reclaimed and the waiter
-    proceeds."""
+    120 s per-commit default): a waiter that timed out mid-hold would
+    crash the restarted daemon instead of serializing behind the live
+    one; past stale_s a dead holder is reclaimed."""
     from callio_etl_spark.io import (
         acquire_service_lock,
         release_service_lock,
@@ -82,53 +76,105 @@ def run_tick(
     spark: SparkSession,
     store: CheckpointStore,
     table: IncrementalTable,
-    batch: DataFrame,
-    target: DataFrame | None,
+    path: str,
+    partition_col: str,
+    fetch: Callable[[int], DataFrame],
     tenant: str,
+    keep_snapshots: int,
     now_ms: int | None = None,
-) -> tuple[DataFrame, int | None]:
-    """One incremental tick for one tenant; returns (merged_target, new_ck).
+    login: Callable[[], object] | None = None,
+    properties: dict | None = None,
+    stable_partitions: bool = False,
+) -> int | None:
+    """The ONE incremental tick: one tenant's delta MERGEd into the
+    snapshot table at ``path``, under ``single_writer_tick``. Returns the
+    new checkpoint, or None when nothing merged.
 
-    batch is the already-transformed incoming frame (flatten.* output). The
-    caller persists merged_target, then calls commit() — never before
-    (C4 ordering, runner.py:547-554)."""
-    cutoff = store.cutoff_ms(table.name, tenant, now_ms)
-    fresh = batch.where(
-        (F.col(table.tenant_col) == tenant) & (F.col(table.time_col_ms) > F.lit(cutoff))
+    State comes from disk only (checkpoint warmed from the update_log,
+    create-vs-merge from the published head), so a restarted process
+    resumes where the last commit left off. Steps: warm; the optional
+    ``auth_guard(login)`` (a failed login audits ERROR_LOGIN, checkpoint
+    held); ``fetch(cutoff)`` filtered to ``tenant`` and ``time > cutoff``,
+    deduped latest-per-key (D3) and checkpointed, so the source is read
+    once; an empty delta audits NOOP; otherwise create the table (with
+    ``properties``) or MERGE with the J8 condition through
+    ``merge_write_snapshot``'s set window — the delta's partitions plus
+    the ones its keys live in now, so a key whose partition value moved
+    leaves no stale copy (``stable_partitions=True`` skips that lookup
+    when the partition value is a function of the key); advance the
+    checkpoint and audit MERGED (C4); flush and compact the update_log.
+    The service-lock fence runs before the publish and before the flush,
+    so a tick that lost its lock to a reclaim aborts first."""
+    from callio_etl_spark.io import assert_service_fencing
+    from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
+    from callio_etl_spark.snapshots import (
+        snapshot_has_published_head,
+        snapshot_partition_overwrite,
+        snapshot_read,
     )
-    # D3 — one source row per key, newest wins (runner.py:165-173).
-    fresh = latest_per_key(
-        fresh, table.keys, F.col(table.time_col_ms).cast("long"), [F.col("row_hash")]
-    )
 
-    row_count, max_ms = _stats(fresh, table.time_col_ms)
-    if row_count == 0:
-        store.log(table.name, tenant, 0, store.get(table.name, tenant), "NOOP")
-        return target if target is not None else fresh.limit(0), None
-
-    if target is None:
-        merged = fresh
-    else:
-        # J8 — update when the row actually changed or is newer.
-        cond = (~F.col("T.row_hash").eqNullSafe(F.col("S.row_hash"))) | (
-            F.col(f"S.{table.time_col_ms}").cast("long")
-            > F.coalesce(F.col(f"T.{table.time_col_ms}").cast("long"), F.lit(0))
+    n, new_ck, t = 0, None, table.time_col_ms
+    with single_writer_tick(spark, path):
+        store.warm()  # checkpoint from disk, AFTER the lock (no stale read)
+        logged_in = login is None or (
+            auth_guard(store, table.name, tenant, login) is not None
         )
-        merged = merge_upsert(target, fresh, MergeSpec(keys=table.keys, update_condition=cond))
-    store.log(table.name, tenant, row_count, max_ms, "MERGED")
-    return merged, max_ms
-
-
-def commit(store: CheckpointStore, table: IncrementalTable, tenant: str, new_ck: int | None) -> None:
-    """C4 — advance the checkpoint after the merged result is persisted."""
-    if new_ck is not None:
-        store.set(table.name, tenant, new_ck)
-    store.flush()
+        if logged_in:
+            has_head = snapshot_has_published_head(spark, path)
+            cutoff = store.cutoff_ms(table.name, tenant, now_ms)
+            fresh = latest_per_key(  # D3, runner.py:165-173
+                fetch(cutoff).where(
+                    (F.col(table.tenant_col) == tenant)
+                    & (F.col(t) > F.lit(cutoff))
+                ),
+                table.keys,
+                F.col(t).cast("long"),
+                [F.col("row_hash")],
+            ).localCheckpoint(eager=True)
+            n, new_ck = _stats(fresh, t)
+        if n:
+            assert_service_fencing(spark, path)
+            if not has_head:
+                snapshot_partition_overwrite(
+                    spark, fresh, path, partition_col,
+                    keep_snapshots=keep_snapshots, properties=properties,
+                )
+            else:
+                touched = fresh.select(partition_col)
+                if not stable_partitions:
+                    touched = touched.union(
+                        snapshot_read(spark, path)
+                        .join(fresh.select(*table.keys), table.keys, "left_semi")
+                        .select(partition_col)
+                    )
+                # J8 — update when the row actually changed or is newer
+                cond = ~F.col("T.row_hash").eqNullSafe(F.col("S.row_hash")) | (
+                    F.col(f"S.{t}").cast("long")
+                    > F.coalesce(F.col(f"T.{t}").cast("long"), F.lit(0))
+                )
+                merge_write_snapshot(
+                    spark, path, fresh,
+                    MergeSpec(keys=table.keys, update_condition=cond),
+                    partition_col, keep_snapshots=keep_snapshots,
+                    part_values=[r[0] for r in touched.distinct().collect()],
+                )
+        assert_service_fencing(spark, path)
+        if n:
+            store.set(table.name, tenant, new_ck)
+            store.log(table.name, tenant, n, new_ck, "MERGED")
+        elif logged_in:
+            store.log(table.name, tenant, 0, store.get(table.name, tenant), "NOOP")
+        store.flush()
+        # a NOOP tick compacts too: an idle daemon would otherwise grow
+        # the log by one data dir per tick
+        store.compact_if_needed()
+    return new_ck if n else None
 
 
 # ---------------------------------------------------------------------------
 # The reference's remaining audit-mode emission sites (C5 vocabulary —
-# checkpoints.MODES): run_tick above covers NOOP/MERGED; these verbs cover
+# checkpoints.MODES): run_tick above covers NOOP/MERGED (and ERROR_LOGIN
+# through auth_guard); these verbs cover
 # STAGED (the staging landing, runner.py:144/382), APPEND (the call-log
 # append-with-checkpoint, runner.py:305-313), TRUNCATE (the group snapshot
 # replace, runner.py:410-413), and ERROR_LOGIN (the per-tenant auth-failure

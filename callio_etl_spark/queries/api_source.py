@@ -321,29 +321,27 @@ _LOOP_TAGS = ["S1", "S2", "C1", "C2", "C4", "D3", "J8", "source", "http"]
 @register("http_incremental_loop", oracle=_loop_oracle(2, 1), tags=_LOOP_TAGS)
 def http_incremental_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's WHOLE production loop (runner.py:55-210) over real
-    HTTP, as one oracle-checked operator: checkpoint cutoff (C1, with the
-    C2 overlap re-read) -> paginated HTTP fetch with server-side
-    descending early stop (S1/S2) -> latest-per-key dedup (D3) ->
-    row_hash-guarded MERGE (J8) -> checkpoint advance only after the
-    merge (C4) -> SECOND tick that fetches only the post-watermark delta
-    (new rows + re-emitted UPDATES of tick-1 ids) and upserts it.
+    HTTP, as one oracle-checked operator: two ``pipeline.run_tick`` calls
+    — checkpoint cutoff (C1, C2 overlap) -> paginated HTTP fetch with
+    server-side descending early stop (S1/S2) -> latest-per-key dedup
+    (D3) -> row_hash-guarded MERGE (J8) -> checkpoint advance after the
+    merge (C4) — where tick 2 fetches only the post-watermark delta (new
+    rows + re-emitted UPDATES of tick-1 ids). The table is partitioned by
+    ``event_type`` and every update re-emits its row as 'updated', so
+    each updated key MOVES partition: this row drives run_tick's
+    moved-key path, its twin ``http_loop_snapshot_sink`` the stable one.
 
-    The returned frame is the final merged table; the DuckDB oracle
-    (``_loop_oracle``) recomputes it straight from parquet, so a lost
-    overlap row, a dropped page, a double-applied update, a stale
-    checkpoint, or an update that failed to win its MERGE all break the
-    hash.
-
-    Scale shape: the server is the external system; Spark-side work is
-    the production plan — bisected slices fetched in parallel with
-    per-partition early stop, one window pass for the dedup, and a
-    broadcast-or-shuffle MERGE whose cost is O(delta + touched target),
-    never O(history). Driver-side state is the checkpoint scalar."""
+    The returned frame is the final table read back from disk; the
+    DuckDB oracle (``_loop_oracle``) recomputes it from parquet, so a
+    lost overlap row, a dropped page, a double-applied update, a stale
+    copy left in an old partition, or an update that lost its MERGE all
+    break the hash."""
     import shutil as _shutil
 
     from callio_etl_spark.checkpoints import CheckpointStore
-    from callio_etl_spark.pipeline import IncrementalTable, commit, run_tick
+    from callio_etl_spark.pipeline import IncrementalTable, run_tick
     from callio_etl_spark.queries.sinks import _tmp
+    from callio_etl_spark.snapshots import snapshot_read
     from callio_etl_spark.sources.paged_api import CallioPagedDataSource
 
     served, late_updates = _cohort_and_updates(spark, sf_dir, 2, 1)
@@ -351,53 +349,43 @@ def http_incremental_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         spark.dataSource.register(CallioPagedDataSource)
         root = _tmp("httploop")
+        table_path = f"{root}/events"
         store = CheckpointStore(
             spark, f"{root}/update_log", overlap_ms=_OVERLAP_MS
         )
         table = IncrementalTable(
             name="HttpLoopEvents", keys=["tenant", "_id"], time_col_ms="ts_ms"
         )
-        store.set(table.name, "PK", _T0_MS)  # seeded checkpoint, not cold
+        # seeded checkpoint, not cold: a durable audit row, which the
+        # tick's warm() folds back
+        store.log(table.name, "PK", 0, _T0_MS, "NOOP")
         store.flush()
 
-        def fetch(window_end_ms: int) -> DataFrame:
-            cutoff = store.cutoff_ms(table.name, "PK", window_end_ms)
-            # ONE HTTP walk per tick (the _snapshot_loop_tick contract,
-            # r15): without the checkpoint, every downstream action —
-            # run_tick's count/max stats, the MERGE, the final collect —
-            # re-executes the paginated fetch lineage, so each tick paid
-            # the server walk twice (4 walks per query where 2 suffice,
-            # measured ~2.1 s per redundant walk in the r15 profile)
-            return _loop_fetch(
-                spark, base_url, window_end_ms, cutoff
-            ).localCheckpoint(eager=True)
+        def tick(window_end_ms: int) -> None:
+            run_tick(
+                spark, store, table, table_path, "event_type",
+                lambda cutoff: _loop_fetch(
+                    spark, base_url, window_end_ms, cutoff
+                ),
+                "PK", 2, now_ms=window_end_ms,
+            )
 
-        # tick 1: (T0 - overlap, T_MID]
-        b1 = fetch(_CUTOFF_MS)
-        merged1, ck1 = run_tick(spark, store, table, b1, None, "PK")
-        merged1 = merged1.localCheckpoint(eager=True)
-        commit(store, table, "PK", ck1)
-
+        tick(_CUTOFF_MS)  # (T0 - overlap, T_MID]
         _land_updates(srv, late_updates)
-
-        # tick 2: (ck1 - overlap, T_END] — delta + overlap replays only
-        b2 = fetch(_WINDOW_END_MS)
-        merged2, ck2 = run_tick(spark, store, table, b2, merged1, "PK")
-        result = merged2.select(
+        tick(_WINDOW_END_MS)  # (ck1 - overlap, T_END]: delta + overlap
+        _assert_multi_login(srv)
+        result = snapshot_read(spark, table_path).select(
             "_id",
             "ts_ms",
             "user_id",
             "event_type",
             F.floor(F.col("value") * 1e6).cast("long").alias("value_fold"),
         )
-        # materialize while the server is up; the checkpoint commits
-        # only AFTER the result is persisted (C4), and the roundtrip tmp
-        # dir (checkpoint log) is dropped last — harness runs re-execute
-        # each query several times and would otherwise leak a dir per pass
+        # materialized before the roundtrip tmp dir is dropped — harness
+        # runs re-execute each query several times and would otherwise
+        # leak a dir per pass
         local_rows = result.collect()
-        commit(store, table, "PK", ck2)
         _shutil.rmtree(root, ignore_errors=True)
-        _assert_multi_login(srv)
         return spark.createDataFrame(local_rows, result.schema)
     finally:
         srv.stop()
@@ -412,82 +400,47 @@ def _snapshot_loop_tick(
     password: str = "pw",
     id_buckets: int = 16,
 ) -> None:
-    """One DURABLE production-loop tick driven purely from ON-DISK state
-    (snapshot table + update_log checkpoint under ``root``) — importable
-    from a FRESH process, so a restarted daemon's tick N+1 resumes from
-    exactly what tick N persisted (the restart-resume contract
-    tests/test_api_source.py proves across a real kill -9 process
-    boundary). Nothing crosses ticks in memory: the checkpoint warms from
-    the update_log, the target is the published snapshot head, and
-    create-vs-merge is derived from whether that head EXISTS — a daemon
-    has no 'first' flag.
+    """One DURABLE production-loop tick over live HTTP: ``pipeline.run_tick``
+    into ``<root>/fact_events`` (partitioned by ``pbkt`` = crc32(_id) %
+    id_buckets) with the update_log checkpoint under ``root``. All state
+    is on disk, so a fresh process resumes exactly where the last tick's
+    commits left off (tests/test_api_source.py proves it across a real
+    kill -9). The tick opens with the reference's per-tenant login probe
+    (runner.py:535-537): a failed login audits ERROR_LOGIN and holds the
+    checkpoint.
 
-    SINGLE-WRITER: the whole read-modify-write runs under the table's
-    service lock (pipeline.single_writer_tick — a second loop instance
-    blocks, then ticks against the updated target + checkpoint); the
-    fencing asserts abort a stalled instance that lost the lock to a
-    reclaim BEFORE it can publish or advance the checkpoint. The
-    checkpoint advance is durable: an audit row (C5) carries the new
-    watermark into the update_log, which the next process's warm()
-    folds back (C1) — reference runner.py:547-554 ordering.
-
-    AUTH: the tick opens with the reference's per-tenant login probe
-    (runner.py:535-537 get_token-before-fetch); a failed login audits
-    ERROR_LOGIN and returns with the checkpoint HELD — the operator
-    reading the update_log sees which tenant's login broke, and the next
-    tick retries the full window.
-
-    ``id_buckets``: the merge-partition modulus. 16 is right for the
-    fixture corpus (VERDICT r12 item 6: per-bucket rewrite size grows as
-    corpus/id_buckets and merge parallelism caps at id_buckets, so a
-    production deployment sizes it from expected corpus — mirroring
-    plan_band_geometry's size-driven style). It must stay CONSTANT for a
-    table's lifetime: a drifted modulus would scatter existing ids into
-    wrong buckets, so the first tick PINS it as a table property and
-    later ticks read the pin back, refusing a caller's drifted value."""
+    ``id_buckets`` is the merge-partition modulus: 16 suits the fixture
+    corpus (per-bucket rewrite size grows as corpus/id_buckets and merge
+    parallelism caps at id_buckets). It must stay CONSTANT for a table's
+    lifetime — a drifted modulus scatters existing ids into buckets the
+    merge never reads — so the first tick PINS it as the table property
+    ``loop.id_buckets`` and later ticks check the pin under the lock.
+    The bucket is a function of the key: ``stable_partitions=True``."""
     from callio_etl_spark.checkpoints import CheckpointStore
-    from callio_etl_spark.dedup import latest_per_key
-    from callio_etl_spark.io import assert_service_fencing
-    from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
-    from callio_etl_spark.pipeline import auth_guard, single_writer_tick
-    from callio_etl_spark.snapshots import (
-        snapshot_has_published_head,
-        snapshot_partition_overwrite,
-        snapshot_properties,
-    )
+    from callio_etl_spark.pipeline import IncrementalTable, run_tick
+    from callio_etl_spark.snapshots import snapshot_properties
     from callio_etl_spark.sources.paged_api import HttpApiTransport
 
     table_path = f"{root}/fact_events"
     store = CheckpointStore(
         spark, f"{root}/update_log", overlap_ms=_OVERLAP_MS
     )
-    with single_writer_tick(spark, table_path):
-        store.warm()  # checkpoint from disk, AFTER the lock (no stale read)
-        transport = HttpApiTransport(
-            base_url, email=email, password=password, tenant="PK"
-        )
-        if auth_guard(
-            store, "HttpSnapEvents", "PK", lambda: transport.login("PK")
-        ) is None:
-            assert_service_fencing(spark, table_path)
-            store.flush()
-            store.compact_if_needed()
-            return
-        # probed ONCE per tick: nothing can publish between here and the
-        # create-vs-merge branch below — this instance holds the service
-        # lock across the whole read-modify-write
-        has_table = snapshot_has_published_head(spark, table_path)
-        if has_table:
-            pinned = (snapshot_properties(spark, table_path) or {}).get(
-                "loop.id_buckets"
-            )
-            if pinned is None:
-                # pre-pin table (created before the pin existed): its ids
-                # are bucketed under the historical constant 16 — a caller
-                # override here would scatter existing ids into buckets
-                # the bucket-scoped merge never reads (silent duplicates),
-                # so the missing pin IS the constant, not a free slot
-                pinned = "16"
+    transport = HttpApiTransport(
+        base_url, email=email, password=password, tenant="PK"
+    )
+
+    def fetch(cutoff: int) -> DataFrame:
+        try:
+            props = snapshot_properties(spark, table_path)
+        except FileNotFoundError:
+            props = None  # no published head: this tick pins the modulus
+        if props is not None:
+            # a pre-pin table (created before the pin existed) has its
+            # ids bucketed under the historical constant 16 — a caller
+            # override would scatter existing ids into buckets the
+            # bucket-scoped merge never reads (silent duplicates), so the
+            # missing pin IS the constant, not a free slot
+            pinned = props.get("loop.id_buckets", "16")
             if int(pinned) != id_buckets:
                 raise ValueError(
                     f"id_buckets={id_buckets} drifts from the table's "
@@ -496,77 +449,24 @@ def _snapshot_loop_tick(
                     "needs an explicit rebuild)"
                 )
         pbkt = (F.crc32(F.col("_id")) % id_buckets).cast("int").alias("pbkt")
-        cutoff = store.cutoff_ms("HttpSnapEvents", "PK", window_end_ms)
-        batch = _loop_fetch(
+        return _loop_fetch(
             spark, base_url, window_end_ms, cutoff, extra_cols=[pbkt]
         )
-        fresh = latest_per_key(
-            batch,
-            ["tenant", "_id"],
-            F.col("ts_ms").cast("long"),
-            [F.col("row_hash")],
-        ).localCheckpoint(eager=True)  # one HTTP walk per tick
-        agg = fresh.agg(
-            F.count("*").alias("n"), F.max("ts_ms").alias("mx")
-        ).first()
-        n_rows, new_ck = agg["n"], agg["mx"]
-        if new_ck is None:
-            # empty delta: checkpoint holds; audit the no-op (C5). Fence
-            # before the flush (the single_writer_tick contract — a stale
-            # fenced-out instance must not pollute the audit log) and run
-            # retention before returning: a daemon idling through a long
-            # quiet period (nights, a paused source) otherwise appends
-            # one log file per NOOP tick with no bound until the next
-            # MERGED tick — exactly the growth compaction exists to stop.
-            assert_service_fencing(spark, table_path)
-            store.log(
-                "HttpSnapEvents", "PK", 0,
-                store.get("HttpSnapEvents", "PK"), "NOOP",
-            )
-            store.flush()
-            store.compact_if_needed()
-            return
-        assert_service_fencing(spark, table_path)
-        if not has_table:
-            snapshot_partition_overwrite(
-                spark, fresh, table_path, "pbkt", keep_snapshots=3,
-                properties={"loop.id_buckets": str(id_buckets)},
-            )
-        else:
-            cond = (
-                ~F.col("T.row_hash").eqNullSafe(F.col("S.row_hash"))
-            ) | (
-                F.col("S.ts_ms").cast("long")
-                > F.coalesce(F.col("T.ts_ms").cast("long"), F.lit(0))
-            )
-            # SET-valued merge window: read and rewrite only the id
-            # buckets this delta actually hashes into (<= id_buckets
-            # values, metadata-sized collect) — untouched buckets carry
-            # by manifest reference at zero I/O
-            touched = [
-                r["pbkt"] for r in fresh.select("pbkt").distinct().collect()
-            ]
-            merge_write_snapshot(
-                spark,
-                table_path,
-                fresh,
-                MergeSpec(keys=["tenant", "_id"], update_condition=cond),
-                "pbkt",
-                keep_snapshots=3,
-                part_values=touched,
-            )
-        # C4: the checkpoint advances only after the manifest publish
-        # above committed the merged table, and only while this instance
-        # still owns the tick; the audit row makes the advance DURABLE
-        assert_service_fencing(spark, table_path)
-        store.set("HttpSnapEvents", "PK", int(new_ck))
-        store.log("HttpSnapEvents", "PK", n_rows, int(new_ck), "MERGED")
-        store.flush()
-        # retention at the tick's quiet point, still inside the
-        # single-writer section (no concurrent flush can race the
-        # rewrite): one manifest read per tick, a rewrite ~once per
-        # max_files ticks
-        store.compact_if_needed()
+
+    run_tick(
+        spark,
+        store,
+        IncrementalTable("HttpSnapEvents", ["tenant", "_id"], "ts_ms"),
+        table_path,
+        "pbkt",
+        fetch,
+        "PK",
+        3,
+        now_ms=window_end_ms,
+        login=lambda: transport.login("PK"),
+        properties={"loop.id_buckets": str(id_buckets)},
+        stable_partitions=True,
+    )
 
 
 @register(
@@ -575,15 +475,13 @@ def _snapshot_loop_tick(
     tags=_LOOP_TAGS + ["S11", "snapshot"],
 )
 def http_loop_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production loop with a DURABLE sink — what
-    ``http_incremental_loop`` proves for the in-memory merge, this row
-    proves against the snapshot table format the sinks actually use
-    (reference runner.py:163-199 merges into a real BigQuery table, not
-    a frame): tick 1 lands the HTTP batch as a snapshot-isolated
-    partitioned table; tick 2 re-reads the TARGET FROM DISK (nothing
-    carried in memory across ticks — the restart-resume semantics a
-    daemon restart needs), fetches only the post-watermark delta over
-    live HTTP, and MERGEs it in ONE manifest publish
+    """The production loop with a DURABLE sink, driven the way a daemon
+    drives it: two ``_snapshot_loop_tick`` calls (``pipeline.run_tick``
+    over live HTTP). Tick 1 lands the HTTP batch as a snapshot-isolated
+    partitioned table; tick 2 re-reads the target and the checkpoint
+    FROM DISK (nothing carried in memory across ticks — the
+    restart-resume semantics a daemon restart needs), fetches only the
+    post-watermark delta, and MERGEs it in ONE manifest publish
     (merge.merge_write_snapshot — BigQuery-atomic parity: a racing
     reader sees whole pre- or post-merge versions, never a partition
     mix). The returned frame is the final table read back from disk, so
@@ -591,12 +489,14 @@ def http_loop_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge all break the DuckDB hash.
 
     Scale shape: the table is partitioned by a STABLE id bucket
-    (updates never move partitions), and tick 2 merges through the
+    (updates never move partitions, so the tick passes
+    ``stable_partitions=True``), and tick 2 merges through the
     SET-valued window (merge_write_snapshot's ``part_values`` = the
     delta's touched buckets): only those partitions are read and
     rewritten, the rest carry by manifest reference at zero I/O — the
     production O(touched) shape even when the touched set is not a
-    contiguous range. The checkpoint scalar and the <=16-value touched
+    contiguous range. Its twin ``http_incremental_loop`` drives the
+    moved-key path. The checkpoint scalar and the <=16-value touched
     list are the only driver-side state."""
     import shutil as _shutil
 
@@ -688,9 +588,9 @@ def update_log_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
       tenant is skipped, checkpoint held (reference runner.py:535-537);
     - STAGED: the customer staging landing (pipeline.stage_batch,
       runner.py:139-146) with the staged row count, checkpoint NULL;
-    - MERGED then NOOP: two run_tick passes over the same batch (the
-      second sees nothing past the advanced watermark — runner.py:90,
-      547-554);
+    - MERGED then NOOP: two durable ``run_tick`` passes over the same
+      batch into a snapshot table, read back (the second sees nothing
+      past the advanced watermark — runner.py:90, 547-554);
     - APPEND: the call-log append-with-checkpoint (pipeline.append_tick,
       runner.py:305-313) carrying the NEW checkpoint in the audit row;
     - TRUNCATE: the group snapshot replace (pipeline.snapshot_truncate,
@@ -709,7 +609,6 @@ def update_log_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         IncrementalTable,
         append_tick,
         auth_guard,
-        commit,
         run_tick,
         snapshot_truncate,
         stage_batch,
@@ -751,7 +650,9 @@ def update_log_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stage_batch(store, "customer", "T1", cust, f"{root}/stg_customer")
 
-    # MERGED then NOOP: the incremental tick pair over one batch
+    # MERGED then NOOP: the incremental tick pair over one batch, into a
+    # snapshot table partitioned by tenant (a merge-key column, so
+    # partition values never move)
     table = IncrementalTable(
         name="call-log", keys=["tenant", "_id"], time_col_ms="ts_ms"
     )
@@ -765,16 +666,17 @@ def update_log_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(F.col("event_id").cast("string")).alias("row_hash"),
         )
     )
-    merged1, ck1 = run_tick(
-        spark, store, table, batch, None, "T1", now_ms=_WINDOW_END_MS
-    )
-    # persisted before the commit (C4) — keep the CHECKPOINTED frame
-    merged1 = merged1.localCheckpoint(eager=True)
-    commit(store, table, "T1", ck1)
-    _, ck2 = run_tick(
-        spark, store, table, batch, merged1, "T1", now_ms=_WINDOW_END_MS
-    )
-    assert ck2 is None, "second tick past the watermark must NOOP"
+    def tick() -> int | None:
+        return run_tick(
+            spark, store, table, f"{root}/call_log", "tenant",
+            lambda cutoff: batch, "T1", 1,
+            now_ms=_WINDOW_END_MS, stable_partitions=True,
+        )
+
+    tick()
+    assert tick() is None, "second tick past the watermark must NOOP"
+    merged = snapshot_read(spark, f"{root}/call_log")
+    assert merged.count() == batch.select("_id").distinct().count()
 
     # APPEND: immutable call records straight into the target, audit row
     # carries the NEW checkpoint

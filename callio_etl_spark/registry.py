@@ -55,49 +55,45 @@ def register(name: str, oracle: str | None = None, tags: list[str] | None = None
 #: every round via tools/check_correctness.py (stricter value compare
 #: than the driver hash).
 #:
-#: r17 rotation: the ledger from CORRECTNESS_r01..r15 (the r16 window has
-#: no recording yet) shows 17 rows whose latest driver check is r10, 47 at
-#: r11, 47 at r12, 48 at r14 and 50 at r15. The window holds:
-#:   1. the 18 r11-vintage rows the r16 window left at positions 51-68
-#:      (minhash_lsh_pairs_grouped .. vocab_coverage);
-#:   2. the seven rows tagged ``index``, whose write path now passes
-#:      every touched partition to ``retire_leaves`` (one commit per
-#:      table per tick);
+#: r18 rotation: the ledger from CORRECTNESS_r01..r15 (the r16 and r17
+#: windows have no recording yet) shows 17 rows whose latest driver check
+#: is r10, 47 at r11, 47 at r12, 48 at r14 and 50 at r15. The window holds:
+#:   1. the 21 r11-vintage rows the r17 window left at positions 51-71
+#:      (customer_in_range .. minhash_lsh_pairs_capped, incl.
+#:      http_incremental_loop and merge_upsert_snapshot);
+#:   2. http_loop_snapshot_sink and update_log_modes, the other two rows
+#:      whose tick now runs through the durable ``pipeline.run_tick``;
 #:   3. the rest oldest-first from the ledger, ties alphabetical: all 17
-#:      r10 rows, then 8 of the remaining 29 r11 rows (ann_topk_brute ..
-#:      curriculum_bins_audit). The other 21 r11 rows hold positions
-#:      51-71 and lead the next window; the r16 canaries with a later
-#:      ledger row (update_log_modes r14, checkpoint_log_compact,
-#:      http_loop_snapshot_sink and ivm_refresh_join r12) wait their turn.
+#:      r10 rows, then 10 of the remaining 26 r11 rows (ann_topk_brute ..
+#:      percentile_summary). The other 16 r11 rows hold positions 51-66
+#:      and lead the next window.
 DRIVER_PRIORITY: list[str] = [
-    # --- the r11-vintage rows from r16's positions 51-68 (18) ---
-    "minhash_lsh_pairs_grouped",
-    "percentile_summary",
-    "pivot_event_types",
-    "pmi_cooccurrence",
-    "posexplode_tokens",
-    "profile_columns",
-    "range_join_bucketed",
-    "regexp_suite",
-    "rollup_agg",
-    "semantic_dedup",
-    "semantic_dedup_gemm",
-    "sessionize",
-    "set_intersect_except",
-    "sink_bloom_skip",
-    "sink_compact_vacuum",
-    "sketch_error_bounds",
-    "token_dist_drift",
-    "vocab_coverage",
-    # --- the index-service rows whose write path this round changes (7) ---
-    "maintain_band_index",
-    "maintain_band_index_planned",
-    "maintain_vector_index",
-    "rebuild_band_index",
-    "rebuild_vector_index",
-    "stream_ingest_band_index",
-    "stream_ingest_vector_index",
-    # --- oldest-first from the ledger: r10 (17), then r11 (8 of 29) ---
+    # --- the r11 rows the r17 window left at positions 51-71 (21) ---
+    "customer_in_range",
+    "dedup_cluster_assign",
+    "dedup_exact",
+    "dedup_first_wins",
+    "dedup_survivors",
+    "dq_checks",
+    "embedding_neardup",
+    "embedding_neardup_bucketed",
+    "embedding_quantize",
+    "exists_subquery",
+    "extrema",
+    "frame_sample",
+    "hash_split",
+    "http_incremental_loop",
+    "ivm_refresh_agg",
+    "join_fanout",
+    "join_full_outer",
+    "join_left_dim",
+    "merge_upsert_mor",
+    "merge_upsert_snapshot",
+    "minhash_lsh_pairs_capped",
+    # --- the two loop rows whose tick this round replaces (2) ---
+    "http_loop_snapshot_sink",
+    "update_log_modes",
+    # --- oldest-first from the ledger: r10 (17), then r11 (10 of 26) ---
     "ivf_train_rounds",
     "join_anti",
     "join_semi",
@@ -123,28 +119,25 @@ DRIVER_PRIORITY: list[str] = [
     "conditional_agg",
     "corpus_filter",
     "curriculum_bins_audit",
-    # --- positions 51-71: the r11 rows that lead the next window ---
-    "customer_in_range",
-    "dedup_cluster_assign",
-    "dedup_exact",
-    "dedup_first_wins",
-    "dedup_survivors",
-    "dq_checks",
-    "embedding_neardup",
-    "embedding_neardup_bucketed",
-    "embedding_quantize",
-    "exists_subquery",
-    "extrema",
-    "frame_sample",
-    "hash_split",
-    "http_incremental_loop",
-    "ivm_refresh_agg",
-    "join_fanout",
-    "join_full_outer",
-    "join_left_dim",
-    "merge_upsert_mor",
-    "merge_upsert_snapshot",
-    "minhash_lsh_pairs_capped",
+    "minhash_lsh_pairs_grouped",
+    "percentile_summary",
+    # --- positions 51-66: the r11 rows that lead the next window ---
+    "pivot_event_types",
+    "pmi_cooccurrence",
+    "posexplode_tokens",
+    "profile_columns",
+    "range_join_bucketed",
+    "regexp_suite",
+    "rollup_agg",
+    "semantic_dedup",
+    "semantic_dedup_gemm",
+    "sessionize",
+    "set_intersect_except",
+    "sink_bloom_skip",
+    "sink_compact_vacuum",
+    "sketch_error_bounds",
+    "token_dist_drift",
+    "vocab_coverage",
 ]
 
 

@@ -6,7 +6,8 @@ Reference: /root/reference/callio_etl/runner.py:876-932 (slot loop), 937-965
 config.py:129-176 (run-time parsing, staff/group daily slot).
 
 The engine itself stays batch: each fired slot is one Trigger.AvailableNow-
-style tick (pipeline.run_tick / streaming.run_available_now). Everything
+style tick (the durable, service-locked pipeline.run_tick — the CLI's job
+ticks — or streaming.run_available_now). Everything
 here is deterministic and driven by an injected ``now`` so it is fully
 testable without sleeping.
 """

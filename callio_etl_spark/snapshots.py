@@ -930,9 +930,7 @@ def snapshot_read(
         # back to a full resolve unless the col really is the partition
         # column, the table spills positionally, and no spec evolution
         # is recorded.
-        esc = (
-            spark.sparkContext._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-        )
+        esc = _catalog_utils(spark).escapePathName
         want_leaves = [f"{point[0]}={esc(str(v))}" for v in vals]
     m = snapshot_manifest(spark, path, version, tag=tag, leaves=want_leaves)
     if m["partition_col"] == WHOLE_TABLE_COL:
@@ -980,19 +978,17 @@ def snapshot_read(
     return _read_single_spec(spark, path, m, between, point)
 
 
-def _leaf_value_may_intersect(spark: SparkSession, leaf: str, lo, hi) -> bool:
-    """Exact partition-value pruning for a leaf under its own spec: keep
-    the leaf iff its (unescaped) partition value can fall in [lo, hi].
-    Values are compared in lo/hi's own type when the path string casts
-    cleanly (int/float partition values are stringified in paths, where
-    lexicographic order lies); NULL partitions and uncastable values are
-    conservatively kept."""
+def _leaf_value_in(spark: SparkSession, leaf: str, lo, hi) -> bool | None:
+    """Exact partition-value test for a leaf under its own spec: whether
+    its (unescaped) value lies in [lo, hi]. Values are compared in
+    lo/hi's own type when the path string casts cleanly (int/float
+    partition values are stringified in paths, where lexicographic
+    order lies); None — undecided — for the NULL partition and
+    uncastable values."""
     raw = leaf.split("=", 1)[1]
-    utils = (
-        spark.sparkContext._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    )
+    utils = _catalog_utils(spark)
     if raw == utils.DEFAULT_PARTITION_NAME():
-        return True
+        return None
     val = utils.unescapePathName(raw)
     try:
         if isinstance(lo, (int, float)) and not isinstance(lo, bool):
@@ -1001,7 +997,7 @@ def _leaf_value_may_intersect(spark: SparkSession, leaf: str, lo, hi) -> bool:
             v, lo, hi = str(val), str(lo), str(hi)
         return lo <= v <= hi
     except (TypeError, ValueError):
-        return True
+        return None
 
 
 def _read_single_spec(
@@ -1018,11 +1014,11 @@ def _read_single_spec(
         bcol, lo, hi = between
         if bcol == m["partition_col"]:
             # the group's OWN spec column: the partition values are the
-            # exact truth, no stats needed
+            # exact truth, no stats needed (undecided leaves are kept)
             keep = [
                 leaf
                 for leaf in keep
-                if _leaf_value_may_intersect(spark, leaf, lo, hi)
+                if _leaf_value_in(spark, leaf, lo, hi) is not False
             ]
         else:
             stats = m.get("stats", {})
@@ -1826,9 +1822,7 @@ def snapshot_read_bucketed(
         f"CLUSTERED BY (`{spec['col']}`) SORTED BY (`{spec['col']}`) "
         f"INTO {spec['n']} BUCKETS LOCATION '{path}'"
     )
-    unescape = (
-        spark.sparkContext._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
-    )
+    unescape = _catalog_utils(spark).unescapePathName
     for leaf in sorted(m["partitions"]):
         tok = _leaf_toks(m, leaf)[0]
         val = unescape(leaf.split("=", 1)[1]).replace("'", "''")
@@ -2979,6 +2973,22 @@ def _partition_leaves(
     return sorted(out)
 
 
+#: (JVM view, its ``ExternalCatalogUtils`` class), resolved once per JVM
+#: like ``io._jpath``'s Path class: the package walk costs ~5 ms.
+_CATALOG_UTILS: list = [None, None]
+
+
+def _catalog_utils(spark: SparkSession):
+    """Spark's ``ExternalCatalogUtils`` (the writer's path escaping)."""
+    jvm = spark.sparkContext._jvm
+    if _CATALOG_UTILS[0] is not jvm:
+        _CATALOG_UTILS[:] = [
+            jvm,
+            jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils,
+        ]
+    return _CATALOG_UTILS[1]
+
+
 def _leaf_name(spark: SparkSession, partition_col: str, value) -> str:
     """Render a collected partition VALUE to the exact directory-leaf name
     Spark's writer produces — manifests key partitions by those dir names
@@ -3024,11 +3034,7 @@ def _leaf_name(spark: SparkSession, partition_col: str, value) -> str:
         # partitioning by such a float is already pathological (unstable
         # keys), and no engine path does it
         s = str(value)
-    esc = (
-        spark._jvm.org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName(s)
-    )
-    return f"{partition_col}={esc}"
+    return f"{partition_col}={_catalog_utils(spark).escapePathName(s)}"
 
 
 def _newly_dead_leaves(dropped: dict, live_tokens: dict) -> set:

@@ -331,7 +331,7 @@ def run_foreach_batch_snapshot(
         retire = None
         # published-head probe (FS-abstraction + staged-only semantics):
         # shared helper so the create-vs-merge decision lives in ONE place
-        # with the loop tick's (api_source._snapshot_loop_tick)
+        # with the incremental tick's (pipeline.run_tick)
         has_table = merge_keys is not None and snapshot_has_published_head(
             spark, path
         )

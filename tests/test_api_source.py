@@ -513,11 +513,8 @@ def test_http_api_drives_the_full_incremental_loop(spark, tmp_path):
     merge (C4) — and tick 2 fetches ONLY what landed after tick 1's
     watermark, idempotently."""
     from callio_etl_spark.checkpoints import CheckpointStore
-    from callio_etl_spark.pipeline import (
-        IncrementalTable,
-        commit,
-        run_tick,
-    )
+    from callio_etl_spark.pipeline import IncrementalTable, run_tick
+    from callio_etl_spark.snapshots import snapshot_read
     from callio_etl_spark.sources.local_api_server import (
         LocalCallioApiServer,
     )
@@ -526,6 +523,7 @@ def test_http_api_drives_the_full_incremental_loop(spark, tmp_path):
     rows1 = _mk_full_rows(40, 1_000_000, 60_000, prefix="x")
     srv = LocalCallioApiServer(rows1, accounts={"etl@example.com": "pw"})
     base = srv.start()
+    path = str(tmp_path / "events")
     try:
         spark.dataSource.register(CallioPagedDataSource)
         store = CheckpointStore(
@@ -534,34 +532,38 @@ def test_http_api_drives_the_full_incremental_loop(spark, tmp_path):
         table = IncrementalTable(
             name="ApiEvents", keys=["tenant", "_id"], time_col_ms="ts_ms"
         )
+        fetched = []
 
-        def fetch(window_end_ms):
-            cutoff = store.cutoff_ms(table.name, "PK", window_end_ms)
-            df = (
-                spark.read.format("callio_paged_api")
-                .option("base_url", base)
-                .option("email", "etl@example.com")
-                .option("password", "pw")
-                .option("window_end_ms", window_end_ms)
-                .option("cutoff_ms", max(0, cutoff))
-                .option("page_size", 16)
-                .load()
-            )
-            return df.select(
-                "_id", "ts_ms", "event_type",
-                F.lit("PK").alias("tenant"),
-                F.md5(F.concat_ws("|", "_id", "event_type")).alias(
-                    "row_hash"
-                ),
+        def tick(window_end_ms, store=store):
+            def fetch(cutoff):
+                df = (
+                    spark.read.format("callio_paged_api")
+                    .option("base_url", base)
+                    .option("email", "etl@example.com")
+                    .option("password", "pw")
+                    .option("window_end_ms", window_end_ms)
+                    .option("cutoff_ms", max(0, cutoff))
+                    .option("page_size", 16)
+                    .load()
+                ).select(
+                    "_id", "ts_ms", "event_type",
+                    F.lit("PK").alias("tenant"),
+                    F.md5(F.concat_ws("|", "_id", "event_type")).alias(
+                        "row_hash"
+                    ),
+                )
+                fetched.append(df)
+                return df
+
+            # partitioned by event_type: the update below moves x0
+            return run_tick(
+                spark, store, table, path, "event_type", fetch, "PK", 3,
+                now_ms=window_end_ms,
             )
 
         now1 = rows1[-1]["ts_ms"] + 1
-        b1 = fetch(now1)
-        merged1, ck1 = run_tick(
-            spark, store, table, b1, None, "PK", now_ms=now1
-        )
-        merged1 = merged1.localCheckpoint()
-        commit(store, table, "PK", ck1)
+        ck1 = tick(now1)
+        merged1 = snapshot_read(spark, path)
         assert merged1.count() == 40
         assert ck1 == rows1[-1]["ts_ms"]
 
@@ -575,22 +577,22 @@ def test_http_api_drives_the_full_incremental_loop(spark, tmp_path):
             key=lambda r: (-int(r["ts_ms"]), str(r.get("_id"))),
         )
         now2 = now1 + 120_000
-        b2 = fetch(now2)
+        ck2 = tick(now2)
         # the source early-stopped at the checkpoint: only the delta came
-        assert b2.count() == 11
-        merged2, ck2 = run_tick(
-            spark, store, table, b2, merged1, "PK", now_ms=now2
-        )
-        merged2 = merged2.localCheckpoint()
-        commit(store, table, "PK", ck2)
+        assert fetched[-1].count() == 11
+        merged2 = snapshot_read(spark, path)
         assert merged2.count() == 50  # 40 + 10 inserts, x0 updated in place
         got = {r["_id"]: r["event_type"] for r in merged2.collect()}
         assert got["x0"] == "updated"
 
-        # replaying tick 2's batch is a no-op (row_hash MERGE guard)
-        merged3, _ = run_tick(
-            spark, store, table, b2, merged2, "PK", now_ms=now2
-        )
+        # replaying tick 2's delta (a crash after its publish, before its
+        # checkpoint flush, leaves the watermark at ck1) is a no-op (row_hash
+        # MERGE guard)
+        stale = CheckpointStore(spark, str(tmp_path / "stale_log"), overlap_ms=0)
+        stale.log(table.name, "PK", 0, ck1, "NOOP")
+        stale.flush()
+        assert tick(now2, store=stale) == ck2
+        merged3 = snapshot_read(spark, path)
         assert merged3.count() == 50
         assert {
             r["_id"]: r["event_type"] for r in merged3.collect()

@@ -9,7 +9,7 @@ import pytest
 
 from callio_etl_spark.checkpoints import CheckpointStore
 from callio_etl_spark.flatten import flatten_customer
-from callio_etl_spark.pipeline import IncrementalTable, commit, run_tick
+from callio_etl_spark.pipeline import IncrementalTable, run_tick
 from callio_etl_spark.snapshots import snapshot_read
 
 SCHEMA = (
@@ -44,8 +44,18 @@ def store(spark, tmp_path):
 TABLE = IncrementalTable(name="Customer", keys=["tenant", "_id"], time_col_ms="updateTime")
 
 
-def test_two_tick_update_skip_insert(spark, store):
+def _tick(spark, store, path, batch, now):
+    """One durable tick of ``batch`` into the snapshot table at ``path``,
+    partitioned by the update date (an update can move a key's date)."""
+    return run_tick(
+        spark, store, TABLE, path, "NgayUpdate", lambda cutoff: batch, "PK", 3,
+        now_ms=now,
+    )
+
+
+def test_two_tick_update_skip_insert(spark, store, tmp_path):
     now = T0 + 10 * HOUR
+    path = str(tmp_path / "customer")
     # tick 1: three rows
     b1 = flatten_customer(
         spark.createDataFrame(
@@ -54,11 +64,9 @@ def test_two_tick_update_skip_insert(spark, store):
         ),
         "PK",
     )
-    merged1, ck1 = run_tick(spark, store, TABLE, b1, None, "PK", now_ms=now)
-    merged1 = merged1.localCheckpoint()
-    commit(store, TABLE, "PK", ck1)
+    ck1 = _tick(spark, store, path, b1, now)
     assert ck1 == T0 + HOUR
-    assert merged1.count() == 3
+    assert snapshot_read(spark, path).count() == 3
 
     # tick 2 overlaps: row a changed (phone), row b touched-but-identical
     # content with newer ts, row d new; row c not re-sent.
@@ -73,11 +81,9 @@ def test_two_tick_update_skip_insert(spark, store):
         ),
         "PK",
     )
-    merged2, ck2 = run_tick(spark, store, TABLE, b2, merged1, "PK", now_ms=now)
-    merged2 = merged2.localCheckpoint()
-    commit(store, TABLE, "PK", ck2)
+    ck2 = _tick(spark, store, path, b2, now)
 
-    rows = {r["_id"]: r for r in merged2.collect()}
+    rows = {r["_id"]: r for r in snapshot_read(spark, path).collect()}
     assert set(rows) == {"a", "b", "c", "d"}  # c kept, d inserted
     assert rows["a"]["phone"] == "1-changed"  # updated (hash differs)
     assert rows["b"]["updateTime"] == T0 + 2 * HOUR  # newer ts wins even if same content
@@ -85,34 +91,34 @@ def test_two_tick_update_skip_insert(spark, store):
     assert store.get("customer", "PK") == ck2  # lowercased lookup works
 
 
-def test_replay_is_idempotent(spark, store):
+def test_replay_is_idempotent(spark, store, tmp_path):
     now = T0 + 10 * HOUR
+    path = str(tmp_path / "customer")
     batch = flatten_customer(
         spark.createDataFrame([_raw("a", T0 + HOUR, "1"), _raw("b", T0 + HOUR, "2")], SCHEMA),
         "PK",
     )
-    m1, ck1 = run_tick(spark, store, TABLE, batch, None, "PK", now_ms=now)
-    m1 = m1.localCheckpoint()
-    commit(store, TABLE, "PK", ck1)
+    _tick(spark, store, path, batch, now)
+    want = sorted(
+        (r["_id"], r["phone"], r["row_hash"]) for r in snapshot_read(spark, path).collect()
+    )
     # replay the SAME batch (overlap re-read): nothing may change
-    m2, ck2 = run_tick(spark, store, TABLE, batch, m1, "PK", now_ms=now)
+    _tick(spark, store, path, batch, now)
+    m2 = snapshot_read(spark, path)
     got = sorted((r["_id"], r["phone"], r["row_hash"]) for r in m2.collect())
-    want = sorted((r["_id"], r["phone"], r["row_hash"]) for r in m1.collect())
     assert got == want
     assert m2.count() == 2
 
 
 def test_noop_and_log_modes(spark, store, tmp_path):
     now = T0 + 10 * HOUR
+    path = str(tmp_path / "customer")
     batch = flatten_customer(
         spark.createDataFrame([_raw("a", T0 + HOUR, "1")], SCHEMA), "PK"
     )
-    m1, ck1 = run_tick(spark, store, TABLE, batch, None, "PK", now_ms=now)
-    m1 = m1.localCheckpoint()
-    commit(store, TABLE, "PK", ck1)
+    ck1 = _tick(spark, store, path, batch, now)
     # everything older than checkpoint-overlap -> NOOP, checkpoint unchanged
-    m2, ck2 = run_tick(spark, store, TABLE, batch.where("_id = 'zzz'"), m1, "PK", now_ms=now)
-    commit(store, TABLE, "PK", ck2)
+    ck2 = _tick(spark, store, path, batch.where("_id = 'zzz'"), now)
     assert ck2 is None
     assert store.get("customer", "PK") == ck1
 
@@ -329,6 +335,61 @@ def test_merge_write_rejects_out_of_window_source(spark, tmp_path):
         ("2024-01-02", 9): "ins",
         ("2024-01-03", 3): "other-part",
     }
+
+
+@pytest.mark.parametrize(
+    "window",
+    [{"part_values": ["a", "c"]}, {"part_min": "a", "part_max": "c"}, {}],
+    ids=["set", "range", "none"],
+)
+def test_merge_write_snapshot_moved_key_drops_emptied_leaf(spark, tmp_path, window):
+    """A key that alone holds partition 'a' moves to 'c'. Under every
+    window form (set, range, none) the merge leaves it once, drops the
+    leaf it emptied in the same commit, and publishes one version; the
+    NULL-partition row, which no window holds, survives."""
+    from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
+    from callio_etl_spark.snapshots import (
+        snapshot_manifest,
+        snapshot_partition_overwrite,
+        snapshot_versions,
+    )
+
+    path = str(tmp_path / "t")
+    schema = "k long, p string, v string"
+    snapshot_partition_overwrite(
+        spark,
+        spark.createDataFrame([(1, "a", "v1"), (2, "b", "v1"), (3, None, "v1")], schema),
+        path,
+        "p",
+        keep_snapshots=5,
+    )
+    src = spark.createDataFrame([(1, "c", "v2")], schema)
+    merge_write_snapshot(spark, path, src, MergeSpec(keys=["k"]), "p", keep_snapshots=5, **window)
+
+    got = sorted(tuple(r) for r in snapshot_read(spark, path).select("k", "p", "v").collect())
+    assert got == [(1, "c", "v2"), (2, "b", "v1"), (3, None, "v1")]
+    leaves = set(snapshot_manifest(spark, path)["partitions"])
+    assert leaves == {"p=b", "p=c", "p=__HIVE_DEFAULT_PARTITION__"}
+    assert snapshot_versions(spark, path) == [1, 2]
+
+
+def test_merge_write_snapshot_range_keeps_leaves_it_cannot_judge(spark, tmp_path):
+    """String bounds on a numeric partition column: Spark compares the
+    column numerically, so p=10 is outside ['1', '5'] and never read;
+    the retire list must not judge it by string order (where '10' lies
+    between '1' and '5') and drop its rows unread."""
+    from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
+    from callio_etl_spark.snapshots import snapshot_partition_overwrite
+
+    path = str(tmp_path / "t")
+    schema = "k long, p int, v string"
+    snapshot_partition_overwrite(
+        spark, spark.createDataFrame([(1, 2, "v1"), (2, 10, "v1")], schema), path, "p"
+    )
+    src = spark.createDataFrame([(1, 3, "v2")], schema)
+    merge_write_snapshot(spark, path, src, MergeSpec(keys=["k"]), "p", part_min="1", part_max="5")
+    got = sorted(tuple(r) for r in snapshot_read(spark, path).select("k", "p", "v").collect())
+    assert (2, 10, "v1") in got
 
 
 def test_merge_upsert_null_key_rows_survive(spark):

@@ -534,6 +534,124 @@ def test_tick_snapshot_cross_month_update_retires_old_row(spark, tmp_path):
     assert got.where(F.col("k") == 1).count() == 1
 
 
+class _InjectedJob:
+    """Runs ``__main__._tick`` for a test table: ``rows(i)`` is what the
+    job's source serves on tick ``i`` (tenant, k, createTime, payload)."""
+
+    def __init__(self, spark, tmp_path, name, rows):
+        from callio_etl_spark import __main__ as cli
+        from callio_etl_spark.checkpoints import CheckpointStore
+        from callio_etl_spark.config import EngineConfig
+        from callio_etl_spark.functions import row_hash
+        from callio_etl_spark.pipeline import IncrementalTable
+
+        self.spark, self.name, self.cli, self.i = spark, name, cli, 0
+        self.path = str(tmp_path / name)
+        self.cfg = EngineConfig()
+        self.cfg.work_dir = str(tmp_path)
+        self.cfg.limit_records = None
+        self.store = CheckpointStore(
+            spark, str(tmp_path / "update_log"), lookback_days=100000
+        )
+
+        def prepare(spark_, sf_dir_):
+            df = spark_.createDataFrame(
+                rows(self.i),
+                "tenant string, k long, createTime long, payload string",
+            )
+            return df.withColumn("row_hash", row_hash(df))
+
+        self.job = (IncrementalTable(name, ["tenant", "k"], "createTime"), prepare)
+
+    def tick(self) -> None:
+        self.cli.JOB_TABLES[self.name] = self.job
+        try:
+            self.cli._tick(self.spark, self.cfg, self.store, self.name)
+        finally:
+            self.cli.JOB_TABLES.pop(self.name, None)
+        self.i += 1
+
+
+JAN, FEB = 1705276800000, 1707523200000  # 2024-01-15, 2024-02-10
+
+
+def test_cli_tick_key_alone_in_a_month_moves_out(spark, tmp_path):
+    """A key that alone holds January moves to February: it appears once,
+    and January's leaf is gone from the live manifest (the window rewrite
+    drops the partition the merge empties)."""
+    from callio_etl_spark.snapshots import snapshot_manifest, snapshot_read
+
+    ticks = [[("PK", 1, JAN, "v1")], [("PK", 1, FEB, "v2")]]
+    job = _InjectedJob(spark, tmp_path, "xalone", lambda i: ticks[i])
+    job.tick()
+    job.tick()
+    got = [tuple(r) for r in snapshot_read(spark, job.path).select("k", "createTime").collect()]
+    assert got == [(1, FEB)]
+    assert set(snapshot_manifest(spark, job.path)["partitions"]) == {"ym=2024-02"}
+
+
+def test_cli_tick_blocks_while_the_service_lock_is_held(spark, tmp_path):
+    """The CLI tick is the single-writer tick: while another holder owns
+    the table's service lock it waits, publishing nothing, and runs once
+    the lock is released."""
+    import threading
+    import time as _time
+
+    from callio_etl_spark.io import acquire_service_lock, release_service_lock
+    from callio_etl_spark.snapshots import snapshot_read, snapshot_versions
+
+    ticks = [[("PK", 1, JAN, "v1")], [("PK", 1, FEB, "v2")]]
+    job = _InjectedJob(spark, tmp_path, "xlock", lambda i: ticks[i])
+    job.tick()  # creates the table
+    acquire_service_lock(spark, job.path)
+    state = {"done_at": None, "err": None}
+
+    def run():
+        try:
+            job.tick()
+            state["done_at"] = _time.monotonic()
+        except Exception as exc:  # surfaced by the join assert below
+            state["err"] = exc
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join(timeout=10)  # an unblocked one-row tick ends well inside this
+    assert t.is_alive() and state["err"] is None, state["err"]
+    assert snapshot_versions(spark, job.path) == [1], (
+        "CLI tick published while another holder owned the service lock"
+    )
+    released_at = _time.monotonic()
+    release_service_lock(spark, job.path)
+    t.join(timeout=180)
+    assert not t.is_alive() and state["err"] is None, state["err"]
+    assert state["done_at"] > released_at
+    got = [tuple(r) for r in snapshot_read(spark, job.path).select("k", "payload").collect()]
+    assert got == [(1, "v2")]
+
+
+def test_cli_noop_tick_runs_update_log_retention(spark, tmp_path, monkeypatch):
+    """A CLI tick with nothing past the checkpoint audits NOOP and still
+    runs ``compact_if_needed``: an idle daemon must not grow the
+    update_log without bound."""
+    from callio_etl_spark.checkpoints import CheckpointStore
+    from callio_etl_spark.snapshots import snapshot_read
+
+    calls = []
+    real = CheckpointStore.compact_if_needed
+
+    def spy(self, *a, **k):
+        calls.append(self.log_path)
+        return real(self, *a, **k)
+
+    job = _InjectedJob(spark, tmp_path, "xnoop", lambda i: [] if i else [("PK", 1, JAN, "v1")])
+    job.tick()
+    monkeypatch.setattr(CheckpointStore, "compact_if_needed", spy)
+    job.tick()
+    assert calls == [job.store.log_path], "NOOP tick skipped update_log retention"
+    modes = [r["mode"] for r in snapshot_read(spark, job.store.log_path).collect()]
+    assert sorted(modes) == ["MERGED", "NOOP"]
+
+
 def test_cli_tick_refuses_a_plain_parquet_table(tmp_path, monkeypatch):
     """A work dir whose call_log is a plain parquet table (the layout of
     the removed rename-swap tick) must make the tick raise before it
@@ -869,3 +987,30 @@ def test_staff_group_clears_stale_staging_before_staging(tmp_path, monkeypatch):
     ghosts = staff2.where(F.col("name") == "GHOST-STAFF").count()
     assert ghosts == 0, "stale staged rows resurrected into the dim"
     assert staff2.count() == n_staff
+
+
+def test_configure_logging_writes_to_the_current_stderr(monkeypatch, capsys):
+    """The stdlib handler resolves ``sys.stderr`` when it emits: logging
+    configured under a stream that is later swapped out and closed (a
+    test runner's capture) must not print a logging error."""
+    import io
+    import logging
+    import sys
+
+    from callio_etl_spark.logging_utils import configure_logging
+
+    root = logging.getLogger()
+    saved = root.handlers[:], root.level
+    tmp = io.StringIO()
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(sys, "stderr", tmp)
+            configure_logging("INFO")
+        tmp.close()
+        logging.getLogger("callio_etl_spark").info("after the swap")
+    finally:
+        root.handlers[:] = saved[0]
+        root.setLevel(saved[1])
+    err = capsys.readouterr().err
+    assert "Logging error" not in err
+    assert "after the swap" in err

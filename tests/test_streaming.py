@@ -185,9 +185,9 @@ def test_stream_stream_interval_join(spark, dirs):
 def test_stream_crash_resume_merge_checkpoint_parity(spark, tmp_path):
     """VERDICT r3 item 7 — the full incremental contract in one test:
     PagedApiStreamReader micro-batches -> pipeline.run_tick (cutoff filter,
-    latest-per-key dedup, conditional merge) -> persist target ->
-    pipeline.commit(CheckpointStore), with an injected crash BETWEEN the
-    target persist and the checkpoint commit of the first batch. The resumed
+    latest-per-key dedup, conditional merge into a snapshot table,
+    checkpoint advance), with an injected crash BETWEEN the merge publish
+    and the checkpoint flush of the first batch. The resumed
     run must replay the same micro-batch (Spark offset never committed), the
     replayed merge must be a no-op (row_hash-conditional update), and the
     next tick must process ONLY newly-landed rows: no replays, no gaps,
@@ -199,6 +199,7 @@ def test_stream_crash_resume_merge_checkpoint_parity(spark, tmp_path):
     from callio_etl_spark import functions as fn
     from callio_etl_spark import pipeline as pl
     from callio_etl_spark.checkpoints import CheckpointStore
+    from callio_etl_spark.snapshots import snapshot_partition_overwrite, snapshot_read
     from callio_etl_spark.sources.paged_api import CallioPagedDataSource
 
     rows1 = [
@@ -234,22 +235,24 @@ def test_stream_crash_resume_merge_checkpoint_parity(spark, tmp_path):
             "_id string, ts_ms long, user_id long, event_type string, value string",
         )
     )
-    seed.write.parquet(target_path)
+    snapshot_partition_overwrite(spark, seed, target_path, "event_type")
 
     def handle_batch(batch_df, _batch_id):
-        # fresh store per batch == restarted process: cache warmed from the
-        # audit log only (crashed runs leave no buffered rows behind)
+        # fresh store per batch == restarted process: run_tick warms the
+        # cache from the audit log only (crashed runs leave no buffered
+        # rows behind)
         store = CheckpointStore(spark=spark, log_path=log_path)
-        store.warm()
-        target = spark.read.parquet(target_path)
-        merged, new_ck = pl.run_tick(
-            spark, store, table, _prepare(batch_df), target, "acme", now_ms=0
-        )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
         if not crash_flag.exists():
-            crash_flag.touch()
-            raise RuntimeError("injected crash: target persisted, checkpoint NOT committed")
-        pl.commit(store, table, "acme", new_ck)
+
+            def crash():
+                crash_flag.touch()
+                raise RuntimeError("injected crash: target published, checkpoint NOT flushed")
+
+            store.flush = crash
+        pl.run_tick(
+            spark, store, table, target_path, "event_type",
+            lambda cutoff: _prepare(batch_df), "acme", 3, now_ms=0,
+        )
 
     def run_once():
         q = (
@@ -268,7 +271,7 @@ def test_stream_crash_resume_merge_checkpoint_parity(spark, tmp_path):
     # run 1: crashes mid-batch after the merge landed
     with pytest.raises(StreamingQueryException, match="injected crash"):
         run_once()
-    after_crash = spark.read.parquet(target_path)
+    after_crash = snapshot_read(spark, target_path)
     assert after_crash.count() == 61  # 60 merged + seed-x; t0 updated in place
     store = CheckpointStore(spark=spark, log_path=log_path)
     store.warm()
@@ -276,7 +279,7 @@ def test_stream_crash_resume_merge_checkpoint_parity(spark, tmp_path):
 
     # run 2: resumes -> Spark replays the SAME micro-batch; merge idempotent
     run_once()
-    after_resume = spark.read.parquet(target_path)
+    after_resume = snapshot_read(spark, target_path)
     assert after_resume.count() == 61  # replay added nothing
     assert after_resume.select("tenant", "_id").distinct().count() == 61
     t0 = after_resume.where("_id = 't0'").collect()
@@ -297,7 +300,7 @@ def test_stream_crash_resume_merge_checkpoint_parity(spark, tmp_path):
 
     # run 3: must process ONLY the new rows (offset log + checkpoint agree)
     run_once()
-    final = spark.read.parquet(target_path)
+    final = snapshot_read(spark, target_path)
     assert final.count() == 76 and final.select("_id").distinct().count() == 76
     store = CheckpointStore(spark=spark, log_path=log_path)
     store.warm()
@@ -306,8 +309,6 @@ def test_stream_crash_resume_merge_checkpoint_parity(spark, tmp_path):
     # audit log: exactly two committed MERGED ticks (60-row replayed batch
     # committed once — the crashed attempt's buffer died with its process —
     # then the 15-row incremental tick), and no NOOP noise.
-    from callio_etl_spark.snapshots import snapshot_read
-
     log = snapshot_read(spark, log_path)
     merged_counts = sorted(r["rows_loaded"] for r in log.collect())
     assert merged_counts == [15, 60]
