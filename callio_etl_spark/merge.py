@@ -11,8 +11,13 @@ container ships no Delta Lake, so the engine provides:
   merged and rewritten — a window partition the merge empties is
   dropped — in ONE manifest commit: the reference's
   `T.<date> BETWEEN part_min AND part_max` pruning conjunct in MERGE ON,
-  with BigQuery's job atomicity. ``pipeline.run_tick`` is its
-  incremental caller.
+  with BigQuery's job atomicity. With no window given, the window is
+  the exact touched set (the source's partitions plus the ones its keys
+  live in now); a set window holds the NULL partition when it lists
+  ``None``. It is the engine's only keyed upsert into a snapshot table:
+  ``pipeline.run_tick`` and the streaming sink
+  (``streaming.incremental.run_foreach_batch_snapshot(merge_keys=)``)
+  are its callers.
 
 Correctness contract (as the reference enforces): the source must have ONE
 row per key — run dedup.latest_per_key first (runner.py:165-173 does exactly
@@ -120,6 +125,7 @@ def merge_write_snapshot(
     part_max=None,
     keep_snapshots: int = 2,
     part_values=None,
+    **overwrite_kw,
 ) -> int:
     """Physical MERGE into a SNAPSHOT-isolated table (snapshots.py): the
     windowed target is read from the live manifest, merged with
@@ -127,27 +133,41 @@ def merge_write_snapshot(
     racing the MERGE sees the whole pre- or post-merge table, and the
     pre-merge version stays pinnable for keep_snapshots more commits.
     This is BigQuery-atomic MERGE parity (reference runner.py:163-199,
-    174-176, 699-701) on a plain filesystem.
+    174-176, 699-701) on a plain filesystem. The engine's only keyed
+    copy-on-write upsert: ``pipeline.run_tick`` and the streaming sink
+    (``run_foreach_batch_snapshot(merge_keys=)``) both merge through it.
 
-    Window contract: only partitions in [part_min, part_max] are read and
-    rewritten (stray source rows outside the window fail fast — they would
-    otherwise clobber partitions excluded from the windowed target);
-    partitions outside the window carry over by manifest reference at
-    zero I/O. Without a window the whole table is merged. Returns the
-    committed snapshot version.
+    Window contract: only the window's partitions are read and
+    rewritten; partitions outside it carry over by manifest reference
+    at zero I/O. Returns the committed snapshot version.
 
-    ``part_values`` is the SET-valued window (mutually exclusive with
-    part_min/part_max): only the named partition values — typically the
-    exact touched set, e.g. the id buckets a delta hashes into — are
-    read and rewritten, so the merge I/O is O(touched partitions) even
-    when the touched set is not a contiguous range. Same stray-row
-    fail-fast.
+    - No window (the default): the window is the exact touched set,
+      worked out here — the source's partitions plus the partitions its
+      keys live in now (one NULL-safe semi-join of the table against the
+      source's keys, so a key whose partition value moved leaves no
+      stale copy).
+      The source cannot stray from a window derived from it, so no
+      stray check runs.
+    - ``part_values``, the SET window: only the named partition values
+      — typically the exact touched set, e.g. the id buckets a delta
+      hashes into — are read and rewritten, so the merge I/O is
+      O(touched partitions) even when the touched set is not a
+      contiguous range. A ``None`` value holds the NULL partition (the
+      ``__HIVE_DEFAULT_PARTITION__`` leaf).
+    - ``part_min``/``part_max``, the RANGE window: partitions in
+      [part_min, part_max]; the NULL partition is outside it.
 
-    The window is rewritten exactly: every window partition the head
-    holds goes into ``retire_leaves``, so one the merge leaves empty (a
-    key moved to another window partition) is dropped in the same
-    commit instead of carrying its stale rows forward. No window holds
-    the NULL partition."""
+    An explicit window fails fast on a source row outside it (NULL-safe:
+    a NULL partition value is outside unless the set holds ``None``) —
+    it would otherwise clobber a partition excluded from the windowed
+    target. The window is rewritten exactly: every window partition the
+    head holds goes into ``retire_leaves``, so one the merge leaves
+    empty (a key moved to another partition) is dropped in the same
+    commit instead of carrying its stale rows forward.
+
+    ``overwrite_kw`` passes through to ``snapshot_partition_overwrite``
+    (layout keywords such as ``bloom_cols``, and ``audit=True``, which
+    stages the commit and returns the staged version)."""
     from callio_etl_spark.snapshots import (
         _leaf_name,
         _leaf_value_in,
@@ -164,26 +184,36 @@ def merge_write_snapshot(
             "not both"
         )
     target = snapshot_read(spark, target_path)
+    explicit = part_values is not None or part_min is not None
+    if not explicit:
+        # the exact touched set: the source's partitions plus the ones
+        # its keys live in now, matched NULL-safely like merge_upsert
+        keys = source.select(*spec.keys).alias("K")
+        on = [F.col(f"T.{k}").eqNullSafe(F.col(f"K.{k}")) for k in spec.keys]
+        touched = source.select(partition_col).union(
+            target.alias("T").join(keys, _and_all(on), "left_semi")
+            .select(partition_col)
+        )
+        part_values = [r[0] for r in touched.distinct().collect()]
     if part_values is not None:
-        vals = list(part_values)
-        if not vals:
+        vals = set(part_values)
+        if explicit and not vals:
             raise ValueError(
                 "merge_write_snapshot: part_values must be non-empty — an "
                 "empty window would classify every source row as stray "
                 "and merge nothing; skip the merge for an empty delta "
                 "instead"
             )
-        in_window = F.col(partition_col).isin(vals)
+        named = [v for v in vals if v is not None]
+        in_window = F.col(partition_col).isin(named) if named else F.lit(False)
+        if None in vals:
+            in_window = in_window | F.col(partition_col).isNull()
         window = f"{sorted(vals, key=str)!r}"
         # partial probe: O(window) metadata, never the full enumeration
-        names = [
-            _leaf_name(spark, partition_col, v)
-            for v in set(vals)
-            if v is not None
-        ]
+        names = [_leaf_name(spark, partition_col, v) for v in vals]
         held = snapshot_manifest(spark, target_path, leaves=names)
         retire = [n for n in names if n in held["partitions"]]
-    elif part_min is not None:
+    else:
         in_window = F.col(partition_col).between(part_min, part_max)
         window = f"[{part_min}, {part_max}]"
         # a leaf value compares in the bounds' type, while Spark compares
@@ -202,19 +232,15 @@ def merge_write_snapshot(
             and leaf.split("=", 1)[0] == partition_col
             and _leaf_value_in(spark, leaf, part_min, part_max) is True
         ]
-    else:
-        in_window = None
-        retire = list(snapshot_manifest(spark, target_path)["partitions"])
-    if in_window is not None:
-        stray = source.where(~in_window | F.col(partition_col).isNull())
+    if explicit:
+        stray = source.where(~F.coalesce(in_window, F.lit(False)))
         if stray.limit(1).count() > 0:
             raise ValueError(
                 f"merge_write_snapshot: source rows outside the merge "
                 f"window {window} on {partition_col!r} would clobber "
                 f"partitions excluded from the windowed target"
             )
-        target = target.where(in_window)
-    merged = merge_upsert(target, source, spec)
+    merged = merge_upsert(target.where(in_window), source, spec)
     return snapshot_partition_overwrite(
         spark,
         merged,
@@ -222,4 +248,5 @@ def merge_write_snapshot(
         partition_col,
         keep_snapshots=keep_snapshots,
         retire_leaves=retire or None,
+        **overwrite_kw,
     )

@@ -97,10 +97,12 @@ def run_tick(
     held); ``fetch(cutoff)`` filtered to ``tenant`` and ``time > cutoff``,
     deduped latest-per-key (D3) and checkpointed, so the source is read
     once; an empty delta audits NOOP; otherwise create the table (with
-    ``properties``) or MERGE with the J8 condition through
-    ``merge_write_snapshot``'s set window — the delta's partitions plus
-    the ones its keys live in now, so a key whose partition value moved
-    leaves no stale copy (``stable_partitions=True`` skips that lookup
+    ``properties``) or MERGE with the J8 condition through ONE
+    ``merge_write_snapshot`` call with no window, so it rewrites the
+    exact touched set — the delta's partitions plus the ones its keys
+    live in now, NULL partition included, so a key whose partition value
+    moved leaves no stale copy (``stable_partitions=True`` passes the
+    delta's partitions as the set window instead, skipping that lookup
     when the partition value is a function of the key); advance the
     checkpoint and audit MERGED (C4); flush and compact the update_log.
     The service-lock fence runs before the publish and before the flush,
@@ -110,7 +112,6 @@ def run_tick(
     from callio_etl_spark.snapshots import (
         snapshot_has_published_head,
         snapshot_partition_overwrite,
-        snapshot_read,
     )
 
     n, new_ck, t = 0, None, table.time_col_ms
@@ -140,13 +141,6 @@ def run_tick(
                     keep_snapshots=keep_snapshots, properties=properties,
                 )
             else:
-                touched = fresh.select(partition_col)
-                if not stable_partitions:
-                    touched = touched.union(
-                        snapshot_read(spark, path)
-                        .join(fresh.select(*table.keys), table.keys, "left_semi")
-                        .select(partition_col)
-                    )
                 # J8 — update when the row actually changed or is newer
                 cond = ~F.col("T.row_hash").eqNullSafe(F.col("S.row_hash")) | (
                     F.col(f"S.{t}").cast("long")
@@ -156,7 +150,9 @@ def run_tick(
                     spark, path, fresh,
                     MergeSpec(keys=table.keys, update_condition=cond),
                     partition_col, keep_snapshots=keep_snapshots,
-                    part_values=[r[0] for r in touched.distinct().collect()],
+                    part_values=[
+                        r[0] for r in fresh.select(partition_col).distinct().collect()
+                    ] if stable_partitions else None,
                 )
         assert_service_fencing(spark, path)
         if n:

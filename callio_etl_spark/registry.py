@@ -55,73 +55,27 @@ def register(name: str, oracle: str | None = None, tags: list[str] | None = None
 #: every round via tools/check_correctness.py (stricter value compare
 #: than the driver hash).
 #:
-#: r18 rotation: the ledger from CORRECTNESS_r01..r15 (the r16 and r17
-#: windows have no recording yet) shows 17 rows whose latest driver check
-#: is r10, 47 at r11, 47 at r12, 48 at r14 and 50 at r15. The window holds:
-#:   1. the 21 r11-vintage rows the r17 window left at positions 51-71
-#:      (customer_in_range .. minhash_lsh_pairs_capped, incl.
-#:      http_incremental_loop and merge_upsert_snapshot);
-#:   2. http_loop_snapshot_sink and update_log_modes, the other two rows
-#:      whose tick now runs through the durable ``pipeline.run_tick``;
-#:   3. the rest oldest-first from the ledger, ties alphabetical: all 17
-#:      r10 rows, then 10 of the remaining 26 r11 rows (ann_topk_brute ..
-#:      percentile_summary). The other 16 r11 rows hold positions 51-66
-#:      and lead the next window.
+#: r19 rotation: the streaming sink's keyed upsert now merges through
+#: ``merge.merge_write_snapshot`` (the same call ``pipeline.run_tick``
+#: makes), so its two driver rows lead. Ages count the r16-r18 windows as
+#: driver slots (they have no recording in this repo yet; ranking by the
+#: CORRECTNESS_r01..r15 ledger alone gave the same 17 r10 rows a slot in
+#: three windows running). The window holds:
+#:   1. stream_ingest_band_index and stream_ingest_vector_index (the two
+#:      rows that drive the sink's merge-keys tick, at 175 and 169 before);
+#:   2. the 16 r11 rows the r18 window left at positions 51-66;
+#:   3. the four rows on run_tick / merge_write_snapshot, kept from r18
+#:      (http_incremental_loop, merge_upsert_snapshot,
+#:      http_loop_snapshot_sink, update_log_modes);
+#:   4. oldest-first, ties alphabetical: 28 of the 44 rows whose latest
+#:      driver slot is r12 (ann_recall_ivf .. sink_snapshot_append). The
+#:      other 16 (sink_snapshot_cdc .. window_rank_suite) hold positions
+#:      51-66 and lead the next window.
 DRIVER_PRIORITY: list[str] = [
-    # --- the r11 rows the r17 window left at positions 51-71 (21) ---
-    "customer_in_range",
-    "dedup_cluster_assign",
-    "dedup_exact",
-    "dedup_first_wins",
-    "dedup_survivors",
-    "dq_checks",
-    "embedding_neardup",
-    "embedding_neardup_bucketed",
-    "embedding_quantize",
-    "exists_subquery",
-    "extrema",
-    "frame_sample",
-    "hash_split",
-    "http_incremental_loop",
-    "ivm_refresh_agg",
-    "join_fanout",
-    "join_full_outer",
-    "join_left_dim",
-    "merge_upsert_mor",
-    "merge_upsert_snapshot",
-    "minhash_lsh_pairs_capped",
-    # --- the two loop rows whose tick this round replaces (2) ---
-    "http_loop_snapshot_sink",
-    "update_log_modes",
-    # --- oldest-first from the ledger: r10 (17), then r11 (10 of 26) ---
-    "ivf_train_rounds",
-    "join_anti",
-    "join_semi",
-    "json_map_suite",
-    "length_batching",
-    "minhash_incremental_grown",
-    "null_semantics_suite",
-    "salted_join_agg",
-    "scd2_history",
-    "shard_manifest",
-    "sink_append_evolve",
-    "sink_partition_delete",
-    "sink_remove_orphans",
-    "sink_version_diff",
-    "sink_versioned_restore",
-    "unigram_rarity",
-    "zorder_layout",
-    "ann_topk_brute",
-    "ann_topk_ivf",
-    "checkpoint_warm",
-    "chunk_documents",
-    "chunk_overlap",
-    "conditional_agg",
-    "corpus_filter",
-    "curriculum_bins_audit",
-    "minhash_lsh_pairs_grouped",
-    "percentile_summary",
-    # --- positions 51-66: the r11 rows that lead the next window ---
+    # --- the two sink rows whose keyed upsert this round replaces (2) ---
+    "stream_ingest_band_index",
+    "stream_ingest_vector_index",
+    # --- the r11 rows the r18 window left at positions 51-66 (16) ---
     "pivot_event_types",
     "pmi_cooccurrence",
     "posexplode_tokens",
@@ -138,6 +92,57 @@ DRIVER_PRIORITY: list[str] = [
     "sketch_error_bounds",
     "token_dist_drift",
     "vocab_coverage",
+    # --- the run_tick / merge_write_snapshot rows kept from r18 (4) ---
+    "http_incremental_loop",
+    "merge_upsert_snapshot",
+    "http_loop_snapshot_sink",
+    "update_log_modes",
+    # --- oldest-first: r12 (28 of 44) ---
+    "ann_recall_ivf",
+    "array_pick",
+    "exact_substring_pairs",
+    "fingerprint",
+    "ivf_centroids",
+    "json_extract",
+    "lang_id",
+    "merge_partial_keep_existing",
+    "minhash_incremental_planned",
+    "mixture_weights",
+    "multimodal_meta",
+    "ngram_jaccard_pairs",
+    "nonblank_filter",
+    "not_in_subquery",
+    "pii_scrub",
+    "project_backfill",
+    "quality_score",
+    "repetition_stats",
+    "reservoir_sample",
+    "row_hash",
+    "scalar_subquery",
+    "scalar_suite",
+    "simhash",
+    "sink_bucketed_join",
+    "sink_bucketed_snapshot",
+    "sink_rename_evolve",
+    "sink_row_deletes",
+    "sink_snapshot_append",
+    # --- positions 51-66: the r12 rows that lead the next window ---
+    "sink_snapshot_cdc",
+    "sink_snapshot_overwrite",
+    "sink_spec_evolve",
+    "sink_wap_publish",
+    "sink_zorder_skip",
+    "stat_moments",
+    "stratified_sample",
+    "string_agg_suite",
+    "string_fn_suite",
+    "string_norm",
+    "table_diff",
+    "tumbling_window_agg",
+    "unpivot_measures",
+    "window_dist_suite",
+    "window_frames",
+    "window_rank_suite",
 ]
 
 

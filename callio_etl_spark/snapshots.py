@@ -398,16 +398,24 @@ def _move_staged_leaves(
     the manifest read path. Order is irrelevant: every move is an
     independent (leaf, token) pair and the manifest that makes them
     live publishes strictly after all of them. A failed move raises —
-    the commit never publishes, QUEUED moves are cancelled (only the
-    ~pool-width in-flight ones complete, so a failure at leaf #5 of
-    100k strands a handful of token dirs, not the whole staged set),
-    and the strands are exactly what ``snapshot_remove_orphans``
-    sweeps."""
+    the commit never publishes, and no rename STARTS after the first
+    failure (a shared flag checked before each one; QUEUED moves are
+    also cancelled), so a failure strands at most the renames already
+    in flight when it happened (< pool width), not the whole staged
+    set, however loaded the host; the strands are exactly what
+    ``snapshot_remove_orphans`` sweeps."""
+    failed = threading.Event()
 
     def move(leaf: str) -> None:
+        if failed.is_set():
+            return
         dest_parent = f"{path}/{leaf}"
-        fs.mkdirs(_jpath(jvm, dest_parent))
-        _rename(jvm, fs, f"{staging}/{leaf}", f"{dest_parent}/{token}")
+        try:
+            fs.mkdirs(_jpath(jvm, dest_parent))
+            _rename(jvm, fs, f"{staging}/{leaf}", f"{dest_parent}/{token}")
+        except BaseException:
+            failed.set()
+            raise
 
     if len(leaves) <= 2:
         for leaf in leaves:
@@ -1940,6 +1948,12 @@ def _parse_bytes_conf(raw: str) -> int:
     return int(num) * units.get(suffix, 1)
 
 
+#: Lowest size ``_plan_size_estimate`` may read as stats-less: 1 PiB, far
+#: above any single frame's real estimate and far below the default
+#: sentinel band (Long.MaxValue / 8 ~ 1 EiB).
+_STATS_LESS_FLOOR = 1 << 50
+
+
 def _plan_size_estimate(df: DataFrame) -> int | None:
     """Catalyst's optimizer size estimate for ``df`` in bytes, or None
     when the plan has none. Catalyst reports UNKNOWN size as the
@@ -1949,9 +1963,14 @@ def _plan_size_estimate(df: DataFrame) -> int | None:
     through Project/Filter (a projection over a stats-less leaf reports
     sentinel * ratio, strictly below the sentinel), so an exact equality
     test would leak those frames through as huge (ADVICE r14): anything
-    within a factor of 8 of the sentinel counts as stats-less too. The
-    one rule for the write-distribution gate (``_distribute_for_write``)
-    and the materialization gate (``llm_ops.matutil.materialize``)."""
+    within a factor of 8 of the sentinel counts as stats-less too, but
+    never below ``_STATS_LESS_FLOOR``: a deployment that sets the conf
+    small (a broadcast-tuning trick) would otherwise read every real
+    estimate as "no estimate" and switch the gates off; a stats-less
+    frame then reports that configured default, which the gates take
+    as its size. The one rule
+    for the write-distribution gate (``_distribute_for_write``) and the
+    materialization gate (``llm_ops.matutil.materialize``)."""
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
@@ -1962,7 +1981,7 @@ def _plan_size_estimate(df: DataFrame) -> int | None:
         )
     except Exception:
         sentinel = 2**63 - 1
-    return None if est >= sentinel // 8 else est
+    return None if est >= max(sentinel // 8, _STATS_LESS_FLOOR) else est
 
 
 def _distribute_for_write(
@@ -2395,8 +2414,10 @@ def snapshot_partition_overwrite(
     the keyed-delta rewrites of ``maintain_band_index`` /
     ``maintain_vector_index`` (every touched leaf, via
     ``_rewrite_touched``), their ``rebuild_*`` verbs (every head leaf)
-    and ``run_foreach_batch_snapshot``'s moved-key path. Retired dirs
-    stay pinnable in older versions until retention sweeps them."""
+    and ``merge.merge_write_snapshot`` (every window leaf the head
+    holds — the keyed upsert behind ``pipeline.run_tick`` and
+    ``run_foreach_batch_snapshot(merge_keys=)``). Retired dirs stay
+    pinnable in older versions until retention sweeps them."""
     path = path.rstrip("/")
     if keep_snapshots < 1:
         raise ValueError("keep_snapshots must be >= 1 (the live snapshot)")

@@ -19,6 +19,7 @@ which is exactly the reference's 'overlap window' contract.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 from typing import Any
 
@@ -36,27 +37,6 @@ from pyspark.sql.types import (
 
 #: 3-minute watermark == the reference's OVERLAP_MS=180000 (config.py:186).
 OVERLAP_WATERMARK = "3 minutes"
-
-#: Changed-key count above which a streaming-upsert tick stops pinning
-#: the batch's merge keys as driver-side literals (determinism aid) and
-#: falls back to distributed key frames: a backlog/bootstrap micro-batch
-#: can touch millions of groups, and collecting those as literals would
-#: OOM the driver. 200k keys ~ tens of MB collected — safely metadata-
-#: sized; steady-state incremental ticks sit orders of magnitude below.
-_KEY_LITERAL_CAP = 200_000
-
-
-def _hashable(v):
-    """Collected cell -> hashable equivalent for set/dict dedup (Row
-    cells of BinaryType come back as bytearray, ArrayType as list,
-    MapType as dict — none hashable)."""
-    if isinstance(v, bytearray):
-        return bytes(v)
-    if isinstance(v, list):
-        return tuple(_hashable(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, _hashable(x)) for k, x in v.items()))
-    return v
 
 EVENTS_STREAM_SCHEMA = StructType(
     [
@@ -195,10 +175,12 @@ def run_foreach_batch_merge(
     output_mode: str = "update",
 ) -> None:
     """C7 — streaming MERGE: each micro-batch is handed to a batch merge
-    operator (merge.merge_write_snapshot, say) via foreachBatch; this is
-    the standard Spark pattern for upsert sinks without Delta (and the
-    only way to emit `update`-mode stateful results to an append-only
-    format like parquet)."""
+    operator via foreachBatch; this is the standard Spark pattern for
+    upsert sinks without Delta (and the only way to emit `update`-mode
+    stateful results to an append-only format like parquet). For a
+    snapshot-table target, ``run_foreach_batch_snapshot(merge_keys=)``
+    is this pattern with ``merge.merge_write_snapshot`` as the operator,
+    plus the audit gate and the post-commit hook."""
     q = (
         stream_df.writeStream.foreachBatch(lambda batch, _id: merge_fn(batch))
         .option("checkpointLocation", checkpoint_dir)
@@ -254,23 +236,23 @@ def run_foreach_batch_snapshot(
     stream must run in ``complete`` mode. If the partition is coarser
     than the grouping key, an unchanged group sharing a partition with
     an updated one would be dropped by the rewrite. Pass ``merge_keys``
-    (the full grouping key) to lift that restriction: each tick then
-    UPSERTS into the touched partitions — current rows of those
-    partitions whose key is absent from the batch are carried into the
-    rewrite, so update-mode batches compose with coarse partitions.
-    The carry reads the published head's (immutable) files before
-    anything is staged, so it is safe against the commit it feeds.
-    A key whose PARTITION VALUE changes across ticks is handled: the
-    key's old partitions are located (one semi-join of the table
-    against the batch's keys), rewritten without the stale copy, and
-    retired in the same commit if emptied — pass
-    ``stable_partitions=True`` to skip that lookup when the partition
-    value is a pure function of the merge key (residue buckets, say),
-    keeping the tick O(touched partitions). The retired leaves are
-    every old partition the lookup found beyond the batch's own, named
-    by ``snapshots._leaf_name`` (the writer's exact dir rendering for
-    every value type); ``retire_leaves`` replaces those the carry still
-    fills and drops the emptied ones.
+    (the full grouping key) to lift that restriction: each tick after
+    the first is then ONE ``merge.merge_write_snapshot`` call with
+    ``MergeSpec(keys=merge_keys)`` — the same keyed upsert
+    ``pipeline.run_tick`` runs — so rows of the touched partitions whose
+    key is absent from the batch are kept, and update-mode batches
+    compose with coarse partitions. With no window, the merge rewrites
+    the exact touched set: the batch's partitions (NULL included) plus
+    the ones its keys live in now, so a key whose PARTITION VALUE
+    changed leaves no stale copy and an emptied old partition is
+    retired in the same commit. ``stable_partitions=True`` passes the
+    batch's own partitions as the set window instead, skipping that
+    O(table) key lookup when the partition value is a pure function of
+    the merge key (residue buckets, say). DETERMINISM CONTRACT: the
+    micro-batch is not cached (see ``commit``), so it is re-evaluated
+    by the window probe (and, on the stable path, the stray check) and
+    again by the merge write — the upstream projection must give the
+    same key -> row mapping every time, as a stateful aggregate does.
 
     ``cluster_cols`` / ``stats_cols`` / ``zorder_cols`` / ``file_stats``
     / ``bloom_cols`` thread through to every tick's commit, so a
@@ -295,8 +277,8 @@ def run_foreach_batch_snapshot(
     view refreshes). A crash between commit and hook is safe when the
     hook is cursor-driven (the CDC cursor hasn't advanced, so the next
     tick's hook folds both commits)."""
+    from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
     from callio_etl_spark.snapshots import (
-        _leaf_name,
         snapshot_discard_staged,
         snapshot_has_published_head,
         snapshot_partition_overwrite,
@@ -321,137 +303,30 @@ def run_foreach_batch_snapshot(
         # Deliberately NOT batch.persist(): on Spark 4.1.2 persisting a
         # STATEFUL update-mode micro-batch inside foreachBatch breaks
         # attribute resolution at the next action ("key not found:
-        # <grouping attr>"), so the textbook cache-the-batch move is a
-        # crash here — the few re-evaluations below (key/partition
-        # projections + the write) are the lesser cost.
-        _commit_inner(spark, batch)
-
-    def _commit_inner(spark, batch: DataFrame) -> None:
-        out = batch
-        retire = None
-        # published-head probe (FS-abstraction + staged-only semantics):
-        # shared helper so the create-vs-merge decision lives in ONE place
-        # with the incremental tick's (pipeline.run_tick)
-        has_table = merge_keys is not None and snapshot_has_published_head(
-            spark, path
-        )
-        if has_table:
-            # upsert-into-partition: carry the touched partitions' current
-            # rows whose grouping key the batch didn't update. The batch's
-            # merge keys AND partition values are collected ONCE, in ONE
-            # action, into driver-side literals (metadata-sized: the
-            # tick's changed keys), and every downstream decision — the
-            # moved-key lookup, the carry anti-join, the retire set —
-            # reuses those literals, so a nondeterministic upstream
-            # projection cannot make them disagree with each other.
-            # Plan-level alternatives (a semi-join whose build side shares
-            # `current`, persist/localCheckpoint of the micro-batch) break
-            # attribute resolution inside foreachBatch on stateful
-            # update-mode batches. NOTE the residual determinism
-            # requirement: the final union below re-evaluates `batch`
-            # itself for the WRITTEN rows, so the upstream projection's
-            # key->row mapping must be deterministic (its key/partition
-            # SET is pinned by the literals above).
-            current = snapshot_read(spark, path)
-            probe_cols = list(dict.fromkeys([*merge_keys, partition_col]))
-            probe_rows = (
-                batch.select(*probe_cols)
-                .distinct()
-                .limit(_KEY_LITERAL_CAP + 1)
-                .collect()
-            )
-            # EVERY collected partition value is set-deduped through its
-            # _hashable normalization while the ORIGINAL collected value
-            # is kept for plan-side rendering (isin literals, _leaf_name)
-            # — mixing raw and normalized forms across the three collects
-            # below would TypeError on bytearray cells and silently
-            # mismatch a binary column's isin (ADVICE r12)
-            part_originals: dict = {}
-
-            def _norm_part(v):
-                n = _hashable(v)
-                part_originals.setdefault(n, v)
-                return n
-            if len(probe_rows) > _KEY_LITERAL_CAP:
-                # BACKLOG/BOOTSTRAP tick: millions of changed keys would
-                # OOM the driver as literals — fall back to distributed
-                # key/partition frames (the pre-literal plan shapes).
-                # The batch-determinism requirement then extends to the
-                # key/partition SET, not just the key->row mapping.
-                batch_keys = batch.select(*merge_keys).distinct()
-                batch_parts = {
-                    _norm_part(r[0])
-                    for r in batch.select(partition_col)
-                    .distinct()
-                    .collect()
-                }
-            else:
-                # dedup via a normalized-key dict: collected BinaryType
-                # is bytearray and ArrayType is list — unhashable in a
-                # plain set comprehension
-                by_norm = {
-                    tuple(_hashable(r[k]) for k in merge_keys): tuple(
-                        r[k] for k in merge_keys
-                    )
-                    for r in probe_rows
-                }
-                key_tuples = [
-                    by_norm[n]
-                    for n in sorted(
-                        by_norm,
-                        key=lambda t: tuple((v is None, str(v)) for v in t),
-                    )
+        # <grouping attr>"), so the micro-batch is re-evaluated by each
+        # action below (see the determinism contract above).
+        #
+        # Create-vs-merge is decided by the published-head probe, the
+        # same helper the incremental tick (pipeline.run_tick) uses.
+        if merge_keys is not None and snapshot_has_published_head(spark, path):
+            part_values = None
+            if stable_partitions:
+                part_values = [
+                    r[0] for r in batch.select(partition_col).distinct().collect()
                 ]
-                batch_keys = spark.createDataFrame(
-                    key_tuples, batch.select(*merge_keys).schema
-                )
-                batch_parts = {
-                    _norm_part(r[partition_col]) for r in probe_rows
-                }
-            touched_vals = set(batch_parts)
-            if not stable_partitions:
-                # a key may have MOVED partitions since its last tick:
-                # its old partitions are touched too (must drop the
-                # stale copy), located by one semi-join of the table
-                # against the batch's literal key list
-                touched_vals |= {
-                    _norm_part(r[0])
-                    for r in current.join(
-                        batch_keys, merge_keys, "left_semi"
-                    )
-                    .select(partition_col)
-                    .distinct()
-                    .collect()
-                }
-            carried = current.where(
-                F.col(partition_col).isin(
-                    [part_originals[n] for n in touched_vals]
-                )
-            ).join(batch_keys, merge_keys, "left_anti")
-            out = carried.select(*batch.columns).unionByName(batch)
-            if not stable_partitions:
-                # a moved key can EMPTY its old partition: out then has
-                # no rows for it, and the dynamic overwrite alone would
-                # keep the stale copy — so list every old partition the
-                # lookup found beyond the batch's own in retire_leaves
-                # (replaced where the carry still fills it, dropped where
-                # not). Leaf names render through the snapshot layer's
-                # writer-exact helper (bool -> 'true', date forms,
-                # percent-escaping), never a bare f-string that only
-                # matches str/int values.
-                retire = [
-                    _leaf_name(spark, partition_col, part_originals[v])
-                    for v in sorted(
-                        touched_vals - batch_parts,
-                        key=lambda v: (v is None, str(v)),
-                    )
-                ] or None
-        if audit_fn is None:
-            snapshot_partition_overwrite(
-                spark, out, path, partition_col,
-                keep_snapshots=keep_snapshots, retire_leaves=retire,
-                **layout,
+            write = functools.partial(
+                merge_write_snapshot, spark, path, batch,
+                MergeSpec(keys=merge_keys), partition_col,
+                part_values=part_values,
+                keep_snapshots=keep_snapshots, **layout,
             )
+        else:
+            write = functools.partial(
+                snapshot_partition_overwrite, spark, batch, path,
+                partition_col, keep_snapshots=keep_snapshots, **layout,
+            )
+        if audit_fn is None:
+            write()
             if post_commit_fn is not None:
                 post_commit_fn(spark)
             return
@@ -459,11 +334,7 @@ def run_foreach_batch_snapshot(
             snapshot_discard_staged(
                 spark, path, stale, keep_snapshots=keep_snapshots
             )
-        sv = snapshot_partition_overwrite(
-            spark, out, path, partition_col,
-            keep_snapshots=keep_snapshots, audit=True, retire_leaves=retire,
-            **layout,
-        )
+        sv = write(audit=True)
         if audit_fn(snapshot_read(spark, path, version=sv)):
             snapshot_publish(spark, path, sv, keep_snapshots=keep_snapshots)
             # derived state advances only on PUBLISHED ticks — a

@@ -132,6 +132,34 @@ def test_noop_and_log_modes(spark, store, tmp_path):
     assert fresh.get("customer", "PK") == ck1
 
 
+@pytest.mark.parametrize("stable", [False, True], ids=["touched-set", "stable"])
+def test_run_tick_merges_null_partition_rows(spark, store, tmp_path, stable):
+    """A delta row whose partition value is NULL merges into the table's
+    NULL leaf under both windows run_tick can pass (the derived touched
+    set, and the delta's own partitions with ``stable_partitions``): the
+    update and the insert land, the other NULL-partition row is kept,
+    and the checkpoint advances."""
+    table = IncrementalTable(name="Nulls", keys=["tenant", "_id"], time_col_ms="ts")
+    path = str(tmp_path / "nulls")
+    now = T0 + 10 * HOUR
+    schema = "tenant string, _id string, ts long, p string, v string, row_hash string"
+
+    def tick(rows):
+        batch = spark.createDataFrame(
+            [("PK", i, ts, p, v, v) for i, ts, p, v in rows], schema
+        )
+        return run_tick(
+            spark, store, table, path, "p", lambda cutoff: batch, "PK", 3,
+            now_ms=now, stable_partitions=stable,
+        )
+
+    tick([("a", T0 + HOUR, None, "a1"), ("b", T0 + HOUR, None, "b1"), ("c", T0 + HOUR, "x", "c1")])
+    ck = tick([("a", T0 + 2 * HOUR, None, "a2"), ("d", T0 + 2 * HOUR, None, "d1")])
+    assert ck == T0 + 2 * HOUR
+    got = {(r["_id"], r["p"], r["v"]) for r in snapshot_read(spark, path).collect()}
+    assert got == {("a", None, "a2"), ("b", None, "b1"), ("c", "x", "c1"), ("d", None, "d1")}
+
+
 def test_local_flush_starts_no_spark_job(spark, store):
     """A flush on a local log path is one whole-table snapshot_append
     commit whose rows pyarrow stages on the driver: no Spark job (a job
@@ -371,6 +399,28 @@ def test_merge_write_snapshot_moved_key_drops_emptied_leaf(spark, tmp_path, wind
     leaves = set(snapshot_manifest(spark, path)["partitions"])
     assert leaves == {"p=b", "p=c", "p=__HIVE_DEFAULT_PARTITION__"}
     assert snapshot_versions(spark, path) == [1, 2]
+
+
+def test_merge_write_snapshot_touched_set_matches_null_keys(spark, tmp_path):
+    """merge_upsert matches a NULL merge key NULL-safely, so the
+    no-window form's lookup of the partitions the source's keys live in
+    must too: a NULL-key row moving from 'x' to 'y' is updated once,
+    not inserted beside its old copy."""
+    from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
+    from callio_etl_spark.snapshots import snapshot_partition_overwrite
+
+    path = str(tmp_path / "t")
+    schema = "k long, p string, v string"
+    snapshot_partition_overwrite(
+        spark, spark.createDataFrame([(None, "x", "old"), (1, "x", "a")], schema), path, "p"
+    )
+    src = spark.createDataFrame([(None, "y", "new")], schema)
+    merge_write_snapshot(spark, path, src, MergeSpec(keys=["k"]), "p")
+    got = sorted(
+        (tuple(r) for r in snapshot_read(spark, path).select("k", "p", "v").collect()),
+        key=str,
+    )
+    assert got == sorted([(None, "y", "new"), (1, "x", "a")], key=str)
 
 
 def test_merge_write_snapshot_range_keeps_leaves_it_cannot_judge(spark, tmp_path):

@@ -3614,6 +3614,42 @@ def test_write_distribution_gate_sizes_and_unknown_sentinel(spark, tmp_path):
         spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
 
 
+def test_write_distribution_gate_survives_small_default_size(spark, tmp_path):
+    """ADVICE r14 (low): a deployment that sets spark.sql.defaultSizeInBytes
+    small moves the stats-less sentinel band (sentinel // 8) below real
+    estimates; the band's absolute floor keeps a parquet frame's real
+    estimate visible, so the rebalance gate still fires on it."""
+    from callio_etl_spark.snapshots import (
+        _distribute_for_write,
+        _plan_size_estimate,
+    )
+
+    src = str(tmp_path / "small_default_src")
+    spark.range(0, 10_000).select(
+        "id", (F.col("id") % 4).cast("string").alias("p")
+    ).write.parquet(src)
+    est = int(
+        spark.read.parquet(src)._jdf.queryExecution().optimizedPlan()
+        .stats().sizeInBytes()
+    )
+    assert 0 < est < 2**62, "precondition: real estimate"
+    try:
+        spark.conf.set("spark.sql.defaultSizeInBytes", str(max(8, est // 4)))
+        spark.conf.set(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+            f"{max(1, est // 10)}b",
+        )
+        df = spark.read.parquet(src)
+        assert _plan_size_estimate(df) == est
+        hinted = _distribute_for_write(df, "p")
+        assert "RebalancePartitions" in (
+            hinted._jdf.queryExecution().optimizedPlan().toString()
+        )
+    finally:
+        spark.conf.unset("spark.sql.defaultSizeInBytes")
+        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+
+
 @pytest.mark.parametrize("verb", ["delete_rows", "upsert_rows", "restore"])
 def test_publish_retry_after_later_commit_returns_published_version(
     spark, tmp_path, verb

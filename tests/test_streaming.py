@@ -1539,7 +1539,6 @@ def test_snapshot_sink_key_literal_cap_fallback(
     from callio_etl_spark.streaming import incremental as inc
     from callio_etl_spark.snapshots import snapshot_manifest, snapshot_read
 
-    monkeypatch.setattr(inc, "_KEY_LITERAL_CAP", 2)  # force the fallback
     table = str(tmp_path / "cap_table")
     _write_batch(
         spark,
@@ -1585,13 +1584,13 @@ def test_snapshot_sink_key_literal_cap_fallback(
 
 
 def test_snapshot_sink_moved_keys_non_string_partitions(spark, dirs, tmp_path):
-    """ADVICE r13: every collected partition value in the upsert carry
-    path is set-deduped through ONE _hashable normalization with the
-    original kept for plan rendering (isin literals, _leaf_name) —
-    this drives the moved-key lookup, the carry anti-join, and the
-    emptied-partition retire through part_originals with a DATE
-    partition column (collected as datetime.date, rendered by the
-    snapshot layer's date form), the realistic non-string atomic."""
+    """ADVICE r13: the keyed upsert's collected partition values drive
+    the plan (isin literals) and the leaf names (_leaf_name) — this
+    drives the moved-key lookup, the carry of unchanged keys, and the
+    emptied-partition retire of merge_write_snapshot's touched-set
+    window with a DATE partition column (collected as datetime.date,
+    rendered by the snapshot layer's date form), the realistic
+    non-string atomic."""
     from callio_etl_spark.snapshots import snapshot_manifest, snapshot_read
     from callio_etl_spark.streaming.incremental import (
         read_event_stream,
@@ -1628,7 +1627,7 @@ def test_snapshot_sink_moved_keys_non_string_partitions(spark, dirs, tmp_path):
     assert snapshot_read(spark, table).count() == 3
 
     # tick 2: u12 moves day2 -> day3 (day-2 partition EMPTIES and must be
-    # retired via the part_originals date rendering); u10 stays on day 1
+    # retired via the _leaf_name date rendering); u10 stays on day 1
     _write_batch(spark, dirs["src"], [_row(4, 2 * 24 * 60, 12, "sms")])
     tick()
     got = {
@@ -1643,3 +1642,46 @@ def test_snapshot_sink_moved_keys_non_string_partitions(spark, dirs, tmp_path):
     leaves = snapshot_manifest(spark, table)["partitions"]
     assert "d=2024-01-02" not in leaves, "emptied date partition survived"
     assert "d=2024-01-01" in leaves
+
+
+def test_snapshot_sink_merge_keys_keep_null_partition_groups(
+    spark, dirs, tmp_path
+):
+    """Two users share the NULL partition (no event type seen yet);
+    tick 2 updates one of them. The keyed upsert's window must hold the
+    NULL leaf, so the other user is carried instead of dropped with the
+    rewrite."""
+    from callio_etl_spark.snapshots import snapshot_manifest, snapshot_read
+    from callio_etl_spark.streaming.incremental import (
+        read_event_stream,
+        run_foreach_batch_snapshot,
+    )
+
+    table = str(tmp_path / "null_table")
+    _write_batch(
+        spark,
+        dirs["src"],
+        [_row(1, 0, 10, None), _row(2, 1, 11, None), _row(3, 2, 12, "sms")],
+    )
+    per_user = (
+        read_event_stream(spark, dirs["src"])
+        .groupBy("user_id")
+        .agg(F.max("event_type").alias("etype"), F.count("*").alias("n"))
+    )
+
+    def tick():
+        run_foreach_batch_snapshot(
+            per_user, dirs["ck"], table, "etype", merge_keys=["user_id"]
+        )
+
+    tick()
+    _write_batch(spark, dirs["src"], [_row(4, 3, 10, None)])
+    tick()
+    got = {
+        (r["user_id"], r["etype"], r["n"])
+        for r in snapshot_read(spark, table).collect()
+    }
+    assert got == {(10, None, 2), (11, None, 1), (12, "sms", 1)}
+    assert "etype=__HIVE_DEFAULT_PARTITION__" in (
+        snapshot_manifest(spark, table)["partitions"]
+    )
