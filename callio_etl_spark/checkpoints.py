@@ -268,7 +268,7 @@ class CheckpointStore:
             release_service_lock(self.spark, self.log_path)
 
     def compact_if_needed(
-        self, max_files: int = 256, keep_rows_per_key: int = 512
+        self, max_files: int | None = None, keep_rows_per_key: int = 512
     ) -> int | None:
         """Opportunistic retention: compact() once the log has
         accumulated more than ``max_files`` data files — read off the
@@ -276,8 +276,13 @@ class CheckpointStore:
         (each holding one file), so a daemon can call this EVERY tick at
         its quiet point (right after flush(), inside the tick's
         single-writer section) and pay the rewrite only ~once per
-        ``max_files`` ticks. Returns the retained row count when a
-        compaction ran, else None."""
+        ``max_files`` ticks. ``max_files`` defaults to Spark's
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32
+        unless set): ``snapshot_read`` hands Spark one path per data dir,
+        and past that many paths Spark lists them in an extra Spark job,
+        so the default keeps every ``warm()`` on the serial listing.
+        Returns the retained row count when a compaction ran, else
+        None."""
         from callio_etl_spark.snapshots import (
             _leaf_toks,
             _snapshot_table_at,
@@ -290,6 +295,12 @@ class CheckpointStore:
             m = snapshot_manifest(self.spark, self.log_path)
         except FileNotFoundError:
             return None  # the first flush crashed before its publish
+        if max_files is None:
+            max_files = int(
+                self.spark.conf.get(
+                    "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
+                )
+            )
         n_files = sum(len(_leaf_toks(m, leaf)) for leaf in m["partitions"])
         if n_files <= max_files:
             return None

@@ -2086,9 +2086,6 @@ def stream_ingest_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_docs_ingest_with_band_index(
             read_docs_stream(spark, src_dir), ck, docs_p, idx_p, cursor,
             "source",
-            # a doc's source never changes across ticks here: skip the
-            # moved-key lookup, keeping each tick O(touched partitions)
-            stable_partitions=True,
         )
 
     tick(d.where(F.col("doc_id") % 2 == 0))

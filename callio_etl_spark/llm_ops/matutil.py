@@ -29,7 +29,7 @@ Threshold: ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` x
 64 MB advisory default). Both are runtime confs, so a deployment sizes
 the gate to its executors without code changes; the factor — not a
 fixed byte count — keeps the rule scale-adaptive the same way the
-write-distribution gate is. Scratch dirs are created under
+rebalance gate is. Scratch dirs are created under
 ``spark.sql.warehouse.dir`` — a root every executor can write, where the
 driver's temp dir is a path on one machine — and removed through the
 Hadoop FS at interpreter exit (they must outlive the returned frame's

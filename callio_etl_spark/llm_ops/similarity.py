@@ -2886,9 +2886,6 @@ def stream_ingest_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_vectors_ingest_with_ivf_index(
             read_vector_stream(spark, src_dir), ck, vp, ip, fwd, cursor,
             "label", cells,
-            # a vector's label never changes across ticks here: skip the
-            # moved-key lookup, keeping each tick O(touched partitions)
-            stable_partitions=True,
         )
 
     tick(e.where(F.col("vec_id") % 2 == 0))

@@ -11,11 +11,12 @@ container ships no Delta Lake, so the engine provides:
   merged and rewritten — a window partition the merge empties is
   dropped — in ONE manifest commit: the reference's
   `T.<date> BETWEEN part_min AND part_max` pruning conjunct in MERGE ON,
-  with BigQuery's job atomicity. With no window given, the window is
-  the exact touched set (the source's partitions plus the ones its keys
-  live in now); a set window holds the NULL partition when it lists
-  ``None``. It is the engine's only keyed upsert into a snapshot table:
-  ``pipeline.run_tick`` and the streaming sink
+  with BigQuery's job atomicity. With no window given, the merge works
+  the window out itself, as BigQuery's MERGE does: the source's
+  partitions (NULL included), plus the ones its keys live in now
+  unless the partition column is itself a merge key (then no key can
+  live anywhere else). It is the engine's only keyed upsert into a
+  snapshot table: ``pipeline.run_tick`` and the streaming sink
   (``streaming.incremental.run_foreach_batch_snapshot(merge_keys=)``)
   are its callers.
 
@@ -124,7 +125,6 @@ def merge_write_snapshot(
     part_min=None,
     part_max=None,
     keep_snapshots: int = 2,
-    part_values=None,
     **overwrite_kw,
 ) -> int:
     """Physical MERGE into a SNAPSHOT-isolated table (snapshots.py): the
@@ -142,80 +142,59 @@ def merge_write_snapshot(
     at zero I/O. Returns the committed snapshot version.
 
     - No window (the default): the window is the exact touched set,
-      worked out here — the source's partitions plus the partitions its
-      keys live in now (one NULL-safe semi-join of the table against the
-      source's keys, so a key whose partition value moved leaves no
-      stale copy).
-      The source cannot stray from a window derived from it, so no
-      stray check runs.
-    - ``part_values``, the SET window: only the named partition values
-      — typically the exact touched set, e.g. the id buckets a delta
-      hashes into — are read and rewritten, so the merge I/O is
-      O(touched partitions) even when the touched set is not a
-      contiguous range. A ``None`` value holds the NULL partition (the
-      ``__HIVE_DEFAULT_PARTITION__`` leaf).
+      worked out here — the source's partitions (NULL included) plus,
+      when ``partition_col`` is not one of ``spec.keys``, the partitions
+      the source's keys live in now (one NULL-safe semi-join of the
+      table against the source's keys, so a key whose partition value
+      moved leaves no stale copy). When ``partition_col`` IS a key the
+      lookup is skipped, exactly: a row matching a source key on every
+      key column NULL-safely has the source row's partition value, so
+      the join could only name partitions the source already does. Put
+      the partition column in the keys whenever it is part of a row's
+      identity (a bucket of the id, say) to save that join. The source
+      cannot stray from a window derived from it, so no stray check
+      runs.
     - ``part_min``/``part_max``, the RANGE window: partitions in
-      [part_min, part_max]; the NULL partition is outside it.
+      [part_min, part_max]; the NULL partition is outside it. It fails
+      fast on a source row outside the range, which would otherwise
+      clobber a partition excluded from the windowed target.
 
-    An explicit window fails fast on a source row outside it (NULL-safe:
-    a NULL partition value is outside unless the set holds ``None``) —
-    it would otherwise clobber a partition excluded from the windowed
-    target. The window is rewritten exactly: every window partition the
-    head holds goes into ``retire_leaves``, so one the merge leaves
-    empty (a key moved to another partition) is dropped in the same
-    commit instead of carrying its stale rows forward.
+    The window is rewritten exactly: every window partition the head
+    holds goes into ``retire_leaves``, so one the merge leaves empty (a
+    key moved to another partition) is dropped in the same commit
+    instead of carrying its stale rows forward.
 
     ``overwrite_kw`` passes through to ``snapshot_partition_overwrite``
     (layout keywords such as ``bloom_cols``, and ``audit=True``, which
     stages the commit and returns the staged version)."""
     from callio_etl_spark.snapshots import (
-        _leaf_name,
+        _held_leaves,
         _leaf_value_in,
         snapshot_manifest,
         snapshot_partition_overwrite,
         snapshot_read,
     )
 
-    if part_values is not None and (
-        part_min is not None or part_max is not None
-    ):
-        raise ValueError(
-            "merge_write_snapshot: pass part_values OR part_min/part_max, "
-            "not both"
-        )
     target = snapshot_read(spark, target_path)
-    explicit = part_values is not None or part_min is not None
-    if not explicit:
-        # the exact touched set: the source's partitions plus the ones
-        # its keys live in now, matched NULL-safely like merge_upsert
-        keys = source.select(*spec.keys).alias("K")
-        on = [F.col(f"T.{k}").eqNullSafe(F.col(f"K.{k}")) for k in spec.keys]
-        touched = source.select(partition_col).union(
-            target.alias("T").join(keys, _and_all(on), "left_semi")
-            .select(partition_col)
-        )
-        part_values = [r[0] for r in touched.distinct().collect()]
-    if part_values is not None:
-        vals = set(part_values)
-        if explicit and not vals:
-            raise ValueError(
-                "merge_write_snapshot: part_values must be non-empty — an "
-                "empty window would classify every source row as stray "
-                "and merge nothing; skip the merge for an empty delta "
-                "instead"
+    if part_min is None and part_max is None:
+        touched = source.select(partition_col)
+        if partition_col not in spec.keys:
+            # the partitions the source's keys live in now, matched
+            # NULL-safely like merge_upsert
+            keys = source.select(*spec.keys).alias("K")
+            on = [F.col(f"T.{k}").eqNullSafe(F.col(f"K.{k}")) for k in spec.keys]
+            touched = touched.union(
+                target.alias("T").join(keys, _and_all(on), "left_semi")
+                .select(partition_col)
             )
+        vals = {r[0] for r in touched.distinct().collect()}
         named = [v for v in vals if v is not None]
         in_window = F.col(partition_col).isin(named) if named else F.lit(False)
         if None in vals:
             in_window = in_window | F.col(partition_col).isNull()
-        window = f"{sorted(vals, key=str)!r}"
-        # partial probe: O(window) metadata, never the full enumeration
-        names = [_leaf_name(spark, partition_col, v) for v in vals]
-        held = snapshot_manifest(spark, target_path, leaves=names)
-        retire = [n for n in names if n in held["partitions"]]
+        retire = _held_leaves(spark, target_path, partition_col, vals)
     else:
         in_window = F.col(partition_col).between(part_min, part_max)
-        window = f"[{part_min}, {part_max}]"
         # a leaf value compares in the bounds' type, while Spark compares
         # a numeric column numerically: string bounds on a numeric column
         # decide no leaf (a misjudged leaf would be retired unread)
@@ -232,13 +211,13 @@ def merge_write_snapshot(
             and leaf.split("=", 1)[0] == partition_col
             and _leaf_value_in(spark, leaf, part_min, part_max) is True
         ]
-    if explicit:
         stray = source.where(~F.coalesce(in_window, F.lit(False)))
         if stray.limit(1).count() > 0:
             raise ValueError(
                 f"merge_write_snapshot: source rows outside the merge "
-                f"window {window} on {partition_col!r} would clobber "
-                f"partitions excluded from the windowed target"
+                f"window [{part_min}, {part_max}] on {partition_col!r} "
+                f"would clobber partitions excluded from the windowed "
+                f"target"
             )
     merged = merge_upsert(target.where(in_window), source, spec)
     return snapshot_partition_overwrite(

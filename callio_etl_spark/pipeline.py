@@ -84,7 +84,6 @@ def run_tick(
     now_ms: int | None = None,
     login: Callable[[], object] | None = None,
     properties: dict | None = None,
-    stable_partitions: bool = False,
 ) -> int | None:
     """The ONE incremental tick: one tenant's delta MERGEd into the
     snapshot table at ``path``, under ``single_writer_tick``. Returns the
@@ -101,10 +100,10 @@ def run_tick(
     ``merge_write_snapshot`` call with no window, so it rewrites the
     exact touched set — the delta's partitions plus the ones its keys
     live in now, NULL partition included, so a key whose partition value
-    moved leaves no stale copy (``stable_partitions=True`` passes the
-    delta's partitions as the set window instead, skipping that lookup
-    when the partition value is a function of the key); advance the
-    checkpoint and audit MERGED (C4); flush and compact the update_log.
+    moved leaves no stale copy (with ``partition_col`` among
+    ``table.keys`` the merge skips that lookup, since no key can live
+    in another partition); advance the checkpoint and audit MERGED
+    (C4); flush and compact the update_log.
     The service-lock fence runs before the publish and before the flush,
     so a tick that lost its lock to a reclaim aborts first."""
     from callio_etl_spark.io import assert_service_fencing
@@ -150,9 +149,6 @@ def run_tick(
                     spark, path, fresh,
                     MergeSpec(keys=table.keys, update_condition=cond),
                     partition_col, keep_snapshots=keep_snapshots,
-                    part_values=[
-                        r[0] for r in fresh.select(partition_col).distinct().collect()
-                    ] if stable_partitions else None,
                 )
         assert_service_fencing(spark, path)
         if n:

@@ -415,7 +415,9 @@ def _snapshot_loop_tick(
     lifetime — a drifted modulus scatters existing ids into buckets the
     merge never reads — so the first tick PINS it as the table property
     ``loop.id_buckets`` and later ticks check the pin under the lock.
-    The bucket is a function of the key: ``stable_partitions=True``."""
+    The bucket is a function of the id, so ``pbkt`` joins the merge key
+    ``["tenant", "_id", "pbkt"]``: the dedup groups and the merge matches
+    are unchanged, and the merge skips its moved-key lookup."""
     from callio_etl_spark.checkpoints import CheckpointStore
     from callio_etl_spark.pipeline import IncrementalTable, run_tick
     from callio_etl_spark.snapshots import snapshot_properties
@@ -456,7 +458,7 @@ def _snapshot_loop_tick(
     run_tick(
         spark,
         store,
-        IncrementalTable("HttpSnapEvents", ["tenant", "_id"], "ts_ms"),
+        IncrementalTable("HttpSnapEvents", ["tenant", "_id", "pbkt"], "ts_ms"),
         table_path,
         "pbkt",
         fetch,
@@ -465,7 +467,6 @@ def _snapshot_loop_tick(
         now_ms=window_end_ms,
         login=lambda: transport.login("PK"),
         properties={"loop.id_buckets": str(id_buckets)},
-        stable_partitions=True,
     )
 
 
@@ -489,15 +490,14 @@ def http_loop_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge all break the DuckDB hash.
 
     Scale shape: the table is partitioned by a STABLE id bucket
-    (updates never move partitions, so the tick passes
-    ``stable_partitions=True``), and tick 2 merges through the
-    SET-valued window (merge_write_snapshot's ``part_values`` = the
-    delta's touched buckets): only those partitions are read and
-    rewritten, the rest carry by manifest reference at zero I/O — the
-    production O(touched) shape even when the touched set is not a
-    contiguous range. Its twin ``http_incremental_loop`` drives the
-    moved-key path. The checkpoint scalar and the <=16-value touched
-    list are the only driver-side state."""
+    ``pbkt``, which is part of the merge key, so tick 2's merge derives
+    its window from the delta alone (merge_write_snapshot's no-window
+    form, with no moved-key lookup): only the delta's touched buckets
+    are read and rewritten, the rest carry by manifest reference at
+    zero I/O — the production O(touched) shape even when the touched
+    set is not a contiguous range. Its twin ``http_incremental_loop``
+    drives the moved-key path. The checkpoint scalar and the
+    <=16-value touched list are the only driver-side state."""
     import shutil as _shutil
 
     from callio_etl_spark.checkpoints import CheckpointStore
@@ -651,8 +651,8 @@ def update_log_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage_batch(store, "customer", "T1", cust, f"{root}/stg_customer")
 
     # MERGED then NOOP: the incremental tick pair over one batch, into a
-    # snapshot table partitioned by tenant (a merge-key column, so
-    # partition values never move)
+    # snapshot table partitioned by tenant (a merge-key column, so the
+    # merge derives its window from the batch alone)
     table = IncrementalTable(
         name="call-log", keys=["tenant", "_id"], time_col_ms="ts_ms"
     )
@@ -670,7 +670,7 @@ def update_log_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         return run_tick(
             spark, store, table, f"{root}/call_log", "tenant",
             lambda cutoff: batch, "T1", 1,
-            now_ms=_WINDOW_END_MS, stable_partitions=True,
+            now_ms=_WINDOW_END_MS,
         )
 
     tick()

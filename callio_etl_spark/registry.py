@@ -55,78 +55,22 @@ def register(name: str, oracle: str | None = None, tags: list[str] | None = None
 #: every round via tools/check_correctness.py (stricter value compare
 #: than the driver hash).
 #:
-#: r19 rotation: the streaming sink's keyed upsert now merges through
-#: ``merge.merge_write_snapshot`` (the same call ``pipeline.run_tick``
-#: makes), so its two driver rows lead. Ages count the r16-r18 windows as
-#: driver slots (they have no recording in this repo yet; ranking by the
-#: CORRECTNESS_r01..r15 ledger alone gave the same 17 r10 rows a slot in
-#: three windows running). The window holds:
-#:   1. stream_ingest_band_index and stream_ingest_vector_index (the two
-#:      rows that drive the sink's merge-keys tick, at 175 and 169 before);
-#:   2. the 16 r11 rows the r18 window left at positions 51-66;
-#:   3. the four rows on run_tick / merge_write_snapshot, kept from r18
-#:      (http_incremental_loop, merge_upsert_snapshot,
-#:      http_loop_snapshot_sink, update_log_modes);
-#:   4. oldest-first, ties alphabetical: 28 of the 44 rows whose latest
-#:      driver slot is r12 (ann_recall_ivf .. sink_snapshot_append). The
-#:      other 16 (sink_snapshot_cdc .. window_rank_suite) hold positions
-#:      51-66 and lead the next window.
+#: r20 rotation: merge_write_snapshot derives its window from the merge
+#: key, so every row on the keyed upsert or the update_log compaction
+#: threshold rides the window. Ages count the r16-r19 windows as driver
+#: slots (no recording in this repo yet). The window holds:
+#:   1. the 16 r12 rows the r19 window left at positions 51-66
+#:      (sink_snapshot_cdc .. window_rank_suite);
+#:   2. the eight rows this round touches: the four run_tick /
+#:      merge_write_snapshot rows, the two stream-ingest rows (their
+#:      sink now takes the moved-key semi-join), checkpoint_log_compact
+#:      and sink_compact_vacuum (distribution="none");
+#:   3. oldest-first, ties alphabetical: 26 of the 46 rows whose latest
+#:      driver slot is r14 (ann_hard_negatives .. media_resize). The
+#:      other 20 (merge_upsert_conditional .. window_range_scan) hold
+#:      positions 51-70 and lead the next window.
 DRIVER_PRIORITY: list[str] = [
-    # --- the two sink rows whose keyed upsert this round replaces (2) ---
-    "stream_ingest_band_index",
-    "stream_ingest_vector_index",
-    # --- the r11 rows the r18 window left at positions 51-66 (16) ---
-    "pivot_event_types",
-    "pmi_cooccurrence",
-    "posexplode_tokens",
-    "profile_columns",
-    "range_join_bucketed",
-    "regexp_suite",
-    "rollup_agg",
-    "semantic_dedup",
-    "semantic_dedup_gemm",
-    "sessionize",
-    "set_intersect_except",
-    "sink_bloom_skip",
-    "sink_compact_vacuum",
-    "sketch_error_bounds",
-    "token_dist_drift",
-    "vocab_coverage",
-    # --- the run_tick / merge_write_snapshot rows kept from r18 (4) ---
-    "http_incremental_loop",
-    "merge_upsert_snapshot",
-    "http_loop_snapshot_sink",
-    "update_log_modes",
-    # --- oldest-first: r12 (28 of 44) ---
-    "ann_recall_ivf",
-    "array_pick",
-    "exact_substring_pairs",
-    "fingerprint",
-    "ivf_centroids",
-    "json_extract",
-    "lang_id",
-    "merge_partial_keep_existing",
-    "minhash_incremental_planned",
-    "mixture_weights",
-    "multimodal_meta",
-    "ngram_jaccard_pairs",
-    "nonblank_filter",
-    "not_in_subquery",
-    "pii_scrub",
-    "project_backfill",
-    "quality_score",
-    "repetition_stats",
-    "reservoir_sample",
-    "row_hash",
-    "scalar_subquery",
-    "scalar_suite",
-    "simhash",
-    "sink_bucketed_join",
-    "sink_bucketed_snapshot",
-    "sink_rename_evolve",
-    "sink_row_deletes",
-    "sink_snapshot_append",
-    # --- positions 51-66: the r12 rows that lead the next window ---
+    # --- positions 1-16: the r12 rows r19 left at positions 51-66 ---
     "sink_snapshot_cdc",
     "sink_snapshot_overwrite",
     "sink_spec_evolve",
@@ -143,6 +87,63 @@ DRIVER_PRIORITY: list[str] = [
     "window_dist_suite",
     "window_frames",
     "window_rank_suite",
+    # --- the rows whose write path this round touches (8) ---
+    "http_incremental_loop",
+    "http_loop_snapshot_sink",
+    "update_log_modes",
+    "merge_upsert_snapshot",
+    "stream_ingest_band_index",
+    "stream_ingest_vector_index",
+    "checkpoint_log_compact",
+    "sink_compact_vacuum",
+    # --- oldest-first: r14 (26 of 46) ---
+    "ann_hard_negatives",
+    "ann_recall_ivf_probe",
+    "ann_recall_pq",
+    "ann_recall_pq_rerank",
+    "ann_topk_ivf_probe",
+    "ann_topk_ivfpq",
+    "ann_topk_pq_rerank",
+    "audio_features",
+    "bloom_decontaminate",
+    "boilerplate_ngrams",
+    "contamination_check",
+    "corpus_select_budget",
+    "dsir_importance",
+    "embedding_covariance",
+    "embedding_lsh_buckets",
+    "embedding_lsh_pairs",
+    "embedding_outliers",
+    "embedding_pca_project",
+    "embedding_standardize",
+    "fact_staff_daily",
+    "fact_staff_daily_sql",
+    "fact_status_pivot",
+    "incremental_agg_maintenance",
+    "latest_per_key",
+    "media_features",
+    "media_resize",
+    # --- positions 51-70: the r14 rows that lead the next window ---
+    "merge_upsert_conditional",
+    "merge_upsert_full",
+    "minhash_lsh_pairs",
+    "text_stats",
+    "tfidf_top_terms",
+    "time_buckets",
+    "topk_recent",
+    "tpch_q10_returned",
+    "tpch_q11_important_stock",
+    "tpch_q12_late_lines",
+    "tpch_q13_order_distribution",
+    "tpch_q14_promo",
+    "tpch_q15_top_supplier",
+    "tpch_q16_supplier_count",
+    "tpch_q17_small_quantity",
+    "tpch_q18_large_orders",
+    "tpch_q1_pricing",
+    "union_tenants",
+    "watermark_filter",
+    "window_range_scan",
 ]
 
 

@@ -1969,7 +1969,7 @@ def _plan_size_estimate(df: DataFrame) -> int | None:
     estimate as "no estimate" and switch the gates off; a stats-less
     frame then reports that configured default, which the gates take
     as its size. The one rule
-    for the write-distribution gate (``_distribute_for_write``) and the
+    for the rebalance gate (``_distribute_for_write``) and the
     materialization gate (``llm_ops.matutil.materialize``)."""
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -1987,13 +1987,13 @@ def _plan_size_estimate(df: DataFrame) -> int | None:
 def _distribute_for_write(
     df: DataFrame,
     partition_col: str | None,
-    override: str | None = None,
+    distribution: str | None = None,
 ) -> DataFrame:
-    """Iceberg-style write distribution (``write.distribution-mode=hash``)
-    ahead of every staged commit write: REBALANCE the frame on the
-    partition column so each leaf lands as few, advisory-sized files
-    instead of one file per upstream task per leaf. AQE both COALESCES
-    tiny post-shuffle partitions and SKEW-SPLITS oversized ones
+    """Iceberg-style hash distribution ahead of every staged commit
+    write: REBALANCE the frame on the partition column so each leaf
+    lands as few, advisory-sized files instead of one file per upstream
+    task per leaf. AQE both COALESCES tiny post-shuffle partitions and
+    SKEW-SPLITS oversized ones
     (REBALANCE_PARTITIONS_BY_COL), so the distribution is scale-adaptive
     with no local-only constant: the fixture-scale commit writes ~1 file
     per leaf instead of |tasks| per leaf (r14 measured 4 files vs 128 for
@@ -2021,39 +2021,27 @@ def _distribute_for_write(
     estimate keeping the plain write is acceptable — at that size the
     writer's task count already fans the leaf out.
 
-    Production knob: ``spark.callio.write.distribution`` — ``rebalance``
-    (default, Iceberg's hash mode, size-gated), ``always`` (ungated, for
-    layout-critical tables), or ``none`` (Iceberg's none mode, for
-    callers that pre-distribute; the zorder and bucketBy paths already
-    impose their own distribution and never reach this). ``override``
-    (an explicit per-call mode, e.g. compaction's "none" — its
-    coalesce(target_files) IS the distribution) wins over the conf."""
-    if override is not None:
-        mode = override
-    else:
-        try:
-            mode = df.sparkSession.conf.get(
-                "spark.callio.write.distribution", "rebalance"
-            )
-        except Exception:
-            mode = "rebalance"
-    if mode not in ("rebalance", "always"):
+    A caller that pre-distributes passes ``distribution="none"`` to
+    ``snapshot_partition_overwrite`` and skips this (compaction's
+    coalesce(target_files) IS its distribution); the zorder and
+    bucketBy paths impose their own distribution and never reach
+    this."""
+    if distribution == "none":
         return df
-    if mode == "rebalance":
-        # no estimate -> keep the plain write (see _plan_size_estimate)
-        est = _plan_size_estimate(df)
-        if est is None:
-            return df
-        try:
-            advisory = _parse_bytes_conf(
-                df.sparkSession.conf.get(
-                    "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864b"
-                )
+    # no estimate -> keep the plain write (see _plan_size_estimate)
+    est = _plan_size_estimate(df)
+    if est is None:
+        return df
+    try:
+        advisory = _parse_bytes_conf(
+            df.sparkSession.conf.get(
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864b"
             )
-        except Exception:
-            return df  # advisory size unavailable: keep the plain write
-        if est < advisory:
-            return df
+        )
+    except Exception:
+        return df  # advisory size unavailable: keep the plain write
+    if est < advisory:
+        return df
     if partition_col:
         return df.hint("rebalance", partition_col)
     return df.hint("rebalance")
@@ -2417,7 +2405,11 @@ def snapshot_partition_overwrite(
     and ``merge.merge_write_snapshot`` (every window leaf the head
     holds — the keyed upsert behind ``pipeline.run_tick`` and
     ``run_foreach_batch_snapshot(merge_keys=)``). Retired dirs stay
-    pinnable in older versions until retention sweeps them."""
+    pinnable in older versions until retention sweeps them.
+
+    ``distribution="none"`` skips the size-gated rebalance
+    (``_distribute_for_write``) for a frame the caller has already
+    distributed; ``None`` (the default) applies it."""
     path = path.rstrip("/")
     if keep_snapshots < 1:
         raise ValueError("keep_snapshots must be >= 1 (the live snapshot)")
@@ -2452,10 +2444,10 @@ def snapshot_partition_overwrite(
         )
     elif cluster_cols:
         df = _distribute_for_write(
-            df, partition_col, override=distribution
+            df, partition_col, distribution
         ).sortWithinPartitions(*cluster_cols)
     elif not bucket_by:
-        df = _distribute_for_write(df, partition_col, override=distribution)
+        df = _distribute_for_write(df, partition_col, distribution)
     if bucket_by:
         # Spark's bucketed writer only runs through the catalog: stage as
         # a TEMPORARY EXTERNAL table at the staging path (bucket ids are
@@ -2551,11 +2543,10 @@ def _rewrite_touched(
     """The rows and retire list of a keyed-delta rewrite of the touched
     partitions ``col IN values``: the head's rows there whose ``key`` is
     not in ``changed``, plus ``fresh``, checkpointed eagerly; and the
-    touched leaves the head holds. Pass both to
+    touched leaves the head holds (``_held_leaves``). Pass both to
     ``snapshot_partition_overwrite(retire_leaves=)``: a touched leaf the
     rows still fill is replaced, one they leave empty is dropped, in one
-    commit. The leaf probe is a partial manifest resolve — O(touched)
-    metadata, never the table's full enumeration."""
+    commit."""
     if not exists:
         return fresh.localCheckpoint(eager=True), []
     values = sorted(set(values))
@@ -2569,9 +2560,16 @@ def _rewrite_touched(
         .unionByName(fresh)
         .localCheckpoint(eager=True)
     )
+    return out, _held_leaves(spark, path, col, values)
+
+
+def _held_leaves(spark: SparkSession, path: str, col: str, values) -> list[str]:
+    """The leaves of ``col IN values`` the head holds (a ``None`` value
+    names the NULL leaf): one partial manifest resolve, O(values)
+    metadata, never the table's full enumeration."""
     names = [_leaf_name(spark, col, v) for v in values]
     held = snapshot_manifest(spark, path, leaves=names)["partitions"]
-    return out, [n for n in names if n in held]
+    return [n for n in names if n in held]
 
 
 def snapshot_overwrite(

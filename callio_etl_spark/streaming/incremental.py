@@ -207,7 +207,6 @@ def run_foreach_batch_snapshot(
     bloom_cols: list[str] | None = None,
     max_records_per_file: int | None = None,
     post_commit_fn=None,
-    stable_partitions: bool = False,
 ) -> None:
     """Streaming sink with SNAPSHOT-ISOLATED commits: each micro-batch's
     updated rows replace their partitions through ONE manifest publish
@@ -245,14 +244,14 @@ def run_foreach_batch_snapshot(
     the exact touched set: the batch's partitions (NULL included) plus
     the ones its keys live in now, so a key whose PARTITION VALUE
     changed leaves no stale copy and an emptied old partition is
-    retired in the same commit. ``stable_partitions=True`` passes the
-    batch's own partitions as the set window instead, skipping that
-    O(table) key lookup when the partition value is a pure function of
-    the merge key (residue buckets, say). DETERMINISM CONTRACT: the
+    retired in the same commit. Put ``partition_col`` in ``merge_keys``
+    when it is part of the row's identity (a residue bucket of the id,
+    say): the merge then skips that O(table) key lookup, exactly, since
+    no key can live in another partition. DETERMINISM CONTRACT: the
     micro-batch is not cached (see ``commit``), so it is re-evaluated
-    by the window probe (and, on the stable path, the stray check) and
-    again by the merge write — the upstream projection must give the
-    same key -> row mapping every time, as a stateful aggregate does.
+    by the window probe and again by the merge write — the upstream
+    projection must give the same key -> row mapping every time, as a
+    stateful aggregate does.
 
     ``cluster_cols`` / ``stats_cols`` / ``zorder_cols`` / ``file_stats``
     / ``bloom_cols`` thread through to every tick's commit, so a
@@ -309,15 +308,9 @@ def run_foreach_batch_snapshot(
         # Create-vs-merge is decided by the published-head probe, the
         # same helper the incremental tick (pipeline.run_tick) uses.
         if merge_keys is not None and snapshot_has_published_head(spark, path):
-            part_values = None
-            if stable_partitions:
-                part_values = [
-                    r[0] for r in batch.select(partition_col).distinct().collect()
-                ]
             write = functools.partial(
                 merge_write_snapshot, spark, path, batch,
                 MergeSpec(keys=merge_keys), partition_col,
-                part_values=part_values,
                 keep_snapshots=keep_snapshots, **layout,
             )
         else:
@@ -485,7 +478,6 @@ def run_docs_ingest_with_band_index(
     partition_col: str,
     keep_snapshots: int = 3,
     output_mode: str = "update",
-    stable_partitions: bool = False,
 ) -> None:
     """DOCUMENT INGESTION WITH A LIVE NEAR-DUP INDEX — the composed
     rolling-dedup service loop (closes VERDICT r8 item 6): each
@@ -514,7 +506,6 @@ def run_docs_ingest_with_band_index(
         keep_snapshots=keep_snapshots,
         output_mode=output_mode,
         merge_keys=["doc_id"],
-        stable_partitions=stable_partitions,
         post_commit_fn=lambda spark: maintain_band_index(
             spark, docs_path, index_path, cursor_file,
             keep_snapshots=keep_snapshots,
@@ -533,7 +524,6 @@ def run_vectors_ingest_with_ivf_index(
     cells: DataFrame,
     keep_snapshots: int = 3,
     output_mode: str = "update",
-    stable_partitions: bool = False,
 ) -> None:
     """VECTOR INGESTION WITH A LIVE IVF INDEX — the vector twin of
     ``run_docs_ingest_with_band_index`` (closes the composition gap the
@@ -568,7 +558,6 @@ def run_vectors_ingest_with_ivf_index(
         keep_snapshots=keep_snapshots,
         output_mode=output_mode,
         merge_keys=["vec_id"],
-        stable_partitions=stable_partitions,
         post_commit_fn=lambda spark: maintain_vector_index(
             spark, vecs_path, index_path, fwd_path, cursor_file, cells,
             keep_snapshots=keep_snapshots,

@@ -132,14 +132,16 @@ def test_noop_and_log_modes(spark, store, tmp_path):
     assert fresh.get("customer", "PK") == ck1
 
 
-@pytest.mark.parametrize("stable", [False, True], ids=["touched-set", "stable"])
-def test_run_tick_merges_null_partition_rows(spark, store, tmp_path, stable):
+@pytest.mark.parametrize(
+    "keys", [["tenant", "_id"], ["tenant", "_id", "p"]], ids=["touched-set", "p-in-key"]
+)
+def test_run_tick_merges_null_partition_rows(spark, store, tmp_path, keys):
     """A delta row whose partition value is NULL merges into the table's
-    NULL leaf under both windows run_tick can pass (the derived touched
-    set, and the delta's own partitions with ``stable_partitions``): the
-    update and the insert land, the other NULL-partition row is kept,
-    and the checkpoint advances."""
-    table = IncrementalTable(name="Nulls", keys=["tenant", "_id"], time_col_ms="ts")
+    NULL leaf whether or not the partition column is a merge key (with
+    it, the merge skips its moved-key lookup): the update and the insert
+    land, the other NULL-partition row is kept, and the checkpoint
+    advances."""
+    table = IncrementalTable(name="Nulls", keys=keys, time_col_ms="ts")
     path = str(tmp_path / "nulls")
     now = T0 + 10 * HOUR
     schema = "tenant string, _id string, ts long, p string, v string, row_hash string"
@@ -150,7 +152,7 @@ def test_run_tick_merges_null_partition_rows(spark, store, tmp_path, stable):
         )
         return run_tick(
             spark, store, table, path, "p", lambda cutoff: batch, "PK", 3,
-            now_ms=now, stable_partitions=stable,
+            now_ms=now,
         )
 
     tick([("a", T0 + HOUR, None, "a1"), ("b", T0 + HOUR, None, "b1"), ("c", T0 + HOUR, "x", "c1")])
@@ -366,13 +368,11 @@ def test_merge_write_rejects_out_of_window_source(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "window",
-    [{"part_values": ["a", "c"]}, {"part_min": "a", "part_max": "c"}, {}],
-    ids=["set", "range", "none"],
+    "window", [{"part_min": "a", "part_max": "c"}, {}], ids=["range", "none"]
 )
 def test_merge_write_snapshot_moved_key_drops_emptied_leaf(spark, tmp_path, window):
-    """A key that alone holds partition 'a' moves to 'c'. Under every
-    window form (set, range, none) the merge leaves it once, drops the
+    """A key that alone holds partition 'a' moves to 'c'. Under both
+    window forms (range, none) the merge leaves it once, drops the
     leaf it emptied in the same commit, and publishes one version; the
     NULL-partition row, which no window holds, survives."""
     from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
@@ -542,6 +542,46 @@ def test_update_log_opportunistic_compaction_threshold(spark, store):
         CheckpointStore(spark, store.log_path + "_none").compact_if_needed()
         is None
     )
+
+
+def test_compaction_keeps_warm_on_the_serial_listing(spark, tmp_path):
+    """compact_if_needed's default threshold is Spark's
+    parallelPartitionDiscovery threshold: past that many paths Spark
+    lists a read's data dirs in an extra Spark job. With the conf at 4,
+    five flush + compact_if_needed cycles leave at most 4 data dirs,
+    and warm() starts no more jobs than on a one-dir log."""
+    from callio_etl_spark.checkpoints import CheckpointStore
+    from callio_etl_spark.snapshots import _leaf_toks, snapshot_manifest
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def warm_jobs(store):
+        spark.sparkContext.setJobGroup("warm-probe", "warm job count")
+        try:
+            before = set(tracker.getJobIdsForGroup("warm-probe"))
+            store.warm()
+            return len(set(tracker.getJobIdsForGroup("warm-probe")) - before)
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.set(conf, "4")
+    try:
+        one = CheckpointStore(spark, str(tmp_path / "one_dir_log"))
+        one.log("TableA", "PK", 1, T0, "MERGED")
+        one.flush()
+        many = CheckpointStore(spark, str(tmp_path / "cycled_log"))
+        for i in range(5):
+            many.log("TableA", "PK", 1, T0 + i * HOUR, "MERGED")
+            many.flush()
+            many.compact_if_needed()
+        m = snapshot_manifest(spark, many.log_path)
+        assert sum(len(_leaf_toks(m, leaf)) for leaf in m["partitions"]) <= 4
+        warm_jobs(one)  # first read of the session's plan shape
+        assert warm_jobs(many) <= warm_jobs(one)
+        assert many._cache[("tablea", "PK")] == T0 + 4 * HOUR
+    finally:
+        spark.conf.unset(conf)
 
 
 def test_flush_vs_compact_never_loses_rows(spark, store):

@@ -242,15 +242,12 @@ def test_snapshot_compact_partition(spark, tmp_path):
     the manifest), and commits as a pinnable version."""
     p = str(tmp_path / "cp")
     df = _df(spark, range(40)).repartition(6)  # ~6 files per partition
-    # the r14 write-distribution rebalance would coalesce each leaf to one
-    # file on write — exactly the fragmentation this test needs to exist so
-    # compaction has something to rewrite. Use the documented knob to write
-    # the fragmented state, then restore.
-    spark.conf.set("spark.callio.write.distribution", "none")
-    try:
-        snap.snapshot_partition_overwrite(spark, df, p, "d", keep_snapshots=3)
-    finally:
-        spark.conf.unset("spark.callio.write.distribution")
+    # the default size-gated rebalance could coalesce each leaf to one
+    # file on write — but this test needs the fragmentation so compaction
+    # has something to rewrite, so the write opts out of it
+    snap.snapshot_partition_overwrite(
+        spark, df, p, "d", keep_snapshots=3, distribution="none"
+    )
     m1 = snap.snapshot_manifest(spark, p)
 
     def files_in(leaf_tok):
@@ -3436,123 +3433,129 @@ def test_cursor_ack_never_rewinds(tmp_path):
 
 
 def test_merge_write_snapshot_set_valued_window(spark, tmp_path):
-    """r11 `part_values`: a merge windowed by the SET of touched
-    partition values reads and rewrites ONLY those partitions — the
-    untouched leaves' data dirs are carried into the new manifest BY
-    REFERENCE (identical dir tokens), non-contiguous sets work (the
-    between-window cannot express {0, 3}), and a stray source row
-    outside the window fails fast before any commit."""
+    """With no window, the merge derives the SET of touched partition
+    values and reads and rewrites ONLY those partitions, with or without
+    the partition column in the merge key: the untouched leaves' data
+    dirs are carried into the new manifest BY REFERENCE (identical dir
+    tokens), and a non-contiguous set ({0, 3}, which a between-window
+    cannot express) is rewritten."""
     import pyspark.sql.functions as F
-    import pytest as _pytest
 
     from callio_etl_spark import snapshots as snap
     from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
 
-    p = str(tmp_path / "t")
     base = spark.createDataFrame(
         [(i, f"v{i}", i % 4) for i in range(40)],
         "k long, val string, pbkt int",
     )
-    v1 = snap.snapshot_partition_overwrite(spark, base, p, "pbkt",
-                                           keep_snapshots=5)
-    m1 = snap.snapshot_manifest(spark, p)["partitions"]
-
     # delta touches buckets 0 and 3 only (non-contiguous): update k=0,
     # k=3, insert k=100 (100 % 4 == 0)
     delta = spark.createDataFrame(
         [(0, "UPDATED", 0), (3, "UPDATED", 3), (100, "NEW", 0)],
         "k long, val string, pbkt int",
     )
-    spec = MergeSpec(
-        keys=["k"],
-        update_condition=~F.col("T.val").eqNullSafe(F.col("S.val")),
-    )
-    v2 = merge_write_snapshot(
-        spark, p, delta, spec, "pbkt", keep_snapshots=5,
-        part_values=[0, 3],
-    )
-    assert v2 > v1
-    m2 = snap.snapshot_manifest(spark, p)["partitions"]
-    # untouched buckets 1 and 2: data dirs carried verbatim by reference
-    for leaf in ("pbkt=1", "pbkt=2"):
-        assert m2[leaf] == m1[leaf], f"{leaf} rewritten despite windowing"
-    for leaf in ("pbkt=0", "pbkt=3"):
-        assert m2[leaf] != m1[leaf], f"{leaf} not rewritten"
-    got = {r["k"]: r["val"] for r in snap.snapshot_read(spark, p).collect()}
-    assert len(got) == 41
-    assert got[0] == "UPDATED" and got[3] == "UPDATED" and got[100] == "NEW"
-    assert got[1] == "v1" and got[2] == "v2"  # untouched buckets intact
-
-    # stray row outside the window: loud refusal, nothing committed
-    stray = spark.createDataFrame(
-        [(200, "STRAY", 2)], "k long, val string, pbkt int"
-    )
-    with _pytest.raises(ValueError, match="outside the merge window"):
-        merge_write_snapshot(
-            spark, p, stray, spec, "pbkt", keep_snapshots=5,
-            part_values=[0, 3],
+    for keys in (["k"], ["k", "pbkt"]):
+        p = str(tmp_path / "_".join(keys))
+        v1 = snap.snapshot_partition_overwrite(spark, base, p, "pbkt",
+                                               keep_snapshots=5)
+        m1 = snap.snapshot_manifest(spark, p)["partitions"]
+        spec = MergeSpec(
+            keys=keys,
+            update_condition=~F.col("T.val").eqNullSafe(F.col("S.val")),
         )
-    assert snap.snapshot_versions(spark, p)[-1] == v2
-
-    # part_values and part_min are mutually exclusive
-    with _pytest.raises(ValueError, match="not both"):
-        merge_write_snapshot(
-            spark, p, delta, spec, "pbkt", keep_snapshots=5,
-            part_values=[0], part_min=0, part_max=3,
-        )
+        v2 = merge_write_snapshot(spark, p, delta, spec, "pbkt",
+                                  keep_snapshots=5)
+        assert v2 > v1
+        m2 = snap.snapshot_manifest(spark, p)["partitions"]
+        # untouched buckets 1 and 2: data dirs carried verbatim by reference
+        for leaf in ("pbkt=1", "pbkt=2"):
+            assert m2[leaf] == m1[leaf], f"{keys}: {leaf} rewritten outside the window"
+        for leaf in ("pbkt=0", "pbkt=3"):
+            assert m2[leaf] != m1[leaf], f"{keys}: {leaf} not rewritten"
+        got = {r["k"]: r["val"] for r in snap.snapshot_read(spark, p).collect()}
+        assert len(got) == 41
+        assert got[0] == "UPDATED" and got[3] == "UPDATED" and got[100] == "NEW"
+        assert got[1] == "v1" and got[2] == "v2"  # untouched buckets intact
 
 
 def test_merge_write_snapshot_windowed_equals_full_merge(spark, tmp_path):
-    """Parity across random touched sets: for any delta, merging through
-    the set-valued window (part_values = the delta's exact partition
-    values) must produce the same table as the unwindowed full merge —
-    the window is an I/O optimization, never a semantics change."""
+    """Parity across random deltas: the derived window, with the
+    partition column in the merge key (no moved-key lookup) and without
+    it (the lookup runs), must give the same table as merge_upsert over
+    the WHOLE target — the window is an I/O optimization, never a
+    semantics change."""
     import random
 
     import pyspark.sql.functions as F
 
     from callio_etl_spark import snapshots as snap
-    from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
+    from callio_etl_spark.merge import MergeSpec, merge_upsert, merge_write_snapshot
 
     rng = random.Random(11)
-    spec = MergeSpec(
-        keys=["k"],
-        update_condition=~F.col("T.val").eqNullSafe(F.col("S.val")),
-    )
+    cond = ~F.col("T.val").eqNullSafe(F.col("S.val"))
     base_rows = [(i, f"v{i}", i % 8) for i in range(64)]
+    schema = "k long, val string, pbkt int"
 
     for trial in range(3):
-        pa_, pb = str(tmp_path / f"w{trial}"), str(tmp_path / f"f{trial}")
-        base = spark.createDataFrame(
-            base_rows, "k long, val string, pbkt int"
-        )
-        for p in (pa_, pb):
-            snap.snapshot_partition_overwrite(
-                spark, base, p, "pbkt", keep_snapshots=3
-            )
+        base = spark.createDataFrame(base_rows, schema)
         delta_rows = [
             (k, f"u{trial}_{k}", k % 8)
             for k in rng.sample(range(0, 100), rng.randint(1, 12))
         ]
-        delta = spark.createDataFrame(
-            delta_rows, "k long, val string, pbkt int"
-        )
-        touched = sorted({r[2] for r in delta_rows})
-        merge_write_snapshot(
-            spark, pa_, delta, spec, "pbkt", keep_snapshots=3,
-            part_values=touched,
-        )
-        merge_write_snapshot(spark, pb, delta, spec, "pbkt", keep_snapshots=3)
-        got_w = {
-            tuple(r) for r in snap.snapshot_read(spark, pa_).collect()
+        delta = spark.createDataFrame(delta_rows, schema)
+        want = {
+            tuple(r)
+            for r in merge_upsert(
+                base, delta, MergeSpec(keys=["k"], update_condition=cond)
+            ).collect()
         }
-        got_f = {
-            tuple(r) for r in snap.snapshot_read(spark, pb).collect()
-        }
-        assert got_w == got_f, (
-            f"trial {trial}: windowed merge diverged from full merge: "
-            f"{got_w ^ got_f}"
-        )
+        for keys in (["k", "pbkt"], ["k"]):
+            p = str(tmp_path / f"t{trial}_{len(keys)}")
+            snap.snapshot_partition_overwrite(
+                spark, base, p, "pbkt", keep_snapshots=3
+            )
+            merge_write_snapshot(
+                spark, p, delta, MergeSpec(keys=keys, update_condition=cond),
+                "pbkt", keep_snapshots=3,
+            )
+            got = {
+                tuple(r)
+                for r in snap.snapshot_read(spark, p)
+                .select("k", "val", "pbkt").collect()
+            }
+            assert got == want, (
+                f"trial {trial}, keys {keys}: windowed merge diverged from "
+                f"the full merge: {got ^ want}"
+            )
+
+
+def test_merge_write_snapshot_partition_key_skips_the_lookup(spark, tmp_path):
+    """With the partition column among the merge keys, the derived
+    window skips the moved-key semi-join, so the same merge starts
+    strictly fewer Spark jobs than with the key alone."""
+    from callio_etl_spark import snapshots as snap
+    from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
+
+    tracker = spark.sparkContext.statusTracker()
+    schema = "k long, val string, pbkt int"
+    base = spark.createDataFrame([(i, f"v{i}", i % 8) for i in range(64)], schema)
+    delta = spark.createDataFrame([(1, "u", 1), (5, "u", 5), (99, "new", 3)], schema)
+
+    def merge_jobs(keys, name):
+        p = str(tmp_path / name)
+        snap.snapshot_partition_overwrite(spark, base, p, "pbkt")
+        group = f"merge-probe-{name}"
+        spark.sparkContext.setJobGroup(group, "merge job count")
+        try:
+            merge_write_snapshot(spark, p, delta, MergeSpec(keys=keys), "pbkt")
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    merge_jobs(["k"], "warm")  # first run of the plan shape in this session
+    with_key = merge_jobs(["k", "pbkt"], "with_key")
+    without = merge_jobs(["k"], "without")
+    assert with_key < without, (with_key, without)
 
 
 def test_write_distribution_gate_sizes_and_unknown_sentinel(spark, tmp_path):
