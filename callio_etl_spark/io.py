@@ -477,12 +477,12 @@ def assert_commit_fencing(spark: SparkSession, path: str) -> None:
 
 #: Derived path for an index table's SERVICE lock — a second mutex layered
 #: above the per-commit table lock that serializes whole maintenance
-#: SEQUENCES (a maintain tick's read-pin -> commit -> cursor ack, a
-#: rebuild's read -> overwrite -> re-pin -> cursor ack). The per-commit
-#: lock alone cannot exclude a rebuild interleaving BETWEEN a tick's
-#: commits: the tick could band its delta against the pre-rebuild pin
-#: after the index was already rewritten, and its cursor ack could move
-#: the rebuilt cursor backwards.
+#: SEQUENCES (a maintain tick's read-state -> compute -> commit, a
+#: rebuild's read -> overwrite). The per-commit lock alone cannot
+#: exclude a rebuild interleaving BETWEEN a tick's state read and its
+#: commit: the tick could band its delta against the pre-rebuild pin
+#: and publish it, with its stale source version, over the rebuilt
+#: index.
 SERVICE_LOCK_INFIX = ".__service"
 
 
@@ -516,9 +516,9 @@ def assert_service_fencing(spark: SparkSession, path: str) -> None:
     """Commit-point fencing for the SERVICE lock (see
     assert_commit_fencing): a maintenance tick or rebuild that stalled
     past the stale window and lost its service lock must abort before
-    committing index state or acknowledging the consumer cursor against
-    a sequence a newer owner has already advanced. Same wall-time gate:
-    free for every normally-paced tick."""
+    committing index rows and their source version against a sequence
+    a newer owner has already advanced. Same wall-time gate: free for
+    every normally-paced tick."""
     assert_commit_fencing(spark, path.rstrip("/") + SERVICE_LOCK_INFIX)
 
 

@@ -1705,7 +1705,6 @@ def maintain_band_index(
     spark: SparkSession,
     docs_path: str,
     index_path: str,
-    cursor_file: str,
     rows_per_band: int = ROWS_PER_BAND,
     n_bands: int = N_BANDS,
     keep_snapshots: int = 3,
@@ -1713,11 +1712,11 @@ def maintain_band_index(
 ) -> int | None:
     """ROLLING BAND-INDEX MAINTENANCE — the service loop a production
     near-dup pipeline runs around the incremental-LSH probe: documents
-    land as snapshot commits on ``docs_path``; each call here consumes
-    the table's CDC feed (snapshot_consume_changes — durable cursor,
-    at-least-once, metadata-pruned to the partitions the writers
-    touched) and keeps a (doc_id, band, band_key) index table at
-    ``index_path`` exactly current:
+    land as snapshot commits on ``docs_path``; each call consumes the
+    table's CDC feed (snapshot_consume_changes — at-least-once,
+    metadata-pruned to the partitions the writers touched) and keeps a
+    (doc_id, band, band_key) index table at ``index_path`` exactly
+    current:
 
       - inserted/updated docs: band signatures recomputed IN-PROJECTION
         (band_projection — map-side only) and written;
@@ -1735,29 +1734,32 @@ def maintain_band_index(
     their static side. Idempotent per CDC contract: a replayed batch
     rewrites the same buckets to the same content.
 
-    GEOMETRY PINNING: the band geometry is a TABLE property of the
-    index, not a per-call argument to trust — a caller re-planning
-    (r, b) between ticks would silently mix incompatible band keys. An
-    existing index's recorded ``band.rows_per_band`` / ``band.n_bands``
-    properties always win over the arguments; ``plan_geometry=True``
-    derives the geometry from the FIRST batch's size through the
-    integer occupancy thresholds (``plan_band_geometry_for_size`` — the
-    minhash_incremental_planned policy) and records it on the index's
-    manifest, so the service starts at the size-appropriate key length
-    and every later tick reads the frozen choice back. Re-keying is an
-    explicit full rebuild, never a drift. The pin commits ATOMICALLY
-    with the index data (``snapshot_partition_overwrite(properties=)``)
-    — a separate follow-up commit would leave a crash window with live
-    index data and no pin; an index found WITHOUT a pin (built before
-    pinning existed, or by a writer that crashed inside that old
-    window) has the geometry this tick used backfilled onto its commit,
-    so the invariant "index exists => pin exists" self-heals.
+    INDEX STATE lives in the index's own commit: the docs version the
+    rows reflect (``SOURCE_VERSION_PROP``) and the band geometry
+    (``band.rows_per_band`` / ``band.n_bands``) are table properties
+    written by the same ``snapshot_partition_overwrite(properties=)``
+    publish that lands the rows, and read back in one top-only manifest
+    read before the next tick. So the index and its position move
+    atomically: a crash before the publish replays the batch, a
+    ``snapshot_restore`` of the index re-reads from the version the
+    restored rows reflect, and the state lives on the index's
+    filesystem. A tick whose delta touches no bucket (a compaction of
+    the docs table) records its version in a properties-only commit.
 
-    A tick's whole read-pin -> commit -> cursor-ack sequence runs under
-    the index's SERVICE lock (io.acquire_service_lock), serializing it
-    against ``rebuild_band_index`` — without it a tick racing a rebuild
-    could band its delta against the pre-rebuild pin and move the
-    rebuilt cursor backwards.
+    GEOMETRY PINNING: an existing index's recorded geometry always wins
+    over the arguments — a caller re-planning (r, b) between ticks would
+    silently mix incompatible band keys. ``plan_geometry=True`` derives
+    the first build's geometry from the batch's size through the
+    integer occupancy thresholds (``plan_band_geometry_for_size`` — the
+    minhash_incremental_planned policy). Re-keying is an explicit
+    ``rebuild_band_index``, never a drift. An existing index that
+    records no geometry or source version was not built here and is
+    refused, pointing at that rebuild.
+
+    A tick's whole read-state -> commit sequence runs under the index's
+    SERVICE lock (io.acquire_service_lock), serializing it against
+    ``rebuild_band_index`` — without it a tick racing a rebuild could
+    band its delta against the pre-rebuild pin.
 
     Returns the docs version now reflected, or None if already current.
     Parity (pytest, random commit sequences): after every call the
@@ -1768,14 +1770,15 @@ def maintain_band_index(
         release_service_lock,
     )
     from callio_etl_spark.snapshots import (
+        SOURCE_VERSION_PROP,
+        _index_state,
         _rewrite_touched,
         snapshot_consume_changes,
-        snapshot_manifest,
         snapshot_partition_overwrite,
-        snapshot_read,
+        snapshot_set_properties,
     )
 
-    def process(batch: DataFrame) -> None:
+    def process(batch: DataFrame, live: int) -> None:
         # a tick that stalled past the stale window and lost its service
         # lock must not band a delta against a pin a rebuild re-owned
         assert_service_fencing(spark, index_path)
@@ -1788,96 +1791,35 @@ def maintain_band_index(
             r["bkt"]
             for r in changed_ids.select(bkt).distinct().collect()
         ]  # ≤ INDEX_BUCKETS values — metadata-sized
+        commit = {SOURCE_VERSION_PROP: live}
         if not touched:
-            return  # a net-empty delta changes no bucket: nothing to commit
-        from callio_etl_spark.io import _exists, _hadoop
-
-        # Hadoop-FS probe (not os.path): the index may live on an
-        # hdfs://-/s3a://-style warehouse where a local check is always
-        # False and the carry would silently drop untouched bucket rows.
-        jvm, fs, _ = _hadoop(spark, index_path)
-        exists = _exists(jvm, fs, index_path.rstrip("/") + "/__snap__")
-        r_use, b_use = rows_per_band, n_bands
-        pin_now = True  # every build/backfill pins atomically with its data
-        if exists:
-            # leaves=[] → top-manifest-only resolve on a spilled index
-            # (properties are a top field): the pin check stays O(1)
-            # metadata even against a 100k-bucket index on a cold driver
-            props = snapshot_manifest(spark, index_path, leaves=[]).get(
-                "properties", {}
-            )
-            if "band.rows_per_band" in props:
-                # the index's recorded geometry is the truth: fresh keys
-                # must be band-compatible with the carried ones
-                r_use = int(props["band.rows_per_band"])
-                b_use = int(props["band.n_bands"])
-                pin_now = False
-            else:
-                # pre-pin index (or a crashed pre-fix writer's follow-up
-                # never landed) — backfill a pin so drift protection is
-                # never silently disabled. The geometry is INFERRED from
-                # the index's own rows, not taken from the caller's args:
-                # band_key is a concat of rows_per_band 4-hex-char minhash
-                # slices and every doc emits all n_bands bands, so one
-                # bucket's rows determine both parameters exactly —
-                # backfilling caller args could pin a geometry the index
-                # was never banded at and mix incompatible keys. One
-                # partition probe (any bucket works), only on this rare
-                # self-heal path. The candidate leaves are resolved by
-                # NAME through the partial-leaves path (bkt values are
-                # the fixed 0..INDEX_BUCKETS-1 residue set), so even on a
-                # spilled 100k-leaf index this stays O(INDEX_BUCKETS)
-                # metadata — never the full manifest enumeration the
-                # surrounding code works to avoid.
-                cand_names = [f"bkt={b}" for b in range(INDEX_BUCKETS)]
-                leaves = snapshot_manifest(
-                    spark, index_path, leaves=cand_names
-                )["partitions"]
-                inferred = None
-                for leaf in sorted(
-                    leaves, key=lambda s: int(s.split("=")[1])
-                )[:16]:
-                    got = (
-                        snapshot_read(
-                            spark,
-                            index_path,
-                            point=("bkt", int(leaf.split("=")[1])),
-                        )
-                        .agg(
-                            F.max(F.length("band_key")).alias("kl"),
-                            F.max("band").alias("mb"),
-                        )
-                        .first()
-                    )
-                    if got["kl"] is not None:
-                        inferred = (
-                            int(got["kl"]) // HASH_HEX_CHARS,
-                            int(got["mb"]) + 1,
-                        )
-                        break
-                if inferred is None:
-                    # every probed bucket reads empty (e.g. rows masked
-                    # by pending delete files): refusing is the only safe
-                    # move — pinning the CALLER's unverified args here
-                    # would bless exactly the key mix the pin excludes
-                    raise ValueError(
-                        f"index {index_path} has no pinned geometry and "
-                        f"no readable rows to infer it from; run "
-                        f"rebuild_band_index to re-key and re-pin"
-                    )
-                r_use, b_use = inferred
-        elif plan_geometry:
-            n_docs = changed.where(F.col("_change") != "delete").count()
-            r_use, b_use = plan_band_geometry_for_size(n_docs)
+            # a net-empty delta changes no bucket: record the version
+            # alone, or the next call would re-diff the same commits
+            if state is not None:
+                assert_service_fencing(spark, index_path)
+                snapshot_set_properties(
+                    spark, index_path, commit, keep_snapshots=keep_snapshots
+                )
+            return
+        if state is not None:
+            r_use = int(state["band.rows_per_band"])
+            b_use = int(state["band.n_bands"])
+        else:
+            r_use, b_use = rows_per_band, n_bands
+            if plan_geometry:
+                n_docs = changed.where(F.col("_change") != "delete").count()
+                r_use, b_use = plan_band_geometry_for_size(n_docs)
+            # the first build pins the geometry in its own commit
+            commit.update({"band.rows_per_band": r_use, "band.n_bands": b_use})
         fresh = band_projection(
             changed.where(F.col("_change") != "delete"), r_use, b_use
         ).select("doc_id", "band", "band_key", bkt)
         # one commit per tick: a touched bucket the rows still fill is
         # replaced, one every doc left is dropped (retire_leaves' rule),
-        # and a backfilled pin rides the same publish
+        # and the version (plus a first build's pin) rides the publish
         out, retire = _rewrite_touched(
             spark, index_path, "bkt", touched, fresh, changed_ids, "doc_id",
-            exists,
+            state is not None,
         )
         # re-assert the fence AT the commit point: the O(delta) banding
         # above is exactly where a stall can outlast the stale window —
@@ -1886,18 +1828,18 @@ def maintain_band_index(
         assert_service_fencing(spark, index_path)
         snapshot_partition_overwrite(
             spark, out, index_path, "bkt", keep_snapshots=keep_snapshots,
-            retire_leaves=retire or None,
-            properties=(
-                {"band.rows_per_band": r_use, "band.n_bands": b_use}
-                if pin_now
-                else None
-            ),
+            retire_leaves=retire or None, properties=commit,
         )
 
     acquire_service_lock(spark, index_path)
     try:
+        state = _index_state(
+            spark, index_path, ("band.rows_per_band", "band.n_bands"),
+            "rebuild_band_index",
+        )
+        since = None if state is None else int(state[SOURCE_VERSION_PROP])
         return snapshot_consume_changes(
-            spark, docs_path, cursor_file, ["doc_id"], process
+            spark, docs_path, since, ["doc_id"], process
         )
     finally:
         release_service_lock(spark, index_path)
@@ -1967,13 +1909,12 @@ def _band_index_roundtrip(
 
     root = _tmp("bandidx")
     docs_p, idx_p = f"{root}/docs", f"{root}/idx"
-    cursor = f"{root}/cursor.json"
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     part = (F.col("doc_id") % 4).cast("string").alias("p")
     base = d.where(F.col("doc_id") % 3 != 0).select("doc_id", "text", part)
     snapshot_partition_overwrite(spark, base, docs_p, "p", keep_snapshots=5)
     v0 = maintain_band_index(
-        spark, docs_p, idx_p, cursor, plan_geometry=plan_geometry
+        spark, docs_p, idx_p, plan_geometry=plan_geometry
     )
     if plan_geometry:
         want = plan_band_geometry_for_size(base.count())
@@ -2010,7 +1951,7 @@ def _band_index_roundtrip(
     # the second tick passes a WRONG geometry on purpose: the index's
     # pinned properties (or the default build geometry) must win
     v1 = maintain_band_index(
-        spark, docs_p, idx_p, cursor,
+        spark, docs_p, idx_p,
         rows_per_band=(8 if plan_geometry else ROWS_PER_BAND),
         n_bands=(1 if plan_geometry else N_BANDS),
         plan_geometry=plan_geometry,
@@ -2053,7 +1994,7 @@ def stream_ingest_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     PLUS in-place updates of the % 14 == 0 docs (same doc_id, new text)
     — and each tick both lands the batch in the docs snapshot table
     (replay-idempotent merge-keys commits) and advances the persisted
-    band index through the table's CDC cursor in the same foreachBatch
+    band index through the table's CDC feed in the same foreachBatch
     call. The result is the index after tick 2; the oracle recomputes
     the banding from the FINAL corpus, so a tick that lost the carry, a
     stale band row for an updated doc, or an index that lagged a tick
@@ -2076,7 +2017,6 @@ def stream_ingest_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="callio_streamidx_")
     src_dir, ck = f"{root}/src", f"{root}/ck"
     docs_p, idx_p = f"{root}/docs", f"{root}/idx"
-    cursor = f"{root}/cursor.json"
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
@@ -2084,8 +2024,7 @@ def stream_ingest_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     def tick(batch: DataFrame) -> None:
         batch.write.mode("append").parquet(src_dir)
         run_docs_ingest_with_band_index(
-            read_docs_stream(spark, src_dir), ck, docs_p, idx_p, cursor,
-            "source",
+            read_docs_stream(spark, src_dir), ck, docs_p, idx_p, "source",
         )
 
     tick(d.where(F.col("doc_id") % 2 == 0))
@@ -2304,7 +2243,6 @@ def rebuild_band_index(
     spark: SparkSession,
     docs_path: str,
     index_path: str,
-    cursor_file: str,
     keep_snapshots: int = 3,
     target_occupancy: float = TARGET_OCCUPANCY,
 ) -> tuple[int, int]:
@@ -2313,24 +2251,23 @@ def rebuild_band_index(
     CURRENT corpus size through the integer occupancy thresholds, band
     the whole live corpus at the new geometry in one pass, replace the
     index (every bucket the head holds is listed in retire_leaves, so
-    one the new rows leave empty drops in the SAME commit), re-pin the
-    new geometry as table properties, and acknowledge the consumer
-    cursor at the docs version the rebuild derived from — a full
-    re-derivation supersedes every change up to that version, so the
-    next maintain tick consumes only commits that landed after it
-    (commits racing the rebuild are simply the next tick's delta).
-    This is the compaction-cadence operation a
-    production service runs when the index crosses an occupancy
-    threshold; between rebuilds `maintain_band_index` refuses to drift.
+    one the new rows leave empty drops in the SAME commit), and record
+    the new geometry and the docs version the rebuild derived from as
+    table properties of that same commit — a full re-derivation
+    supersedes every change up to that version, so the next maintain
+    tick consumes only commits that landed after it (commits racing the
+    rebuild are simply the next tick's delta). This is the
+    compaction-cadence operation a production service runs when the
+    index crosses an occupancy threshold, and the migration for an
+    index the maintainer refuses; between rebuilds
+    `maintain_band_index` refuses to drift.
 
-    The new geometry is re-pinned ATOMICALLY with the index overwrite
-    (one manifest publish carries data + properties — no crash window
-    between them), and the whole read -> overwrite -> cursor-ack
+    One manifest publish carries data + geometry + source version (no
+    crash window between them), and the whole read -> overwrite
     sequence holds the index's SERVICE lock, so a maintain tick can
     never interleave: it either completes before the rebuild reads (its
-    commits are part of the rebuilt corpus) or starts after the cursor
-    is acked at the rebuild version. Returns the (rows_per_band,
-    n_bands) now pinned."""
+    commits are part of the rebuilt corpus) or starts after the rebuild
+    published. Returns the (rows_per_band, n_bands) now pinned."""
     from callio_etl_spark.io import (
         _exists,
         _hadoop,
@@ -2338,7 +2275,7 @@ def rebuild_band_index(
         release_service_lock,
     )
     from callio_etl_spark.snapshots import (
-        _write_cursor,
+        SOURCE_VERSION_PROP,
         snapshot_manifest,
         snapshot_partition_overwrite,
         snapshot_read,
@@ -2387,9 +2324,12 @@ def rebuild_band_index(
         snapshot_partition_overwrite(
             spark, fresh, index_path, "bkt",
             keep_snapshots=keep_snapshots, retire_leaves=retire or None,
-            properties={"band.rows_per_band": r, "band.n_bands": b},
+            properties={
+                "band.rows_per_band": r,
+                "band.n_bands": b,
+                SOURCE_VERSION_PROP: v,
+            },
         )
-        _write_cursor(cursor_file, v, docs_path)
         return r, b
     finally:
         release_service_lock(spark, index_path)
@@ -2469,16 +2409,16 @@ def rebuild_band_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     — exactly the occupancy debt a production service accrues), then
     ``rebuild_band_index`` re-plans from the grown corpus size through
     the integer occupancy thresholds, re-bands EVERYTHING at the new
-    geometry, re-pins it ATOMICALLY with the overwrite, and acks the
-    consumer cursor — and finally the standard adversarial rewrite
+    geometry, and re-pins it ATOMICALLY with the overwrite together with
+    the docs version it reflects — and finally the standard adversarial rewrite
     (deletes / band-key edits / id-shifted inserts / the emptied-bucket
     class) lands and a maintain tick with DELIBERATELY WRONG geometry
     arguments must band the delta at the REBUILT pin. The oracle
     recomputes the banding of the final corpus at the geometry the BASE
     corpus size selects (the rebuild-time choice, via the same baked-in
     integer thresholds), so a rebuild that kept the seed-era keys, a
-    tick that ignored the new pin, or a cursor ack that replayed the
-    pre-rebuild feed all break the hash.
+    tick that ignored the new pin, or a rebuild whose recorded version
+    let the next tick replay the pre-rebuild feed all break the hash.
 
     Cost shape at 100 TB: the rebuild is the one deliberate O(corpus)
     pass (compaction cadence — FAISS's re-train); every tick around it
@@ -2492,7 +2432,6 @@ def rebuild_band_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _tmp("bandrebuild")
     docs_p, idx_p = f"{root}/docs", f"{root}/idx"
-    cursor = f"{root}/cursor.json"
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     part = (F.col("doc_id") % 4).cast("string").alias("p")
     base = d.where(F.col("doc_id") % 3 != 0).select("doc_id", "text", part)
@@ -2500,16 +2439,12 @@ def rebuild_band_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1. seed build: tiny corpus -> planner pins the short-key geometry
     seed = base.where(F.col("doc_id") % 97 == 7)
     snapshot_partition_overwrite(spark, seed, docs_p, "p", keep_snapshots=5)
-    v0 = maintain_band_index(
-        spark, docs_p, idx_p, cursor, plan_geometry=True
-    )
+    v0 = maintain_band_index(spark, docs_p, idx_p, plan_geometry=True)
     seed_geom = plan_band_geometry_for_size(seed.count())
 
     # 2. growth: the full base lands; the tick must keep the seed pin
     snapshot_partition_overwrite(spark, base, docs_p, "p", keep_snapshots=5)
-    v1 = maintain_band_index(
-        spark, docs_p, idx_p, cursor, plan_geometry=True
-    )
+    v1 = maintain_band_index(spark, docs_p, idx_p, plan_geometry=True)
     got = snapshot_properties(spark, idx_p)
     pinned = (
         int(got.get("band.rows_per_band", -1)),
@@ -2522,13 +2457,13 @@ def rebuild_band_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 3. explicit rebuild: re-plan from the grown size, re-key, re-pin
     want = plan_band_geometry_for_size(base.count())
-    got_rb = rebuild_band_index(spark, docs_p, idx_p, cursor)
+    got_rb = rebuild_band_index(spark, docs_p, idx_p)
     if got_rb != want:
         raise AssertionError(f"rebuild planned {got_rb}, expected {want}")
-    if maintain_band_index(spark, docs_p, idx_p, cursor) is not None:
+    if maintain_band_index(spark, docs_p, idx_p) is not None:
         raise AssertionError(
-            "rebuild did not ack the cursor: the next tick replayed the "
-            "pre-rebuild feed"
+            "rebuild did not record its docs version: the next tick "
+            "replayed the pre-rebuild feed"
         )
 
     # 4. adversarial rewrite at the NEW pin; wrong args must lose
@@ -2555,7 +2490,7 @@ def rebuild_band_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, survivors.unionByName(inserts), docs_p, "p", keep_snapshots=5
     )
     v2 = maintain_band_index(
-        spark, docs_p, idx_p, cursor, rows_per_band=NUM_HASHES, n_bands=1
+        spark, docs_p, idx_p, rows_per_band=NUM_HASHES, n_bands=1
     )
     if v0 is None or v1 is None or v2 is None or not v0 < v1 < v2:
         raise AssertionError(f"index did not advance: {v0} -> {v1} -> {v2}")

@@ -2282,7 +2282,6 @@ def maintain_vector_index(
     vecs_path: str,
     index_path: str,
     fwd_path: str,
-    cursor_file: str,
     cells: DataFrame,
     keep_snapshots: int = 3,
 ) -> int | None:
@@ -2313,20 +2312,22 @@ def maintain_vector_index(
     exactly as in FAISS — re-assignments it causes arrive as ordinary
     updates.
 
-    QUANTIZER PINNING: the index records a fingerprint of ``cells``
-    (md5 over the sorted (label, centroid) rows) as a table property at
-    first build and REFUSES a later tick whose quantizer does not match
-    — postings assigned under two different quantizers would silently
-    mix incompatible cells, the same drift class the band index's
-    geometry pin excludes. A centroid refresh is an explicit re-index
-    (rebuild against the new cells), never a drift. The fingerprint
-    commits ATOMICALLY with the postings
-    (``snapshot_partition_overwrite(properties=)``); an existing index
-    found WITHOUT a pin (pre-pin build, or a pre-fix writer that
-    crashed before its follow-up properties commit) has this tick's
-    fingerprint backfilled onto its commit — the drift check is never
-    silently disabled. The tick sequence holds the index's SERVICE
-    lock (io.acquire_service_lock), serializing it against
+    INDEX STATE lives in each table's own commit: both tables record
+    the vectors version their rows reflect (``SOURCE_VERSION_PROP``) in
+    the publish that lands them, and the postings also record a
+    fingerprint of ``cells`` (md5 over the sorted (label, centroid)
+    rows, ``ivf.quantizer_md5``) at first build. A tick consumes from
+    the OLDER of the two versions, so a crash between the two commits
+    replays the batch against both. A tick whose quantizer does not
+    match the pin is REFUSED — postings assigned under two different
+    quantizers would silently mix incompatible cells, the drift class
+    the band index's geometry pin excludes; a centroid refresh is an
+    explicit ``rebuild_vector_index``, never a drift. An index missing
+    its pin, a version, or one of its two tables was not built here
+    and is refused, pointing at that rebuild. A tick whose delta
+    touches no bucket records its version in a properties-only commit
+    per table. The tick sequence holds the index's SERVICE lock
+    (io.acquire_service_lock), serializing it against
     ``rebuild_vector_index``.
 
     Returns the vectors version now reflected, or None if current.
@@ -2334,34 +2335,48 @@ def maintain_vector_index(
     assign_to_cells(live vectors) and the forward map matches, after
     every tick."""
     from callio_etl_spark.io import (
-        _exists,
-        _hadoop,
         acquire_service_lock,
+        assert_service_fencing,
         release_service_lock,
     )
     from callio_etl_spark.snapshots import (
+        SOURCE_VERSION_PROP,
+        _index_state,
         _rewrite_touched,
         snapshot_consume_changes,
         snapshot_manifest,
         snapshot_partition_overwrite,
         snapshot_read,
+        snapshot_set_properties,
     )
 
     cells = _ckpt_once(cells)
     cells_fp = _quantizer_fp(cells)
 
-    def process(batch: DataFrame, bound_version: int) -> None:
+    def process(batch: DataFrame, live: int) -> None:
         # a tick that stalled past the stale window and lost its service
         # lock must not assign a delta against a quantizer a rebuild
         # re-owned (see io.assert_service_fencing)
-        from callio_etl_spark.io import assert_service_fencing
-
         assert_service_fencing(spark, index_path)
         changed = batch.select("vec_id", "embedding", "_change").localCheckpoint(
             eager=True
         )
         changed_ids = changed.select("vec_id").distinct()
         bkt = (F.col("vec_id") % VINDEX_BUCKETS).cast("int").alias("bkt")
+        # the touched-bucket list is collected ONCE and reused by the
+        # forward-map rewrite below — it is the same set by definition
+        tb = [r["bkt"] for r in changed_ids.select(bkt).distinct().collect()]
+        commit = {SOURCE_VERSION_PROP: live}
+        if not tb:
+            # a net-empty delta changes no posting: record the version
+            # alone, or the next call would re-diff the same commits
+            if exists:
+                for p in (index_path, fwd_path):
+                    assert_service_fencing(spark, index_path)
+                    snapshot_set_properties(
+                        spark, p, commit, keep_snapshots=keep_snapshots
+                    )
+            return
         fresh = assign_to_cells(
             changed.where(F.col("_change") != "delete").select(
                 "vec_id",
@@ -2373,92 +2388,9 @@ def maintain_vector_index(
             eager=True
         )
 
-        # Hadoop-FS probes (not os.path): both tables may live on an
-        # hdfs://-/s3a://-style warehouse where a local check is always
-        # False and the carries would silently drop untouched rows.
-        jvm, fs, _ = _hadoop(spark, index_path)
-        idx_exists = _exists(jvm, fs, index_path.rstrip("/") + "/__snap__")
-        fwd_exists = _exists(jvm, fs, fwd_path.rstrip("/") + "/__snap__")
-        pin_now = True  # first build / backfill: pin rides the data commit
-        if idx_exists:
-            # leaves=[] → top-manifest-only resolve on a spilled index
-            # (properties are a top field): the pin check stays O(1)
-            # metadata even against a 100k-cell index on a cold driver
-            rec = snapshot_manifest(spark, index_path, leaves=[]).get(
-                "properties", {}
-            ).get("ivf.quantizer_md5")
-            if rec is not None:
-                if rec != cells_fp:
-                    raise ValueError(
-                        f"quantizer drift: index {index_path} was built "
-                        f"against quantizer {rec}, tick passed {cells_fp}; "
-                        f"a centroid refresh is an explicit re-index, "
-                        f"never a silent mix of cells"
-                    )
-                pin_now = False
-            else:
-                # index exists with NO recorded fingerprint (pre-pin
-                # build, or a pre-fix writer crashed before its follow-up
-                # properties commit). Unlike the band index, the quantizer
-                # cannot be inferred from the postings — so PROVE the
-                # tick's cells match before backfilling: re-assign a
-                # sample of existing postings (excluding this batch's
-                # changed ids, whose rows are legitimately stale) under
-                # the tick's cells. Nearest-centroid assignment is
-                # deterministic, so a genuinely same-quantizer index
-                # agrees exactly; one disagreement means the unpinned
-                # index was built against OTHER centroids and pinning
-                # this fingerprint would bless the very mix the pin
-                # exists to exclude. Rare self-heal path only — a pinned
-                # index never runs this.
-                sample = (
-                    snapshot_read(spark, index_path)
-                    .join(changed_ids, "vec_id", "left_anti")
-                    .select("vec_id", "assigned_cell")
-                    .limit(256)
-                    .localCheckpoint(eager=True)
-                )
-                # pinned to the batch's bound version: a vectors commit
-                # racing this tick must not make the sample's embeddings
-                # disagree with the postings for a same-quantizer index
-                # (a spurious refusal pointing at rebuild)
-                vecs_now = snapshot_read(
-                    spark, vecs_path, version=bound_version
-                ).select("vec_id", "embedding")
-                re_cells = assign_to_cells(
-                    sample.join(vecs_now, "vec_id").select(
-                        "vec_id",
-                        F.lit(-1).cast("int").alias("label"),
-                        F.transform(
-                            "embedding", lambda x: x.cast("double")
-                        ).alias("v"),
-                    ),
-                    cells,
-                ).select("vec_id", F.col("assigned_cell").alias("re_cell"))
-                disagree = (
-                    sample.join(re_cells, "vec_id")
-                    .where(F.col("assigned_cell") != F.col("re_cell"))
-                    .count()
-                )
-                if disagree:
-                    raise ValueError(
-                        f"index {index_path} has no pinned quantizer and "
-                        f"{disagree} sampled postings disagree with the "
-                        f"tick's cells — it was built against a different "
-                        f"quantizer; run rebuild_vector_index to re-assign "
-                        f"and re-pin instead of mixing cells"
-                    )
-                # sample agrees: backfill this tick's fingerprint so the
-                # drift protection is never permanently disabled
-
-        # old cells via the forward map's touched buckets (O(buckets));
-        # the touched-bucket list is collected ONCE and reused by the
-        # forward-map rewrite below — it is the same set by definition
-        tb = [r["bkt"] for r in changed_ids.select(bkt).distinct().collect()]
-        if not tb:
-            return  # a net-empty delta changes no posting: nothing to commit
+        # old cells via the forward map's touched buckets (O(buckets))
         old_cells = []
-        if fwd_exists:
+        if exists:
             old_cells = [
                 r["assigned_cell"]
                 for r in snapshot_read(spark, fwd_path)
@@ -2468,6 +2400,15 @@ def maintain_vector_index(
                 .distinct()
                 .collect()
             ]
+        if lagging:
+            # the two tables record different versions (a crash between
+            # their commits, or a restore of one): the forward map cannot
+            # locate every posting the replayed batch changes, so this
+            # recovery tick rewrites every cell the postings hold
+            old_cells += [
+                int(leaf.split("=", 1)[1])
+                for leaf in snapshot_manifest(spark, index_path)["partitions"]
+            ]
         new_cells = [
             r["assigned_cell"]
             for r in fresh.select("assigned_cell").distinct().collect()
@@ -2476,11 +2417,12 @@ def maintain_vector_index(
 
         # each chain makes one commit per table: a touched partition the
         # rows still fill is replaced, one the tick emptied is dropped
-        # (retire_leaves' rule), and a backfilled pin rides the publish
+        # (retire_leaves' rule), and the version (plus a first build's
+        # pin) rides the publish
         def _postings_chain() -> None:
             out, retire = _rewrite_touched(
                 spark, index_path, "assigned_cell", touched_cells, fresh,
-                changed_ids, "vec_id", idx_exists,
+                changed_ids, "vec_id", exists,
             )
             # fence AT this chain's publish: the delta assignment and the
             # carry above are where a stall can outlast the stale window
@@ -2490,7 +2432,8 @@ def maintain_vector_index(
                 keep_snapshots=keep_snapshots,
                 retire_leaves=retire or None,
                 properties=(
-                    {"ivf.quantizer_md5": cells_fp} if pin_now else None
+                    commit if exists
+                    else {**commit, "ivf.quantizer_md5": cells_fp}
                 ),
             )
 
@@ -2498,12 +2441,12 @@ def maintain_vector_index(
             fout, retire = _rewrite_touched(
                 spark, fwd_path, "bkt", tb,
                 fresh.select("vec_id", "assigned_cell", bkt),
-                changed_ids, "vec_id", fwd_exists,
+                changed_ids, "vec_id", exists,
             )
             assert_service_fencing(spark, index_path)
             snapshot_partition_overwrite(
                 spark, fout, fwd_path, "bkt", keep_snapshots=keep_snapshots,
-                retire_leaves=retire or None,
+                retire_leaves=retire or None, properties=commit,
             )
 
         # The postings and forward-map chains are INDEPENDENT given fresh
@@ -2513,12 +2456,10 @@ def maintain_vector_index(
         # independent jobs; the two ~1 s commit jobs were strictly
         # serial before, r15). Each chain fences the service lock right
         # before its own publish, so a stall inside a chain cannot
-        # publish under a reclaimed lock. Crash semantics are unchanged:
-        # the cursor acks only after BOTH commits return, so a crash or
-        # a fenced-out chain leaving either table (or both) behind
-        # replays the batch — same at-least-once window as the old
-        # postings-then-fwd order; each publish still passes the
-        # manifest-level fencing in _write_manifest.
+        # publish under a reclaimed lock. A crash or a fenced-out chain
+        # leaves its table at its old version, and the next tick
+        # consumes from the older of the two; each publish still passes
+        # the manifest-level fencing in _write_manifest.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
@@ -2531,8 +2472,28 @@ def maintain_vector_index(
 
     acquire_service_lock(spark, index_path)
     try:
+        rebuild = "rebuild_vector_index"
+        idx = _index_state(spark, index_path, ("ivf.quantizer_md5",), rebuild)
+        fwd = _index_state(spark, fwd_path, (), rebuild)
+        exists = idx is not None
+        if exists != (fwd is not None):
+            raise ValueError(
+                f"only one of the postings {index_path} and the forward map "
+                f"{fwd_path} exists: run {rebuild} to rebuild both"
+            )
+        since, lagging = None, False
+        if exists:
+            if idx["ivf.quantizer_md5"] != cells_fp:
+                raise ValueError(
+                    f"quantizer drift: index {index_path} was built "
+                    f"against quantizer {idx['ivf.quantizer_md5']}, tick "
+                    f"passed {cells_fp}; a centroid refresh is an explicit "
+                    f"re-index, never a silent mix of cells"
+                )
+            seen = {int(t[SOURCE_VERSION_PROP]) for t in (idx, fwd)}
+            since, lagging = min(seen), len(seen) > 1
         return snapshot_consume_changes(
-            spark, vecs_path, cursor_file, ["vec_id"], process
+            spark, vecs_path, since, ["vec_id"], process
         )
     finally:
         release_service_lock(spark, index_path)
@@ -2543,7 +2504,6 @@ def rebuild_vector_index(
     vecs_path: str,
     index_path: str,
     fwd_path: str,
-    cursor_file: str,
     cells: DataFrame,
     keep_snapshots: int = 3,
 ) -> str:
@@ -2552,18 +2512,17 @@ def rebuild_vector_index(
     corpus to ``cells`` in one broadcast-argmax pass, replace the
     postings and forward-map tables (every leaf each head holds is
     listed in retire_leaves, so one the new rows leave empty drops in
-    the SAME commit),
-    re-pin the new quantizer's fingerprint as a table property, and
-    acknowledge the consumer cursor at the vectors version the rebuild
-    derived from (racing commits stay in the feed for the next tick).
-    This is what runs after an ``ivf_train_rounds`` centroid refresh;
-    between rebuilds `maintain_vector_index` refuses a drifted
-    quantizer. The new fingerprint is re-pinned ATOMICALLY with the
-    postings overwrite (one manifest publish carries data +
-    properties), and the whole read -> overwrite -> re-pin ->
-    cursor-ack sequence holds the index's SERVICE lock, so a maintain
-    tick can never interleave against the half-rebuilt state. Returns
-    the fingerprint now pinned."""
+    the SAME commit), and record in each table's overwrite the vectors
+    version the rebuild derived from (racing commits stay in the feed
+    for the next tick) — plus, on the postings, the new quantizer's
+    fingerprint. This is what runs after an ``ivf_train_rounds``
+    centroid refresh, and the migration for an index the maintainer
+    refuses; between rebuilds `maintain_vector_index` refuses a drifted
+    quantizer. One manifest publish per table carries data +
+    properties, and the whole read -> overwrite sequence holds the
+    index's SERVICE lock, so a maintain tick can never interleave
+    against the half-rebuilt state. Returns the fingerprint now
+    pinned."""
     from callio_etl_spark.io import (
         _exists,
         _hadoop,
@@ -2571,7 +2530,7 @@ def rebuild_vector_index(
         release_service_lock,
     )
     from callio_etl_spark.snapshots import (
-        _write_cursor,
+        SOURCE_VERSION_PROP,
         snapshot_manifest,
         snapshot_partition_overwrite,
         snapshot_read,
@@ -2621,7 +2580,7 @@ def rebuild_vector_index(
                 spark, fresh, index_path, "assigned_cell",
                 keep_snapshots=keep_snapshots,
                 retire_leaves=retire,
-                properties={"ivf.quantizer_md5": fp},
+                properties={"ivf.quantizer_md5": fp, SOURCE_VERSION_PROP: v},
             )
 
         def _fwd_chain() -> None:
@@ -2631,12 +2590,13 @@ def rebuild_vector_index(
             snapshot_partition_overwrite(
                 spark, fresh.select("vec_id", "assigned_cell", bkt), fwd_path,
                 "bkt", keep_snapshots=keep_snapshots, retire_leaves=retire,
+                properties={SOURCE_VERSION_PROP: v},
             )
 
         # the two tables' chains run concurrently, each fenced right
-        # before its publish — independent given the checkpointed fresh,
-        # same crash semantics as the serial order (cursor acks only
-        # after both), each publish still fenced in _write_manifest (see
+        # before its publish — independent given the checkpointed fresh;
+        # a table whose chain fails keeps its old version and pins, and
+        # each publish is still fenced in _write_manifest (see
         # maintain_vector_index for the full argument)
         from concurrent.futures import ThreadPoolExecutor
 
@@ -2645,7 +2605,6 @@ def rebuild_vector_index(
             fut_fwd = pool.submit(_fwd_chain)
             fut_idx.result()
             fut_fwd.result()
-        _write_cursor(cursor_file, v, vecs_path)
         return fp
     finally:
         release_service_lock(spark, index_path)
@@ -2706,15 +2665,15 @@ def rebuild_vector_index_roundtrip(
     quantizer (centroids re-trained on the even-id half of the base, a
     different fingerprint), commit a further delta (negate % 11) and
     prove the tick at the refreshed cells is REFUSED (quantizer drift;
-    the cursor must not advance), run ``rebuild_vector_index`` against
+    the index must not advance), run ``rebuild_vector_index`` against
     the new cells — full re-assignment, emptied cells/buckets retired,
-    fingerprint re-pinned ATOMICALLY with the postings overwrite,
-    cursor acked at the rebuild-time version (the refused delta is
-    subsumed, proven by a no-op tick) — and land one more delta
+    fingerprint and the rebuild-time vectors version recorded
+    ATOMICALLY with each overwrite (the refused delta is subsumed,
+    proven by a no-op tick) — and land one more delta
     (negate % 13) consumed at the new pin. The oracle recomputes
     nearest-centroid assignment of the FINAL vectors against the
     REFRESHED quantizer, so a rebuild that kept old-cell postings, a
-    refusal that half-applied, a cursor that replayed or skipped, or a
+    refusal that half-applied, a version that replayed or skipped, or a
     tick that mixed quantizers all break the hash (forward-map parity
     and the pinned fingerprint are additionally asserted in-query).
 
@@ -2731,7 +2690,6 @@ def rebuild_vector_index_roundtrip(
 
     root = _tmp("vecrebuild")
     vp, ip, fwd = f"{root}/vecs", f"{root}/idx", f"{root}/fwd"
-    cursor = f"{root}/cursor.json"
     e = _emb(spark, sf_dir)
     base = e.where(F.col("vec_id") % VEC_DELTA_MOD != 0)
     # checkpoint each quantizer ONCE: three ticks consume cells1 and
@@ -2741,7 +2699,7 @@ def rebuild_vector_index_roundtrip(
     part = (F.col("vec_id") % 4).cast("string").alias("p")
     base_rows = base.select("vec_id", F.col("v").alias("embedding"), part)
     snapshot_partition_overwrite(spark, base_rows, vp, "p", keep_snapshots=5)
-    v0 = maintain_vector_index(spark, vp, ip, fwd, cursor, cells1)
+    v0 = maintain_vector_index(spark, vp, ip, fwd, cells1)
 
     def _flip(df: DataFrame, mod: int, res: int) -> DataFrame:
         return df.withColumn(
@@ -2763,7 +2721,7 @@ def rebuild_vector_index_roundtrip(
     )
     corpus1 = survivors.unionByName(inserts)
     snapshot_partition_overwrite(spark, corpus1, vp, "p", keep_snapshots=5)
-    v1 = maintain_vector_index(spark, vp, ip, fwd, cursor, cells1)
+    v1 = maintain_vector_index(spark, vp, ip, fwd, cells1)
     if v0 is None or v1 is None or not v1 > v0:
         raise AssertionError(f"index did not advance: {v0} -> {v1}")
 
@@ -2774,17 +2732,17 @@ def rebuild_vector_index_roundtrip(
     corpus2 = _flip(corpus1, 11, 5)
     snapshot_partition_overwrite(spark, corpus2, vp, "p", keep_snapshots=5)
     try:
-        maintain_vector_index(spark, vp, ip, fwd, cursor, cells2)
+        maintain_vector_index(spark, vp, ip, fwd, cells2)
     except ValueError:
         pass
     else:
         raise AssertionError("drifted-quantizer tick was not refused")
 
-    fp = rebuild_vector_index(spark, vp, ip, fwd, cursor, cells2)
-    if maintain_vector_index(spark, vp, ip, fwd, cursor, cells2) is not None:
+    fp = rebuild_vector_index(spark, vp, ip, fwd, cells2)
+    if maintain_vector_index(spark, vp, ip, fwd, cells2) is not None:
         raise AssertionError(
-            "rebuild did not ack the cursor: the next tick replayed the "
-            "pre-rebuild feed"
+            "rebuild did not record its vectors version: the next tick "
+            "replayed the pre-rebuild feed"
         )
     pinned = snapshot_properties(spark, ip).get("ivf.quantizer_md5")
     if pinned != fp:
@@ -2793,7 +2751,7 @@ def rebuild_vector_index_roundtrip(
     # post-rebuild delta consumed at the new pin
     corpus3 = _flip(corpus2, 13, 1)
     snapshot_partition_overwrite(spark, corpus3, vp, "p", keep_snapshots=5)
-    if maintain_vector_index(spark, vp, ip, fwd, cursor, cells2) is None:
+    if maintain_vector_index(spark, vp, ip, fwd, cells2) is None:
         raise AssertionError("post-rebuild delta not consumed")
 
     postings = snapshot_read(spark, ip).select("vec_id", "assigned_cell")
@@ -2848,7 +2806,7 @@ def stream_ingest_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a different cell partition than the new one lands in) — and
     each tick both lands the batch in the vectors snapshot table
     (replay-idempotent merge-keys commits) and advances the persisted
-    postings + forward map through the table's CDC cursor in the same
+    postings + forward map through the table's CDC feed in the same
     foreachBatch call, the frozen full-corpus quantizer pin riding
     every tick. The result is the postings after tick 2; the oracle
     recomputes nearest-centroid assignment of the FINAL vectors against
@@ -2874,7 +2832,6 @@ def stream_ingest_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="callio_streamvec_")
     src_dir, ck = f"{root}/src", f"{root}/ck"
     vp, ip, fwd = f"{root}/vecs", f"{root}/idx", f"{root}/fwd"
-    cursor = f"{root}/cursor.json"
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
@@ -2884,8 +2841,8 @@ def stream_ingest_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     def tick(batch: DataFrame) -> None:
         batch.write.mode("append").parquet(src_dir)
         run_vectors_ingest_with_ivf_index(
-            read_vector_stream(spark, src_dir), ck, vp, ip, fwd, cursor,
-            "label", cells,
+            read_vector_stream(spark, src_dir), ck, vp, ip, fwd, "label",
+            cells,
         )
 
     tick(e.where(F.col("vec_id") % 2 == 0))
@@ -2973,7 +2930,6 @@ def maintain_vector_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
 
     root = _tmp("vecidx")
     vp, ip, fwd = f"{root}/vecs", f"{root}/idx", f"{root}/fwd"
-    cursor = f"{root}/cursor.json"
     e = _emb(spark, sf_dir)  # (vec_id, label, v: array<double>)
     base = e.where(F.col("vec_id") % VEC_DELTA_MOD != 0)
     # the frozen coarse quantizer, checkpointed ONCE for both ticks
@@ -2981,7 +2937,7 @@ def maintain_vector_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     part = (F.col("vec_id") % 4).cast("string").alias("p")
     base_rows = base.select("vec_id", F.col("v").alias("embedding"), part)
     snapshot_partition_overwrite(spark, base_rows, vp, "p", keep_snapshots=5)
-    v0 = maintain_vector_index(spark, vp, ip, fwd, cursor, cells)
+    v0 = maintain_vector_index(spark, vp, ip, fwd, cells)
 
     survivors = base_rows.where(F.col("vec_id") % 9 != 1).withColumn(
         "embedding",
@@ -3001,7 +2957,7 @@ def maintain_vector_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     snapshot_partition_overwrite(
         spark, survivors.unionByName(inserts), vp, "p", keep_snapshots=5
     )
-    v1 = maintain_vector_index(spark, vp, ip, fwd, cursor, cells)
+    v1 = maintain_vector_index(spark, vp, ip, fwd, cells)
     if v0 is None or v1 is None or not v1 > v0:
         raise AssertionError(f"index did not advance: {v0} -> {v1}")
 

@@ -55,75 +55,28 @@ def register(name: str, oracle: str | None = None, tags: list[str] | None = None
 #: every round via tools/check_correctness.py (stricter value compare
 #: than the driver hash).
 #:
-#: r20 rotation: merge_write_snapshot derives its window from the merge
-#: key, so every row on the keyed upsert or the update_log compaction
-#: threshold rides the window. Ages count the r16-r19 windows as driver
-#: slots (no recording in this repo yet). The window holds:
-#:   1. the 16 r12 rows the r19 window left at positions 51-66
-#:      (sink_snapshot_cdc .. window_rank_suite);
-#:   2. the eight rows this round touches: the four run_tick /
-#:      merge_write_snapshot rows, the two stream-ingest rows (their
-#:      sink now takes the moved-key semi-join), checkpoint_log_compact
-#:      and sink_compact_vacuum (distribution="none");
-#:   3. oldest-first, ties alphabetical: 26 of the 46 rows whose latest
-#:      driver slot is r14 (ann_hard_negatives .. media_resize). The
-#:      other 20 (merge_upsert_conditional .. window_range_scan) hold
-#:      positions 51-70 and lead the next window.
+#: r21 rotation: the band and vector indexes record the source version
+#: they reflect in their own commit, so every `index`-tagged row rides
+#: the window. Ages count the r16-r20 windows as driver slots (no
+#: recording in this repo yet). The window holds:
+#:   1. the seven `index`-tagged rows (the maintain, rebuild and
+#:      stream-ingest rows of both indexes);
+#:   2. the 20 r14 rows the r20 window left at positions 51-70
+#:      (merge_upsert_conditional .. window_range_scan);
+#:   3. oldest-first, ties alphabetical: 23 of the 44 rows whose latest
+#:      driver slot is r15 (api_http_ingest .. hashed_classifier_score).
+#:      The other 21 (heavy_hitters_cms .. weighted_sample) hold
+#:      positions 51-71 and lead the next window.
 DRIVER_PRIORITY: list[str] = [
-    # --- positions 1-16: the r12 rows r19 left at positions 51-66 ---
-    "sink_snapshot_cdc",
-    "sink_snapshot_overwrite",
-    "sink_spec_evolve",
-    "sink_wap_publish",
-    "sink_zorder_skip",
-    "stat_moments",
-    "stratified_sample",
-    "string_agg_suite",
-    "string_fn_suite",
-    "string_norm",
-    "table_diff",
-    "tumbling_window_agg",
-    "unpivot_measures",
-    "window_dist_suite",
-    "window_frames",
-    "window_rank_suite",
-    # --- the rows whose write path this round touches (8) ---
-    "http_incremental_loop",
-    "http_loop_snapshot_sink",
-    "update_log_modes",
-    "merge_upsert_snapshot",
+    # --- positions 1-7: the index-service rows this round touches ---
+    "maintain_band_index",
+    "maintain_band_index_planned",
+    "rebuild_band_index",
     "stream_ingest_band_index",
+    "maintain_vector_index",
+    "rebuild_vector_index",
     "stream_ingest_vector_index",
-    "checkpoint_log_compact",
-    "sink_compact_vacuum",
-    # --- oldest-first: r14 (26 of 46) ---
-    "ann_hard_negatives",
-    "ann_recall_ivf_probe",
-    "ann_recall_pq",
-    "ann_recall_pq_rerank",
-    "ann_topk_ivf_probe",
-    "ann_topk_ivfpq",
-    "ann_topk_pq_rerank",
-    "audio_features",
-    "bloom_decontaminate",
-    "boilerplate_ngrams",
-    "contamination_check",
-    "corpus_select_budget",
-    "dsir_importance",
-    "embedding_covariance",
-    "embedding_lsh_buckets",
-    "embedding_lsh_pairs",
-    "embedding_outliers",
-    "embedding_pca_project",
-    "embedding_standardize",
-    "fact_staff_daily",
-    "fact_staff_daily_sql",
-    "fact_status_pivot",
-    "incremental_agg_maintenance",
-    "latest_per_key",
-    "media_features",
-    "media_resize",
-    # --- positions 51-70: the r14 rows that lead the next window ---
+    # --- positions 8-27: the r14 rows r20 left at positions 51-70 ---
     "merge_upsert_conditional",
     "merge_upsert_full",
     "minhash_lsh_pairs",
@@ -144,6 +97,52 @@ DRIVER_PRIORITY: list[str] = [
     "union_tenants",
     "watermark_filter",
     "window_range_scan",
+    # --- oldest-first: r15 (23 of 44) ---
+    "api_http_ingest",
+    "array_hof_suite",
+    "asof_join_latest_order",
+    "bigram_lm_score",
+    "bitwise_agg_suite",
+    "bm25_topk",
+    "bpe_pair_counts",
+    "bpe_segment_docs",
+    "bpe_train_merges",
+    "char_diversity",
+    "cross_source_neardup",
+    "cube_agg",
+    "curriculum_bins",
+    "date_fn_suite",
+    "date_spine_fill",
+    "dedup_pipeline",
+    "dedup_span_removal",
+    "distinct_rows",
+    "domain_stats",
+    "embedding_decontaminate",
+    "embedding_neardup_cells",
+    "grouping_sets_explicit",
+    "hashed_classifier_score",
+    # --- positions 51-71: the r15 rows that lead the next window ---
+    "heavy_hitters_cms",
+    "hopping_window_agg",
+    "hybrid_rrf_fusion",
+    "ivf_delta_assign",
+    "pack_sequences",
+    "pq_codes",
+    "sink_segmented_manifest",
+    "sink_widen_evolve",
+    "tpch_q19_discounted",
+    "tpch_q20_promotion_suppliers",
+    "tpch_q21_waiting_orders",
+    "tpch_q22_opportunity",
+    "tpch_q2_min_cost_supplier",
+    "tpch_q3_topk",
+    "tpch_q4_priority",
+    "tpch_q5_volume",
+    "tpch_q6_forecast",
+    "tpch_q7_volume_shipping",
+    "tpch_q8_market_share",
+    "tpch_q9_profit",
+    "weighted_sample",
 ]
 
 

@@ -3890,139 +3890,86 @@ def maintain_agg_view(
     return live
 
 
-def _write_cursor(cursor_file: str, version: int, table: str) -> None:
-    """Atomically acknowledge a consumer cursor (tmp + rename): shared by
-    snapshot_consume_changes and the index REBUILD verbs, whose full
-    re-derivation from version v supersedes every change up to v.
+#: Table property an index records, in the same commit that lands its
+#: rows, naming the source-table version those rows reflect: the
+#: ``since`` its next ``snapshot_consume_changes`` call starts from.
+#: Riding the index's own manifest, it moves atomically with the index
+#: data, restores with it, and lives wherever the index's filesystem is.
+SOURCE_VERSION_PROP = "cdc.source_version"
 
-    MONOTONIC: an ack below the recorded version for the same table is
-    refused — only a STALLED consumer that lost its service lock to a
-    reclaim (and raced a rebuild that acked further ahead) can produce
-    one, and letting it through would silently re-deliver changes the
-    newer owner already applied against a newer pin. Deliberate
-    re-bootstrap is an explicit cursor-file delete, never a rewind."""
-    import os
-    import tempfile
 
-    table = table.rstrip("/")  # ack sites pass raw and rstripped paths
-    try:
-        with open(cursor_file) as fh:
-            prior = json.load(fh)
-    except (FileNotFoundError, json.JSONDecodeError):
-        prior = None  # no (readable) prior ack: nothing to guard
-    # A corrupt prior — non-object JSON ('null', a list), or a version
-    # that is not a number — is treated like an unreadable one instead of
-    # permanently poisoning every future ack (r12 ADVICE fix). The type
-    # checks are EXPLICIT rather than a broad except TypeError, which
-    # would also swallow a guard-comparison failure and silently bypass
-    # the rewind protection.
-    if isinstance(prior, dict):
-        prior_table = (prior.get("table") or "").rstrip("/")
-        prior_version = prior.get("version")
-        if (
-            prior_table == table
-            and isinstance(prior_version, (int, float))
-            and not isinstance(prior_version, bool)
-            and prior_version > version
-        ):
-            raise RuntimeError(
-                f"cursor fencing: refusing to rewind {cursor_file} from "
-                f"v{prior_version} to v{version} — a newer owner "
-                "already acknowledged past this point (stalled consumer "
-                "raced a reclaim/rebuild); re-bootstrap by deleting the "
-                "cursor file if the rewind is intentional"
-            )
-    d = os.path.dirname(cursor_file) or "."
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".cursor.")
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"version": version, "table": table}, fh)
-    os.replace(tmp, cursor_file)
+def _index_state(
+    spark: SparkSession, path: str, pins: tuple[str, ...], rebuild: str
+) -> dict | None:
+    """The properties of the index table at ``path`` (one top-only
+    manifest read), or None when no index exists there yet. An index's
+    ``SOURCE_VERSION_PROP`` and its ``pins`` ride its first commit, so
+    an existing index that lacks any of them was not built by its
+    maintainer and is refused, pointing at its ``rebuild`` verb."""
+    if not _snapshot_table_at(spark, path):
+        return None
+    props = snapshot_properties(spark, path)
+    missing = [k for k in (SOURCE_VERSION_PROP, *pins) if k not in props]
+    if missing:
+        raise ValueError(
+            f"index {path} records no {', '.join(missing)}: run {rebuild} "
+            "to rebuild it with its source version and pins"
+        )
+    return props
 
 
 def snapshot_consume_changes(
     spark: SparkSession,
     path: str,
-    cursor_file: str,
+    since: int | None,
     keys: list[str],
     process,
     preimages: bool = False,
 ) -> int | None:
-    """Pull-model CDC consumer with a durable cursor — the role Delta's
-    streaming source plays, in the micro-batch form this engine's
-    checkpointed scans already use (checkpoints.py doctrine): each call
-    delivers everything committed since the cursor's last acknowledged
-    version as ONE batch (the manifest-diff feed spans any number of
-    commits in a single pass), hands it to ``process``, and advances the
-    cursor only after ``process`` returns — a crash mid-batch re-delivers
-    it (at-least-once; make ``process`` idempotent, e.g. a MERGE or a
-    snapshot commit keyed on the batch's version).
+    """Pull-model CDC consumer — the role Delta's streaming source
+    plays, in the micro-batch form this engine's checkpointed scans
+    already use (checkpoints.py doctrine): each call delivers everything
+    committed after version ``since`` as ONE batch (the manifest-diff
+    feed spans any number of commits in a single pass) and calls
+    ``process(batch, live)``, where ``live`` is the head version the
+    batch is bound to. The consumer owns its position: it commits
+    ``live`` atomically with its output (an index records it as its
+    ``SOURCE_VERSION_PROP`` table property) and passes it back as the
+    next call's ``since``. A crash before that commit re-delivers the
+    batch (at-least-once; make ``process`` idempotent, e.g. a keyed
+    partition rewrite), and a consumer restored to an older version
+    re-reads from the position its restored state records. A consumer
+    that re-reads the source table mid-process must pin ``live``, or a
+    commit racing the tick makes its reads disagree with the batch.
 
-    First call (no cursor) delivers the full current snapshot tagged
-    'insert' — the initial load. If retention already vacuumed the
-    cursor's version, raises: the consumer lagged past ``keep_snapshots``
-    and must re-bootstrap (size retention past the slowest consumer,
-    Delta's contract). Returns the version now acknowledged, or None if
-    there was nothing new.
-
-    ``process`` may declare a SECOND positional parameter to receive the
-    version the batch is bound to (the head this call resolved): a
-    consumer that re-reads the source table mid-process must pin that
-    version, or a commit racing the tick makes its reads disagree with
-    the batch."""
-    import inspect
+    ``since=None`` delivers the full current snapshot tagged 'insert' —
+    the initial load. If retention already vacuumed ``since``, raises:
+    the consumer lagged past ``keep_snapshots`` and must re-bootstrap
+    (size retention past the slowest consumer, Delta's contract).
+    Returns ``live``, or None if there was nothing new (``process`` is
+    not called)."""
     path = path.rstrip("/")
     versions = snapshot_versions(spark, path)
     if not versions:
         raise FileNotFoundError(f"no committed snapshot at {path}")
     live = versions[-1]
-    last: int | None = None
-    try:
-        with open(cursor_file) as fh:
-            last = json.load(fh)["version"]
-    except FileNotFoundError:
-        pass
-    if last == live:
+    if since == live:
         return None
-    if last is None:
+    if since is None:
         batch = snapshot_read(spark, path, version=live).select(
             "*", F.lit("insert").alias("_change")
         )
-    elif last in versions:
+    elif since in versions:
         batch = snapshot_changes(
-            spark, path, last, live, keys, preimages=preimages
+            spark, path, since, live, keys, preimages=preimages
         )
     else:
         raise ValueError(
-            f"cursor at v{last} but retained history is {versions}: the "
-            "consumer lagged past keep_snapshots; re-bootstrap (delete "
-            "the cursor) or raise retention"
+            f"consumer at v{since} but retained history is {versions}: "
+            "the consumer lagged past keep_snapshots; re-bootstrap (a "
+            "full rebuild of its state) or raise retention"
         )
-    try:
-        # Count only parameters the POSITIONAL call below can actually
-        # bind: a consumer like ``def process(batch, **kw)`` or
-        # ``def process(batch, *, opt=None)`` has 2+ parameters but
-        # accepts ONE positional — calling it process(batch, live)
-        # would TypeError. *args accepts any arity.
-        params = list(inspect.signature(process).parameters.values())
-        positional = [
-            p
-            for p in params
-            if p.kind
-            in (
-                inspect.Parameter.POSITIONAL_ONLY,
-                inspect.Parameter.POSITIONAL_OR_KEYWORD,
-            )
-        ]
-        two_arg = len(positional) >= 2 or any(
-            p.kind == inspect.Parameter.VAR_POSITIONAL for p in params
-        )
-    except (TypeError, ValueError):
-        two_arg = False
-    if two_arg:
-        process(batch, live)
-    else:
-        process(batch)
-    _write_cursor(cursor_file, live, path)  # atomic ack
+    process(batch, live)
     return live
 
 

@@ -274,8 +274,9 @@ def run_foreach_batch_snapshot(
     DERIVED-STATE maintenance that must advance in lockstep with the
     landed data (rolling band/vector indexes via the table's CDC feed,
     view refreshes). A crash between commit and hook is safe when the
-    hook is cursor-driven (the CDC cursor hasn't advanced, so the next
-    tick's hook folds both commits)."""
+    hook consumes the table's CDC feed from a version recorded in its
+    own output's commit (the output still records the older version,
+    so the next tick's hook folds both commits)."""
     from callio_etl_spark.merge import MergeSpec, merge_write_snapshot
     from callio_etl_spark.snapshots import (
         snapshot_discard_staged,
@@ -474,7 +475,6 @@ def run_docs_ingest_with_band_index(
     checkpoint_dir: str,
     docs_path: str,
     index_path: str,
-    cursor_file: str,
     partition_col: str,
     keep_snapshots: int = 3,
     output_mode: str = "update",
@@ -490,11 +490,12 @@ def run_docs_ingest_with_band_index(
     ``merge_keys=['doc_id']`` (replay-idempotent upsert-into-partition
     commits) and a ``post_commit_fn`` that runs
     ``dedup_ops.maintain_band_index`` — the index maintainer consumes
-    the docs table's CDC feed from its durable cursor, so a tick's index
-    work is O(|batch| signatures + touched id-buckets), a replayed batch
-    diffs to an empty feed (no-op), and a crash BETWEEN the data commit
-    and the index tick self-heals (the cursor hasn't advanced; the next
-    tick folds both commits). Parity contract (two-tick test): after
+    the docs table's CDC feed from the docs version its own last commit
+    recorded, so a tick's index work is O(|batch| signatures + touched
+    id-buckets), a replayed batch diffs to an empty feed (no-op), and a
+    crash BETWEEN the data commit and the index tick self-heals (the
+    index still records the older version; the next tick folds both
+    commits). Parity contract (two-tick test): after
     every tick, index == band_projection of the live docs table."""
     from callio_etl_spark.llm_ops.dedup_ops import maintain_band_index
 
@@ -507,8 +508,7 @@ def run_docs_ingest_with_band_index(
         output_mode=output_mode,
         merge_keys=["doc_id"],
         post_commit_fn=lambda spark: maintain_band_index(
-            spark, docs_path, index_path, cursor_file,
-            keep_snapshots=keep_snapshots,
+            spark, docs_path, index_path, keep_snapshots=keep_snapshots,
         ),
     )
 
@@ -519,7 +519,6 @@ def run_vectors_ingest_with_ivf_index(
     vecs_path: str,
     index_path: str,
     fwd_path: str,
-    cursor_file: str,
     partition_col: str,
     cells: DataFrame,
     keep_snapshots: int = 3,
@@ -538,11 +537,12 @@ def run_vectors_ingest_with_ivf_index(
     ``merge_keys=['vec_id']`` (replay-idempotent upsert-into-partition
     commits) and a ``post_commit_fn`` that runs
     ``similarity.maintain_vector_index`` — the maintainer consumes the
-    vectors table's CDC feed from its durable cursor, so a tick's index
-    work is O(|batch| assignments + touched cell partitions / forward
-    buckets), a replayed batch diffs to an empty feed (no-op), and a
-    crash between the data commit and the index tick self-heals (the
-    cursor hasn't advanced; the next tick folds both commits). The
+    vectors table's CDC feed from the vectors version its own tables
+    last recorded, so a tick's index work is O(|batch| assignments +
+    touched cell partitions / forward buckets), a replayed batch diffs
+    to an empty feed (no-op), and a crash between the data commit and
+    the index tick self-heals (the index still records the older
+    version; the next tick folds both commits). The
     QUANTIZER PIN rides every tick: the maintainer refuses a drifted
     ``cells`` frame mid-stream — a centroid refresh means stopping the
     query and running ``rebuild_vector_index``. Parity contract
@@ -559,7 +559,7 @@ def run_vectors_ingest_with_ivf_index(
         output_mode=output_mode,
         merge_keys=["vec_id"],
         post_commit_fn=lambda spark: maintain_vector_index(
-            spark, vecs_path, index_path, fwd_path, cursor_file, cells,
+            spark, vecs_path, index_path, fwd_path, cells,
             keep_snapshots=keep_snapshots,
         ),
     )

@@ -850,9 +850,7 @@ time.sleep(3600)  # hold until killed
             keep_snapshots=5,
         )
         assert (
-            maintain_band_index(
-                spark, docs_p, idx_path, str(tmp_path / "cur.json")
-            )
+            maintain_band_index(spark, docs_p, idx_path)
             is not None
         )
         assert snap.snapshot_read(spark, idx_path).count() > 0

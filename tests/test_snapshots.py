@@ -953,10 +953,9 @@ def test_snapshot_upsert_rows_mor(spark, tmp_path):
 
 def test_snapshot_consume_changes_cursor(spark, tmp_path):
     """Pull-model CDC consumer: initial load, multi-commit catch-up in
-    one batch, no-op when current, crash-before-ack redelivers, lagging
-    past retention raises."""
+    one batch, no-op when current, a crash before the consumer records
+    the version redelivers, lagging past retention raises."""
     p = str(tmp_path / "feed")
-    cur = str(tmp_path / "cursor.json")
     seen = []
 
     def commit(rows, keep=9):
@@ -964,49 +963,49 @@ def test_snapshot_consume_changes_cursor(spark, tmp_path):
         snap.snapshot_partition_overwrite(spark, df, p, "d", keep_snapshots=keep)
 
     commit([(i, str(i % 2), i * 10) for i in range(6)])
-    got = snap.snapshot_consume_changes(
-        spark, p, cur, ["id"], lambda b: seen.append(
+    since = snap.snapshot_consume_changes(
+        spark, p, None, ["id"], lambda b, _v: seen.append(
             sorted((r["id"], r["_change"]) for r in b.collect()))
     )
-    assert got == 1
+    assert since == 1
     assert seen[-1] == [(i, "insert") for i in range(6)]
     # nothing new -> None, process not called
     assert snap.snapshot_consume_changes(
-        spark, p, cur, ["id"], lambda b: seen.append("BOOM")) is None
+        spark, p, since, ["id"], lambda b, _v: seen.append("BOOM")) is None
     assert seen[-1] != "BOOM"
 
     # two commits, one catch-up batch
     commit([(1, "1", 999), (3, "1", 30), (5, "1", 50), (7, "1", 70)])
     commit([(0, "0", 5), (2, "0", 20), (4, "0", 40)])
-    got = snap.snapshot_consume_changes(
-        spark, p, cur, ["id"], lambda b: seen.append(
+    since = snap.snapshot_consume_changes(
+        spark, p, since, ["id"], lambda b, _v: seen.append(
             sorted((r["id"], r["_change"]) for r in b.collect()))
     )
-    assert got == 3
+    assert since == 3
     assert seen[-1] == [(0, "update"), (1, "update"), (7, "insert")]
 
-    # crash before ack: cursor unmoved, batch redelivered identically
+    # crash before the consumer records v4: redelivered identically
     commit([(9, "1", 90), (1, "1", 999), (3, "1", 30), (5, "1", 50), (7, "1", 70)])
 
-    def boom(b):
+    def boom(b, _v):
         raise RuntimeError("consumer crashed")
 
     try:
-        snap.snapshot_consume_changes(spark, p, cur, ["id"], boom)
+        snap.snapshot_consume_changes(spark, p, since, ["id"], boom)
         raise AssertionError("expected RuntimeError")
     except RuntimeError:
         pass
-    got = snap.snapshot_consume_changes(
-        spark, p, cur, ["id"], lambda b: seen.append(
+    since = snap.snapshot_consume_changes(
+        spark, p, since, ["id"], lambda b, _v: seen.append(
             sorted((r["id"], r["_change"]) for r in b.collect()))
     )
-    assert got == 4 and seen[-1] == [(9, "insert")]
+    assert since == 4 and seen[-1] == [(9, "insert")]
 
     # lag past retention: keep=1 sweeps v4 after two more commits
     commit([(20, "0", 200)], keep=1)
     commit([(21, "0", 210)], keep=1)
     try:
-        snap.snapshot_consume_changes(spark, p, cur, ["id"], lambda b: None)
+        snap.snapshot_consume_changes(spark, p, since, ["id"], lambda b, _v: None)
         raise AssertionError("expected ValueError")
     except ValueError:
         pass
@@ -3199,23 +3198,21 @@ def test_failed_leaf_move_never_publishes(spark, tmp_path, monkeypatch):
 
 
 def test_consume_changes_passes_bound_version(spark, tmp_path):
-    """A consumer's process may declare a second parameter to receive the
-    version the batch is bound to — the pin a mid-process re-read of the
-    source table needs (a commit racing the tick would otherwise make
-    re-reads disagree with the batch; the IVF backfill sample check is
-    the in-tree consumer of this)."""
+    """A consumer's process receives the version the batch is bound to:
+    the version it records with its output, and the pin a mid-process
+    re-read of the source table needs (a commit racing the tick would
+    otherwise make re-reads disagree with the batch)."""
     p = str(tmp_path / "cdcver")
-    cursor = str(tmp_path / "cur.json")
     df = spark.createDataFrame([(1, "0"), (2, "1")], "k long, d string")
     v1 = snap.snapshot_partition_overwrite(spark, df, p, "d", keep_snapshots=5)
 
     seen = {}
 
-    def one_arg(batch):
-        seen["one"] = batch.count()
+    def first(batch, bound_version):
+        seen["one"] = (batch.count(), bound_version)
 
-    assert snap.snapshot_consume_changes(spark, p, cursor, ["k"], one_arg) == v1
-    assert seen["one"] == 2
+    assert snap.snapshot_consume_changes(spark, p, None, ["k"], first) == v1
+    assert seen["one"] == (2, v1)
 
     v2 = snap.snapshot_partition_overwrite(
         spark,
@@ -3228,50 +3225,9 @@ def test_consume_changes_passes_bound_version(spark, tmp_path):
     def two_arg(batch, bound_version):
         seen["two"] = (batch.count(), bound_version)
 
-    assert snap.snapshot_consume_changes(spark, p, cursor, ["k"], two_arg) == v2
+    assert snap.snapshot_consume_changes(spark, p, v1, ["k"], two_arg) == v2
     # d=0 was rewritten: k=1 deleted, k=3 inserted -> 2 change rows at v2
     assert seen["two"] == (2, v2)
-
-
-def test_consume_changes_arity_counts_positional_params_only(
-    spark, tmp_path
-):
-    """r11 ADVICE fix (snapshots.py two-arg detection): a consumer like
-    ``def process(batch, **kw)`` or ``def process(batch, *, opt=None)``
-    has 2+ parameters but accepts ONE positional — the old
-    len(parameters)>=2 check called it process(batch, live) and broke
-    previously-working consumers with a TypeError. Only
-    positional-bindable parameters count; *args accepts the version."""
-    p = str(tmp_path / "cdcarity")
-    df = spark.createDataFrame([(1, "0"), (2, "1")], "k long, d string")
-    v1 = snap.snapshot_partition_overwrite(spark, df, p, "d", keep_snapshots=5)
-
-    seen = {}
-
-    def kw_only(batch, **kw):
-        seen["kw_only"] = (batch.count(), kw)
-
-    cur = str(tmp_path / "c1.json")
-    assert snap.snapshot_consume_changes(spark, p, cur, ["k"], kw_only) == v1
-    assert seen["kw_only"] == (2, {})
-
-    def kwonly_opt(batch, *, opt=None):
-        seen["kwonly_opt"] = (batch.count(), opt)
-
-    cur = str(tmp_path / "c2.json")
-    assert (
-        snap.snapshot_consume_changes(spark, p, cur, ["k"], kwonly_opt) == v1
-    )
-    assert seen["kwonly_opt"] == (2, None)
-
-    def var_args(batch, *args):
-        seen["var_args"] = (batch.count(), args)
-
-    cur = str(tmp_path / "c3.json")
-    assert (
-        snap.snapshot_consume_changes(spark, p, cur, ["k"], var_args) == v1
-    )
-    assert seen["var_args"] == (2, (v1,)), "*args consumers get the version"
 
 
 def test_point_probe_on_bool_partition_falls_back(spark, tmp_path):
@@ -3385,51 +3341,6 @@ def test_segment_count_doubling_boundary(spark, tmp_path):
         # and a point probe on the NEW layout resolves through the
         # 4-segment partial path
         assert snap.snapshot_read(spark, path, point=("p", "19")).count() == 1
-
-
-def test_cursor_ack_never_rewinds(tmp_path):
-    """r11 cursor fencing: a consumer ack below the recorded version for
-    the same table is refused (only a stalled consumer racing a
-    reclaim/rebuild produces one); equal re-acks and explicit
-    re-bootstrap (cursor delete) stay allowed."""
-    import pytest as _pytest
-
-    from callio_etl_spark.snapshots import _write_cursor
-
-    cur = str(tmp_path / "cursor.json")
-    _write_cursor(cur, 5, "/data/docs")
-    _write_cursor(cur, 5, "/data/docs")  # idempotent re-ack: fine
-    _write_cursor(cur, 8, "/data/docs")  # forward: fine
-    with _pytest.raises(RuntimeError, match="cursor fencing"):
-        _write_cursor(cur, 3, "/data/docs")
-    import json as _json
-
-    with open(cur) as fh:
-        assert _json.load(fh)["version"] == 8, "failed ack must not clobber"
-    # explicit re-bootstrap: delete then write lower
-    import os as _os
-
-    _os.remove(cur)
-    _write_cursor(cur, 3, "/data/docs")
-    with open(cur) as fh:
-        assert _json.load(fh)["version"] == 3
-
-    # r12 ADVICE fix: a cursor file holding valid NON-OBJECT JSON ('null',
-    # a list) must behave like an unreadable prior — next ack succeeds —
-    # not raise AttributeError forever and permanently fail the consumer
-    for poison in (
-        "null",
-        "[1, 2]",
-        '"v8"',
-        # non-numeric version inside a valid object: same corrupt-prior
-        # self-heal, and the guard comparison must not crash on it
-        '{"table": "/data/docs", "version": "12"}',
-    ):
-        with open(cur, "w") as fh:
-            fh.write(poison)
-        _write_cursor(cur, 9, "/data/docs")
-        with open(cur) as fh:
-            assert _json.load(fh)["version"] == 9
 
 
 def test_merge_write_snapshot_set_valued_window(spark, tmp_path):

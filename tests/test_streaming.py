@@ -1014,12 +1014,11 @@ def test_docs_ingest_with_band_index_two_ticks(spark, tmp_path):
     ck = f"{tmp_path}/ck"
     docs_p = f"{tmp_path}/docs"
     idx_p = f"{tmp_path}/idx"
-    cursor = f"{tmp_path}/cursor.json"
 
     def tick(rows):
         spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
         run_docs_ingest_with_band_index(
-            read_docs_stream(spark, src), ck, docs_p, idx_p, cursor, "source"
+            read_docs_stream(spark, src), ck, docs_p, idx_p, "source"
         )
 
     def assert_parity():
@@ -1084,7 +1083,6 @@ def test_vectors_ingest_with_ivf_index_two_ticks(spark, tmp_path):
     src = f"{tmp_path}/vec_src"
     ck = f"{tmp_path}/ck"
     vp, ip, fwd = f"{tmp_path}/vecs", f"{tmp_path}/idx", f"{tmp_path}/fwd"
-    cursor = f"{tmp_path}/cursor.json"
     cells = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [-1.0, 0.0])], "label int, cv array<double>"
     )
@@ -1093,8 +1091,7 @@ def test_vectors_ingest_with_ivf_index_two_ticks(spark, tmp_path):
     def tick(rows):
         spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
         run_vectors_ingest_with_ivf_index(
-            read_vector_stream(spark, src), ck, vp, ip, fwd, cursor,
-            "label", cells,
+            read_vector_stream(spark, src), ck, vp, ip, fwd, "label", cells,
         )
 
     def assert_parity():
