@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from callio_etl_spark.registry import register
+from callio_etl_spark.snapshots import INDEX_BUCKETS, _index_tick
 from callio_etl_spark.tables import load_table, spread as _spread
 
 TOKEN_RE = "[a-z0-9]+"
@@ -1695,10 +1696,31 @@ def incremental_pairs_banded(
     )
 
 
-#: Doc-id buckets partitioning the MAINTAINED band-index table: an
-#: update/delete touches exactly its doc's bucket, so an incremental
-#: maintenance tick rewrites O(touched buckets), never the index.
-INDEX_BUCKETS = 64
+#: The band-index tables' pins: the geometry its band keys were cut at.
+BAND_PINS = ("band.rows_per_band", "band.n_bands")
+
+
+def _band_plan(geometry):
+    """The band index's ``snapshots._index_tick`` plan: one table,
+    partitioned by ``bkt = doc_id % INDEX_BUCKETS``, whose touched
+    buckets are the delta's and whose fresh rows are the delta's live
+    docs banded at the pinned geometry. A first build or rebuild (no
+    state) pins ``geometry(live_docs)``."""
+
+    def plan(changed, changed_ids, buckets, state):
+        live = changed.where(F.col("_change") != "delete")
+        if state is None:
+            r, b = geometry(live)
+        else:
+            r, b = (int(state[0][k]) for k in BAND_PINS)
+        bkt = (F.col("doc_id") % INDEX_BUCKETS).cast("int").alias("bkt")
+        fresh = band_projection(live, r, b).select(
+            "doc_id", "band", "band_key", bkt
+        )
+        pins = dict(zip(BAND_PINS, (r, b))) if state is None else {}
+        return [("bkt", buckets, fresh, pins)]
+
+    return plan
 
 
 def maintain_band_index(
@@ -1712,39 +1734,31 @@ def maintain_band_index(
 ) -> int | None:
     """ROLLING BAND-INDEX MAINTENANCE — the service loop a production
     near-dup pipeline runs around the incremental-LSH probe: documents
-    land as snapshot commits on ``docs_path``; each call consumes the
-    table's CDC feed (snapshot_consume_changes — at-least-once,
-    metadata-pruned to the partitions the writers touched) and keeps a
+    land as snapshot commits on ``docs_path``, and each call keeps a
     (doc_id, band, band_key) index table at ``index_path`` exactly
-    current:
+    current through the one index-service tick,
+    ``snapshots._index_tick``. The tick consumes the docs table's CDC
+    feed from the docs version the index records, bands the inserted
+    and updated docs IN-PROJECTION (band_projection, map-side only) and
+    retires the old band rows of updated and deleted docs.
 
-      - inserted/updated docs: band signatures recomputed IN-PROJECTION
-        (band_projection — map-side only) and written;
-      - updated/deleted docs: their old band rows retired.
-
-    The index is partitioned by ``bkt = doc_id % {INDEX_BUCKETS}``, so a
-    tick's writes collapse to a partition overwrite of the touched
-    buckets: carried rows of those buckets are anti-joined by the
-    changed doc_ids (distributed — no driver-side id list) and unioned
-    with the fresh bands, one manifest commit that also drops every
-    touched bucket the rows leave empty (``retire_leaves``). Cost per tick:
-    O(|delta| signatures + touched buckets' index rows); the full index
-    is never rewritten, and `streaming.neardup_stream` /
-    `minhash_incremental_planned`-style probes read the index table as
-    their static side. Idempotent per CDC contract: a replayed batch
+    The index is partitioned by ``bkt = doc_id % INDEX_BUCKETS``, so a
+    tick rewrites only the touched buckets: their carried rows,
+    anti-joined by the changed doc_ids, plus the fresh bands, in one
+    commit that also drops every touched bucket the rows leave empty.
+    Cost per tick: O(|delta| signatures + touched buckets' index rows);
+    `streaming.neardup_stream` / `minhash_incremental_planned`-style
+    probes read the index table as their static side. A replayed batch
     rewrites the same buckets to the same content.
 
     INDEX STATE lives in the index's own commit: the docs version the
     rows reflect (``SOURCE_VERSION_PROP``) and the band geometry
-    (``band.rows_per_band`` / ``band.n_bands``) are table properties
-    written by the same ``snapshot_partition_overwrite(properties=)``
-    publish that lands the rows, and read back in one top-only manifest
-    read before the next tick. So the index and its position move
-    atomically: a crash before the publish replays the batch, a
+    (``BAND_PINS``) are table properties of the publish that lands the
+    rows. So a crash before the publish replays the batch, and a
     ``snapshot_restore`` of the index re-reads from the version the
-    restored rows reflect, and the state lives on the index's
-    filesystem. A tick whose delta touches no bucket (a compaction of
-    the docs table) records its version in a properties-only commit.
+    restored rows reflect. A delta that touches no bucket (a compaction
+    of the docs table) records its version in a properties-only commit,
+    and a call with nothing new starts no Spark job.
 
     GEOMETRY PINNING: an existing index's recorded geometry always wins
     over the arguments — a caller re-planning (r, b) between ticks would
@@ -1753,96 +1767,23 @@ def maintain_band_index(
     integer occupancy thresholds (``plan_band_geometry_for_size`` — the
     minhash_incremental_planned policy). Re-keying is an explicit
     ``rebuild_band_index``, never a drift. An existing index that
-    records no geometry or source version was not built here and is
-    refused, pointing at that rebuild.
-
-    A tick's whole read-state -> commit sequence runs under the index's
-    SERVICE lock (io.acquire_service_lock), serializing it against
-    ``rebuild_band_index`` — without it a tick racing a rebuild could
-    band its delta against the pre-rebuild pin.
+    records no geometry or source version is refused, pointing at that
+    rebuild. The tick holds the index's SERVICE lock, so it never
+    interleaves with a rebuild.
 
     Returns the docs version now reflected, or None if already current.
     Parity (pytest, random commit sequences): after every call the
     index equals ``band_projection`` of the live docs exactly."""
-    from callio_etl_spark.io import (
-        acquire_service_lock,
-        assert_service_fencing,
-        release_service_lock,
-    )
-    from callio_etl_spark.snapshots import (
-        SOURCE_VERSION_PROP,
-        _index_state,
-        _rewrite_touched,
-        snapshot_consume_changes,
-        snapshot_partition_overwrite,
-        snapshot_set_properties,
-    )
+    def geometry(live: DataFrame) -> tuple[int, int]:
+        if plan_geometry:
+            return plan_band_geometry_for_size(live.count())
+        return rows_per_band, n_bands
 
-    def process(batch: DataFrame, live: int) -> None:
-        # a tick that stalled past the stale window and lost its service
-        # lock must not band a delta against a pin a rebuild re-owned
-        assert_service_fencing(spark, index_path)
-        changed = batch.select("doc_id", "text", "_change").localCheckpoint(
-            eager=True
-        )
-        bkt = (F.col("doc_id") % INDEX_BUCKETS).cast("int").alias("bkt")
-        changed_ids = changed.select("doc_id").distinct()
-        touched = [
-            r["bkt"]
-            for r in changed_ids.select(bkt).distinct().collect()
-        ]  # ≤ INDEX_BUCKETS values — metadata-sized
-        commit = {SOURCE_VERSION_PROP: live}
-        if not touched:
-            # a net-empty delta changes no bucket: record the version
-            # alone, or the next call would re-diff the same commits
-            if state is not None:
-                assert_service_fencing(spark, index_path)
-                snapshot_set_properties(
-                    spark, index_path, commit, keep_snapshots=keep_snapshots
-                )
-            return
-        if state is not None:
-            r_use = int(state["band.rows_per_band"])
-            b_use = int(state["band.n_bands"])
-        else:
-            r_use, b_use = rows_per_band, n_bands
-            if plan_geometry:
-                n_docs = changed.where(F.col("_change") != "delete").count()
-                r_use, b_use = plan_band_geometry_for_size(n_docs)
-            # the first build pins the geometry in its own commit
-            commit.update({"band.rows_per_band": r_use, "band.n_bands": b_use})
-        fresh = band_projection(
-            changed.where(F.col("_change") != "delete"), r_use, b_use
-        ).select("doc_id", "band", "band_key", bkt)
-        # one commit per tick: a touched bucket the rows still fill is
-        # replaced, one every doc left is dropped (retire_leaves' rule),
-        # and the version (plus a first build's pin) rides the publish
-        out, retire = _rewrite_touched(
-            spark, index_path, "bkt", touched, fresh, changed_ids, "doc_id",
-            state is not None,
-        )
-        # re-assert the fence AT the commit point: the O(delta) banding
-        # above is exactly where a stall can outlast the stale window —
-        # an entry-only fence would let the resumed tick commit buckets
-        # banded under a pin a rebuild has since replaced
-        assert_service_fencing(spark, index_path)
-        snapshot_partition_overwrite(
-            spark, out, index_path, "bkt", keep_snapshots=keep_snapshots,
-            retire_leaves=retire or None, properties=commit,
-        )
-
-    acquire_service_lock(spark, index_path)
-    try:
-        state = _index_state(
-            spark, index_path, ("band.rows_per_band", "band.n_bands"),
-            "rebuild_band_index",
-        )
-        since = None if state is None else int(state[SOURCE_VERSION_PROP])
-        return snapshot_consume_changes(
-            spark, docs_path, since, ["doc_id"], process
-        )
-    finally:
-        release_service_lock(spark, index_path)
+    return _index_tick(
+        spark, docs_path, [(index_path, BAND_PINS)], ("doc_id", "text"),
+        _band_plan(geometry), "rebuild_band_index",
+        keep_snapshots=keep_snapshots,
+    )
 
 
 #: The grown geometry: same 8 min-hashes, re-banded 4-per-band into 2 keys.
@@ -1877,6 +1818,41 @@ def feasible_band_geometries(num_hashes: int = NUM_HASHES) -> list[tuple[int, in
     ]
 
 
+def _adversarial_docs(d: DataFrame, base: DataFrame, part) -> DataFrame:
+    """The band-index roundtrips' one adversarial rewrite of ``base``:
+    deletions (% 5), band-key edits (% 7 -> ' rev2'), the held-out % 3
+    cohort of ``d`` inserted id-shifted by a multiple of INDEX_BUCKETS
+    (bucket residues kept), and every doc of id-bucket 9 gone with no
+    insert landing there (the emptied-bucket class)."""
+    keep9 = F.col("doc_id") % INDEX_BUCKETS != 9
+    survivors = base.where((F.col("doc_id") % 5 != 1) & keep9).withColumn(
+        "text",
+        F.when(
+            F.col("doc_id") % 7 == 2, F.concat("text", F.lit(" rev2"))
+        ).otherwise(F.col("text")),
+    )
+    inserts = (
+        d.where((F.col("doc_id") % 3 == 0) & keep9)
+        .select((F.col("doc_id") + 2000 * INDEX_BUCKETS).alias("doc_id"), "text")
+        .select("doc_id", "text", part)
+    )
+    return survivors.unionByName(inserts)
+
+
+def _band_index_result(spark: SparkSession, idx_p: str, root: str) -> DataFrame:
+    """The maintained index (doc_id, band, band_key), once the emptied
+    id-bucket 9 is asserted retired from it."""
+    from callio_etl_spark.queries.sinks import _materialize_and_clean
+    from callio_etl_spark.snapshots import snapshot_read
+
+    idx = snapshot_read(spark, idx_p)
+    if idx.where(F.col("bkt") == 9).count() != 0:
+        raise AssertionError("emptied id-bucket 9 not retired from the index")
+    return _materialize_and_clean(
+        idx.select("doc_id", "band", "band_key"), root
+    )
+
+
 def _band_index_roundtrip(
     spark: SparkSession, sf_dir: str, plan_geometry: bool
 ) -> DataFrame:
@@ -1900,11 +1876,10 @@ def _band_index_roundtrip(
     only (map-side band_projection) and rewrites only the touched
     id-buckets' partitions — the full index is never rebuilt; the oracle
     side is the O(corpus) recompute the service exists to avoid."""
-    from callio_etl_spark.queries.sinks import _materialize_and_clean, _tmp
+    from callio_etl_spark.queries.sinks import _tmp
     from callio_etl_spark.snapshots import (
         snapshot_partition_overwrite,
         snapshot_properties,
-        snapshot_read,
     )
 
     root = _tmp("bandidx")
@@ -1926,27 +1901,8 @@ def _band_index_roundtrip(
         if pinned != want:
             raise AssertionError(f"geometry not pinned: {pinned} != {want}")
 
-    survivors = (
-        base.where(
-            (F.col("doc_id") % 5 != 1) & (F.col("doc_id") % INDEX_BUCKETS != 9)
-        ).withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 7 == 2, F.concat("text", F.lit(" rev2"))
-            ).otherwise(F.col("text")),
-        )
-    )
-    inserts = (
-        d.where(
-            (F.col("doc_id") % 3 == 0) & (F.col("doc_id") % INDEX_BUCKETS != 9)
-        )
-        .select(
-            (F.col("doc_id") + 2000 * INDEX_BUCKETS).alias("doc_id"), "text"
-        )
-        .select("doc_id", "text", part)
-    )
     snapshot_partition_overwrite(
-        spark, survivors.unionByName(inserts), docs_p, "p", keep_snapshots=5
+        spark, _adversarial_docs(d, base, part), docs_p, "p", keep_snapshots=5
     )
     # the second tick passes a WRONG geometry on purpose: the index's
     # pinned properties (or the default build geometry) must win
@@ -1958,12 +1914,7 @@ def _band_index_roundtrip(
     )
     if v0 is None or v1 is None or not v1 > v0:
         raise AssertionError(f"index did not advance: {v0} -> {v1}")
-    idx = snapshot_read(spark, idx_p)
-    if idx.where(F.col("bkt") == 9).count() != 0:
-        raise AssertionError("emptied id-bucket 9 not retired from the index")
-    return _materialize_and_clean(
-        idx.select("doc_id", "band", "band_key"), root
-    )
+    return _band_index_result(spark, idx_p, root)
 
 
 @register(
@@ -2247,92 +2198,36 @@ def rebuild_band_index(
     target_occupancy: float = TARGET_OCCUPANCY,
 ) -> tuple[int, int]:
     """EXPLICIT RE-KEY of the rolling band index — the rebuild verb the
-    geometry pin points to: re-plan (rows_per_band, n_bands) from the
-    CURRENT corpus size through the integer occupancy thresholds, band
-    the whole live corpus at the new geometry in one pass, replace the
-    index (every bucket the head holds is listed in retire_leaves, so
-    one the new rows leave empty drops in the SAME commit), and record
-    the new geometry and the docs version the rebuild derived from as
-    table properties of that same commit — a full re-derivation
-    supersedes every change up to that version, so the next maintain
-    tick consumes only commits that landed after it (commits racing the
-    rebuild are simply the next tick's delta). This is the
-    compaction-cadence operation a production service runs when the
-    index crosses an occupancy threshold, and the migration for an
-    index the maintainer refuses; between rebuilds
-    `maintain_band_index` refuses to drift.
+    geometry pin points to, and the migration for an index the
+    maintainer refuses. It is the maintain tick from nothing
+    (``snapshots._index_tick(full=True)``): re-plan (rows_per_band,
+    n_bands) from the CURRENT corpus size through the integer occupancy
+    thresholds, band the whole live corpus at it, and replace the index
+    in one commit that retires every bucket the head held and records
+    the new geometry and the docs version the rebuild read. The next
+    maintain tick consumes only commits that landed after that version.
+    This is the compaction-cadence operation a production service runs
+    when the index crosses an occupancy threshold. It holds the index's
+    SERVICE lock, so no maintain tick interleaves. An empty corpus
+    raises ``ValueError``. Returns the (rows_per_band, n_bands) now
+    pinned."""
+    pinned = []
 
-    One manifest publish carries data + geometry + source version (no
-    crash window between them), and the whole read -> overwrite
-    sequence holds the index's SERVICE lock, so a maintain tick can
-    never interleave: it either completes before the rebuild reads (its
-    commits are part of the rebuilt corpus) or starts after the rebuild
-    published. Returns the (rows_per_band, n_bands) now pinned."""
-    from callio_etl_spark.io import (
-        _exists,
-        _hadoop,
-        acquire_service_lock,
-        release_service_lock,
-    )
-    from callio_etl_spark.snapshots import (
-        SOURCE_VERSION_PROP,
-        snapshot_manifest,
-        snapshot_partition_overwrite,
-        snapshot_read,
-        snapshot_versions,
-    )
-
-    docs_path, index_path = docs_path.rstrip("/"), index_path.rstrip("/")
-    acquire_service_lock(spark, index_path)
-    try:
-        # resolve the version BEFORE reading: a commit racing the rebuild
-        # lands after v and stays in the feed for the next tick
-        v = snapshot_versions(spark, docs_path)[-1]
-        docs = snapshot_read(spark, docs_path, version=v).select(
-            "doc_id", "text"
-        )
-        n = docs.count()
+    def geometry(live: DataFrame) -> tuple[int, int]:
+        n = live.count()
         if n == 0:
             raise ValueError("rebuild needs a non-empty corpus")
-        r, b = plan_band_geometry_for_size(
-            n, target_occupancy=target_occupancy
+        pinned.append(
+            plan_band_geometry_for_size(n, target_occupancy=target_occupancy)
         )
-        bkt = (F.col("doc_id") % INDEX_BUCKETS).cast("int").alias("bkt")
-        fresh = (
-            band_projection(docs, r, b)
-            .select("doc_id", "band", "band_key", bkt)
-            .localCheckpoint(eager=True)
-        )
-        retire: list[str] = []
-        jvm, fs, _ = _hadoop(spark, index_path)
-        if _exists(jvm, fs, index_path + "/__snap__"):
-            # every bucket the head holds: the fresh rows replace the ones
-            # they fill and the rest drop (retire_leaves' rule). A
-            # membership probe of the fixed residue set via the
-            # partial-leaves path (O(INDEX_BUCKETS) metadata even on a
-            # spilled manifest), never a full segment enumeration
-            retire = sorted(
-                snapshot_manifest(
-                    spark,
-                    index_path,
-                    leaves=[f"bkt={b_}" for b_ in range(INDEX_BUCKETS)],
-                )["partitions"]
-            )
-        from callio_etl_spark.io import assert_service_fencing
+        return pinned[-1]
 
-        assert_service_fencing(spark, index_path)
-        snapshot_partition_overwrite(
-            spark, fresh, index_path, "bkt",
-            keep_snapshots=keep_snapshots, retire_leaves=retire or None,
-            properties={
-                "band.rows_per_band": r,
-                "band.n_bands": b,
-                SOURCE_VERSION_PROP: v,
-            },
-        )
-        return r, b
-    finally:
-        release_service_lock(spark, index_path)
+    _index_tick(
+        spark, docs_path, [(index_path, BAND_PINS)], ("doc_id", "text"),
+        _band_plan(geometry), "rebuild_band_index",
+        full=True, keep_snapshots=keep_snapshots,
+    )
+    return pinned[-1]
 
 
 def _maintained_planned_oracle() -> str:
@@ -2423,11 +2318,10 @@ def rebuild_band_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost shape at 100 TB: the rebuild is the one deliberate O(corpus)
     pass (compaction cadence — FAISS's re-train); every tick around it
     stays O(delta + touched id-buckets)."""
-    from callio_etl_spark.queries.sinks import _materialize_and_clean, _tmp
+    from callio_etl_spark.queries.sinks import _tmp
     from callio_etl_spark.snapshots import (
         snapshot_partition_overwrite,
         snapshot_properties,
-        snapshot_read,
     )
 
     root = _tmp("bandrebuild")
@@ -2467,39 +2361,15 @@ def rebuild_band_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # 4. adversarial rewrite at the NEW pin; wrong args must lose
-    survivors = (
-        base.where(
-            (F.col("doc_id") % 5 != 1) & (F.col("doc_id") % INDEX_BUCKETS != 9)
-        ).withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 7 == 2, F.concat("text", F.lit(" rev2"))
-            ).otherwise(F.col("text")),
-        )
-    )
-    inserts = (
-        d.where(
-            (F.col("doc_id") % 3 == 0) & (F.col("doc_id") % INDEX_BUCKETS != 9)
-        )
-        .select(
-            (F.col("doc_id") + 2000 * INDEX_BUCKETS).alias("doc_id"), "text"
-        )
-        .select("doc_id", "text", part)
-    )
     snapshot_partition_overwrite(
-        spark, survivors.unionByName(inserts), docs_p, "p", keep_snapshots=5
+        spark, _adversarial_docs(d, base, part), docs_p, "p", keep_snapshots=5
     )
     v2 = maintain_band_index(
         spark, docs_p, idx_p, rows_per_band=NUM_HASHES, n_bands=1
     )
     if v0 is None or v1 is None or v2 is None or not v0 < v1 < v2:
         raise AssertionError(f"index did not advance: {v0} -> {v1} -> {v2}")
-    idx = snapshot_read(spark, idx_p)
-    if idx.where(F.col("bkt") == 9).count() != 0:
-        raise AssertionError("emptied id-bucket 9 not retired from the index")
-    return _materialize_and_clean(
-        idx.select("doc_id", "band", "band_key"), root
-    )
+    return _band_index_result(spark, idx_p, root)
 
 
 @register(

@@ -28,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from callio_etl_spark.registry import register
+from callio_etl_spark.snapshots import INDEX_BUCKETS, _index_tick, snapshot_read
 from callio_etl_spark.tables import load_table
 
 TOP_K = 5
@@ -2230,12 +2231,6 @@ def ivf_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assign_to_cells(delta, _cvec(idx))
 
 
-#: vec_id buckets partitioning the maintained index's FORWARD MAP: the
-#: map answers "which cell holds vec X's posting" in O(its bucket), the
-#: lookup every incremental retirement needs (FAISS's id->list map role).
-VINDEX_BUCKETS = 64
-
-
 def _ckpt_once(df: DataFrame) -> DataFrame:
     """``localCheckpoint(eager=True)`` unless the frame already IS a
     checkpoint: a LogicalRDD plan over an RDD that has been checkpointed
@@ -2277,6 +2272,69 @@ def _quantizer_fp(cells: DataFrame) -> str:
     ).hexdigest()
 
 
+#: The vector index's pins, on its postings table: the fingerprint of
+#: the quantizer its postings were assigned under.
+VECTOR_PINS = ("ivf.quantizer_md5",)
+
+
+def _vector_plan(
+    spark: SparkSession, index_path: str, fwd_path: str, cells: DataFrame
+):
+    """The vector index's ``snapshots._index_tick`` plan: two tables.
+    The postings, partitioned by ``assigned_cell``, touch the delta's
+    old cells (looked up in the forward map's touched buckets) and its
+    new cells; the forward map, partitioned by ``vec_id %
+    INDEX_BUCKETS``, touches the delta's buckets. The quantizer is
+    checkpointed and fingerprinted here, so a tick that writes no
+    posting starts no job for it; a fingerprint other than the pinned
+    one is refused before any write. A first build or rebuild pins it."""
+
+    def plan(changed, changed_ids, buckets, state):
+        q = _ckpt_once(cells)
+        fp = _quantizer_fp(q)
+        if state is not None and state[0]["ivf.quantizer_md5"] != fp:
+            raise ValueError(
+                f"quantizer drift: index {index_path} was built against "
+                f"quantizer {state[0]['ivf.quantizer_md5']}, tick passed "
+                f"{fp}; a centroid refresh is an explicit re-index, never "
+                f"a silent mix of cells"
+            )
+        fresh = assign_to_cells(
+            changed.where(F.col("_change") != "delete").select(
+                "vec_id",
+                F.lit(-1).cast("int").alias("label"),
+                F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+            ),
+            q,
+        ).select("vec_id", "assigned_cell", "centroid_cos").localCheckpoint(
+            eager=True
+        )
+        touched = None
+        if state is not None:
+            # old cells through the forward map's touched buckets, plus
+            # the new cells, in one collect (O(buckets))
+            old = (
+                snapshot_read(spark, fwd_path)
+                .where(F.col("bkt").isin(buckets))
+                .join(changed_ids, "vec_id", "left_semi")
+                .select("assigned_cell")
+            )
+            touched = [
+                r["assigned_cell"]
+                for r in old.union(fresh.select("assigned_cell"))
+                .distinct()
+                .collect()
+            ]
+        bkt = (F.col("vec_id") % INDEX_BUCKETS).cast("int").alias("bkt")
+        pins = {} if state is not None else {VECTOR_PINS[0]: fp}
+        return [
+            ("assigned_cell", touched, fresh, pins),
+            ("bkt", buckets, fresh.select("vec_id", "assigned_cell", bkt), {}),
+        ]
+
+    return plan
+
+
 def maintain_vector_index(
     spark: SparkSession,
     vecs_path: str,
@@ -2286,217 +2344,53 @@ def maintain_vector_index(
     keep_snapshots: int = 3,
 ) -> int | None:
     """ROLLING IVF POSTINGS MAINTENANCE — the vector twin of
-    ``dedup_ops.maintain_band_index``: vectors land as snapshot commits
-    on ``vecs_path`` (vec_id, embedding, ...); each call consumes the
-    table's CDC feed and keeps TWO snapshot tables exactly current
+    ``dedup_ops.maintain_band_index``, run by the same index-service
+    tick (``snapshots._index_tick``): vectors land as snapshot commits
+    on ``vecs_path`` (vec_id, embedding, ...), and each call consumes
+    the table's CDC feed and keeps TWO snapshot tables exactly current
     against the fixed quantizer ``cells`` (label, cv):
 
       - ``index_path``: the postings, (vec_id, assigned_cell,
         centroid_cos) PARTITIONED BY assigned_cell — a cell-probe ANN
         query prunes to its cell's partitions off the manifest;
       - ``fwd_path``: the forward map, (vec_id, assigned_cell)
-        partitioned by ``vec_id % {VINDEX_BUCKETS}`` — the O(bucket)
+        partitioned by ``vec_id % INDEX_BUCKETS`` — the O(bucket)
         lookup that locates a changed vector's OLD posting without
         scanning the postings table (FAISS's id-map role; without it
         every tick would pay a full-index anti-join).
 
-    Tick flow (all distributed, one partition-overwrite commit per
-    table, O(|delta| + touched partitions)): assign the delta in-row
-    against the broadcast quantizer (assign_to_cells — map-side), look
-    up old cells through the forward map's touched buckets, rewrite the
-    union of old+new cell partitions (carried postings anti-joined by
-    the changed ids, plus the fresh assignments), and rewrite the
-    touched forward buckets; a touched cell/bucket the rewrite leaves
-    empty drops in the same commit (``retire_leaves``). Centroid
-    refresh stays a separate batch job (the ivf_train_rounds pass)
-    exactly as in FAISS — re-assignments it causes arrive as ordinary
-    updates.
+    A tick (O(|delta| + touched partitions), one commit per table, the
+    two published concurrently) assigns the delta against the broadcast
+    quantizer (assign_to_cells — map-side), finds old cells through the
+    forward map's touched buckets, and rewrites the old and new cell
+    partitions and the touched forward buckets. Centroid refresh stays a
+    separate batch job (ivf_train_rounds), exactly as in FAISS.
 
-    INDEX STATE lives in each table's own commit: both tables record
-    the vectors version their rows reflect (``SOURCE_VERSION_PROP``) in
-    the publish that lands them, and the postings also record a
-    fingerprint of ``cells`` (md5 over the sorted (label, centroid)
-    rows, ``ivf.quantizer_md5``) at first build. A tick consumes from
-    the OLDER of the two versions, so a crash between the two commits
-    replays the batch against both. A tick whose quantizer does not
-    match the pin is REFUSED — postings assigned under two different
-    quantizers would silently mix incompatible cells, the drift class
-    the band index's geometry pin excludes; a centroid refresh is an
-    explicit ``rebuild_vector_index``, never a drift. An index missing
-    its pin, a version, or one of its two tables was not built here
-    and is refused, pointing at that rebuild. A tick whose delta
-    touches no bucket records its version in a properties-only commit
-    per table. The tick sequence holds the index's SERVICE lock
-    (io.acquire_service_lock), serializing it against
-    ``rebuild_vector_index``.
+    INDEX STATE lives in each table's own commit: both record the
+    vectors version their rows reflect (``SOURCE_VERSION_PROP``), and
+    the postings pin a fingerprint of ``cells`` (``VECTOR_PINS``) at
+    first build. Tables that record different versions (a crash or fence
+    between the publishes, or a restore of one) are rebuilt from the
+    live vectors with the pin kept. A batch whose quantizer does not
+    match the pin is REFUSED before any write — postings under two
+    quantizers would mix incompatible cells; a centroid refresh is an
+    explicit ``rebuild_vector_index``. The quantizer is fingerprinted
+    only for a batch with rows, so a call with nothing new starts no
+    Spark job. An index missing its pin, a version, or one of its two
+    tables is refused, pointing at that rebuild. A delta that touches
+    no bucket records its version in a properties-only commit per
+    table. The tick holds the index's SERVICE lock.
 
     Returns the vectors version now reflected, or None if current.
     Parity (pytest, random commit sequences): postings ==
     assign_to_cells(live vectors) and the forward map matches, after
     every tick."""
-    from callio_etl_spark.io import (
-        acquire_service_lock,
-        assert_service_fencing,
-        release_service_lock,
+    return _index_tick(
+        spark, vecs_path, [(index_path, VECTOR_PINS), (fwd_path, ())],
+        ("vec_id", "embedding"),
+        _vector_plan(spark, index_path, fwd_path, cells),
+        "rebuild_vector_index", keep_snapshots=keep_snapshots,
     )
-    from callio_etl_spark.snapshots import (
-        SOURCE_VERSION_PROP,
-        _index_state,
-        _rewrite_touched,
-        snapshot_consume_changes,
-        snapshot_manifest,
-        snapshot_partition_overwrite,
-        snapshot_read,
-        snapshot_set_properties,
-    )
-
-    cells = _ckpt_once(cells)
-    cells_fp = _quantizer_fp(cells)
-
-    def process(batch: DataFrame, live: int) -> None:
-        # a tick that stalled past the stale window and lost its service
-        # lock must not assign a delta against a quantizer a rebuild
-        # re-owned (see io.assert_service_fencing)
-        assert_service_fencing(spark, index_path)
-        changed = batch.select("vec_id", "embedding", "_change").localCheckpoint(
-            eager=True
-        )
-        changed_ids = changed.select("vec_id").distinct()
-        bkt = (F.col("vec_id") % VINDEX_BUCKETS).cast("int").alias("bkt")
-        # the touched-bucket list is collected ONCE and reused by the
-        # forward-map rewrite below — it is the same set by definition
-        tb = [r["bkt"] for r in changed_ids.select(bkt).distinct().collect()]
-        commit = {SOURCE_VERSION_PROP: live}
-        if not tb:
-            # a net-empty delta changes no posting: record the version
-            # alone, or the next call would re-diff the same commits
-            if exists:
-                for p in (index_path, fwd_path):
-                    assert_service_fencing(spark, index_path)
-                    snapshot_set_properties(
-                        spark, p, commit, keep_snapshots=keep_snapshots
-                    )
-            return
-        fresh = assign_to_cells(
-            changed.where(F.col("_change") != "delete").select(
-                "vec_id",
-                F.lit(-1).cast("int").alias("label"),
-                F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-            ),
-            cells,
-        ).select("vec_id", "assigned_cell", "centroid_cos").localCheckpoint(
-            eager=True
-        )
-
-        # old cells via the forward map's touched buckets (O(buckets))
-        old_cells = []
-        if exists:
-            old_cells = [
-                r["assigned_cell"]
-                for r in snapshot_read(spark, fwd_path)
-                .where(F.col("bkt").isin(tb))
-                .join(changed_ids, "vec_id", "left_semi")
-                .select("assigned_cell")
-                .distinct()
-                .collect()
-            ]
-        if lagging:
-            # the two tables record different versions (a crash between
-            # their commits, or a restore of one): the forward map cannot
-            # locate every posting the replayed batch changes, so this
-            # recovery tick rewrites every cell the postings hold
-            old_cells += [
-                int(leaf.split("=", 1)[1])
-                for leaf in snapshot_manifest(spark, index_path)["partitions"]
-            ]
-        new_cells = [
-            r["assigned_cell"]
-            for r in fresh.select("assigned_cell").distinct().collect()
-        ]
-        touched_cells = sorted(set(old_cells) | set(new_cells))
-
-        # each chain makes one commit per table: a touched partition the
-        # rows still fill is replaced, one the tick emptied is dropped
-        # (retire_leaves' rule), and the version (plus a first build's
-        # pin) rides the publish
-        def _postings_chain() -> None:
-            out, retire = _rewrite_touched(
-                spark, index_path, "assigned_cell", touched_cells, fresh,
-                changed_ids, "vec_id", exists,
-            )
-            # fence AT this chain's publish: the delta assignment and the
-            # carry above are where a stall can outlast the stale window
-            assert_service_fencing(spark, index_path)
-            snapshot_partition_overwrite(
-                spark, out, index_path, "assigned_cell",
-                keep_snapshots=keep_snapshots,
-                retire_leaves=retire or None,
-                properties=(
-                    commit if exists
-                    else {**commit, "ivf.quantizer_md5": cells_fp}
-                ),
-            )
-
-        def _fwd_chain() -> None:
-            fout, retire = _rewrite_touched(
-                spark, fwd_path, "bkt", tb,
-                fresh.select("vec_id", "assigned_cell", bkt),
-                changed_ids, "vec_id", exists,
-            )
-            assert_service_fencing(spark, index_path)
-            snapshot_partition_overwrite(
-                spark, fout, fwd_path, "bkt", keep_snapshots=keep_snapshots,
-                retire_leaves=retire or None, properties=commit,
-            )
-
-        # The postings and forward-map chains are INDEPENDENT given fresh
-        # + changed_ids (both localCheckpointed): each builds its carry
-        # from ITS table's immutable published head and commits to ITS
-        # manifest, so they run concurrently (guide §2.6 — overlap
-        # independent jobs; the two ~1 s commit jobs were strictly
-        # serial before, r15). Each chain fences the service lock right
-        # before its own publish, so a stall inside a chain cannot
-        # publish under a reclaimed lock. A crash or a fenced-out chain
-        # leaves its table at its old version, and the next tick
-        # consumes from the older of the two; each publish still passes
-        # the manifest-level fencing in _write_manifest.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_idx = pool.submit(_postings_chain)
-            fut_fwd = pool.submit(_fwd_chain)
-            # surface BOTH outcomes: .result() re-raises the first chain's
-            # failure only after the second finished (pool exit joins)
-            fut_idx.result()
-            fut_fwd.result()
-
-    acquire_service_lock(spark, index_path)
-    try:
-        rebuild = "rebuild_vector_index"
-        idx = _index_state(spark, index_path, ("ivf.quantizer_md5",), rebuild)
-        fwd = _index_state(spark, fwd_path, (), rebuild)
-        exists = idx is not None
-        if exists != (fwd is not None):
-            raise ValueError(
-                f"only one of the postings {index_path} and the forward map "
-                f"{fwd_path} exists: run {rebuild} to rebuild both"
-            )
-        since, lagging = None, False
-        if exists:
-            if idx["ivf.quantizer_md5"] != cells_fp:
-                raise ValueError(
-                    f"quantizer drift: index {index_path} was built "
-                    f"against quantizer {idx['ivf.quantizer_md5']}, tick "
-                    f"passed {cells_fp}; a centroid refresh is an explicit "
-                    f"re-index, never a silent mix of cells"
-                )
-            seen = {int(t[SOURCE_VERSION_PROP]) for t in (idx, fwd)}
-            since, lagging = min(seen), len(seen) > 1
-        return snapshot_consume_changes(
-            spark, vecs_path, since, ["vec_id"], process
-        )
-    finally:
-        release_service_lock(spark, index_path)
 
 
 def rebuild_vector_index(
@@ -2508,106 +2402,82 @@ def rebuild_vector_index(
     keep_snapshots: int = 3,
 ) -> str:
     """EXPLICIT RE-INDEX against a (possibly refreshed) quantizer — the
-    rebuild verb the quantizer pin points to: assign the whole live
-    corpus to ``cells`` in one broadcast-argmax pass, replace the
-    postings and forward-map tables (every leaf each head holds is
-    listed in retire_leaves, so one the new rows leave empty drops in
-    the SAME commit), and record in each table's overwrite the vectors
-    version the rebuild derived from (racing commits stay in the feed
-    for the next tick) — plus, on the postings, the new quantizer's
-    fingerprint. This is what runs after an ``ivf_train_rounds``
-    centroid refresh, and the migration for an index the maintainer
-    refuses; between rebuilds `maintain_vector_index` refuses a drifted
-    quantizer. One manifest publish per table carries data +
-    properties, and the whole read -> overwrite sequence holds the
-    index's SERVICE lock, so a maintain tick can never interleave
-    against the half-rebuilt state. Returns the fingerprint now
-    pinned."""
-    from callio_etl_spark.io import (
-        _exists,
-        _hadoop,
-        acquire_service_lock,
-        release_service_lock,
-    )
-    from callio_etl_spark.snapshots import (
-        SOURCE_VERSION_PROP,
-        snapshot_manifest,
-        snapshot_partition_overwrite,
-        snapshot_read,
-        snapshot_versions,
-    )
+    rebuild verb the quantizer pin points to, and the migration for an
+    index the maintainer refuses. It is the maintain tick from nothing
+    (``snapshots._index_tick(full=True)``): assign the whole live
+    corpus to ``cells`` in one broadcast-argmax pass and replace the
+    postings and the forward map, each in one commit that retires every
+    leaf its head held and records the vectors version the rebuild read
+    (racing commits stay in the feed for the next tick), plus the new
+    quantizer's fingerprint on the postings. This is what runs after an
+    ``ivf_train_rounds`` centroid refresh. It holds the index's SERVICE
+    lock, so no maintain tick interleaves. An empty corpus raises
+    ``ValueError``. Returns the fingerprint now pinned."""
+    vector = _vector_plan(spark, index_path, fwd_path, cells)
+    pinned = {}
 
-    vecs_path = vecs_path.rstrip("/")
-    index_path, fwd_path = index_path.rstrip("/"), fwd_path.rstrip("/")
-    cells = _ckpt_once(cells)
-    fp = _quantizer_fp(cells)
-    acquire_service_lock(spark, index_path)
-    try:
-        v = snapshot_versions(spark, vecs_path)[-1]
-        vecs = snapshot_read(spark, vecs_path, version=v)
-        fresh = (
-            assign_to_cells(
-                vecs.select(
-                    "vec_id",
-                    F.lit(-1).cast("int").alias("label"),
-                    F.transform(
-                        "embedding", lambda x: x.cast("double")
-                    ).alias("v"),
-                ),
-                cells,
-            )
-            .select("vec_id", "assigned_cell", "centroid_cos")
-            .localCheckpoint(eager=True)
-        )
-        if fresh.isEmpty():
+    def plan(changed, changed_ids, buckets, state):
+        if changed.isEmpty():
             raise ValueError("rebuild needs a non-empty vector corpus")
-        jvm, fs, _ = _hadoop(spark, index_path)
+        parts = vector(changed, changed_ids, buckets, state)
+        pinned.update(parts[0][3])
+        return parts
 
-        def _held(path: str) -> list[str] | None:
-            # every leaf the head holds: the fresh rows replace the ones
-            # they fill and the rest drop (retire_leaves' rule)
-            if not _exists(jvm, fs, path + "/__snap__"):
-                return None
-            return sorted(snapshot_manifest(spark, path)["partitions"]) or None
+    _index_tick(
+        spark, vecs_path, [(index_path, VECTOR_PINS), (fwd_path, ())],
+        ("vec_id", "embedding"), plan, "rebuild_vector_index",
+        full=True, keep_snapshots=keep_snapshots,
+    )
+    return pinned[VECTOR_PINS[0]]
 
-        from callio_etl_spark.io import assert_service_fencing
 
-        def _postings_chain() -> None:
-            retire = _held(index_path)
-            # fence AT this chain's publish (see maintain_vector_index)
-            assert_service_fencing(spark, index_path)
-            snapshot_partition_overwrite(
-                spark, fresh, index_path, "assigned_cell",
-                keep_snapshots=keep_snapshots,
-                retire_leaves=retire,
-                properties={"ivf.quantizer_md5": fp, SOURCE_VERSION_PROP: v},
-            )
+def _flip(df: DataFrame, mod: int, res: int) -> DataFrame:
+    """``df`` with the embeddings of ``vec_id % mod == res`` negated: the
+    nearest centroid of a negated vector flips (a cross-cell move)."""
+    return df.withColumn(
+        "embedding",
+        F.when(
+            F.col("vec_id") % mod == res,
+            F.transform("embedding", lambda x: -x),
+        ).otherwise(F.col("embedding")),
+    )
 
-        def _fwd_chain() -> None:
-            bkt = (F.col("vec_id") % VINDEX_BUCKETS).cast("int").alias("bkt")
-            retire = _held(fwd_path)
-            assert_service_fencing(spark, index_path)
-            snapshot_partition_overwrite(
-                spark, fresh.select("vec_id", "assigned_cell", bkt), fwd_path,
-                "bkt", keep_snapshots=keep_snapshots, retire_leaves=retire,
-                properties={SOURCE_VERSION_PROP: v},
-            )
 
-        # the two tables' chains run concurrently, each fenced right
-        # before its publish — independent given the checkpointed fresh;
-        # a table whose chain fails keeps its old version and pins, and
-        # each publish is still fenced in _write_manifest (see
-        # maintain_vector_index for the full argument)
-        from concurrent.futures import ThreadPoolExecutor
+def _adversarial_vectors(e: DataFrame, base_rows: DataFrame, part) -> DataFrame:
+    """The vector-index roundtrips' one adversarial rewrite of
+    ``base_rows``: deletions (% 9), cross-cell moves (% 7), and the
+    held-out delta cohort of ``e`` inserted id-shifted by a multiple of
+    INDEX_BUCKETS (forward-map buckets kept)."""
+    inserts = (
+        e.where(F.col("vec_id") % VEC_DELTA_MOD == 0)
+        .select(
+            (F.col("vec_id") + 2000 * INDEX_BUCKETS).alias("vec_id"),
+            F.col("v").alias("embedding"),
+        )
+        .select("vec_id", "embedding", part)
+    )
+    survivors = _flip(base_rows.where(F.col("vec_id") % 9 != 1), 7, 3)
+    return survivors.unionByName(inserts)
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_idx = pool.submit(_postings_chain)
-            fut_fwd = pool.submit(_fwd_chain)
-            fut_idx.result()
-            fut_fwd.result()
-        return fp
-    finally:
-        release_service_lock(spark, index_path)
+
+def _vector_index_result(
+    spark: SparkSession, ip: str, fwd: str, root: str
+) -> DataFrame:
+    """The vector-index roundtrips' result: the postings (vec_id,
+    assigned_cell), once the forward map is asserted to agree with them
+    (``root`` is removed either way)."""
+    import shutil
+
+    from callio_etl_spark.queries.sinks import _materialize_and_clean
+
+    postings = snapshot_read(spark, ip).select("vec_id", "assigned_cell")
+    fmap = snapshot_read(spark, fwd).select("vec_id", "assigned_cell")
+    if not postings.exceptAll(fmap).unionByName(
+        fmap.exceptAll(postings)
+    ).isEmpty():
+        shutil.rmtree(root, ignore_errors=True)
+        raise AssertionError("forward map diverged from the postings")
+    return _materialize_and_clean(postings, root)
 
 
 @register(
@@ -2629,7 +2499,7 @@ c1 AS (
               ELSE v END AS v
   FROM base WHERE vec_id % 9 <> 1
   UNION ALL
-  SELECT vec_id + {2000 * VINDEX_BUCKETS} AS vec_id, v
+  SELECT vec_id + {2000 * INDEX_BUCKETS} AS vec_id, v
   FROM e WHERE vec_id % {VEC_DELTA_MOD} = 0
 ),
 c2 AS (
@@ -2681,11 +2551,10 @@ def rebuild_vector_index_roundtrip(
     broadcast-argmax pass (what runs after an ivf_train_rounds
     centroid refresh); every tick around it stays O(|delta| + touched
     cell partitions / forward buckets)."""
-    from callio_etl_spark.queries.sinks import _materialize_and_clean, _tmp
+    from callio_etl_spark.queries.sinks import _tmp
     from callio_etl_spark.snapshots import (
         snapshot_partition_overwrite,
         snapshot_properties,
-        snapshot_read,
     )
 
     root = _tmp("vecrebuild")
@@ -2701,25 +2570,7 @@ def rebuild_vector_index_roundtrip(
     snapshot_partition_overwrite(spark, base_rows, vp, "p", keep_snapshots=5)
     v0 = maintain_vector_index(spark, vp, ip, fwd, cells1)
 
-    def _flip(df: DataFrame, mod: int, res: int) -> DataFrame:
-        return df.withColumn(
-            "embedding",
-            F.when(
-                F.col("vec_id") % mod == res,
-                F.transform("embedding", lambda x: -x),
-            ).otherwise(F.col("embedding")),
-        )
-
-    survivors = _flip(base_rows.where(F.col("vec_id") % 9 != 1), 7, 3)
-    inserts = (
-        e.where(F.col("vec_id") % VEC_DELTA_MOD == 0)
-        .select(
-            (F.col("vec_id") + 2000 * VINDEX_BUCKETS).alias("vec_id"),
-            F.col("v").alias("embedding"),
-        )
-        .select("vec_id", "embedding", part)
-    )
-    corpus1 = survivors.unionByName(inserts)
+    corpus1 = _adversarial_vectors(e, base_rows, part)
     snapshot_partition_overwrite(spark, corpus1, vp, "p", keep_snapshots=5)
     v1 = maintain_vector_index(spark, vp, ip, fwd, cells1)
     if v0 is None or v1 is None or not v1 > v0:
@@ -2754,13 +2605,7 @@ def rebuild_vector_index_roundtrip(
     if maintain_vector_index(spark, vp, ip, fwd, cells2) is None:
         raise AssertionError("post-rebuild delta not consumed")
 
-    postings = snapshot_read(spark, ip).select("vec_id", "assigned_cell")
-    fmap = snapshot_read(spark, fwd).select("vec_id", "assigned_cell")
-    if not postings.exceptAll(fmap).unionByName(
-        fmap.exceptAll(postings)
-    ).isEmpty():
-        raise AssertionError("forward map diverged from the postings")
-    return _materialize_and_clean(postings, root)
+    return _vector_index_result(spark, ip, fwd, root)
 
 
 @register(
@@ -2822,7 +2667,6 @@ def stream_ingest_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from callio_etl_spark.queries.sinks import _materialize_and_clean
     from callio_etl_spark.snapshots import snapshot_read
     from callio_etl_spark.streaming.incremental import (
         read_vector_stream,
@@ -2857,14 +2701,7 @@ def stream_ingest_vector_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     if landed != expect:
         shutil.rmtree(root, ignore_errors=True)
         raise AssertionError(f"landed vectors wrong: {landed} != {expect}")
-    postings = snapshot_read(spark, ip).select("vec_id", "assigned_cell")
-    fmap = snapshot_read(spark, fwd).select("vec_id", "assigned_cell")
-    if not postings.exceptAll(fmap).unionByName(
-        fmap.exceptAll(postings)
-    ).isEmpty():
-        shutil.rmtree(root, ignore_errors=True)
-        raise AssertionError("forward map diverged from the postings")
-    return _materialize_and_clean(postings, root)
+    return _vector_index_result(spark, ip, fwd, root)
 
 
 @register(
@@ -2886,7 +2723,7 @@ final AS (
               ELSE v END AS v
   FROM base WHERE vec_id % 9 <> 1
   UNION ALL
-  SELECT vec_id + {2000 * VINDEX_BUCKETS} AS vec_id, v
+  SELECT vec_id + {2000 * INDEX_BUCKETS} AS vec_id, v
   FROM e WHERE vec_id % {VEC_DELTA_MOD} = 0
 ),
 scored AS (
@@ -2910,7 +2747,7 @@ def maintain_vector_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     CROSS-CELL MOVES (% 7: the embedding is negated, so its nearest
     centroid flips and the old posting must be retired from a DIFFERENT
     cell partition than the new one lands in), and inserts (the held-out
-    delta cohort, id-shifted by a multiple of {VINDEX_BUCKETS} so
+    delta cohort, id-shifted by a multiple of {INDEX_BUCKETS} so
     forward-map buckets are preserved) — and tick again. The result is
     the postings table (vec_id, assigned_cell); the oracle recomputes
     nearest-centroid assignment of the FINAL vectors against the same
@@ -2922,7 +2759,7 @@ def maintain_vector_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     broadcast quantizer and rewrites only the touched cell partitions
     and forward buckets — O(|delta| + touched partitions); the oracle
     side is the full-corpus reassignment the service exists to avoid."""
-    from callio_etl_spark.queries.sinks import _materialize_and_clean, _tmp
+    from callio_etl_spark.queries.sinks import _tmp
     from callio_etl_spark.snapshots import (
         snapshot_partition_overwrite,
         snapshot_read,
@@ -2939,35 +2776,16 @@ def maintain_vector_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     snapshot_partition_overwrite(spark, base_rows, vp, "p", keep_snapshots=5)
     v0 = maintain_vector_index(spark, vp, ip, fwd, cells)
 
-    survivors = base_rows.where(F.col("vec_id") % 9 != 1).withColumn(
-        "embedding",
-        F.when(
-            F.col("vec_id") % 7 == 3,
-            F.transform("embedding", lambda x: -x),
-        ).otherwise(F.col("embedding")),
-    )
-    inserts = (
-        e.where(F.col("vec_id") % VEC_DELTA_MOD == 0)
-        .select(
-            (F.col("vec_id") + 2000 * VINDEX_BUCKETS).alias("vec_id"),
-            F.col("v").alias("embedding"),
-        )
-        .select("vec_id", "embedding", part)
-    )
     snapshot_partition_overwrite(
-        spark, survivors.unionByName(inserts), vp, "p", keep_snapshots=5
+        spark, _adversarial_vectors(e, base_rows, part), vp, "p",
+        keep_snapshots=5,
     )
     v1 = maintain_vector_index(spark, vp, ip, fwd, cells)
     if v0 is None or v1 is None or not v1 > v0:
         raise AssertionError(f"index did not advance: {v0} -> {v1}")
 
-    postings = snapshot_read(spark, ip).select("vec_id", "assigned_cell")
-    fmap = snapshot_read(spark, fwd).select("vec_id", "assigned_cell")
-    if not postings.exceptAll(fmap).unionByName(
-        fmap.exceptAll(postings)
-    ).isEmpty():
-        raise AssertionError("forward map diverged from the postings")
     # the cross-cell-move class must actually have moved >= 1 vector
+    postings = snapshot_read(spark, ip).select("vec_id", "assigned_cell")
     moved = (
         postings.where(F.col("vec_id") % 7 == 3)
         .join(
@@ -2984,4 +2802,4 @@ def maintain_vector_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     )
     if moved == 0:
         raise AssertionError("negation edit moved no vector across cells")
-    return _materialize_and_clean(postings, root)
+    return _vector_index_result(spark, ip, fwd, root)

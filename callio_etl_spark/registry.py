@@ -55,18 +55,18 @@ def register(name: str, oracle: str | None = None, tags: list[str] | None = None
 #: every round via tools/check_correctness.py (stricter value compare
 #: than the driver hash).
 #:
-#: r21 rotation: the band and vector indexes record the source version
-#: they reflect in their own commit, so every `index`-tagged row rides
-#: the window. Ages count the r16-r20 windows as driver slots (no
+#: r22 rotation: the four index-service verbs run through one driver
+#: (``snapshots._index_tick``), so every `index`-tagged row rides the
+#: window again. Ages count the r16-r21 windows as driver slots (no
 #: recording in this repo yet). The window holds:
 #:   1. the seven `index`-tagged rows (the maintain, rebuild and
 #:      stream-ingest rows of both indexes);
-#:   2. the 20 r14 rows the r20 window left at positions 51-70
-#:      (merge_upsert_conditional .. window_range_scan);
-#:   3. oldest-first, ties alphabetical: 23 of the 44 rows whose latest
-#:      driver slot is r15 (api_http_ingest .. hashed_classifier_score).
-#:      The other 21 (heavy_hitters_cms .. weighted_sample) hold
-#:      positions 51-71 and lead the next window.
+#:   2. the 21 r15 rows the r21 window left at positions 51-71
+#:      (heavy_hitters_cms .. weighted_sample);
+#:   3. oldest-first, ties alphabetical: ivm_refresh_join (latest slot
+#:      r16) and 21 of the 46 rows whose latest slot is r18
+#:      (ann_topk_brute .. hash_split). The other 25 (ivf_train_rounds
+#:      .. zorder_layout) hold positions 51-75 and lead the next window.
 DRIVER_PRIORITY: list[str] = [
     # --- positions 1-7: the index-service rows this round touches ---
     "maintain_band_index",
@@ -76,52 +76,7 @@ DRIVER_PRIORITY: list[str] = [
     "maintain_vector_index",
     "rebuild_vector_index",
     "stream_ingest_vector_index",
-    # --- positions 8-27: the r14 rows r20 left at positions 51-70 ---
-    "merge_upsert_conditional",
-    "merge_upsert_full",
-    "minhash_lsh_pairs",
-    "text_stats",
-    "tfidf_top_terms",
-    "time_buckets",
-    "topk_recent",
-    "tpch_q10_returned",
-    "tpch_q11_important_stock",
-    "tpch_q12_late_lines",
-    "tpch_q13_order_distribution",
-    "tpch_q14_promo",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_count",
-    "tpch_q17_small_quantity",
-    "tpch_q18_large_orders",
-    "tpch_q1_pricing",
-    "union_tenants",
-    "watermark_filter",
-    "window_range_scan",
-    # --- oldest-first: r15 (23 of 44) ---
-    "api_http_ingest",
-    "array_hof_suite",
-    "asof_join_latest_order",
-    "bigram_lm_score",
-    "bitwise_agg_suite",
-    "bm25_topk",
-    "bpe_pair_counts",
-    "bpe_segment_docs",
-    "bpe_train_merges",
-    "char_diversity",
-    "cross_source_neardup",
-    "cube_agg",
-    "curriculum_bins",
-    "date_fn_suite",
-    "date_spine_fill",
-    "dedup_pipeline",
-    "dedup_span_removal",
-    "distinct_rows",
-    "domain_stats",
-    "embedding_decontaminate",
-    "embedding_neardup_cells",
-    "grouping_sets_explicit",
-    "hashed_classifier_score",
-    # --- positions 51-71: the r15 rows that lead the next window ---
+    # --- positions 8-28: the r15 rows r21 left at positions 51-71 ---
     "heavy_hitters_cms",
     "hopping_window_agg",
     "hybrid_rrf_fusion",
@@ -143,6 +98,55 @@ DRIVER_PRIORITY: list[str] = [
     "tpch_q8_market_share",
     "tpch_q9_profit",
     "weighted_sample",
+    # --- oldest-first: r16 (1), r18 (21 of 46) ---
+    "ivm_refresh_join",
+    "ann_topk_brute",
+    "ann_topk_ivf",
+    "checkpoint_warm",
+    "chunk_documents",
+    "chunk_overlap",
+    "conditional_agg",
+    "corpus_filter",
+    "curriculum_bins_audit",
+    "customer_in_range",
+    "dedup_cluster_assign",
+    "dedup_exact",
+    "dedup_first_wins",
+    "dedup_survivors",
+    "dq_checks",
+    "embedding_neardup",
+    "embedding_neardup_bucketed",
+    "embedding_quantize",
+    "exists_subquery",
+    "extrema",
+    "frame_sample",
+    "hash_split",
+    # --- positions 51-75: the r18 rows that lead the next window ---
+    "ivf_train_rounds",
+    "ivm_refresh_agg",
+    "join_anti",
+    "join_fanout",
+    "join_full_outer",
+    "join_left_dim",
+    "join_semi",
+    "json_map_suite",
+    "length_batching",
+    "merge_upsert_mor",
+    "minhash_incremental_grown",
+    "minhash_lsh_pairs_capped",
+    "minhash_lsh_pairs_grouped",
+    "null_semantics_suite",
+    "percentile_summary",
+    "salted_join_agg",
+    "scd2_history",
+    "shard_manifest",
+    "sink_append_evolve",
+    "sink_partition_delete",
+    "sink_remove_orphans",
+    "sink_version_diff",
+    "sink_versioned_restore",
+    "unigram_rarity",
+    "zorder_layout",
 ]
 
 

@@ -69,6 +69,7 @@ import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from callio_etl_spark import io as cio
 from callio_etl_spark.io import (
     STAGING_SUFFIX,
     _delete,
@@ -2399,10 +2400,9 @@ def snapshot_partition_overwrite(
     rely on the rule: the spec-evolution migration (retire the old-spec
     dir as its rows land under the current spec),
     ``snapshot_compact_partition`` (a fully deleted partition retires),
-    the keyed-delta rewrites of ``maintain_band_index`` /
-    ``maintain_vector_index`` (every touched leaf, via
-    ``_rewrite_touched``), their ``rebuild_*`` verbs (every head leaf)
-    and ``merge.merge_write_snapshot`` (every window leaf the head
+    the index-service tick ``_index_tick`` (every touched leaf, via
+    ``_rewrite_touched``; every head leaf on a rebuild) and
+    ``merge.merge_write_snapshot`` (every window leaf the head
     holds — the keyed upsert behind ``pipeline.run_tick`` and
     ``run_foreach_batch_snapshot(merge_keys=)``). Retired dirs stay
     pinnable in older versions until retention sweeps them.
@@ -2536,37 +2536,44 @@ def _rewrite_touched(
     col: str,
     values,
     fresh: DataFrame,
-    changed: DataFrame,
+    changed: DataFrame | None,
     key: str,
-    exists: bool,
 ) -> tuple[DataFrame, list[str]]:
     """The rows and retire list of a keyed-delta rewrite of the touched
-    partitions ``col IN values``: the head's rows there whose ``key`` is
-    not in ``changed``, plus ``fresh``, checkpointed eagerly; and the
-    touched leaves the head holds (``_held_leaves``). Pass both to
+    partitions ``col IN values`` (``None``: every leaf the head holds):
+    the head's rows there whose ``key`` is not in ``changed`` (none when
+    ``changed`` is ``None``, a rewrite from nothing), plus ``fresh``,
+    checkpointed eagerly when rows were carried; and the touched leaves
+    the head holds (``_held_leaves``). Pass both to
     ``snapshot_partition_overwrite(retire_leaves=)``: a touched leaf the
     rows still fill is replaced, one they leave empty is dropped, in one
-    commit."""
-    if not exists:
-        return fresh.localCheckpoint(eager=True), []
-    values = sorted(set(values))
-    carried = (
-        snapshot_read(spark, path)
-        .where(F.col(col).isin(values))
-        .join(changed, key, "left_anti")
-    )
+    commit. A path with no table yet gets ``fresh`` and no leaves."""
+    if not _snapshot_table_at(spark, path):
+        return fresh, []
+    held = _held_leaves(spark, path, col, values)
+    if changed is None or not held:
+        return fresh, held
+    carried = snapshot_read(spark, path)
+    if values is not None:
+        carried = carried.where(F.col(col).isin(sorted(set(values))))
     out = (
-        carried.select(*fresh.columns)
+        carried.join(changed, key, "left_anti")
+        .select(*fresh.columns)
         .unionByName(fresh)
         .localCheckpoint(eager=True)
     )
-    return out, _held_leaves(spark, path, col, values)
+    return out, held
 
 
-def _held_leaves(spark: SparkSession, path: str, col: str, values) -> list[str]:
+def _held_leaves(
+    spark: SparkSession, path: str, col: str, values=None
+) -> list[str]:
     """The leaves of ``col IN values`` the head holds (a ``None`` value
     names the NULL leaf): one partial manifest resolve, O(values)
-    metadata, never the table's full enumeration."""
+    metadata, never the table's full enumeration. ``values=None`` names
+    every leaf the head holds."""
+    if values is None:
+        return sorted(snapshot_manifest(spark, path)["partitions"])
     names = [_leaf_name(spark, col, v) for v in values]
     held = snapshot_manifest(spark, path, leaves=names)["partitions"]
     return [n for n in names if n in held]
@@ -3971,6 +3978,145 @@ def snapshot_consume_changes(
         )
     process(batch, live)
     return live
+
+
+#: Key buckets partitioning an index table by its source key
+#: (``key % INDEX_BUCKETS``: the band index and the vector index's
+#: forward map): an update or delete touches exactly its key's bucket,
+#: so a tick rewrites O(touched buckets), never the index.
+INDEX_BUCKETS = 64
+
+
+def _index_tick(
+    spark: SparkSession,
+    src: str,
+    tables: list[tuple[str, tuple[str, ...]]],
+    cols: tuple[str, ...],
+    plan,
+    rebuild: str,
+    full: bool = False,
+    keep_snapshots: int = 3,
+) -> int | None:
+    """The one index-service tick behind ``maintain_band_index``,
+    ``rebuild_band_index``, ``maintain_vector_index`` and
+    ``rebuild_vector_index``: keep the index ``tables`` (``(path,
+    pins)`` pairs; the first names the service lock) current with the
+    source snapshot table ``src``, keyed by ``cols[0]``.
+
+    Under the service lock, each table's ``SOURCE_VERSION_PROP`` and
+    ``pins`` are read (``_index_state``); an index missing any of them,
+    or some of its tables, is refused, pointing at ``rebuild``. The
+    tick consumes the source's feed from the recorded version
+    (``snapshot_consume_changes``, called by name so wrappers see it);
+    with nothing new it starts no Spark job. Fenced at entry, it
+    checkpoints the delta's ``cols`` plus ``_change`` and collects its
+    touched key buckets once. A delta that touches no bucket records the
+    version in one properties-only commit per table. Otherwise
+    ``plan(changed, changed_ids, buckets, state)`` returns per table
+    ``(partition_col, touched_values, fresh_rows, pins)`` — ``state`` is
+    the tables' properties, or None for a first build, whose pins the
+    plan derives — and the tables publish concurrently
+    (``_publish_index_table``), each landing its rows, the version and
+    the pins in one commit; a table whose publish fails keeps its old
+    version.
+
+    ``full=True`` is a rebuild, a tick from nothing: the batch is the
+    live snapshot, no state is read, the pins are planned again, nothing
+    is carried and every leaf each head holds is retired, even when the
+    batch has no rows. Tables that record different versions (a crash or
+    fence between their publishes, or a restore of one) recover the same
+    way with their pins kept: a replay from the older version would miss
+    a row a later source commit reverted. Returns the source version now
+    reflected, or None if the index was already current."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    paths = [p.rstrip("/") for p, _pins in tables]
+    key, lock = cols[0], paths[0]
+    cio.acquire_service_lock(spark, lock)
+    try:
+        state, since = None, None
+        if not full:
+            got = [
+                _index_state(spark, p, pins, rebuild)
+                for p, (_path, pins) in zip(paths, tables)
+            ]
+            if None in got and any(got):
+                raise ValueError(
+                    f"only some of the index tables {paths} exist: run "
+                    f"{rebuild} to rebuild them all"
+                )
+            if None not in got:
+                state = got
+                seen = {int(t[SOURCE_VERSION_PROP]) for t in got}
+                since = seen.pop() if len(seen) == 1 else None
+        restart = full or (state is not None and since is None)
+
+        def process(batch: DataFrame, live: int) -> None:
+            # a tick that stalled past the stale window and lost its
+            # service lock must not plan against pins a rebuild re-owned
+            cio.assert_service_fencing(spark, lock)
+            changed = batch.select(*cols, "_change").localCheckpoint(eager=True)
+            ids = changed.select(key).distinct()
+            buckets = None
+            if not full:
+                bkt = (F.col(key) % INDEX_BUCKETS).cast("int").alias("bkt")
+                buckets = [r["bkt"] for r in ids.select(bkt).distinct().collect()]
+            if not buckets and not restart:
+                # a net-empty delta changes no bucket: record the version
+                # alone (once an index exists), or the next call re-diffs
+                # the same commits
+                for p in paths if state is not None else []:
+                    cio.assert_service_fencing(spark, lock)
+                    snapshot_set_properties(
+                        spark, p, {SOURCE_VERSION_PROP: live},
+                        keep_snapshots=keep_snapshots,
+                    )
+                return
+            parts = plan(changed, ids, buckets, None if full else state)
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                futures = [
+                    pool.submit(
+                        _publish_index_table, spark, lock, path, col,
+                        None if restart else values, fresh,
+                        None if restart else ids, key,
+                        {SOURCE_VERSION_PROP: live, **pins}, keep_snapshots,
+                    )
+                    for path, (col, values, fresh, pins) in zip(paths, parts)
+                ]
+                # surface every outcome: .result() re-raises the first
+                # failure only after the pool joined the other publish
+                for f in futures:
+                    f.result()
+
+        return snapshot_consume_changes(spark, src, since, [key], process)
+    finally:
+        cio.release_service_lock(spark, lock)
+
+
+def _publish_index_table(
+    spark: SparkSession,
+    lock: str,
+    path: str,
+    col: str,
+    values,
+    fresh: DataFrame,
+    changed: DataFrame | None,
+    key: str,
+    properties: dict,
+    keep_snapshots: int,
+) -> int:
+    """One index table's publish in ``_index_tick``: the keyed rewrite
+    of its touched leaves, the service fence, then one commit of the
+    rows, the retired leaves and ``properties``. The fence sits right
+    before the publish because the rewrite is where a stall can outlast
+    the stale window; each publish is still fenced in
+    ``_write_manifest``."""
+    out, retire = _rewrite_touched(spark, path, col, values, fresh, changed, key)
+    cio.assert_service_fencing(spark, lock)
+    return snapshot_partition_overwrite(
+        spark, out, path, col, keep_snapshots=keep_snapshots,
+        retire_leaves=retire or None, properties=properties,
+    )
 
 
 def snapshot_history(spark: SparkSession, path: str) -> list[dict]:

@@ -489,14 +489,15 @@ def run_docs_ingest_with_band_index(
     Composition, not new machinery: ``run_foreach_batch_snapshot`` with
     ``merge_keys=['doc_id']`` (replay-idempotent upsert-into-partition
     commits) and a ``post_commit_fn`` that runs
-    ``dedup_ops.maintain_band_index`` — the index maintainer consumes
-    the docs table's CDC feed from the docs version its own last commit
-    recorded, so a tick's index work is O(|batch| signatures + touched
-    id-buckets), a replayed batch diffs to an empty feed (no-op), and a
-    crash BETWEEN the data commit and the index tick self-heals (the
+    ``dedup_ops.maintain_band_index`` — the one index-service tick
+    (``snapshots._index_tick``) consumes the docs table's CDC feed from
+    the docs version the index's own last commit recorded, so a tick's
+    index work is O(|batch| signatures + touched id-buckets), a
+    replayed batch diffs to a rowless feed (a properties-only commit),
+    and a crash BETWEEN the data commit and the index tick self-heals (the
     index still records the older version; the next tick folds both
-    commits). Parity contract (two-tick test): after
-    every tick, index == band_projection of the live docs table."""
+    commits). Parity contract (two-tick test): after every tick, index
+    == band_projection of the live docs table."""
     from callio_etl_spark.llm_ops.dedup_ops import maintain_band_index
 
     run_foreach_batch_snapshot(
@@ -536,17 +537,18 @@ def run_vectors_ingest_with_ivf_index(
     Composition, not new machinery: ``run_foreach_batch_snapshot`` with
     ``merge_keys=['vec_id']`` (replay-idempotent upsert-into-partition
     commits) and a ``post_commit_fn`` that runs
-    ``similarity.maintain_vector_index`` — the maintainer consumes the
-    vectors table's CDC feed from the vectors version its own tables
-    last recorded, so a tick's index work is O(|batch| assignments +
-    touched cell partitions / forward buckets), a replayed batch diffs
-    to an empty feed (no-op), and a crash between the data commit and
-    the index tick self-heals (the index still records the older
-    version; the next tick folds both commits). The
-    QUANTIZER PIN rides every tick: the maintainer refuses a drifted
-    ``cells`` frame mid-stream — a centroid refresh means stopping the
-    query and running ``rebuild_vector_index``. Parity contract
-    (two-tick test): after every tick, postings ==
+    ``similarity.maintain_vector_index`` — the same index-service tick
+    consumes the vectors table's CDC feed from the vectors version its
+    own tables last recorded, so a tick's index work is O(|batch|
+    assignments + touched cell partitions / forward buckets), a
+    replayed batch diffs to a rowless feed (a properties-only commit
+    per table), and a crash between the data commit and the index tick
+    self-heals (the index still records the older version; the next
+    tick folds both commits). The QUANTIZER PIN is checked on every
+    tick whose delta has rows: the maintainer refuses a drifted
+    ``cells`` frame there, before any index write — a centroid refresh
+    means stopping the query and running ``rebuild_vector_index``.
+    Parity contract (two-tick test): after every tick, postings ==
     assign_to_cells(live vectors) and the forward map matches."""
     from callio_etl_spark.llm_ops.similarity import maintain_vector_index
 

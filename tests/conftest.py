@@ -77,3 +77,31 @@ def assert_oracle_match(sdf, duck, sql: str):
     for i, (a, b) in enumerate(zip(s_rows, d_rows)):
         for col, x, y in zip(s_cols, a, b):
             assert _cells_match(x, y), f"row {i} col {col}: spark={x!r} duckdb={y!r}"
+
+
+@pytest.fixture
+def viewfs(spark, tmp_path):
+    """A viewfs default FS mounted onto a local dir, a stand-in for a
+    cluster's HDFS. Yields ``(remote, mounted)``: a scheme-less path
+    under ``remote`` resolves into ``mounted``, so a write that lands at
+    ``remote`` on the driver's disk bypassed the default FS. Hadoop
+    caches one ``viewfs://c/`` instance per JVM with the mount table it
+    was built from, so the cache is off while the fixture holds; the
+    conf is restored after."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    remote, mounted = tmp_path / "remote", tmp_path / "mounted"
+    link = f"fs.viewfs.mounttable.c.link.{remote}"
+    keys = ("fs.defaultFS", "fs.viewfs.impl.disable.cache")
+    old = {k: conf.get(k) for k in keys}
+    conf.set(link, f"file://{mounted}")
+    conf.set("fs.defaultFS", "viewfs://c/")
+    conf.set("fs.viewfs.impl.disable.cache", "true")
+    try:
+        yield remote, mounted
+    finally:
+        for k, v in old.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+        conf.unset(link)

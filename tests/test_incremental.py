@@ -250,7 +250,7 @@ def test_flush_local_fastpath_byte_parity_with_spark_writer(spark, store):
     assert fresh.get("t2", "VN") == 2000
 
 
-def test_flush_fastpath_follows_default_fs_scheme(spark, tmp_path):
+def test_flush_fastpath_follows_default_fs_scheme(spark, viewfs):
     """A scheme-less log path resolves against ``fs.defaultFS``: on a
     cluster whose default filesystem is HDFS, a driver-side pyarrow
     write would land on the driver's local disk, where warm() and
@@ -258,25 +258,13 @@ def test_flush_fastpath_follows_default_fs_scheme(spark, tmp_path):
     mounted onto a local dir stands in for it: the flush must stage
     through Spark, land under the mount, and write nothing at the
     scheme-less path on the driver's disk."""
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    remote, mounted = tmp_path / "remote", tmp_path / "mounted"
-    link = f"fs.viewfs.mounttable.c.link.{remote}"
-    old = conf.get("fs.defaultFS")
-    conf.set(link, f"file://{mounted}")
-    conf.set("fs.defaultFS", "viewfs://c/")
-    try:
-        store = CheckpointStore(spark, f"{remote}/update_log")
-        store.log("t", "PK", 1, 1, "MERGED")
-        store.flush()
-        fresh = CheckpointStore(spark, store.log_path)
-        fresh.warm()
-        assert fresh.get("t", "PK") == 1
-    finally:
-        if old is None:
-            conf.unset("fs.defaultFS")
-        else:
-            conf.set("fs.defaultFS", old)
-        conf.unset(link)
+    remote, mounted = viewfs
+    store = CheckpointStore(spark, f"{remote}/update_log")
+    store.log("t", "PK", 1, 1, "MERGED")
+    store.flush()
+    fresh = CheckpointStore(spark, store.log_path)
+    fresh.warm()
+    assert fresh.get("t", "PK") == 1
     assert not remote.exists(), "the flush wrote to the driver's disk"
     assert (mounted / "update_log" / "__snap__").is_dir()
 

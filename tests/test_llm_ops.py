@@ -2196,53 +2196,42 @@ def test_index_restore_replays_from_its_recorded_version(spark, tmp_path, kind):
     assert tick() is None
 
 
-def test_band_index_service_on_viewfs_default_fs(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["band", "vector"])
+def test_index_service_on_viewfs_default_fs(spark, viewfs, kind):
     """The index state is written through the index's own filesystem,
     never the driver's: under a viewfs default FS mounted onto a local
     dir (a stand-in for a cluster's HDFS), a maintain tick, a rebuild
-    and a further tick land the index under the mount, write nothing at
-    the scheme-less path on the driver's disk, and a second tick finds
-    the index current."""
-    from callio_etl_spark import snapshots as snap
-    from callio_etl_spark.llm_ops.dedup_ops import (
-        maintain_band_index,
-        rebuild_band_index,
-    )
+    and a further tick land every index table under the mount, write
+    nothing at the scheme-less path on the driver's disk, and a last
+    tick finds the index current."""
+    import os
 
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    remote, mounted = tmp_path / "remote", tmp_path / "mounted"
-    link = f"fs.viewfs.mounttable.c.link.{remote}"
-    old = conf.get("fs.defaultFS")
-    conf.set(link, f"file://{mounted}")
-    conf.set("fs.defaultFS", "viewfs://c/")
-    # Hadoop caches one viewfs://c/ instance per JVM with the mount table
-    # it was built from; an earlier test's instance would not know this link
-    conf.set("fs.viewfs.impl.disable.cache", "true")
-    docs_p, idx_p = f"{remote}/docs", f"{remote}/idx"
-
-    def land(ids, suffix):
-        df = spark.createDataFrame(
-            [(i, f"w{i} alpha beta{suffix} t{i % 5}", str(i % 2)) for i in ids],
-            "doc_id long, text string, p string",
-        )
-        snap.snapshot_partition_overwrite(spark, df, docs_p, "p", keep_snapshots=5)
-
-    try:
-        land(range(8), "")
-        assert maintain_band_index(spark, docs_p, idx_p) is not None
-        rebuild_band_index(spark, docs_p, idx_p)
-        land(range(2, 10), "x")
-        assert maintain_band_index(spark, docs_p, idx_p) is not None
-        assert maintain_band_index(spark, docs_p, idx_p) is None
-    finally:
-        if old is None:
-            conf.unset("fs.defaultFS")
-        else:
-            conf.set("fs.defaultFS", old)
-        conf.unset(link)
-        conf.unset("fs.viewfs.impl.disable.cache")
+    remote, mounted = viewfs
+    land, tick, rebuild, tables, parity = _index_service(spark, remote, kind)
+    land(range(8))
+    assert tick() is not None
+    rebuild()
+    land(range(2, 10), edit=1)
+    assert tick() is not None
+    assert tick() is None
+    parity()
     assert not remote.exists(), "the index service wrote to the driver's disk"
-    assert (mounted / "idx" / "__snap__").is_dir()
+    for t in tables:
+        assert (mounted / os.path.basename(t) / "__snap__").is_dir(), t
+
+
+@pytest.mark.parametrize("kind", ["band", "vector"])
+def test_noop_index_tick_starts_no_spark_job(spark, tmp_path, kind):
+    """A tick with nothing new reads metadata only (the index state and
+    the source head) and starts no Spark job. The vector quantizer is
+    checkpointed and fingerprinted only for a batch with rows."""
+    land, tick, _rebuild, _tables, _parity = _index_service(spark, tmp_path, kind)
+    land(range(10))
+    assert tick() is not None
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    assert tick() is None
+    assert sched.nextJobId() - before == 0
 
 
 @pytest.mark.parametrize("kind", ["band", "vector"])
@@ -2547,6 +2536,32 @@ def test_ckpt_once_checkpoints_an_rdd_backed_frame(spark):
     assert _ckpt_once(got) is got
 
 
+def _fence_publish_of(monkeypatch, table):
+    """Make the service fence fail inside ``table``'s publish in
+    ``snapshots._index_tick`` only: each table publishes on its own pool
+    thread, so the wrapped publish marks its thread and the fence checks
+    the mark."""
+    import threading
+
+    from callio_etl_spark import io as cio
+    from callio_etl_spark import snapshots as snap
+
+    mark = threading.local()
+    real_publish, real_fence = snap._publish_index_table, cio.assert_service_fencing
+
+    def publish(spark_, lock, path, *a, **k):
+        mark.fenced = path == table
+        return real_publish(spark_, lock, path, *a, **k)
+
+    def fence(spark_, path):
+        if getattr(mark, "fenced", False):
+            raise RuntimeError("commit fencing: service lock reclaimed")
+        return real_fence(spark_, path)
+
+    monkeypatch.setattr(snap, "_publish_index_table", publish)
+    monkeypatch.setattr(cio, "assert_service_fencing", fence)
+
+
 @pytest.mark.parametrize(
     "verb, chain",
     [("maintain", "_fwd_chain"), ("rebuild", "_postings_chain")],
@@ -2559,11 +2574,8 @@ def test_vector_index_chain_fences_its_own_publish(
     holder that stalls inside a chain and lost the lock must not
     publish there. The fence is made to fail inside one chain only;
     that chain's table gains no manifest and keeps its recorded source
-    version, so the next tick replays the batch from the older of the
-    two tables' versions and both tables match again."""
-    import sys
-
-    from callio_etl_spark import io as cio
+    version, so the two tables' versions differ and the next tick
+    rebuilds both from the live source: both tables match again."""
     from callio_etl_spark import snapshots as snap
     from callio_etl_spark.llm_ops.similarity import (
         maintain_vector_index,
@@ -2593,14 +2605,7 @@ def test_vector_index_chain_fences_its_own_publish(
     before = snap.snapshot_versions(spark, fenced_table)
     recorded = snap.snapshot_properties(spark, fenced_table)[SOURCE_VERSION_PROP]
 
-    real = cio.assert_service_fencing
-
-    def fence(spark_, path):
-        if sys._getframe(1).f_code.co_name == chain:
-            raise RuntimeError("commit fencing: service lock reclaimed")
-        return real(spark_, path)
-
-    monkeypatch.setattr(cio, "assert_service_fencing", fence)
+    _fence_publish_of(monkeypatch, fenced_table)
     with pytest.raises(RuntimeError, match="commit fencing"):
         if verb == "maintain":
             maintain_vector_index(spark, vp, ip, fwd, cells)
@@ -2618,3 +2623,37 @@ def test_vector_index_chain_fences_its_own_publish(
     assert {tuple(r) for r in postings.collect()} == {
         tuple(r) for r in fmap.collect()
     }
+
+
+def test_vector_index_split_tables_recover_a_reverted_row(
+    spark, tmp_path, monkeypatch
+):
+    """When the postings and the forward map record different source
+    versions (here the forward map's publish was fenced out), the next
+    tick rebuilds both tables from the live source with the pins kept.
+    A replay of the feed from the older version could not reach a row
+    that a later source commit reverted: the diff between the older
+    version and the live one does not name it, and the table that had
+    applied the change would keep it."""
+    from callio_etl_spark import snapshots as snap
+    from callio_etl_spark.snapshots import SOURCE_VERSION_PROP
+
+    land, tick, _rebuild, (ip, fwd), parity = _index_service(
+        spark, tmp_path, "vector"
+    )
+    land(range(6))
+    v1 = tick()
+    pin = snap.snapshot_properties(spark, ip)["ivf.quantizer_md5"]
+    land(range(6), edit=1)
+    with monkeypatch.context() as m:
+        _fence_publish_of(m, fwd)
+        with pytest.raises(RuntimeError, match="commit fencing"):
+            tick()
+    assert int(snap.snapshot_properties(spark, fwd)[SOURCE_VERSION_PROP]) == v1
+    assert int(snap.snapshot_properties(spark, ip)[SOURCE_VERSION_PROP]) > v1
+    land(range(6))
+    live = snap.snapshot_versions(spark, str(tmp_path / "src"))[-1]
+    assert tick() == live
+    parity()
+    assert snap.snapshot_properties(spark, ip)["ivf.quantizer_md5"] == pin
+    assert tick() is None
